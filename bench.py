@@ -44,6 +44,10 @@ def main() -> None:
 
     # the 48M-row big run needs more heap than the 8g default at local[32]
     os.environ.setdefault("SPARK_DRIVER_MEM", "32g")
+    # shuffle scratch on tmpfs so disk writeback can't pollute the timings
+    # (the session keeps Spark's disk default unless asked)
+    if os.path.isdir("/dev/shm"):
+        os.environ.setdefault("NPDV_LOCAL_DIR", "/dev/shm/npdv_spark_local")
     spark = get_spark(app_name="npdv-bench", cpus=cpus)
     # BENCH_ONLY: timed here but outside the 50-entry driver contract
     # (udf_xxhash_tokens — its twin carries the driver correctness row)

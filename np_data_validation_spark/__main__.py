@@ -50,7 +50,6 @@ def main(argv: list[str] | None = None) -> int:
                          "(re-validates silently mutated partitions)")
     ap.add_argument("--commit-batch", type=int, default=None,
                     help="partitions per state commit (default: all in one job)")
-    ap.add_argument("--hash-method", default="pandas_udf")
     ap.add_argument("--keep-audit", type=int, default=None,
                     help="retain at most N batch pair-table audit dirs under "
                          "<out>/_work (default: keep all)")
@@ -80,9 +79,7 @@ def main(argv: list[str] | None = None) -> int:
         from np_data_validation_spark.streaming.incremental import validate_stream
 
         manifest = spark.read.parquet(args.manifest)
-        q = validate_stream(
-            spark, args.snapshot, manifest, args.out, hash_method=args.hash_method
-        )
+        q = validate_stream(spark, args.snapshot, manifest, args.out)
         q.awaitTermination()
         print(json.dumps({"mode": "stream", "out": args.out}, sort_keys=True))
         return 0
@@ -96,7 +93,6 @@ def main(argv: list[str] | None = None) -> int:
         args.out,
         resume=not args.no_resume,
         commit_batch=args.commit_batch,
-        hash_method=args.hash_method,
         content_aware=args.content_aware,
         keep_audit=args.keep_audit,
     )

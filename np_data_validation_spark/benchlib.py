@@ -331,7 +331,6 @@ def run_validation_reps(
     spark: SparkSession,
     data_root: str,
     reps: int = 4,
-    hash_method: str = "pandas_udf",
 ) -> list[dict]:
     """``reps`` in-JVM repetitions of the full validation job with inter-rep
     hygiene (clearCache so plan-matched cache reuse can't fake repeats;
@@ -376,7 +375,7 @@ def run_validation_reps(
         calm_wait = wait_for_calm()
         c0 = memory_canary_sec()
         g0, s0 = _gc_ms(spark), _steal_ms()
-        r = run_validation_job(spark, data_root, hash_method=hash_method)
+        r = run_validation_job(spark, data_root)
         r["calm_wait_sec"] = calm_wait
         r["canary_sec"] = round(c0, 3) if c0 is not None else None
         r["gc_ms"] = _gc_ms(spark) - g0
@@ -471,7 +470,6 @@ def run_validation_reps_until_qualified(
     reps: int = 4,
     retries: int = 2,
     retry_reps: int = 2,
-    hash_method: str = "pandas_udf",
 ) -> tuple[list[dict], int]:
     """Rep series with bounded retry-until-qualified (VERDICT r7 task #4,
     the same doctrine BENCH/scaling.py applies per level-round): if NO
@@ -483,13 +481,11 @@ def run_validation_reps_until_qualified(
     only cold rep ``warm_median`` excludes. Returns (all reps, retries
     actually used); the final series may still be unqualified — the
     warm_median stat label says so."""
-    results = run_validation_reps(spark, data_root, reps=reps, hash_method=hash_method)
+    results = run_validation_reps(spark, data_root, reps=reps)
     attempts = 0
     while attempts < retries and not any(rep_qualified(r) for r in results[1:]):
         attempts += 1
-        results = results + run_validation_reps(
-            spark, data_root, reps=retry_reps, hash_method=hash_method
-        )
+        results = results + run_validation_reps(spark, data_root, reps=retry_reps)
     return results, attempts
 
 
@@ -601,9 +597,7 @@ def warm_median(results: list[dict], budget_frac: float | None = None) -> dict:
     return med
 
 
-def run_validation_job(
-    spark: SparkSession, data_root: str, hash_method: str = "pandas_udf"
-) -> dict:
+def run_validation_job(spark: SparkSession, data_root: str) -> dict:
     """One full constraint pass (the metric's 'validated sequences/sec'):
     fingerprint -> manifest join + content probe -> verdict CASE -> rollup +
     violations (verdict/uniqueness/schema) + per-partition stats, all
@@ -638,9 +632,7 @@ def run_validation_job(
     # s1/probe/identity files), instead of as a serial derive phase after
     # it. The phases dict keeps both keys: "derive" is now the residual
     # (~0), the overlapped work is inside "rolled_write".
-    res = validate_onepass(
-        spark, snapshot, manifest, out, hash_method=hash_method, derive_counts=True
-    )
+    res = validate_onepass(spark, snapshot, manifest, out, derive_counts=True)
     phases["rolled_write"] = round(time.time() - t, 2)
     t = time.time()
     n_viol, stats_rows = res.n_violations, res.n_stats_rows
@@ -654,6 +646,5 @@ def run_validation_job(
         "stats_rows": stats_rows,
         "sec": dt,
         "rows_per_sec": n_rows / dt,
-        "hash_method": hash_method,
         "phases": phases,
     }

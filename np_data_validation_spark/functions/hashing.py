@@ -7,17 +7,13 @@ filesize uniquely identify data, regardless of path"*
 (/root/reference/data_validation.py:5) — here, ``(tok_hash, n_tok)``
 uniquely identify a token payload regardless of ``doc_id``/``source``.
 
-Two interchangeable kernels (same slot-style contract as the reference's
-chunk_crc32 vs mmap_direct swap, /root/reference/refactor.py:43-48):
-
-* ``pandas_udf`` (default, the mandated surface): XXH64 of the
-  little-endian int32 byte buffer, computed batch-wise in numpy over Arrow
-  batches. The per-batch hot loop is fully vectorized across rows — a
-  padded ``[rows, max_len]`` lane matrix processed stripe-by-stripe with
-  row masks; there is **no per-row Python**.
-* ``jvm``: built-in ``F.xxhash64(tokens)`` (whole-stage codegen; a fold of
-  per-element hashes, so a *different* value space than the buffer hash —
-  consistent within itself, used as the throughput upper bound in bench).
+One kernel: XXH64 of the little-endian int32 byte buffer of each token
+array, computed batch-wise in numpy over Arrow batches by an Arrow-native
+UDF (``tok_hash_arrow``). The per-batch hot loop is fully vectorized across
+rows — a padded ``[rows, max_len]`` lane matrix processed stripe-by-stripe
+with row masks; there is **no per-row Python**. The manifest's
+``tok_hash`` lives in the same value space, so snapshot and manifest
+fingerprints compare directly.
 
 The XXH64 algorithm is implemented from the public spec
 (github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec.md). A golden
@@ -29,9 +25,8 @@ self-test (`kernel_self_test`) mirrors the reference's habit of asserting
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -301,41 +296,15 @@ def _avalanche(acc: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
-@F.pandas_udf(T.LongType())
-def tok_hash_udf(tokens: pd.Series) -> pd.Series:
-    """Vectorized pandas UDF: tok_hash = XXH64(int32-LE buffer).
-
-    Converts the incoming Series to an Arrow ListArray once (C-level), then
-    hands the flat values + offsets straight to the numpy kernel. Null token
-    arrays hash to null (the reference's "checksum not yet generated" state,
-    /root/reference/data_validation.py:549-550).
-
-    Kept as the cross-checked twin of ``tok_hash_arrow`` (r9): the pandas
-    boundary pays two extra conversions per batch — Spark's Arrow->pandas
-    materializes one numpy object per row for a list column, and
-    ``pa.array`` re-boxes them — measured ~0.25 s/8M rows warm and ~2 s
-    cold vs the Arrow-native form, for identical values.
-    """
-    arr = pa.array(tokens, type=pa.list_(pa.int32()))
-    offsets = arr.offsets.to_numpy()
-    base, end = int(offsets[0]), int(offsets[-1])
-    flat = arr.values.slice(base, end - base).to_numpy(zero_copy_only=False)
-    hashes = xxh64_int32_batch(flat, offsets - base).view(np.int64)
-    result = pd.Series(hashes, dtype="Int64")
-    valid = np.asarray(arr.is_valid())
-    result[~valid] = pd.NA
-    return result
-
-
 @F.arrow_udf(T.LongType())
 def tok_hash_arrow(tokens: pa.Array) -> pa.Array:
-    """Arrow-native vectorized UDF (r9, the hot-path kernel): the batch
+    """Arrow-native vectorized UDF, the engine's one hash kernel: the batch
     arrives as a ``pa.ListArray`` and the flat values + offsets go straight
     to the numpy kernel — no Arrow->pandas->Arrow round trip, no per-row
-    object materialization (guide §4: control how efficiently columns cross
-    the boundary). Values are bit-identical to ``tok_hash_udf`` (same
-    kernel; pinned by the udf_xxhash_golden driver oracle and
-    tests/test_hashing.py)."""
+    object materialization. Null token arrays hash to null (the
+    reference's "checksum not yet generated" state). Values are pinned
+    against the scalar spec by the udf_xxhash_golden query and
+    tests/test_hashing.py."""
     if isinstance(tokens, pa.ChunkedArray):  # defensive: chunked batches
         tokens = tokens.combine_chunks()
     if not (pa.types.is_list(tokens.type) and tokens.type.value_type == pa.int32()):
@@ -350,38 +319,14 @@ def tok_hash_arrow(tokens: pa.Array) -> pa.Array:
     return pa.array(hashes, type=pa.int64(), mask=~valid)
 
 
-def tok_hash_jvm(col: str | Column = "tokens") -> Column:
-    """JVM-side alternative fingerprint (whole-stage codegen, no Python).
-
-    NOTE: Spark's xxhash64 over an array folds per-element hashes, so its
-    values differ from the buffer hash — both sides (snapshot + manifest)
-    must use the same kernel. Used as the bench upper bound.
-    """
-    return F.xxhash64(col)
-
-
-def with_tok_hash(
-    df: DataFrame, tokens_col: str = "tokens", method: str = "pandas_udf"
-) -> DataFrame:
+def with_tok_hash(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     """Append ``tok_hash`` to a sequences DataFrame.
 
     The reference gated checksum generation behind size thresholds because
-    per-file CRC32 was expensive (checksum_threshold,
-    /root/reference/data_validation.py:424,487-491); the vectorized kernel
-    removes the need — every row is fingerprinted.
-
-    ``method="pandas_udf"`` (the vectorized-Python kernel slot) dispatches
-    to the Arrow-native kernel since r9 — same numpy hot loop, same values
-    (golden-pinned), minus the Arrow->pandas->Arrow round trip; pass
-    ``"pandas_series"`` to force the legacy pandas boundary for comparison.
+    per-file CRC32 was expensive (its ``checksum_threshold``); the
+    vectorized kernel removes the need — every row is fingerprinted.
     """
-    if method in ("pandas_udf", "arrow_udf"):
-        return df.withColumn("tok_hash", tok_hash_arrow(F.col(tokens_col)))
-    if method == "pandas_series":
-        return df.withColumn("tok_hash", tok_hash_udf(F.col(tokens_col)))
-    if method == "jvm":
-        return df.withColumn("tok_hash", tok_hash_jvm(tokens_col))
-    raise ValueError(f"unknown tok_hash method: {method!r}")
+    return df.withColumn("tok_hash", tok_hash_arrow(F.col(tokens_col)))
 
 
 def kernel_self_test() -> None:

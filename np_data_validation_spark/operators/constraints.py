@@ -131,27 +131,6 @@ def schema_violations(snapshot: DataFrame) -> DataFrame:
     return mismatch.unionByName(null_ntok).unionByName(null_docid)
 
 
-def schema_violations_slim(
-    s1: DataFrame, actual_col: str = "n_tok_actual"
-) -> DataFrame:
-    """Schema invariants computed from a pair table that carried the actual
-    payload length through stage 1 (plans.oracle.materialize_pairs) — avoids
-    rescanning the token payload."""
-    mismatch = _as_violation(
-        s1.filter(
-            F.col(actual_col).isNotNull() & (F.col("n_tok") != F.col(actual_col))
-        ).withColumnRenamed(actual_col, "actual_len"),
-        "N_TOK_MISMATCH",
-        ["n_tok", "actual_len"],
-    )
-    null_ntok = _as_violation(
-        s1.filter(F.col("n_tok").isNull()), "NULL_N_TOK", [actual_col]
-    )
-    # the pair table has one row per (subject x manifest hit): collapse the
-    # join multiplicity so each offending subject is flagged once
-    return mismatch.unionByName(null_ntok).dropDuplicates()
-
-
 def all_violations(snapshot: DataFrame, manifest: DataFrame) -> DataFrame:
     """Union of the pure-constraint violations (verdict-derived violations
     come from operators.verdicts.extract_violations)."""

@@ -8,7 +8,7 @@ Five families, all shuffle-conscious:
                    to documents)
 * MinHash + LSH  — shingle -> K minhashes -> banded signatures -> bucket
                    self-join -> candidate pairs (optionally Jaccard-verified)
-* SimHash        — 32-bit sign-sum fingerprint -> banded hamming buckets
+* SimHash        — 32-bit sign-sum fingerprint (row-local, no shuffle)
 * n-gram Jaccard — exact similarity on candidate pairs (the verify pass)
 * embedding cosine near-dup — see operators/similarity.py
 
@@ -59,7 +59,6 @@ MINHASH_P = 1_000_000_007
 MINHASH_A = [104729, 104743, 104759, 104761, 104773, 104779, 104789, 104801]
 MINHASH_B = [7919, 17389, 27449, 37813, 48611, 59359, 70001, 80677]
 SIMHASH_BITS = 32
-SIMHASH_BANDS = 4  # 4 bands x 8 bits
 
 
 def ensure_cpu_splits(df: DataFrame) -> DataFrame:
@@ -94,20 +93,6 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
         .filter(F.col("n_docs") > 1)
-    )
-
-
-def exact_dedup_keep_first(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Keep one representative per content group (lowest doc_id) — the
-    reference's unique-hits reduction (W2,
-    /root/reference/data_validation.py:1274-1284) over documents."""
-    fp = portable_hash60(normalize_text(text_col)).alias("_fp")
-    w = Window.partitionBy("_fp").orderBy("doc_id")
-    return (
-        docs.select("*", fp)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_fp", "_rn")
     )
 
 
@@ -280,7 +265,13 @@ def minhash_lsh_candidates(
     max_bucket: int | None = 1000,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate near-duplicate pairs: docs agreeing on >=1 full band."""
+    """Candidate near-duplicate pairs: docs agreeing on >=1 full band.
+
+    Precondition: a non-``None`` ``shingles`` table must already be
+    checkpointed, e.g. ``shingle_hash_table(...).localCheckpoint(eager=True)``
+    as ``dedup_corpus`` does. With it the band rows skip their own
+    checkpoint, so every band reference re-derives from ``shingles`` — an
+    un-checkpointed plan there re-runs the whole shingling per reference."""
     return _bucket_pairs(
         minhash_bands(docs, text_col, k, bands, n, shingles=shingles),
         ["band", "band_hash"],
@@ -501,58 +492,6 @@ def simhash_expr(text_col: str = "text", bits: int = SIMHASH_BITS) -> Column:
         ),
         F.lit(0).cast("long"),
         lambda a, x: a + x,
-    )
-
-
-def simhash_bands(
-    docs: DataFrame, text_col: str = "text", bands: int = SIMHASH_BANDS
-) -> DataFrame:
-    width = SIMHASH_BITS // bands
-    mask = (1 << width) - 1
-    sh = ensure_cpu_splits(docs).select("doc_id", simhash_expr(text_col).alias("simhash"))
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(F.col("simhash"), b * width)
-                .bitwiseAND(F.lit(mask))
-                .alias("band_hash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return sh.select("doc_id", "simhash", F.explode(band_structs).alias("bb")).select(
-        "doc_id", "simhash", F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash")
-    )
-
-
-def simhash_near_dups(
-    docs: DataFrame,
-    text_col: str = "text",
-    max_hamming: int = 3,
-    bands: int = SIMHASH_BANDS,
-    max_bucket: int | None = 1000,
-) -> DataFrame:
-    """Pairs within ``max_hamming`` bits: banded bucket join (a pair within
-    distance d < bands must agree exactly on >=1 band — pigeonhole), then
-    exact popcount verify."""
-    long_df = simhash_bands(docs, text_col, bands)
-    if max_bucket:
-        counts = long_df.groupBy("band", "band_hash").agg(F.count(F.lit(1)).alias("_n"))
-        long_df = long_df.join(
-            counts.filter(F.col("_n") <= max_bucket).select("band", "band_hash"),
-            ["band", "band_hash"],
-            "left_semi",
-        )
-    a = long_df.select("band", "band_hash", F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sh_a"))
-    b = long_df.select("band", "band_hash", F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sh_b"))
-    return (
-        a.join(b, ["band", "band_hash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-        .distinct()
     )
 
 
@@ -1084,10 +1023,6 @@ def minhash_sql(expr: str, i: int, n: int = SHINGLE_N) -> str:
         f"list_min(list_transform({shingle_sql(expr, n)}, "
         f"s -> ({MINHASH_A[i]} * {h} + {MINHASH_B[i]}) % {MINHASH_P}))"
     )
-
-
-def f_concat(parts: list[str]) -> str:
-    return "(" + " || ".join(parts) + ")"
 
 
 def simhash_sql(expr: str, bits: int = SIMHASH_BITS) -> str:

@@ -87,39 +87,3 @@ def n_tok_histogram(
 def source_histogram(snapshot: DataFrame) -> DataFrame:
     """Row counts per source — the categorical histogram for drift."""
     return snapshot.groupBy("source").agg(F.count(F.lit(1)).alias("cnt"))
-
-
-#: default quantile probes for n_tok distribution monitoring
-QUANTILE_PROBS = (0.25, 0.5, 0.75, 0.95, 0.99)
-
-#: percentile_approx accuracy: guarantees rank error <= n/accuracy, so at
-#: 10,000 a 4k-row test partition is EXACT (error < 1 row) while a 10^12-row
-#: partition still holds sketch state of only ~accuracy entries per group.
-QUANTILE_ACCURACY = 10_000
-
-
-def n_tok_quantiles(
-    snapshot: DataFrame,
-    group_col: str = "source",
-    probs: tuple[float, ...] = QUANTILE_PROBS,
-    accuracy: int = QUANTILE_ACCURACY,
-) -> DataFrame:
-    """Per-partition + global n_tok quantiles in one rollup pass via
-    ``percentile_approx`` — Spark's Greenwald-Khanna sketch is algebraic
-    (partial per-task sketches merge before the final shuffle), so like
-    every aggregate in this module the shuffle carries one bounded sketch
-    per (task x group), never raw rows. Returned values are dataset
-    elements (discrete quantiles) with guaranteed rank error
-    <= rows/accuracy."""
-    pa = F.percentile_approx(
-        "n_tok", F.array(*[F.lit(float(p)) for p in probs]), F.lit(accuracy)
-    )
-    cols = [
-        F.element_at(F.col("_q"), i + 1).alias(f"n_tok_p{int(p * 100):02d}")
-        for i, p in enumerate(probs)
-    ]
-    return (
-        snapshot.rollup(group_col)
-        .agg(pa.alias("_q"), (F.grouping(group_col) == 1).alias("is_global"))
-        .select(group_col, *cols, "is_global")
-    )

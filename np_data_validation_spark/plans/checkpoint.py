@@ -149,9 +149,7 @@ def write_state_rows(
 
 
 def input_fingerprints(
-    snapshot: DataFrame,
-    content_aware: bool = False,
-    hash_method: str = "pandas_udf",
+    snapshot: DataFrame, content_aware: bool = False
 ) -> dict[str, str]:
     """Per-partition input fingerprint for resume gating.
 
@@ -187,7 +185,7 @@ def input_fingerprints(
     if content_aware:
         from np_data_validation_spark.functions.hashing import with_tok_hash
 
-        src = with_tok_hash(snapshot, method=hash_method)
+        src = with_tok_hash(snapshot)
         aggs.append(F.expr("bit_xor(xxhash64(doc_id, tok_hash))").alias("c"))
     rows = src.groupBy("source").agg(*aggs).collect()
     if content_aware:
@@ -195,15 +193,13 @@ def input_fingerprints(
     return {r["source"]: f"{r['n']}:{r['s']}:{r['h']}" for r in rows}
 
 
-def content_fingerprints(
-    snapshot: DataFrame, partitions: list[str], hash_method: str = "pandas_udf"
-) -> dict[str, str]:
+def content_fingerprints(snapshot: DataFrame, partitions: list[str]) -> dict[str, str]:
     """Content-aware fingerprints for a SUBSET of partitions (partition-
     pruned payload scan). Resume gating only re-hashes partitions that have
     a plausible 'done' checkpoint; everything else is validated anyway and
     gets its fingerprint for free from the pair table."""
     sub = snapshot.filter(F.col("source").isin(list(partitions)))
-    return input_fingerprints(sub, content_aware=True, hash_method=hash_method)
+    return input_fingerprints(sub, content_aware=True)
 
 
 def fingerprints_from_identities(ids: DataFrame) -> dict[str, str]:

@@ -10,7 +10,7 @@ at a time, single-threaded).
 
 Scale shape per batch (SURVEY.md §3.1 Spark restatement):
     scan pending partitions (partition-pruned, column-pruned)
-      -> pandas-UDF tok_hash (Arrow batches)
+      -> Arrow UDF tok_hash (Arrow batches)
       -> doc_id join vs manifest (+ content probe for misses)
       -> CASE verdict -> violations + per-row rollup
       -> per-partition metrics aggregation
@@ -294,8 +294,6 @@ def run_validation(
     out_dir: str,
     resume: bool = True,
     commit_batch: int | None = None,
-    hash_method: str = "pandas_udf",
-    join_strategy: str = "auto",
     content_aware: bool = False,
     keep_audit: int | None = None,
 ) -> RunResult:
@@ -357,9 +355,7 @@ def run_validation(
                 and str(lin.get("input_fingerprint", "")).count(":") == 3
                 and str(lin["input_fingerprint"]).rsplit(":", 1)[0] == fps[p]
             ]
-            gate_fps = (
-                CP.content_fingerprints(snapshot, cand, hash_method) if cand else {}
-            )
+            gate_fps = CP.content_fingerprints(snapshot, cand) if cand else {}
             done = CP.done_partitions(
                 spark, out_dir, gate_fps, code_version=CODE_VERSION
             )
@@ -390,7 +386,6 @@ def run_validation(
         res = validate_onepass(
             spark, snap_b, manifest,
             os.path.join(out_dir, "_work", f"run={run_id}", f"batch={bi}"),
-            hash_method=hash_method,
         )
         rolled, violations = res.rolled, res.violations
         # 1) results first (idempotent per-partition replacement: explicit

@@ -6,7 +6,7 @@ ONE pass over the payload and derives everything else from a slim written
 pair table:
 
     scan snapshot (tokens read once)
-      -> pandas-UDF tok_hash (pre-shuffle, scales with cores)
+      -> Arrow UDF tok_hash (pre-shuffle, scales with cores)
       -> Exchange(doc_id)                        [the only payload shuffle]
       -> pre-aggregate on full row identity (doc_id, source, n_tok,
          tok_hash, n_tok_actual) -> s_mult       [no extra exchange:
@@ -76,7 +76,7 @@ class OnepassResult:
 # ---------------------------------------------------------------------------
 
 
-def hashed_identity(snapshot: DataFrame, hash_method: str = "pandas_udf") -> DataFrame:
+def hashed_identity(snapshot: DataFrame) -> DataFrame:
     """Slim hashed snapshot pre-aggregated on full row identity.
 
     The single Exchange(doc_id) here is the only shuffle the payload side
@@ -92,7 +92,7 @@ def hashed_identity(snapshot: DataFrame, hash_method: str = "pandas_udf") -> Dat
         F.when(F.col("tokens").isNotNull(), F.size("tokens")).alias("n_tok_actual"),
         "tokens",
     )
-    slim = with_tok_hash(slim, method=hash_method).drop("tokens")
+    slim = with_tok_hash(slim).drop("tokens")
     return (
         slim.repartition("doc_id")
         .groupBy(*IDENTITY_COLS)
@@ -115,13 +115,11 @@ def _manifest_m(manifest: DataFrame) -> DataFrame:
     )
 
 
-def pairs_stage1(
-    snapshot: DataFrame, manifest: DataFrame, hash_method: str = "pandas_udf"
-) -> DataFrame:
+def pairs_stage1(snapshot: DataFrame, manifest: DataFrame) -> DataFrame:
     """The one wide plan: hash -> identity pre-agg -> manifest join ->
     verdict CASE. Exactly two Exchanges total (one per side); shuffled-hash
     join (no sorts), manifest as build side."""
-    pre = hashed_identity(snapshot, hash_method)
+    pre = hashed_identity(snapshot)
     m = _manifest_m(manifest)
     pairs = pre.join(m.hint("shuffle_hash"), pre["doc_id"] == m["m_doc_id"], "left")
     return pairs.withColumn("verdict_code", V.classify_expr()).select(*PAIR_COLS)
@@ -530,7 +528,6 @@ def validate_onepass(
     snapshot: DataFrame,
     manifest: DataFrame,
     work_dir: str,
-    hash_method: str = "pandas_udf",
     salt_buckets: int | str | None = "auto",
     skew_ratio: float | None = None,
     skew_min_hot_rows: int | None = None,
@@ -578,7 +575,7 @@ def validate_onepass(
         )
         # the miss count rides the stage-1 write as an observation (no extra job)
         obs = Observation("onepass_stage1")
-        s1_obs = pairs_stage1(snapshot, manifest, hash_method).observe(
+        s1_obs = pairs_stage1(snapshot, manifest).observe(
             obs,
             F.sum(
                 F.when(F.col("verdict_code") == V.MISSING_COUNTERPART, 1).otherwise(0)

@@ -35,7 +35,6 @@ from np_data_validation_spark.operators import verdicts as V
 def validate_batch(
     snapshot: DataFrame,
     manifest: DataFrame,
-    hash_method: str = "pandas_udf",
     join_strategy: str = "auto",
     manifest_rows: int | None = None,
     persist: bool = True,
@@ -47,7 +46,7 @@ def validate_batch(
     branch all consume them — without it the expensive hash+join subtree
     executes once per output action.
     """
-    snap = with_tok_hash(snapshot, method=hash_method).select(
+    snap = with_tok_hash(snapshot).select(
         "doc_id", "source", "n_tok", "tok_hash"
     )
     if persist:
@@ -78,7 +77,6 @@ def materialize_pairs(
     snapshot: DataFrame,
     manifest: DataFrame,
     out_dir: str,
-    hash_method: str = "pandas_udf",
     join_strategy: str = "auto",
     probe_broadcast: str = "auto",
 ) -> DataFrame:
@@ -91,7 +89,7 @@ def materialize_pairs(
     additionally pre-aggregates on row identity); this variant is kept as
     the pair-multiset parity oracle for ``verdicts.classify_pairs``.
     """
-    snap = with_tok_hash(snapshot, method=hash_method).select(
+    snap = with_tok_hash(snapshot).select(
         "doc_id",
         "source",
         "n_tok",

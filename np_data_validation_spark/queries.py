@@ -16,6 +16,7 @@ end-to-end against DuckDB.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -31,25 +32,40 @@ from np_data_validation_spark.operators import verdicts as V
 # ---------------------------------------------------------------------------
 
 
-#: (sf_dir, table) -> inferred StructType. Parquet footer/schema inference
-#: is driver-serial fixed cost paid at DataFrame CONSTRUCTION — measured
-#: ~75 ms per table read, ~0.3 s for a 5-table query like j10 (r9). The
-#: schema is metadata, inferred once per input directory from the actual
-#: files and reused for every later read of the same table — never a
-#: hardcoded guess, so a driver-generated scale factor with a different
-#: schema still works.
-_SCHEMA_MEMO: dict[tuple[str, str], object] = {}
+#: path -> (newest mtime, inferred StructType). Parquet footer/schema
+#: inference is driver-serial fixed cost paid at DataFrame CONSTRUCTION —
+#: measured ~75 ms per table read, ~0.3 s for a 5-table query like j10
+#: (r9). The schema is metadata, inferred once per input directory from
+#: the actual files and reused for every later read of the same table —
+#: never a hardcoded guess, so a regenerated scale factor with a
+#: different schema still works. A hit needs the same newest mtime, so a
+#: table rewritten in-process is re-inferred, never read with a stale
+#: schema.
+_SCHEMA_MEMO: dict[str, tuple[int, object]] = {}
+
+
+def _newest_mtime(path: str) -> int | None:
+    """Newest mtime (ns) of ``path`` and everything under it; None when
+    it is not on the local filesystem (then nothing is memoized)."""
+    try:
+        stamps = [os.stat(path).st_mtime_ns]
+        for root, dirs, files in os.walk(path):
+            stamps += [os.stat(os.path.join(root, n)).st_mtime_ns for n in dirs + files]
+        return max(stamps)
+    except OSError:
+        return None
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (sf_dir, name)
     path = f"{sf_dir}/{name}.parquet"
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _SCHEMA_MEMO[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+    mtime = _newest_mtime(path)
+    hit = _SCHEMA_MEMO.get(path)
+    if mtime is not None and hit is not None and hit[0] == mtime:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if mtime is not None:
+        _SCHEMA_MEMO[path] = (mtime, df.schema)
+    return df
 
 
 def _i6(col):  # float -> stable integer (1e-6 grain)
@@ -1287,7 +1303,7 @@ _GOLDEN_FIXTURE = __file__.rsplit("/", 2)[0] + "/fixtures/xxh64_golden.parquet"
         FROM read_parquet('{_GOLDEN_FIXTURE}') ORDER BY case_id""",
 )
 def udf_xxhash_golden(spark, sf_dir):
-    """Value-level check of the vectorized pandas-UDF XXH64 kernel: hash the
+    """Value-level check of the vectorized Arrow-UDF XXH64 kernel: hash the
     fixture token arrays (edge lengths around every stripe/lane boundary,
     adversarial values) and compare against goldens pinned from the scalar
     public-spec implementation — the golden-checksum doctrine of the

@@ -5,7 +5,7 @@ Local-mode testing stands in for a multi-executor cluster: we size
 enable AQE (runtime coalescing + skew-join splitting — the reference has no
 skew handling at all and suffers for it: one big session = one slow loop,
 see /root/reference/data_validation.py:1449-1455), and turn on Arrow so the
-pandas-UDF fingerprint kernel moves columnar batches, not pickled rows.
+Arrow-UDF fingerprint kernel moves columnar batches, not pickled rows.
 """
 
 from __future__ import annotations
@@ -75,17 +75,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )
-    # Shuffle/spill scratch on the fastest local storage (guide §2.1: local
-    # disk bandwidth can be the tighter limit for shuffle files). The
-    # sandbox's java.io.tmpdir sits on the shared vda spindle whose
-    # writeback pollutes measurements (the bench already moved its job
-    # workdir to tmpfs for exactly this reason — benchlib doctrine); a
-    # production cluster points this at NVMe scratch via the same env.
-    # Parameterised, with the tmpfs default only where /dev/shm exists.
-    local_dir = os.environ.get(
-        "NPDV_LOCAL_DIR",
-        "/dev/shm/npdv_spark_local" if os.path.isdir("/dev/shm") else "",
-    )
+    # Shuffle/spill scratch goes to RAM only when the caller opts in: a
+    # tmpfs default spends host memory that the executors and other
+    # tenants need. NPDV_LOCAL_DIR points it at fast scratch (tmpfs, NVMe);
+    # unset, Spark keeps its own default (java.io.tmpdir or
+    # SPARK_LOCAL_DIRS).
+    local_dir = os.environ.get("NPDV_LOCAL_DIR")
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
@@ -98,7 +93,7 @@ def get_spark(
 
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to Python workers (the local-mode / notebook analog
-    of ``spark-submit --py-files``), so pandas UDFs defined here unpickle on
+    of ``spark-submit --py-files``), so Python UDFs defined here unpickle on
     executors even when the driver script runs outside the repo."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)

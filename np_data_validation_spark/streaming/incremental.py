@@ -44,7 +44,6 @@ def validate_stream(
     landing_dir: str,
     manifest: DataFrame,
     out_dir: str,
-    hash_method: str = "pandas_udf",
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
@@ -62,7 +61,7 @@ def validate_stream(
             return
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         work = os.path.join(out_dir, "_work", f"batch={batch_id}")
-        res = validate_onepass(spark, batch_df, manifest, work, hash_method=hash_method)
+        res = validate_onepass(spark, batch_df, manifest, work)
         for df, name in ((res.rolled, "verdicts"), (res.violations, "violations")):
             (
                 df.withColumn("_batch_id", F.lit(batch_id))

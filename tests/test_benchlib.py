@@ -387,7 +387,7 @@ def test_run_validation_reps_until_qualified_retries_bounded(monkeypatch):
         [_crep(9.0, 0, None), _crep(8.5, 0, None)],
     ]
 
-    def fake_reps(spark, root, reps=4, hash_method="pandas_udf"):
+    def fake_reps(spark, root, reps=4):
         out = series[min(calls["n"], len(series) - 1)]
         calls["n"] += 1
         return out
@@ -444,7 +444,7 @@ def test_run_validation_reps_chains_canary_after(monkeypatch):
     monkeypatch.setattr(
         benchlib,
         "run_validation_job",
-        lambda spark, root, hash_method="pandas_udf": {
+        lambda spark, root: {
             "sec": 10.0,
             "rows_per_sec": 1.0,
         },

@@ -110,3 +110,43 @@ def test_spark_submit_py_files_end_to_end(synth_dataset, tmp_path):
         m["partition_status"] in ("pass", "fail")
         for m in summary["metrics"].values()
     )
+
+
+def test_spark_local_dir_is_opt_in(monkeypatch):
+    """Shuffle scratch goes to RAM only on request: with NPDV_LOCAL_DIR
+    unset the builder never points spark.local.dir at /dev/shm; set, it
+    uses exactly that directory."""
+    from np_data_validation_spark import session
+
+    class Built(Exception):
+        pass
+
+    class FakeBuilder:
+        def __init__(self):
+            self.conf = {}
+
+        def appName(self, _name):
+            return self
+
+        def master(self, _master):
+            return self
+
+        def config(self, k, v):
+            self.conf[k] = v
+            return self
+
+        def getOrCreate(self):
+            raise Built(self.conf)
+
+    def built_conf():
+        monkeypatch.setattr(session.SparkSession, "builder", FakeBuilder())
+        try:
+            session.get_spark(cpus=1)
+        except Built as b:
+            return b.args[0]
+        raise AssertionError("getOrCreate was not reached")
+
+    monkeypatch.delenv("NPDV_LOCAL_DIR", raising=False)
+    assert "spark.local.dir" not in built_conf()
+    monkeypatch.setenv("NPDV_LOCAL_DIR", "/scratch/npdv")
+    assert built_conf()["spark.local.dir"] == "/scratch/npdv"

@@ -202,9 +202,9 @@ def test_content_aware_first_run_has_no_fingerprint_prescan(
     calls = []
     orig = CP.content_fingerprints
 
-    def spy(snapshot, partitions, hash_method="pandas_udf"):
+    def spy(snapshot, partitions):
         calls.append(sorted(partitions))
-        return orig(snapshot, partitions, hash_method)
+        return orig(snapshot, partitions)
 
     monkeypatch.setattr(CP, "content_fingerprints", spy)
 

@@ -105,17 +105,3 @@ def test_pandas_udf_in_spark(spark):
     assert out["b"] == s64(H.XXH64_EMPTY)
     assert out["c"] is None
     assert out["d"] == s64(H.xxh64_int32_scalar(np.arange(100, dtype=np.int32)))
-
-
-@pytest.mark.usefixtures("spark")
-def test_jvm_kernel_is_consistent(spark):
-    """The JVM alternative kernel is a different value space but must be
-    deterministic and sensitive to content."""
-    pdf = pd.DataFrame(
-        {"tokens": [np.array([1, 2, 3], np.int32), np.array([1, 2, 4], np.int32)]}
-    )
-    df = spark.createDataFrame(pdf)
-    a = H.with_tok_hash(df, method="jvm").collect()
-    b = H.with_tok_hash(df, method="jvm").collect()
-    assert [r["tok_hash"] for r in a] == [r["tok_hash"] for r in b]
-    assert a[0]["tok_hash"] != a[1]["tok_hash"]

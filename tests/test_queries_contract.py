@@ -79,3 +79,18 @@ def test_sampled_value_parity(spark, duck, name):
     assert len(sdf) == len(odf), name
     assert sorted(sdf.columns) == sorted(odf.columns), name
     assert _value_hash(sdf) == _value_hash(odf), name
+
+
+def test_schema_memo_sees_rewritten_table(spark, tmp_path):
+    """A table rewritten in-process with a changed schema is read back
+    with the NEW schema, not the memoized one."""
+    from np_data_validation_spark import queries as Q
+
+    sf = str(tmp_path)
+    path = f"{sf}/t.parquet"
+    spark.createDataFrame([(1,)], "a long").write.parquet(path)
+    assert Q._t(spark, sf, "t").columns == ["a"]
+    spark.createDataFrame([(1, "x")], "a long, b string").write.mode(
+        "overwrite"
+    ).parquet(path)
+    assert Q._t(spark, sf, "t").columns == ["a", "b"]

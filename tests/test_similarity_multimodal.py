@@ -1,10 +1,9 @@
-"""ANN / cosine similarity + multimodal plumbing tests."""
+"""ANN / cosine similarity tests."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from np_data_validation_spark.operators import multimodal as MM
 from np_data_validation_spark.operators import similarity as SIM
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -181,125 +180,3 @@ def test_near_dups_lsh_recall_vs_brute(spark, emb):
     assert got <= truth  # exact re-rank: no false positives
     recall = len(got & truth) / len(truth)
     assert recall >= 0.9, f"near-dup LSH recall {recall:.2f} ({len(got)}/{len(truth)})"
-
-
-@pytest.fixture(scope="module")
-def assets(spark):
-    rng = np.random.default_rng(5)
-    rows = []
-    for i in range(6):
-        w, h = 16, 12
-        px = rng.integers(0, 256, size=(h, w)).astype(np.uint8)
-        rows.append((f"img_{i}", "image/fake", bytearray(MM.encode_image(w, h, px)), {"w": str(w)}))
-    for i in range(4):
-        samples = (np.sin(np.arange(1000) * (0.01 * (i + 1))) * 1000).astype("<i2")
-        rows.append((f"aud_{i}", "audio/fake", bytearray(MM.encode_audio(16000, samples)), {}))
-    for i in range(2):
-        frames = [rng.integers(0, 256, size=(8, 8)).astype(np.uint8) for _ in range(6)]
-        rows.append((f"vid_{i}", "video/fake", bytearray(MM.encode_video(frames)), {}))
-    return spark.createDataFrame(rows, MM.ASSET_SCHEMA)
-
-
-def test_image_features(assets):
-    out = MM.image_features(assets).toPandas().set_index("asset_id")
-    assert len(out) == 6
-    assert (out["width"] == 16).all() and (out["height"] == 12).all()
-    assert out["mean_intensity"].between(0, 255).all()
-    assert out["thumb"].map(len).eq(16).all()
-
-
-def test_audio_features(assets):
-    out = MM.audio_features(assets).toPandas()
-    assert len(out) == 4
-    assert (out["sample_rate"] == 16000).all()
-    assert (out["n_samples"] == 1000).all()
-    assert (out["rms"] > 0).all()
-
-
-def test_frame_sampling(assets):
-    out = MM.sample_frames(assets, every_k=2).toPandas()
-    # 2 videos x frames 0,2,4
-    assert len(out) == 6
-    assert set(out["frame_idx"]) == {0, 2, 4}
-    # sampled frames decode as images
-    assert all(bytes(b[:4]) == b"IMG1" for b in out["frame"])
-
-
-def test_decode_stub_raises_on_real_formats(assets, spark):
-    df = spark.createDataFrame(
-        [("x", "image/png", bytearray(b"\x89PNG\r\n"), {})], MM.ASSET_SCHEMA
-    )
-    with pytest.raises(Exception, match="NotImplementedError|real image codecs"):
-        MM.image_features(df).collect()
-
-
-# --- real codecs behind the seam (VERDICT r7 task #8) ------------------------
-# The SAME feature kernels must work against real public formats (binary
-# netpbm images, RIFF/WAVE PCM audio — decodable with stdlib+numpy, the
-# only codecs honestly implementable without Pillow/ffmpeg) AND the fake
-# IMG1/AUD1 test formats, mixed in one DataFrame.
-
-
-def test_decode_rgb_contract_real_and_fake():
-    rng = np.random.default_rng(11)
-    px = rng.integers(0, 256, size=(12, 16)).astype(np.uint8)
-    for enc in (MM.encode_pgm(px), MM.encode_image(16, 12, px)):
-        w, h, got = MM._decode_rgb(enc)
-        assert (w, h) == (16, 12)
-        np.testing.assert_array_equal(got, px)
-    # P6 RGB reduces to BT.601 luma
-    rgb = rng.integers(0, 256, size=(12, 16, 3)).astype(np.uint8)
-    w, h, got = MM._decode_rgb(MM.encode_ppm(rgb))
-    want = np.round(
-        0.299 * rgb[..., 0] + 0.587 * rgb[..., 1] + 0.114 * rgb[..., 2]
-    ).astype(np.uint8)
-    np.testing.assert_array_equal(got, want)
-    # header comments and multi-digit dims parse per the netpbm spec
-    hdr = b"P5\n# a comment\n16 12\n255\n" + px.tobytes()
-    assert MM._decode_rgb(hdr)[:2] == (16, 12)
-
-
-def test_decode_pcm_contract_real_and_fake():
-    samples = (np.sin(np.arange(500) * 0.02) * 2000).astype("<i2")
-    for enc in (MM.encode_wav(8000, samples), MM.encode_audio(8000, samples)):
-        rate, got = MM._decode_pcm(enc)
-        assert rate == 8000
-        np.testing.assert_array_equal(got, samples)
-    # stereo downmix: channel mean
-    stereo = np.stack([samples, -samples], axis=1)
-    rate, got = MM._decode_pcm(MM.encode_wav(8000, stereo, channels=2))
-    np.testing.assert_array_equal(got, np.zeros_like(samples))
-
-
-def test_feature_kernels_over_mixed_real_and_fake_assets(spark):
-    rng = np.random.default_rng(13)
-    px = rng.integers(0, 256, size=(12, 16)).astype(np.uint8)
-    rgb = rng.integers(0, 256, size=(12, 16, 3)).astype(np.uint8)
-    samples = (np.sin(np.arange(1000) * 0.01) * 1000).astype("<i2")
-    rows = [
-        ("img_fake", "image/fake", bytearray(MM.encode_image(16, 12, px)), {}),
-        ("img_pgm", "image/x-portable-graymap", bytearray(MM.encode_pgm(px)), {}),
-        ("img_ppm", "image/x-portable-pixmap", bytearray(MM.encode_ppm(rgb)), {}),
-        ("aud_fake", "audio/fake", bytearray(MM.encode_audio(16000, samples)), {}),
-        ("aud_wav", "audio/wav", bytearray(MM.encode_wav(16000, samples)), {}),
-    ]
-    assets = spark.createDataFrame(rows, MM.ASSET_SCHEMA)
-    img = MM.image_features(assets).toPandas().set_index("asset_id")
-    assert len(img) == 3
-    assert (img["width"] == 16).all() and (img["height"] == 12).all()
-    # identical pixels -> identical features regardless of container format
-    assert img.loc["img_fake", "mean_intensity"] == img.loc["img_pgm", "mean_intensity"]
-    assert list(img.loc["img_fake", "thumb"]) == list(img.loc["img_pgm", "thumb"])
-    aud = MM.audio_features(assets).toPandas().set_index("asset_id")
-    assert len(aud) == 2
-    assert aud.loc["aud_fake", "rms"] == aud.loc["aud_wav", "rms"]
-    assert (aud["n_samples"] == 1000).all()
-
-
-def test_decode_still_raises_on_unsupported_formats():
-    with pytest.raises(NotImplementedError):
-        MM._decode_rgb(b"\x89PNG\r\n\x1a\n12345678")
-    with pytest.raises(NotImplementedError):
-        MM._decode_pcm(b"ID3\x04\x00\x00\x00\x00\x00\x00")
-    with pytest.raises(NotImplementedError):
-        MM._decode_pcm(None)

@@ -344,296 +344,3 @@ def _assert_scratch_reclaimed(out: str) -> None:
     work = os.path.join(out, "_work")
     leftover = os.listdir(work) if os.path.isdir(work) else []
     assert leftover == [], f"unreclaimed scratch batches: {leftover}"
-
-def test_windowed_stats_watermark_drops_late_rows(spark, tmp_path):
-    """Watermarked event-time windows (streaming/windowed.py): the same
-    declaration runs as a batch (the oracle) and as two availableNow
-    trigger runs sharing one checkpoint — the production batch-with-resume
-    shape — where run 2 delivers a row LATER than the watermark persisted
-    by run 1. That row must be dropped (visible in the state operator's
-    numRowsDroppedByWatermark metric) and the open window must never be
-    emitted; the batch oracle over the same files still counts both,
-    which is the observable difference that proves the watermark works.
-
-    Pinned Spark behavior (empirical, this build): WITHIN a single
-    trigger run the late-row filter is planned with the run-start
-    watermark and does not tighten between micro-batches — only eviction/
-    emission follows the advancing watermark. Cross-run, the watermark is
-    restored from the checkpoint commit log and the filter engages. So
-    bounding state AND dropping late data relies on the checkpointed
-    restart cadence, which is exactly how the engine's incremental
-    validation runs (streaming/incremental.py)."""
-    import datetime as dt
-    import os as _os
-
-    from np_data_validation_spark.streaming.windowed import windowed_source_stats
-
-    base = dt.datetime(2026, 1, 1, 10, 0, 0)
-
-    def mkdf(specs):
-        return spark.createDataFrame(
-            [
-                (f"d{i}", base + dt.timedelta(minutes=m), s, n)
-                for i, (m, s, n) in enumerate(specs)
-            ],
-            "doc_id string, event_ts timestamp, source string, n_tok int",
-        )
-
-    landing = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    outp = str(tmp_path / "out")
-    _os.makedirs(landing)
-
-    def run():
-        stream = spark.readStream.schema(
-            "doc_id string, event_ts timestamp, source string, n_tok int"
-        ).parquet(landing)
-        q = (
-            windowed_source_stats(stream)
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return q
-
-    # run 1: two rows in w0=[10:00,10:10), one at 10:17 — end-of-run
-    # watermark = 10:17 - 5min = 10:12 > w0.end, persisted to the ckpt
-    mkdf([(2, "srcA", 10), (7, "srcA", 20), (17, "srcA", 30)]).coalesce(
-        1
-    ).write.mode("append").parquet(landing)
-    run()
-    # run 2: a LATE row at 10:03 (w0 closed under the restored 10:12
-    # watermark — must be dropped) and an on-time row at 10:45 (advances
-    # the watermark to 10:40, closing and emitting w1)
-    mkdf([(3, "srcA", 40), (45, "srcA", 50)]).coalesce(1).write.mode(
-        "append"
-    ).parquet(landing)
-    q2 = run()
-    dropped = sum(
-        p["stateOperators"][0]["numRowsDroppedByWatermark"]
-        for p in q2.recentProgress
-        if p["stateOperators"]
-    )
-    assert dropped == 1
-    got = {
-        (r["window_start"].minute, r["source"]): (
-            r["n_seqs"],
-            r["sum_tok"],
-            r["min_tok"],
-            r["max_tok"],
-        )
-        for r in spark.read.parquet(outp).collect()
-    }
-    # only the two CLOSED windows are emitted (w2=[10:40,10:50) stays open
-    # — append mode never emits an unfinalized window), and w0 does NOT
-    # include the late 10:03 row
-    assert got == {(0, "srcA"): (2, 30, 10, 20), (10, "srcA"): (1, 30, 30, 30)}
-    # the batch oracle over the SAME files counts the late row and the
-    # open window — the two differences are exactly watermark semantics
-    batch = {
-        (r["window_start"].minute, r["source"]): (r["n_seqs"], r["sum_tok"])
-        for r in windowed_source_stats(spark.read.parquet(landing)).collect()
-    }
-    assert batch[(0, "srcA")] == (3, 70)
-    assert batch[(10, "srcA")] == (1, 30)
-    assert batch[(40, "srcA")] == (1, 50)
-
-
-def test_stateful_source_totals_accumulate_across_batches_and_restarts(
-    spark, tmp_path
-):
-    """Custom stateful operator (applyInPandasWithState,
-    streaming/stateful.py): per-source cumulative totals must be a
-    monotone prefix-sum series — state carried across micro-batches
-    WITHIN a run, across availableNow RESTARTS sharing the checkpoint,
-    with no emission for sources absent from a batch — and the last row
-    per source must equal the stateless batch groupBy oracle over the
-    same files."""
-    import os as _os
-
-    from np_data_validation_spark.streaming.stateful import (
-        stateful_source_totals,
-    )
-
-    schema = "doc_id string, source string, n_tok int"
-    landing = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    outp = str(tmp_path / "out")
-    _os.makedirs(landing)
-    _os.makedirs(outp)
-
-    def land(rows, mtime):
-        before = set(_os.listdir(landing))
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        for f in set(_os.listdir(landing)) - before:
-            if f.endswith(".parquet"):
-                _os.utime(_os.path.join(landing, f), (mtime, mtime))
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-
-        def sink(batch_df, batch_id):
-            batch_df.write.mode("append").parquet(outp)
-
-        q = (
-            stateful_source_totals(stream)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    land([("d1", "srcA", 10), ("d2", "srcA", 20), ("d3", "srcB", 5)], 1_700_000_000)
-    land([("d4", "srcA", 30)], 1_700_000_100)
-    run()
-    got1 = sorted(
-        tuple(r)
-        for r in spark.read.parquet(outp)
-        .select("source", "n_batches", "n_seqs_cum", "sum_tok_cum")
-        .collect()
-    )
-    # two micro-batches: srcA's state carried 1 -> 2; srcB absent from
-    # batch 2 emits nothing there
-    assert got1 == [
-        ("srcA", 1, 2, 30),
-        ("srcA", 2, 3, 60),
-        ("srcB", 1, 1, 5),
-    ]
-
-    # restart with the same checkpoint: new file, srcA resumes from its
-    # persisted state, srcC starts fresh, srcB's state is untouched
-    land([("d5", "srcA", 40), ("d6", "srcC", 7)], 1_700_000_200)
-    run()
-    rows = sorted(
-        tuple(r)
-        for r in spark.read.parquet(outp)
-        .select("source", "n_batches", "n_seqs_cum", "sum_tok_cum")
-        .collect()
-    )
-    assert rows == [
-        ("srcA", 1, 2, 30),
-        ("srcA", 2, 3, 60),
-        ("srcA", 3, 4, 100),
-        ("srcB", 1, 1, 5),
-        ("srcC", 1, 1, 7),
-    ]
-    # last row per source == the stateless batch oracle over all files
-    import pyspark.sql.functions as _F
-
-    oracle = {
-        r["source"]: (r["n"], r["t"])
-        for r in spark.read.parquet(landing)
-        .groupBy("source")
-        .agg(_F.count(_F.lit(1)).alias("n"), _F.sum("n_tok").alias("t"))
-        .collect()
-    }
-    last = {}
-    for src, nb, n, t in rows:
-        if nb >= last.get(src, (0,))[0]:
-            last[src] = (nb, n, t)
-    assert {s: (n, t) for s, (_, n, t) in last.items()} == oracle
-
-
-def test_session_source_bursts_batch_and_stream(spark, tmp_path):
-    """Session windows (streaming/windowed.py): arrivals closer than the
-    gap merge into one session per source, a quiet period closes it.
-    Batch run pins the merge semantics exactly; the streaming run (two
-    checkpointed availableNow triggers) must emit exactly the sessions
-    the watermark has closed, and they must MATCH the batch oracle's
-    rows for those sessions."""
-    import datetime as dt
-    import os as _os
-
-    from np_data_validation_spark.streaming.windowed import (
-        session_source_bursts,
-    )
-
-    base = dt.datetime(2026, 1, 1, 10, 0, 0)
-    schema = "doc_id string, event_ts timestamp, source string, n_tok int"
-
-    def rows(specs):
-        return [
-            (f"d{i}", base + dt.timedelta(minutes=m), s, 1)
-            for i, (m, s) in enumerate(specs)
-        ]
-
-    # srcA: burst at 10:00/10:04/10:08 (one session, gap 10min), then a
-    # separate burst at 10:30; srcB: single arrival at 10:05
-    all_specs = [(0, "srcA"), (4, "srcA"), (8, "srcA"), (30, "srcA"), (5, "srcB")]
-    batch = {
-        (r["session_start"].minute, r["source"]): (
-            r["n_seqs"],
-            r["first_event"].minute,
-            r["last_event"].minute,
-            r["session_end"].minute,
-        )
-        for r in session_source_bursts(
-            spark.createDataFrame(rows(all_specs), schema)
-        ).collect()
-    }
-    # session end = last event + gap; 10:18 and 10:40 wrap to minutes 18/40
-    assert batch == {
-        (0, "srcA"): (3, 0, 8, 18),
-        (30, "srcA"): (1, 30, 30, 40),
-        (5, "srcB"): (1, 5, 5, 15),
-    }
-
-    # streaming: run 1 delivers the first burst + srcB; run 2 delivers a
-    # 10:30 arrival that pushes the watermark to 10:25 — closing the
-    # 10:00-burst and srcB sessions but NOT the (still-open) 10:30 one
-    landing = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    outp = str(tmp_path / "out")
-    _os.makedirs(landing)
-
-    def land(specs, mtime):
-        before = set(_os.listdir(landing))
-        spark.createDataFrame(rows(specs), schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(landing)
-        for f in set(_os.listdir(landing)) - before:
-            if f.endswith(".parquet"):
-                _os.utime(_os.path.join(landing, f), (mtime, mtime))
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(landing)
-        q = (
-            session_source_bursts(stream)
-            .writeStream.format("parquet")
-            .option("path", outp)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    land([(0, "srcA"), (4, "srcA"), (8, "srcA"), (5, "srcB")], 1_700_000_000)
-    run()
-    land([(30, "srcA")], 1_700_000_100)
-    run()
-    streamed = {
-        (r["session_start"].minute, r["source"]): (
-            r["n_seqs"],
-            r["first_event"].minute,
-            r["last_event"].minute,
-            r["session_end"].minute,
-        )
-        for r in spark.read.parquet(outp).collect()
-    }
-    want_closed = {
-        k: v for k, v in batch.items() if k in {(0, "srcA"), (5, "srcB")}
-    }
-    assert streamed == want_closed

@@ -147,37 +147,6 @@ def test_psi_spark_numpy_and_duckdb_agree(spark, seq_man):
     assert spark_psi == pytest.approx(duck_psi, abs=1e-9)
 
 
-def test_n_tok_quantiles_match_duckdb_exact(spark, seq_man):
-    """At QUANTILE_ACCURACY=10k on a 4k-row fixture, percentile_approx's
-    rank-error guarantee (<= rows/accuracy < 1 row) makes the discrete
-    quantiles EXACT — pin per-source and global values against DuckDB's
-    quantile_disc on the same parquet rows."""
-    import duckdb
-
-    seq, _, _ = seq_man
-    got = {
-        (r["source"], bool(r["is_global"])): r
-        for r in S.n_tok_quantiles(seq).collect()
-    }
-    pdf = seq.select("source", "n_tok").toPandas()
-    con = duckdb.connect()
-    con.register("seq", pdf)
-    probs = ", ".join(str(p) for p in S.QUANTILE_PROBS)
-    for src, want in con.execute(
-        f"SELECT source, quantile_disc(n_tok, [{probs}]) FROM seq "
-        "WHERE n_tok IS NOT NULL GROUP BY source"
-    ).fetchall():
-        row = got[(src, False)]
-        for p, w in zip(S.QUANTILE_PROBS, want):
-            assert row[f"n_tok_p{int(p * 100):02d}"] == w, (src, p)
-    (want_g,) = con.execute(
-        f"SELECT quantile_disc(n_tok, [{probs}]) FROM seq WHERE n_tok IS NOT NULL"
-    ).fetchone()
-    grow = got[(None, True)]
-    for p, w in zip(S.QUANTILE_PROBS, want_g):
-        assert grow[f"n_tok_p{int(p * 100):02d}"] == w, p
-
-
 def test_psi_statistic_df_empty_side_matches_psi_drift(spark, seq_man):
     """ADVICE r8 drift.py:278 (fixed r9): the distributed PSI must match
     psi_drift's zero-count fallback (PSI 0.0) when either or both sides

@@ -67,8 +67,6 @@ def test_exact_duplicates(docs):
     n_exact = docs.filter(F.col("doc_id") % 50 == 0).count()
     assert len(groups) == n_exact
     assert (groups["n_docs"] == 2).all()
-    kept = DD.exact_dedup_keep_first(aug)
-    assert kept.count() == aug.count() - n_exact
 
 
 def test_minhash_lsh_finds_near_dups(docs):
@@ -98,17 +96,6 @@ def test_jaccard_verify(spark, docs):
     for i in [r[0] for r in docs.filter(F.col("doc_id") % 50 == 0).select("doc_id").collect()]:
         assert (i, i + 200000) in pairs
     assert (verified["jaccard"] >= 0.9).all()
-
-
-def test_simhash_near_dups(docs):
-    aug = _with_dups(docs)
-    # exact dups have hamming 0 and must be found
-    pairs = DD.simhash_near_dups(aug, max_hamming=3).toPandas()
-    found = set(zip(pairs["doc_a"], pairs["doc_b"]))
-    exact_ids = [r[0] for r in docs.filter(F.col("doc_id") % 50 == 0).select("doc_id").collect()]
-    for i in exact_ids:
-        assert (i, i + 200000) in found
-    assert (pairs["hamming"] <= 3).all()
 
 
 def test_simhash_value_stability(spark):
