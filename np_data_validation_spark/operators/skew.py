@@ -1,4 +1,4 @@
-"""Skew handling + join-strategy selection.
+"""Skew handling: deterministic salting and hot-key detection.
 
 The reference has no skew handling and suffers for it: one big session is
 one long sequential loop (/root/reference/data_validation.py:1449-1455).
@@ -10,10 +10,7 @@ Here skew is handled explicitly (BASELINE.json north_rule):
   ``buckets`` reducers.
 * ``salted_join`` implements the explode-replicate pattern for joining a
   skewed fact side against a dimension side.
-* ``choose_join`` picks broadcast vs shuffle based on an estimated row
-  count — the explicit form of what AQE does at runtime, for when we know
-  the manifest side is small (reference analog: the manifest fetched per
-  session was always small, /root/reference/data_validation.py:827-829).
+* ``detect_hot_keys`` decides when the one-pass plan engages salting.
 """
 
 from __future__ import annotations
@@ -53,8 +50,8 @@ def detect_hot_keys(
     ``ratio`` x the average bucket) so it is scale-free, gated by an
     absolute floor (``min_hot_rows``) so small inputs never trip it.
 
-    This is the detector behind validate_onepass's salt_buckets="auto" —
-    the engine's explicit-skew-handling contract (north_rule; the
+    This is the detector behind validate_onepass's salted rollup and
+    salted probe join — the engine's explicit-skew-handling contract (north_rule; the
     reference's one-big-session pathology,
     /root/reference/data_validation.py:1449-1455).
     """
@@ -120,28 +117,3 @@ def salted_join(
     out = fact.join(replicated, on + ["_salt"], how)
     return out.drop("_salt")
 
-
-def choose_join(
-    left: DataFrame,
-    right: DataFrame,
-    on,
-    how: str = "left",
-    strategy: str = "auto",
-    broadcast_threshold_rows: int = 2_000_000,
-    right_rows: int | None = None,
-) -> DataFrame:
-    """Equi-join with an explicit strategy knob.
-
-    ``auto``: broadcast the right side when its (known or estimated) row
-    count is under the threshold, else let Catalyst/AQE pick (sort-merge or
-    shuffled-hash at 10^12-row scale). ``broadcast``/``shuffle`` force.
-    """
-    if strategy == "broadcast":
-        return left.join(F.broadcast(right), on, how)
-    if strategy == "shuffle":
-        return left.join(right.hint("shuffle_hash"), on, how)
-    if strategy == "auto":
-        if right_rows is not None and right_rows <= broadcast_threshold_rows:
-            return left.join(F.broadcast(right), on, how)
-        return left.join(right, on, how)
-    raise ValueError(f"unknown join strategy: {strategy!r}")

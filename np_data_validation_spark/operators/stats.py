@@ -1,8 +1,10 @@
-"""Per-partition column statistics + HLL sketches + histograms.
+"""HLL sketches + histograms for per-partition statistics and drift.
 
-North-star surface: min/max/null-rate on n_tok, approx-distinct on doc_id
-(HyperLogLog), source/n_tok histograms for drift. Reference anchor for the
-tally shape: per-folder sums and counts printed by clear()
+North-star surface: approx-distinct on doc_id (HyperLogLog) and source/n_tok
+histograms for drift. The per-partition min/max/avg/null-rate row is
+computed by the one-pass plan from its written identities
+(plans.onepass.stats_from_identities). Reference anchor for the tally
+shape: per-folder sums and counts printed by clear()
 (/root/reference/data_validation.py:1150-1165, :1449-1455).
 
 All aggregations here are algebraic (partial + final) so Spark's hash
@@ -22,26 +24,6 @@ DEFAULT_BUCKET_WIDTH = 32
 
 #: log2(registers) for HLL sketches; 12 -> ~1.6% relative error, 4 KiB.
 HLL_LGK = 12
-
-
-def partition_stats(snapshot: DataFrame, group_col: str = "source") -> DataFrame:
-    """One stats row per partition PLUS a global row, in one pass via
-    rollup() (grouping-sets; the global row has source = NULL and
-    is_global = true)."""
-    return (
-        snapshot.rollup(group_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("n_tok").alias("n_tok_min"),
-            F.max("n_tok").alias("n_tok_max"),
-            F.avg("n_tok").alias("n_tok_avg"),
-            F.sum("n_tok").alias("n_tok_sum"),
-            F.avg(F.col("n_tok").isNull().cast("int")).alias("n_tok_null_rate"),
-            F.avg(F.col("tokens").isNull().cast("int")).alias("tokens_null_rate"),
-            F.approx_count_distinct("doc_id", 0.02).alias("doc_id_approx_distinct"),
-            (F.grouping(group_col) == 1).alias("is_global"),
-        )
-    )
 
 
 def doc_id_sketches(snapshot: DataFrame, group_col: str = "source") -> DataFrame:
@@ -73,7 +55,8 @@ def n_tok_histogram(
 
     Null n_tok rows are excluded: a null has no bucket, and a null key never
     equals itself in drift.py's bucket-alignment joins (identical histograms
-    would read as drifted). Null *rate* is partition_stats' job.
+    would read as drifted). Null *rate* is a column of the one-pass stats
+    (plans.onepass.stats_from_identities).
     """
     bucket = (F.col("n_tok") / F.lit(bucket_width)).cast("long").alias("bucket")
     keys = [bucket] if group_col is None else [F.col(group_col), bucket]

@@ -19,15 +19,14 @@ above it consumed name=; UNKNOWN is the fall-through (reference :627-628);
 SELF_NO_CHECKSUM vs OTHER_NO_CHECKSUM depend on which *side* lacks the
 hash (reference :536-537, :558-573) — subject = snapshot, other = manifest.
 Property-tested against a pure-Python oracle of the reference tree
-(tests/test_verdicts.py).
+(tests/test_verdicts.py). The join, content probe and rollup that feed and
+consume this CASE are ``plans.onepass`` — the engine's one plan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from np_data_validation_spark.operators.skew import choose_join
 
 # Verdict codes mirror the reference IntFlag values
 # (/root/reference/data_validation.py:529-545). MISSING_COUNTERPART is an
@@ -78,27 +77,20 @@ VIOLATION_CLASS = {
 }
 
 
-def classify_expr(
-    doc_id: str = "doc_id",
-    source: str = "source",
-    n_tok: str = "n_tok",
-    tok_hash: str = "tok_hash",
-    m_doc_id: str = "m_doc_id",
-    m_source: str = "m_source",
-    m_n_tok: str = "m_n_tok",
-    m_tok_hash: str = "m_tok_hash",
-    missing_if_no_counterpart: bool = True,
-) -> Column:
+def classify_expr() -> Column:
     """Ordered CASE translating the reference decision tree 1:1.
 
-    Reference branch -> engine predicate (s=snapshot/subject, m=manifest/
-    other). ``hash_eq`` etc. are only consulted behind both-non-null guards,
-    mirroring the truthiness guards in the reference.
+    Reads the pair columns (doc_id, source, n_tok, tok_hash) and their m_*
+    manifest counterparts. Reference branch -> engine predicate
+    (s=snapshot/subject, m=manifest/other). ``hash_eq`` etc. are only
+    consulted behind both-non-null guards, mirroring the truthiness guards
+    in the reference. A pair with no counterpart (all m_* null) is
+    MISSING_COUNTERPART.
     """
-    s_doc, s_src = F.col(doc_id), F.col(source)
-    s_nt, s_h = F.col(n_tok), F.col(tok_hash)
-    m_doc, m_src = F.col(m_doc_id), F.col(m_source)
-    m_nt, m_h = F.col(m_n_tok), F.col(m_tok_hash)
+    s_doc, s_src = F.col("doc_id"), F.col("source")
+    s_nt, s_h = F.col("n_tok"), F.col("tok_hash")
+    m_doc, m_src = F.col("m_doc_id"), F.col("m_source")
+    m_nt, m_h = F.col("m_n_tok"), F.col("m_tok_hash")
 
     both_hash = s_h.isNotNull() & m_h.isNotNull()
     hash_eq = s_h == m_h
@@ -109,12 +101,9 @@ def classify_expr(
     name_eq = s_doc == m_doc
     path_eq = name_eq & (s_src == m_src)
 
-    if missing_if_no_counterpart:
-        c = F.when(m_doc.isNull() & m_h.isNull() & m_nt.isNull(), F.lit(MISSING_COUNTERPART))
-        # ref :551-556
-        c = c.when(both_hash & hash_eq & size_eq & path_eq, F.lit(SELF))
-    else:
-        c = F.when(both_hash & hash_eq & size_eq & path_eq, F.lit(SELF))
+    c = F.when(m_doc.isNull() & m_h.isNull() & m_nt.isNull(), F.lit(MISSING_COUNTERPART))
+    # ref :551-556
+    c = c.when(both_hash & hash_eq & size_eq & path_eq, F.lit(SELF))
     # ref :560-565 (subject lacks checksum)
     c = c.when(size_eq & path_eq & s_h.isNull() & m_h.isNotNull(), F.lit(SELF_NO_CHECKSUM))
     # ref :568-573 (other lacks checksum)
@@ -141,46 +130,6 @@ def verdict_name_expr(code_col: str = "verdict_code") -> Column:
     for code, name in VERDICT_NAMES.items():
         c = (F.when if c is None else c.when)(F.col(code_col) == code, F.lit(name))
     return c.otherwise(F.lit("INVALID"))
-
-
-def _manifest_aliased(manifest: DataFrame) -> DataFrame:
-    """Manifest columns renamed to the m_* side, deduped on full identity —
-    the reference's set() materialization on (checksum, size, path)
-    (/root/reference/data_validation.py:630-633, :834-840) done BEFORE the
-    join so duplicate manifest rows can't inflate pair counts (SURVEY.md
-    §7.3 hard part 5)."""
-    return manifest.select(
-        F.col("doc_id").alias("m_doc_id"),
-        F.col("source").alias("m_source"),
-        F.col("n_tok").alias("m_n_tok"),
-        F.col("tok_hash").alias("m_tok_hash"),
-    ).dropDuplicates(["m_doc_id", "m_source", "m_n_tok", "m_tok_hash"])
-
-
-def stage1_pairs(
-    snapshot: DataFrame,
-    manifest: DataFrame,
-    join_strategy: str = "auto",
-    manifest_rows: int | None = None,
-    extra_cols: list[str] | None = None,
-) -> DataFrame:
-    """Stage 1 only: keyed doc_id left join + ordered CASE verdicts (misses
-    classified MISSING_COUNTERPART). Single-pass; compose with
-    ``probe_pairs`` on the misses for renamed-copy/collision recovery.
-    ``extra_cols``: snapshot columns carried through unchanged (e.g. the
-    actual token count, so schema checks don't rescan the payload)."""
-    m = _manifest_aliased(manifest)
-    snap = snapshot.select("doc_id", "source", "n_tok", "tok_hash", *(extra_cols or []))
-    pairs = choose_join(
-        snap,
-        m,
-        on=[snap.doc_id == m.m_doc_id],
-        how="left",
-        strategy=join_strategy,
-        right_rows=manifest_rows,
-    )
-    out = pairs.withColumn("verdict_code", classify_expr())
-    return out.withColumn("verdict", verdict_name_expr())
 
 
 #: Broadcast budget for the probe's missed side, expressed in BYTES — a raw
@@ -210,187 +159,6 @@ PROBE_KEY_WIDTH_BYTES = 32
 #: manifest BEFORE its dedup/shuffle — same 64 MB byte budget, key-width
 #: denominator (~2M keys). Beyond this the probe is a full shuffle join.
 PROBE_KEYS_BROADCAST_MAX = PROBE_BROADCAST_MAX_BYTES // PROBE_KEY_WIDTH_BYTES
-
-
-def probe_pairs(
-    missed: DataFrame,
-    manifest: DataFrame,
-    join_strategy: str = "auto",
-    manifest_rows: int | None = None,
-    missed_rows: int | None = None,
-    include_unmatched: bool = True,
-) -> DataFrame:
-    """Stage 2: content probe of subjects with no doc_id counterpart —
-    equi-join on tok_hash, CASE decides VALID_COPY_RENAMED vs
-    CHECKSUM_COLLISION. ``missed`` needs (doc_id, source, n_tok, tok_hash).
-
-    Join direction matters at scale: the miss set is normally a tiny
-    fraction, so when ``missed_rows`` is known to be small the missed side
-    is broadcast and the manifest is ONLY scanned (no manifest-wide shuffle
-    on tok_hash — measured 2x the probe cost otherwise). With
-    ``include_unmatched=False`` only found pairs return (the caller keeps
-    stage-1 MISSING rows for the rest — plans.oracle.materialize_pairs)."""
-    m = _manifest_aliased(manifest).filter(F.col("m_tok_hash").isNotNull())
-    snap = missed.select("doc_id", "source", "n_tok", "tok_hash")
-    withhash = snap.filter(F.col("tok_hash").isNotNull())
-
-    if missed_rows is not None and missed_rows <= PROBE_BROADCAST_MAX:
-        found = m.join(
-            F.broadcast(withhash),
-            F.col("tok_hash") == F.col("m_tok_hash"),
-            "inner",
-        ).select("doc_id", "source", "n_tok", "tok_hash",
-                 "m_doc_id", "m_source", "m_n_tok", "m_tok_hash")
-        probed = found
-        if include_unmatched:
-            # null-safe per-identity anti-join: identical to the shuffle
-            # branch's LEFT join semantics (each row stays missing unless
-            # its own content matched) — a subject-level (doc_id, source)
-            # exclusion would silently drop the unmatched identity of a
-            # mixed-content duplicate group.
-            ident = ["doc_id", "source", "n_tok", "tok_hash"]
-            found_ids = found.select(*ident).dropDuplicates()
-            cond = None
-            for c in ident:
-                e = snap[c].eqNullSafe(found_ids[c])
-                cond = e if cond is None else cond & e
-            unmatched = snap.join(found_ids, cond, "left_anti")
-            probed = found.unionByName(_null_counterpart(unmatched))
-    else:
-        probed = choose_join(
-            withhash,
-            m,
-            on=[F.col("tok_hash") == F.col("m_tok_hash")],
-            how="inner" if not include_unmatched else "left",
-            strategy=join_strategy,
-            right_rows=manifest_rows,
-        )
-        if include_unmatched:
-            probed = probed.unionByName(
-                _null_counterpart(snap.filter(F.col("tok_hash").isNull()))
-            )
-    out = probed.withColumn("verdict_code", classify_expr())
-    return out.withColumn("verdict", verdict_name_expr())
-
-
-def _null_counterpart(snap: DataFrame) -> DataFrame:
-    return snap.select(
-        "doc_id",
-        "source",
-        "n_tok",
-        "tok_hash",
-        F.lit(None).cast("string").alias("m_doc_id"),
-        F.lit(None).cast("string").alias("m_source"),
-        F.lit(None).cast("int").alias("m_n_tok"),
-        F.lit(None).cast("long").alias("m_tok_hash"),
-    )
-
-
-def classify_pairs(
-    snapshot: DataFrame,
-    manifest: DataFrame,
-    join_strategy: str = "auto",
-    manifest_rows: int | None = None,
-    probe_renamed: bool = True,
-    persist: bool = False,
-) -> DataFrame:
-    """snapshot x manifest -> one row per (subject, counterpart) pair with
-    ``verdict_code`` + ``verdict``.
-
-    Stage 1 — keyed equi-join on ``doc_id`` (the reference's session-keyed
-    ``get_matches`` lookup, /root/reference/data_validation.py:759-763,
-    :827-829), left join so subjects with no counterpart surface as
-    MISSING_COUNTERPART instead of disappearing.
-
-    Stage 2 (probe) — subjects with no doc_id hit are probed against the
-    manifest by content: equi-join on (tok_hash, n_tok) -> VALID_COPY_RENAMED
-    and on tok_hash alone -> CHECKSUM_COLLISION. This is the reference's
-    "scan backups for any size-equal file, then checksum it" fallback
-    (/root/reference/data_validation.py:1256-1266, strategies.py:152-166)
-    with the cheap/expensive predicate order inverted because the hash is
-    already materialized for every row.
-
-    Scale notes: stage 1 is the big join — sort-merge/shuffled-hash on
-    doc_id at 10^12 rows (AQE handles skew splits), broadcast when the
-    manifest is small. Stage 2 runs only on stage-1 misses (normally a tiny
-    fraction) so its extra shuffle on tok_hash is marginal.
-    """
-    s1 = stage1_pairs(snapshot, manifest, join_strategy, manifest_rows)
-    if persist:
-        # stage-1 feeds both the matched branch and the probe branch (and,
-        # downstream, both the rollup and the violation extraction) —
-        # persist so the big join runs once per action. At 10^12-row scale
-        # prefer the production one-pass plan (plans.onepass), which writes
-        # the pair table once and derives everything from the written files.
-        s1 = s1.persist()
-    if not probe_renamed:
-        return s1
-    matched = s1.filter(F.col("verdict_code") != MISSING_COUNTERPART)
-    missed = s1.filter(F.col("verdict_code") == MISSING_COUNTERPART)
-    probed = probe_pairs(missed, manifest, join_strategy, manifest_rows)
-    return matched.unionByName(probed)
-
-
-def rollup_verdicts(pairs: DataFrame, salt_buckets: int | None = None) -> DataFrame:
-    """Per-subject rollup over its pair verdicts.
-
-    ``final_verdict_code`` = max code — the threshold semantics make max
-    meaningful (valid backups 21+ dominate, invalid band 10-13 dominates
-    benign 0-7), matching the reference's "any hit >= VALID_COPY..."
-    action gate (:1329) and "any invalid copy vetoes" rule
-    (/root/reference/strategies.py:135-138).
-
-    ``salt_buckets``: explicit skew handling (north_rule) for pathological
-    hot keys — a doc_id with millions of manifest counterparts (the
-    reference's one-big-session pathology, /root/reference/
-    data_validation.py:1449-1455) funnels all its pair rows through one
-    reducer. With salting, the aggregation runs two-level: partials on
-    (key, salt) spread over ``salt_buckets`` reducers, then an exact merge
-    on the key (max-of-max / sum-of-count — all aggregates algebraic).
-    Output is identical either way (tests/test_skew.py).
-    """
-    valid = (F.col("verdict_code") >= VALID_MIN) | (F.col("verdict_code") == SELF)
-    invalid = F.col("verdict_code").between(UNSYNCED_DATA, UNSYNCED_OR_CORRUPT_DATA)
-    missing = F.col("verdict_code") == MISSING_COUNTERPART
-    if salt_buckets:
-        from np_data_validation_spark.operators.skew import with_salt
-
-        # entropy from the counterpart side: rows of one hot subject differ
-        # only in m_* — content-derived salt keeps re-runs deterministic.
-        entropy = [c for c in ("m_doc_id", "m_source", "m_n_tok", "m_tok_hash") if c in pairs.columns]
-        rolled = (
-            with_salt(pairs, entropy, salt_buckets)
-            .groupBy("doc_id", "source", "_salt")
-            .agg(
-                F.max("verdict_code").alias("_mx"),
-                F.max(valid).alias("_v"),
-                F.max(invalid).alias("_i"),
-                F.max(missing).alias("_m"),
-                F.count(F.lit(1)).alias("_n"),
-            )
-            .groupBy("doc_id", "source")
-            .agg(
-                F.max("_mx").alias("final_verdict_code"),
-                F.max("_v").alias("has_valid"),
-                F.max("_i").alias("has_invalid"),
-                F.max("_m").alias("is_missing"),
-                F.sum("_n").alias("n_pairs"),
-            )
-        )
-    else:
-        rolled = pairs.groupBy("doc_id", "source").agg(
-            F.max("verdict_code").alias("final_verdict_code"),
-            F.max(valid).alias("has_valid"),
-            F.max(invalid).alias("has_invalid"),
-            F.max(missing).alias("is_missing"),
-            F.count(F.lit(1)).alias("n_pairs"),
-        )
-    return rolled.withColumn(
-        "row_status",
-        F.when(F.col("has_invalid") | F.col("is_missing"), F.lit("fail"))
-        .when(F.col("has_valid") | F.col("final_verdict_code").isin(SELF_NO_CHECKSUM, OTHER_NO_CHECKSUM), F.lit("pass"))
-        .otherwise(F.lit("unknown")),
-    )
 
 
 def find_reclaimable(
@@ -426,32 +194,3 @@ def find_reclaimable(
         .select("doc_id", "source", "n_valid_backups")
     )
 
-
-def extract_violations(pairs: DataFrame) -> DataFrame:
-    """Violation rows (schema.VIOLATIONS) from classified pairs — the
-    reference's report()-then-act path (/root/reference/data_validation.py:
-    1403-1447) as a table instead of a log."""
-    code = F.col("verdict_code")
-    cls = None
-    for verdict, name in VIOLATION_CLASS.items():
-        cls = (F.when if cls is None else cls.when)(code == verdict, F.lit(name))
-    cls = cls.otherwise(F.lit(None))
-    return (
-        pairs.withColumn("violation", cls)
-        .filter(F.col("violation").isNotNull())
-        .select(
-            "doc_id",
-            "source",
-            "violation",
-            F.to_json(
-                F.struct(
-                    F.col("verdict"),
-                    F.col("n_tok"),
-                    F.col("m_n_tok"),
-                    F.col("tok_hash"),
-                    F.col("m_tok_hash"),
-                    F.col("m_source"),
-                )
-            ).alias("detail"),
-        )
-    )

@@ -192,9 +192,7 @@ def manifest_audit(snapshot: DataFrame, manifest: DataFrame) -> DataFrame:
     consistency (conflicting hashes per doc_id) and orphaned manifest
     entries. Run once per validation run, not per batch."""
     return C.consistency_violations(manifest).unionByName(
-        C.referential_violations(snapshot, manifest).filter(
-            F.col("violation") == "MISSING_IN_SNAPSHOT"
-        )
+        C.orphan_violations(snapshot, manifest)
     )
 
 

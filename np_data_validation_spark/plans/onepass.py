@@ -26,12 +26,13 @@ reads the written files; nothing touches the payload again, and uniqueness
 violations (per-duplicate dup_rank rows) are reconstructed exactly from the
 identity multiplicities.
 
-Semantics are row-for-row identical to the two-stage oracle plan
-(plans.oracle.validate_batch, test-support only)
-— tests/test_onepass.py asserts rolled, violations and stats equality; the
-reference anchors are unchanged: verdict tree
-/root/reference/data_validation.py:547-628, content-probe fallback
-:1256-1266, uniqueness dedup-on-insert :728-734.
+This is the engine's one implementation of the verdict semantics.
+tests/test_onepass.py and tests/test_onepass_random.py check its rolled
+verdicts, violations and stats row for row against an independent DuckDB
+reference (tests/duckdb_reference.py) that evaluates the same ordered CASE
+(queries.VERDICT_CASE_SQL) over raw, un-aggregated rows. Reference anchors:
+verdict tree (reference data_validation.py:547-628), content-probe
+fallback :1256-1266, uniqueness dedup-on-insert :728-734.
 """
 
 from __future__ import annotations
@@ -58,10 +59,10 @@ PAIR_COLS = IDENTITY_COLS + ["s_mult", "m_source", "m_n_tok", "m_tok_hash", "ver
 class OnepassResult:
     rolled: DataFrame      # verdict rollup (engine verdict schema)
     violations: DataFrame  # schema.VIOLATIONS shape
-    stats: DataFrame       # operators.stats.partition_stats shape
+    stats: DataFrame       # per-source + global stats rows (stats_from_identities)
     n_rows: int            # validated (doc_id, source) subjects
     n_missing: int         # subjects probed by content
-    salt_buckets_used: int | None = None  # rollup salting engaged (auto/forced)
+    salt_buckets_used: int | None = None  # rollup salting engaged (hot key found)
     probe_salted: bool = False  # manifest-side salting engaged on the probe join
     ids: DataFrame | None = None  # written identity table (one row per snapshot
     #                               identity + s_mult) — checkpoint fingerprints
@@ -185,9 +186,9 @@ def probe_pairs_from(
         # join-then-dedup-pairs yield the SAME (identity, m_identity) row
         # set — the exchange now carries only hash-matched pairs (a miss
         # fraction) instead of every manifest row. NOTE: this rewrite is
-        # only valid over an identity-unique missed side; the generic
-        # verdicts.probe_pairs keeps dedup-before-join because its missed
-        # side is raw snapshot rows (duplicates must each keep a row).
+        # only valid over an identity-unique missed side; over raw
+        # snapshot rows (duplicates must each keep a row) the manifest
+        # must be deduped before the join instead.
         m_raw = manifest.select(
             F.col("doc_id").alias("m_doc_id"),
             F.col("source").alias("m_source"),
@@ -248,7 +249,7 @@ def probe_pairs_from(
     # NULL-SAFE anti-join on the full identity: each distinct identity stays
     # MISSING unless ITS OWN content matched (per-identity probe semantics —
     # a subject holding two identities where only one content-matches keeps
-    # a MISSING row for the other, exactly like validate_batch's left-join
+    # a MISSING row for the other, exactly like a per-row left-join
     # probe). Plain column-list equality would be null-unsafe: a missed row
     # with a null identity column (e.g. null n_tok) that content-matched
     # would reappear in `still` and double-report (found pair + spurious
@@ -293,10 +294,19 @@ def merged_pairs(s1: DataFrame, probed: DataFrame) -> DataFrame:
 
 
 def rollup_pairs(pairs: DataFrame, salt_buckets: int | None = None) -> DataFrame:
-    """Per-subject rollup — operators.verdicts.rollup_verdicts weighted by
-    the identity multiplicity (sum(s_mult) == raw pair-row count).
-    ``salt_buckets``: two-level skew-spread aggregation, see
-    verdicts.rollup_verdicts (all aggregates here are algebraic)."""
+    """Per-subject rollup over its pair verdicts, weighted by the identity
+    multiplicity (sum(s_mult) == raw pair-row count).
+
+    ``final_verdict_code`` = max code — the threshold semantics make max
+    meaningful (valid backups 21+ dominate, invalid band 10-13 dominates
+    benign 0-7), matching the reference's "any hit >= VALID_COPY..."
+    action gate (:1329) and "any invalid copy vetoes" rule
+    (reference strategies.py:135-138).
+
+    ``salt_buckets``: two-level skew-spread aggregation for a hot key (the
+    reference's one-big-session pathology, data_validation.py:1449-1455): partials on (key, salt) spread over
+    ``salt_buckets`` reducers, then an exact merge on the key (max-of-max /
+    sum-of-sum — all aggregates here are algebraic)."""
     code = F.col("verdict_code")
     valid = (code >= V.VALID_MIN) | (code == V.SELF)
     invalid = code.between(V.UNSYNCED_DATA, V.UNSYNCED_OR_CORRUPT_DATA)
@@ -365,8 +375,9 @@ def identity_rows(s1: DataFrame) -> DataFrame:
 
 
 def verdict_violations(pairs: DataFrame) -> DataFrame:
-    """operators.verdicts.extract_violations over weighted pairs: one
-    violation row per RAW pair row (s_mult replication)."""
+    """Violation rows (schema.VIOLATIONS) from classified pairs — the
+    reference's report()-then-act path (data_validation.py:1403-1447) as a table instead of a log. One violation row per RAW pair
+    row (s_mult replication)."""
     code = F.col("verdict_code")
     cls = None
     for verdict, name in V.VIOLATION_CLASS.items():
@@ -395,12 +406,15 @@ def verdict_violations(pairs: DataFrame) -> DataFrame:
 
 
 def uniqueness_violations_from_identities(ids: DataFrame) -> DataFrame:
-    """operators.constraints.uniqueness_violations reconstructed exactly:
-    per (doc_id, source), identities ordered by (tok_hash, n_tok)
-    nulls-last occupy rank ranges [cum+1, cum+s_mult]; every rank > 1 is a
-    DUPLICATE_DOC_ID row. ``tot_mult`` was precomputed at identity-write
-    time, so selecting the offending groups is a plain filter and only the
-    (rare) offenders reach the ranking window."""
+    """All-but-first raw rows sharing a (doc_id, source) identity — the
+    reference's dedup-on-insert skip (data_validation.py:728-734,
+    :798-804). Per (doc_id, source), identities ordered by
+    (tok_hash, n_tok) nulls-last occupy rank ranges [cum+1, cum+s_mult];
+    every rank > 1 is a DUPLICATE_DOC_ID row. The deterministic tiebreak
+    (no wall-clock) makes resumed runs flag identical rows. ``tot_mult``
+    was precomputed at identity-write time, so selecting the offending
+    groups is a plain filter and only the (rare) offenders reach the
+    ranking window."""
     bad = ids.filter(F.col("tot_mult") > 1)
     w = Window.partitionBy("doc_id", "source").orderBy(
         F.col("tok_hash").asc_nulls_last(), F.col("n_tok").asc_nulls_last()
@@ -436,8 +450,13 @@ def uniqueness_violations_from_identities(ids: DataFrame) -> DataFrame:
 
 
 def schema_violations_from_identities(ids: DataFrame) -> DataFrame:
-    """operators.constraints.schema_violations semantics (one row per raw
-    snapshot row) from identity rows."""
+    """Row-level schema invariants, one row per raw snapshot row:
+
+    * N_TOK_MISMATCH — ``n_tok != size(tokens)`` (the cheap surrogate must
+      agree with the payload, reference size semantics :475-482)
+    * NULL_N_TOK / NULL_DOC_ID — required-field checks (reference: "size and
+      path fields are required entries", :549-550)
+    """
     rep = F.explode(F.sequence(F.lit(1).cast("long"), F.col("s_mult")))
     mismatch = (
         ids.filter(
@@ -481,8 +500,7 @@ def schema_violations_from_identities(ids: DataFrame) -> DataFrame:
 
 
 def all_violations(merged: DataFrame, ids: DataFrame) -> DataFrame:
-    """Batch-scoped violations, row-for-row equal to validate_batch's
-    union (verdict-derived + uniqueness + schema)."""
+    """Batch-scoped violations: verdict-derived + uniqueness + schema."""
     return (
         verdict_violations(merged)
         .unionByName(uniqueness_violations_from_identities(ids))
@@ -491,9 +509,11 @@ def all_violations(merged: DataFrame, ids: DataFrame) -> DataFrame:
 
 
 def stats_from_identities(ids: DataFrame, group_col: str = "source") -> DataFrame:
-    """operators.stats.partition_stats reproduced from identity rows —
-    multiplicity-weighted so the numbers equal a raw-snapshot pass, with no
-    token-payload rescan (approx-distinct is duplicate-insensitive)."""
+    """One stats row per partition PLUS a global row, in one pass via
+    rollup() (grouping sets; the global row has source = NULL and
+    is_global = true). Multiplicity-weighted so the numbers equal a
+    raw-snapshot pass, with no token-payload rescan (approx-distinct is
+    duplicate-insensitive)."""
     mult = F.col("s_mult")
     ntok_notnull = F.when(F.col("n_tok").isNotNull(), mult).otherwise(F.lit(0))
     return ids.rollup(group_col).agg(
@@ -528,23 +548,18 @@ def validate_onepass(
     snapshot: DataFrame,
     manifest: DataFrame,
     work_dir: str,
-    salt_buckets: int | str | None = "auto",
-    skew_ratio: float | None = None,
-    skew_min_hot_rows: int | None = None,
     derive_counts: bool = False,
 ) -> OnepassResult:
     """Full constraint pass: the payload is scanned once into the written
     slim pair table; probe, rollup, violations and stats all derive from
     written files. Returns live DataFrames backed by ``work_dir``.
 
-    ``salt_buckets``: "auto" (default) probes the written pair table for a
-    hot (doc_id, source) key (operators.skew.detect_hot_keys — a bucket-
-    count scan that runs CONCURRENTLY with the identity/probe jobs, so its
-    latency hides behind them) and engages two-level salted rollup only
-    when one is found — skew handled explicitly per the north_rule, zero
-    plan change on well-distributed input. Pass an int to force, None to
-    disable. ``skew_ratio`` / ``skew_min_hot_rows`` override the detector
-    thresholds (mainly for tests)."""
+    Rollup skew: the written pair table is probed for a hot (doc_id,
+    source) key (operators.skew.detect_hot_keys — a bucket-count scan that
+    runs CONCURRENTLY with the identity/probe jobs, so its latency hides
+    behind them), and the two-level salted rollup engages only when one is
+    found — skew handled explicitly per the north_rule, zero plan change on
+    well-distributed input."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import Observation
@@ -592,26 +607,19 @@ def validate_onepass(
         # job's latency behind the other's.
         ids_f = pool.submit(write_read, identity_rows(s1), "identities")
         probe_f = pool.submit(write_read, probed, "pairs_probe")
-        if salt_buckets == "auto":
-            kw = {}
-            if skew_ratio is not None:
-                kw["ratio"] = skew_ratio
-            if skew_min_hot_rows is not None:
-                kw["min_hot_rows"] = skew_min_hot_rows
-            skew_f = pool.submit(SK.detect_hot_keys, s1, ("doc_id", "source"), **kw)
-            # The rollup aggregates the MERGED table (stage-1 hits + probe
-            # output), but stage-1 detection can't see a hot key CREATED by
-            # probe fan-out (one missed identity content-matching many
-            # manifest rows). Chain a second detection over the written
-            # probe table — tiny relative to s1, so the extra job is cheap.
-            probe_skew_f = pool.submit(
-                lambda: SK.detect_hot_keys(probe_f.result(), ("doc_id", "source"), **kw)
-            )
+        skew_f = pool.submit(SK.detect_hot_keys, s1, ("doc_id", "source"))
+        # The rollup aggregates the MERGED table (stage-1 hits + probe
+        # output), but stage-1 detection can't see a hot key CREATED by
+        # probe fan-out (one missed identity content-matching many
+        # manifest rows). Chain a second detection over the written
+        # probe table — tiny relative to s1, so the extra job is cheap.
+        probe_skew_f = pool.submit(
+            lambda: SK.detect_hot_keys(probe_f.result(), ("doc_id", "source"))
+        )
         ids = ids_f.result()
         merged = merged_pairs(s1, probe_f.result())
-        if salt_buckets == "auto":
-            hot = skew_f.result() or probe_skew_f.result()
-            salt_buckets = SK.DEFAULT_SALT_BUCKETS if hot else None
+        hot = skew_f.result() or probe_skew_f.result()
+        salt_buckets = SK.DEFAULT_SALT_BUCKETS if hot else None
     finally:
         pool.shutdown(wait=True)
     # subject count rides the rolled write as an observation — the extra
@@ -623,6 +631,7 @@ def validate_onepass(
     )
     violations_df = all_violations(merged, ids)
     stats_df = stats_from_identities(ids)
+    n_violations = n_stats_rows = None
     if derive_counts:
         # r9 (guide §2.6, overlap independent jobs): the violations and
         # stats aggregations are independent of the rolled table given the
@@ -642,19 +651,8 @@ def validate_onepass(
             n_stats_rows = stats_f.result()
         finally:
             dpool.shutdown(wait=True)
-        return OnepassResult(
-            rolled=rolled.select(*ROLLED_PUBLIC_COLS),
-            violations=violations_df,
-            stats=stats_df,
-            n_rows=int(robs.get["n_rows"] or 0),
-            n_missing=n_miss,
-            salt_buckets_used=salt_buckets,
-            probe_salted=probe_salted,
-            ids=ids,
-            n_violations=n_violations,
-            n_stats_rows=n_stats_rows,
-        )
-    rolled = write_read(rolled_obs, "rolled")
+    else:
+        rolled = write_read(rolled_obs, "rolled")
     return OnepassResult(
         rolled=rolled.select(*ROLLED_PUBLIC_COLS),
         violations=violations_df,
@@ -664,4 +662,6 @@ def validate_onepass(
         salt_buckets_used=salt_buckets,
         probe_salted=probe_salted,
         ids=ids,
+        n_violations=n_violations,
+        n_stats_rows=n_stats_rows,
     )

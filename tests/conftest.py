@@ -48,3 +48,35 @@ def seq_man(spark, synth_dataset):
     seq = spark.read.parquet(os.path.join(root, "sequences"))
     man = spark.read.parquet(os.path.join(root, "manifest"))
     return seq, man, labels
+
+
+@pytest.fixture(scope="session")
+def seq_onepass(spark, seq_man, tmp_path_factory):
+    """``validate_onepass`` over the labeled synth dataset, shared by every
+    suite that checks the product's outputs on it."""
+    from np_data_validation_spark.plans.onepass import validate_onepass
+
+    seq, man, _ = seq_man
+    return validate_onepass(spark, seq, man, str(tmp_path_factory.mktemp("seq_onepass")))
+
+
+@pytest.fixture(scope="session")
+def duckdb_outputs():
+    """Callable: Spark snapshot (with tokens) + manifest -> the DuckDB
+    reference rows of tests/duckdb_reference.py."""
+    from pyspark.sql import functions as F
+
+    from np_data_validation_spark.functions.hashing import with_tok_hash
+    from tests.duckdb_reference import reference_outputs
+
+    def run(snapshot, manifest):
+        hashed = with_tok_hash(snapshot).select(
+            "doc_id", "source", "n_tok", "tok_hash",
+            F.when(F.col("tokens").isNotNull(), F.size("tokens")).alias("n_tok_actual"),
+        )
+        return reference_outputs(
+            hashed.toArrow(),
+            manifest.select("doc_id", "source", "n_tok", "tok_hash").toArrow(),
+        )
+
+    return run

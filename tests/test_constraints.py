@@ -1,45 +1,39 @@
-"""Constraint tests against the labeled synth dataset."""
+"""Constraint tests against the labeled synth dataset: the one-pass plan's
+uniqueness and schema violations, and the manifest-side orphan and
+consistency checks."""
 
-from np_data_validation_spark.functions.hashing import with_tok_hash
+from pyspark.sql import functions as F
+
 from np_data_validation_spark.operators import constraints as C
 
 
-def test_uniqueness(seq_man):
-    seq, _, labels = seq_man
-    vio = C.uniqueness_violations(with_tok_hash(seq)).toPandas()
+def _violations(result, name):
+    return result.violations.filter(F.col("violation") == name).toPandas()
+
+
+def test_uniqueness(seq_man, seq_onepass):
+    _, _, labels = seq_man
+    assert seq_onepass.violations.columns == ["doc_id", "source", "violation", "detail"]
+    vio = _violations(seq_onepass, "DUPLICATE_DOC_ID")
     dup_ids = set(
         labels.loc[labels["case"].isin(["duplicate", "duplicate_mixed"]), "doc_id"]
     )
     assert set(vio["doc_id"]) == dup_ids
-    assert (vio["violation"] == "DUPLICATE_DOC_ID").all()
     # exactly one extra copy each -> one violation row each
     assert len(vio) == len(dup_ids)
 
 
 def test_referential(seq_man):
     seq, man, labels = seq_man
-    vio = C.referential_violations(seq, man).toPandas()
-    missing = vio[vio["violation"] == "MISSING_IN_MANIFEST"]
-    # strict doc_id integrity: renamed-copy and collision subjects also have
-    # no same-id counterpart — the verdict layer's content probe is what
-    # rescues them (classify_pairs stage 2), not this check.
-    want_missing = set(
-        labels.loc[
-            labels["case"].isin(
-                ["missing", "valid_copy_renamed", "collision", "renamed_null_ntok"]
-            ),
-            "doc_id",
-        ]
-    )
-    assert set(missing["doc_id"]) == want_missing
-    orphaned = vio[vio["violation"] == "MISSING_IN_SNAPSHOT"]
+    vio = C.orphan_violations(seq, man).toPandas()
+    assert (vio["violation"] == "MISSING_IN_SNAPSHOT").all()
     # renamed + collision manifest entries have doc_ids absent from snapshot
     want_orphans = (
         {d + "_r" for d in labels.loc[labels["case"] == "valid_copy_renamed", "doc_id"]}
         | {d + "_c" for d in labels.loc[labels["case"] == "collision", "doc_id"]}
         | {d + "_n" for d in labels.loc[labels["case"] == "renamed_null_ntok", "doc_id"]}
     )
-    assert set(orphaned["doc_id"]) == want_orphans
+    assert set(vio["doc_id"]) == want_orphans
 
 
 def test_consistency(seq_man):
@@ -50,16 +44,8 @@ def test_consistency(seq_man):
     assert (vio["violation"] == "INCONSISTENT_GROUP").all()
 
 
-def test_schema_invariants(seq_man):
-    seq, _, labels = seq_man
-    vio = C.schema_violations(seq).toPandas()
-    mism = vio[vio["violation"] == "N_TOK_MISMATCH"]
+def test_schema_invariants(seq_man, seq_onepass):
+    _, _, labels = seq_man
+    mism = _violations(seq_onepass, "N_TOK_MISMATCH")
     want = set(labels.loc[labels["case"] == "n_tok_mismatch", "doc_id"])
     assert set(mism["doc_id"]) == want
-
-
-def test_all_violations_union(seq_man):
-    seq, man, _ = seq_man
-    vio = C.all_violations(with_tok_hash(seq), man)
-    assert vio.columns == ["doc_id", "source", "violation", "detail"]
-    assert vio.count() > 0

@@ -1,5 +1,5 @@
-"""Equivalence of the one-pass plan (plans.onepass) with the reference
-two-stage oracle plan (plans.oracle.validate_batch): rolled verdicts, violations
+"""Equivalence of the one-pass plan (plans.onepass) with the independent
+DuckDB reference (tests/duckdb_reference.py): rolled verdicts, violations
 (verdict-derived + uniqueness + schema) and per-partition stats must match
 row for row on the fault-injected synthetic dataset (every verdict class,
 duplicates, n_tok mismatches, null payloads present)."""
@@ -9,9 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from np_data_validation_spark.operators import stats as S
 from np_data_validation_spark.plans import onepass
-from np_data_validation_spark.plans.oracle import validate_batch
 
 
 @pytest.fixture(scope="module")
@@ -21,41 +19,38 @@ def frames(seq_man):
 
 
 @pytest.fixture(scope="module")
-def onepass_result(spark, frames, tmp_path_factory):
-    snapshot, manifest = frames
-    work = str(tmp_path_factory.mktemp("onepass"))
-    return onepass.validate_onepass(spark, snapshot, manifest, work)
+def reference(frames, duckdb_outputs):
+    return duckdb_outputs(*frames)
 
 
-def _sorted_rows(df, cols):
+def _sorted_rows(rows, cols):
+    """``rows``: a Spark DataFrame or the reference's list of dict rows."""
+    if hasattr(rows, "collect"):
+        rows = rows.collect()
     return sorted(
-        (tuple(r[c] for c in cols) for r in df.collect()),
+        (tuple(r[c] for c in cols) for r in rows),
         key=lambda t: tuple((v is None, v) for v in t),
     )
 
 
-def test_rolled_matches_validate_batch(spark, frames, onepass_result):
-    snapshot, manifest = frames
-    rolled_ref, _, _ = validate_batch(snapshot, manifest, persist=True)
+def test_rolled_matches_duckdb(seq_onepass, reference):
     cols = onepass.ROLLED_PUBLIC_COLS
-    assert _sorted_rows(onepass_result.rolled, cols) == _sorted_rows(
-        rolled_ref.select(*cols), cols
+    assert _sorted_rows(seq_onepass.rolled, cols) == _sorted_rows(
+        reference["rolled"], cols
     )
 
 
-def test_violations_match_validate_batch(spark, frames, onepass_result):
-    snapshot, manifest = frames
-    _, viols_ref, _ = validate_batch(snapshot, manifest, persist=True)
+def test_violations_match_duckdb(seq_onepass, reference):
     cols = ["doc_id", "source", "violation", "detail"]
-    got = _sorted_rows(onepass_result.violations, cols)
-    want = _sorted_rows(viols_ref, cols)
+    got = _sorted_rows(seq_onepass.violations, cols)
+    want = _sorted_rows(reference["violations"], cols)
     assert got == want
 
 
-def test_violations_cover_all_classes(onepass_result):
+def test_violations_cover_all_classes(seq_onepass):
     classes = {
         r["violation"]
-        for r in onepass_result.violations.select("violation").distinct().collect()
+        for r in seq_onepass.violations.select("violation").distinct().collect()
     }
     assert {
         "SIZE_MISMATCH",
@@ -68,24 +63,23 @@ def test_violations_cover_all_classes(onepass_result):
     } <= classes
 
 
-def test_stats_match_partition_stats(spark, frames, onepass_result):
-    snapshot, _ = frames
+def test_stats_match_duckdb(seq_onepass, reference):
     cols = [
         "source", "n_rows", "n_tok_min", "n_tok_max", "n_tok_sum",
         "n_tok_null_rate", "tokens_null_rate", "is_global",
     ]
-    got = _sorted_rows(onepass_result.stats, cols)
-    want = _sorted_rows(S.partition_stats(snapshot), cols)
+    got = _sorted_rows(seq_onepass.stats, cols)
+    want = _sorted_rows(reference["stats"], cols)
     assert got == want
     # avg compared with tolerance (double arithmetic order differs)
-    got_avg = {r["source"]: r["n_tok_avg"] for r in onepass_result.stats.collect()}
-    want_avg = {r["source"]: r["n_tok_avg"] for r in S.partition_stats(snapshot).collect()}
+    got_avg = {r["source"]: r["n_tok_avg"] for r in seq_onepass.stats.collect()}
+    want_avg = {r["source"]: r["n_tok_avg"] for r in reference["stats"]}
     assert set(got_avg) == set(want_avg)
     for k, v in want_avg.items():
         assert got_avg[k] == pytest.approx(v, rel=1e-12)
 
 
-def test_mixed_duplicate_ranks(seq_man, onepass_result):
+def test_mixed_duplicate_ranks(seq_man, seq_onepass):
     """Regression: a (doc_id, source) group of two DIFFERENT identities
     (s_mult=1 each) must yield exactly one DUPLICATE_DOC_ID row at rank 2 —
     the first-sorted identity's empty rank range must NOT explode (Spark's
@@ -96,7 +90,7 @@ def test_mixed_duplicate_ranks(seq_man, onepass_result):
     dm_ids = set(labels.loc[labels["case"] == "duplicate_mixed", "doc_id"])
     assert dm_ids, "fixture must contain mixed-content duplicates"
     rows = (
-        onepass_result.violations.filter(F.col("violation") == "DUPLICATE_DOC_ID")
+        seq_onepass.violations.filter(F.col("violation") == "DUPLICATE_DOC_ID")
         .collect()
     )
     by_doc: dict[str, list[int]] = {}
@@ -106,7 +100,7 @@ def test_mixed_duplicate_ranks(seq_man, onepass_result):
         assert by_doc.get(d) == [2], f"{d}: got ranks {by_doc.get(d)}"
 
 
-def test_probe_found_null_ntok_not_missing(seq_man, onepass_result):
+def test_probe_found_null_ntok_not_missing(seq_man, seq_onepass):
     """Regression: a stage-1 miss with a null identity column (n_tok) that
     the content probe finds must NOT also surface as MISSING_COUNTERPART
     (null-unsafe identity anti-join double-reported it)."""
@@ -115,37 +109,18 @@ def test_probe_found_null_ntok_not_missing(seq_man, onepass_result):
     assert nuln_ids, "fixture must contain renamed_null_ntok rows"
     missing_docs = {
         r["doc_id"]
-        for r in onepass_result.violations.filter(
+        for r in seq_onepass.violations.filter(
             F.col("violation") == "MISSING_COUNTERPART"
         ).collect()
     }
     assert not (nuln_ids & missing_docs)
     status = {
         r["doc_id"]: r["row_status"]
-        for r in onepass_result.rolled.filter(
+        for r in seq_onepass.rolled.filter(
             F.col("doc_id").isin(list(nuln_ids))
         ).collect()
     }
     assert set(status.values()) == {"unknown"}, status
-
-
-def test_materialize_pairs_matches_classify_pairs(spark, frames, tmp_path):
-    """The write-once-derive oracle plan (plans.oracle.materialize_pairs)
-    must produce the same classified pair multiset as the in-memory plan —
-    including per-identity probe semantics on mixed-content duplicates and
-    null identity columns (both present in the fixture)."""
-    from np_data_validation_spark.functions.hashing import with_tok_hash
-    from np_data_validation_spark.operators import verdicts as V
-    from np_data_validation_spark.plans.oracle import materialize_pairs
-
-    snapshot, manifest = frames
-    mat = materialize_pairs(spark, snapshot, manifest, str(tmp_path / "mat"))
-    ref = V.classify_pairs(with_tok_hash(snapshot), manifest, persist=True)
-    cols = ["doc_id", "source", "n_tok", "tok_hash",
-            "m_doc_id", "m_source", "m_n_tok", "m_tok_hash", "verdict_code"]
-    assert _sorted_rows(mat.select(*cols), cols) == _sorted_rows(
-        ref.select(*cols), cols
-    )
 
 
 def test_onepass_plan_shape(spark, frames):

@@ -1,4 +1,4 @@
-"""Randomized one-pass vs plans.oracle.validate_batch equivalence sweep.
+"""Randomized one-pass vs DuckDB reference equivalence sweep.
 
 The labeled fixture is shaped: every fault class appears, but only in the
 combinations synth injects. ADVICE r2 found two real bugs precisely in
@@ -6,8 +6,9 @@ shapes the fixture lacked (mixed-identity duplicate groups; null identity
 columns through the probe). This sweep generates adversarially dense random
 tables — heavy doc_id collisions, null tokens / null n_tok, wrong n_tok,
 renamed + cross-content manifest rows, random hash noise — and asserts the
-one-pass plan equals the two-stage reference plan row for row on rolled
-verdicts AND violations. Seeds are fixed: failures reproduce exactly.
+one-pass plan equals the DuckDB reference (tests/duckdb_reference.py) row
+for row on rolled verdicts, violations AND stats. Seeds are fixed: failures
+reproduce exactly.
 """
 
 from __future__ import annotations
@@ -16,8 +17,8 @@ import numpy as np
 import pytest
 
 from np_data_validation_spark.functions.hashing import with_tok_hash
+from np_data_validation_spark.operators import skew as SK
 from np_data_validation_spark.plans import onepass
-from np_data_validation_spark.plans.oracle import validate_batch
 
 
 def _rand_tables(spark, seed: int):
@@ -69,37 +70,48 @@ def _rand_tables(spark, seed: int):
     return snap, man
 
 
-def _key(df, cols):
-    return sorted(
-        tuple((v is None, v) for v in (r[c] for c in cols)) for r in df.collect()
-    )
+def _key(rows, cols):
+    """``rows``: a Spark DataFrame or the reference's list of dict rows."""
+    if hasattr(rows, "collect"):
+        rows = rows.collect()
+    return sorted(tuple((v is None, v) for v in (r[c] for c in cols)) for r in rows)
+
+
+STATS_COLS = [
+    "source", "n_rows", "n_tok_min", "n_tok_max", "n_tok_sum",
+    "n_tok_null_rate", "tokens_null_rate", "is_global",
+]
 
 
 @pytest.mark.parametrize("seed", [101, 202, 303, 404])
-def test_onepass_equivalence_random(spark, tmp_path, seed):
+def test_onepass_equivalence_random(spark, tmp_path, duckdb_outputs, seed):
     snap, man = _rand_tables(spark, seed)
     res = onepass.validate_onepass(spark, snap, man, str(tmp_path / f"w{seed}"))
-    rolled_ref, viols_ref, _ = validate_batch(snap, man, persist=True)
+    ref = duckdb_outputs(snap, man)
     cols = onepass.ROLLED_PUBLIC_COLS
-    assert _key(res.rolled, cols) == _key(rolled_ref.select(*cols), cols)
+    assert _key(res.rolled, cols) == _key(ref["rolled"], cols)
     vcols = ["doc_id", "source", "violation", "detail"]
-    assert _key(res.violations, vcols) == _key(viols_ref.select(*vcols), vcols)
+    assert _key(res.violations, vcols) == _key(ref["violations"], vcols)
+    assert _key(res.stats, STATS_COLS) == _key(ref["stats"], STATS_COLS)
+    want_avg = {r["source"]: r["n_tok_avg"] for r in ref["stats"]}
+    got_avg = {r["source"]: r["n_tok_avg"] for r in res.stats.collect()}
+    assert got_avg == pytest.approx(want_avg, rel=1e-12)
 
 
 @pytest.mark.parametrize("seed", [737, 848])
-def test_rollup_salted_equivalence_random(spark, tmp_path, seed):
+def test_rollup_salted_equivalence_random(spark, tmp_path, monkeypatch, seed):
     """Forced two-level salted rollup must be bit-identical to the plain
     rollup on adversarially dense random tables (VERDICT r4 task #7 — the
     sweep previously ran only with default skew settings, so the salted
-    rollup branch was guarded by the labeled fixture alone)."""
+    rollup branch was guarded by the labeled fixture alone). The hot-key
+    detector is patched to force salting on, then off."""
     snap, man = _rand_tables(spark, seed)
-    salted = onepass.validate_onepass(
-        spark, snap, man, str(tmp_path / f"ws{seed}"), salt_buckets=8
-    )
-    plain = onepass.validate_onepass(
-        spark, snap, man, str(tmp_path / f"wp{seed}"), salt_buckets=None
-    )
-    assert salted.salt_buckets_used == 8 and plain.salt_buckets_used is None
+    monkeypatch.setattr(SK, "detect_hot_keys", lambda *a, **kw: True)
+    salted = onepass.validate_onepass(spark, snap, man, str(tmp_path / f"ws{seed}"))
+    monkeypatch.setattr(SK, "detect_hot_keys", lambda *a, **kw: False)
+    plain = onepass.validate_onepass(spark, snap, man, str(tmp_path / f"wp{seed}"))
+    assert salted.salt_buckets_used == SK.DEFAULT_SALT_BUCKETS
+    assert plain.salt_buckets_used is None
     cols = onepass.ROLLED_PUBLIC_COLS
     assert _key(salted.rolled, cols) == _key(plain.rolled, cols)
     vcols = ["doc_id", "source", "violation", "detail"]
@@ -136,16 +148,13 @@ def test_auto_salting_full_plan_mass_dup(spark, tmp_path, monkeypatch):
     the salted rollup and the salted probe join — and produce exactly the
     outputs of the plan with neither engaged (broadcast probe, plain
     rollup)."""
-    from np_data_validation_spark.operators import skew as SK
     from np_data_validation_spark.operators import verdicts as V
 
     snap, man = _mass_dup_tables(spark)
     # reference first, before any patches: default thresholds never trip at
     # this scale, so the probe broadcasts and the rollup stays plain
-    ref = onepass.validate_onepass(
-        spark, snap, man, str(tmp_path / "ref"), salt_buckets=None
-    )
-    assert ref.probe_salted is False
+    ref = onepass.validate_onepass(spark, snap, man, str(tmp_path / "ref"))
+    assert ref.probe_salted is False and ref.salt_buckets_used is None
 
     orig_detect = SK.detect_hot_keys
     monkeypatch.setattr(
@@ -156,14 +165,7 @@ def test_auto_salting_full_plan_mass_dup(spark, tmp_path, monkeypatch):
         ),
     )
     monkeypatch.setattr(V, "PROBE_BROADCAST_MAX", 10)  # force the shuffle probe
-    res = onepass.validate_onepass(
-        spark,
-        snap,
-        man,
-        str(tmp_path / "salted"),
-        skew_ratio=2.0,
-        skew_min_hot_rows=40,
-    )
+    res = onepass.validate_onepass(spark, snap, man, str(tmp_path / "salted"))
     assert res.probe_salted is True
     assert res.salt_buckets_used == SK.DEFAULT_SALT_BUCKETS
     assert res.n_missing == 81  # 80 singleton identities + 1 collapsed dup

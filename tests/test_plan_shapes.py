@@ -55,27 +55,41 @@ def test_probe_broadcasts_missed_side(spark, seq_man, tmp_path):
     assert "BroadcastHashJoin" in _plan(probed)
 
 
-def test_probe_threshold_is_byte_derived_and_large_miss_shuffles(spark, seq_man):
+def test_probe_threshold_is_byte_derived_and_large_miss_shuffles(spark, seq_man, tmp_path):
     """The broadcast cap must come from a byte budget (a bare row count
-    scales silently with driver heap), and a miss set above it must take
-    the shuffle path — no broadcast of a >64MB relation."""
-    from np_data_validation_spark.functions.hashing import with_tok_hash
+    scales silently with driver heap), and a miss set above it must not
+    broadcast its rows — only the keyed tier's tok_hash key set, and
+    nothing at all beyond the key budget. The tier is picked from
+    ``n_miss``, which this test forces."""
     from np_data_validation_spark.operators import verdicts as V
+    from np_data_validation_spark.plans import onepass
 
     assert V.PROBE_BROADCAST_MAX == V.PROBE_BROADCAST_MAX_BYTES // V.PROBE_ROW_WIDTH_BYTES
     assert V.PROBE_BROADCAST_MAX * V.PROBE_ROW_WIDTH_BYTES <= 64 << 20
 
     seq, man, _ = seq_man
-    missed = with_tok_hash(seq).select("doc_id", "source", "n_tok", "tok_hash")
+    s1_path = str(tmp_path / "s1c")
+    onepass.pairs_stage1(seq, man).write.parquet(s1_path)
+    s1 = spark.read.parquet(s1_path)
+
+    def probe_plan(n_miss):
+        probed, _, _ = onepass.probe_pairs_from(
+            spark, s1, man, n_miss=n_miss, manifest_hot=False
+        )
+        return _plan(probed)
+
     # disable size-based auto-broadcast so the plan shows only the code
     # path's explicit choice (test inputs are tiny and would auto-broadcast)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        big = V.probe_pairs(missed, man, missed_rows=V.PROBE_BROADCAST_MAX + 1)
-        assert "BroadcastHashJoin" not in _plan(big)
-        small = V.probe_pairs(missed, man, missed_rows=10)
-        assert "BroadcastHashJoin" in _plan(small)
+        assert "BroadcastHashJoin" not in probe_plan(V.PROBE_KEYS_BROADCAST_MAX + 1)
+        keyed = [
+            line for line in probe_plan(V.PROBE_BROADCAST_MAX + 1).splitlines()
+            if "BroadcastHashJoin" in line
+        ]
+        assert keyed and all("LeftSemi" in line for line in keyed)
+        assert "BroadcastHashJoin" in probe_plan(10)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

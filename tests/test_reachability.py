@@ -24,9 +24,6 @@ ROOTS = [
 ]
 
 ALLOWED_UNREACHED = {
-    # test reference: the two-stage pair-level plan that test_onepass and
-    # test_onepass_random compare the product plan against
-    f"{PKG}.plans.oracle",
     # ingest readers, kept until the CLI's ingest surface is decided
     f"{PKG}.sources",
 }

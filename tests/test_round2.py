@@ -10,7 +10,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from np_data_validation_spark.operators import constraints as C
 from np_data_validation_spark.operators import verdicts as V
 
 
@@ -78,18 +77,6 @@ def test_salted_rollup_matches_unsalted(spark, seq_man):
     salted = sorted(
         tuple(r[c] for c in cols)
         for r in rollup_pairs(pairs, salt_buckets=8).collect()
-    )
-    assert plain == salted
-
-
-def test_salted_rollup_verdicts_matches(spark, seq_man):
-    seq, man, _labels = seq_man
-    pairs = V.classify_pairs(seq.withColumn("tok_hash", F.xxhash64("tokens")), man)
-    cols = ["doc_id", "source", "final_verdict_code", "n_pairs", "row_status"]
-    plain = sorted(tuple(r[c] for c in cols) for r in V.rollup_verdicts(pairs).collect())
-    salted = sorted(
-        tuple(r[c] for c in cols)
-        for r in V.rollup_verdicts(pairs, salt_buckets=8).collect()
     )
     assert plain == salted
 
@@ -162,13 +149,20 @@ def test_rerun_clears_stale_violations(spark, tmp_path):
 # --- schema checks ----------------------------------------------------------
 
 
-def test_null_doc_id_violation(spark):
+def test_null_doc_id_violation(spark, tmp_path):
+    from np_data_validation_spark.plans.onepass import validate_onepass
+
     snap = spark.createDataFrame(
         [(None, [1, 2], 2, "s1"), ("d1", [1, 2], 2, "s1")],
         "doc_id string, tokens array<int>, n_tok int, source string",
     )
-    out = C.schema_violations(snap).collect()
-    assert [r["violation"] for r in out] == ["NULL_DOC_ID"]
+    man = spark.createDataFrame(
+        [("d1", 2, None, "s1")], "doc_id string, n_tok int, tok_hash long, source string"
+    )
+    res = validate_onepass(spark, snap, man, str(tmp_path / "w"))
+    schema_checks = {"N_TOK_MISMATCH", "NULL_N_TOK", "NULL_DOC_ID"}
+    out = [r["violation"] for r in res.violations.collect()]
+    assert [v for v in out if v in schema_checks] == ["NULL_DOC_ID"]
 
 
 # --- sources ----------------------------------------------------------------

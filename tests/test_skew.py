@@ -72,44 +72,36 @@ def test_detect_hot_keys(spark):
     )
 
 
-def test_onepass_auto_salting_engages_and_matches(spark, tmp_path):
-    """End-to-end: the default plan detects the hot key, engages the salted
-    rollup, and produces output identical to the unsalted plan."""
+def _test_scale_detection(monkeypatch):
+    """Scale the hot-key detector's thresholds down to test inputs."""
+    orig = skew.detect_hot_keys
+    monkeypatch.setattr(
+        skew,
+        "detect_hot_keys",
+        lambda df, keys, **kw: orig(df, keys, **{"ratio": 4.0, "min_hot_rows": 50, **kw}),
+    )
+
+
+def test_onepass_auto_salting_engages_and_matches(spark, tmp_path, monkeypatch):
+    """End-to-end: the plan detects the hot key, engages the salted rollup,
+    and produces output identical to the unsalted plan (default thresholds
+    never trip at this scale)."""
     snap, man = _hot_dataset(spark)
-    auto = onepass.validate_onepass(
-        spark, snap, man, str(tmp_path / "auto"),
-        skew_ratio=4.0, skew_min_hot_rows=50,
-    )
-    assert auto.salt_buckets_used == skew.DEFAULT_SALT_BUCKETS
-    plain = onepass.validate_onepass(
-        spark, snap, man, str(tmp_path / "plain"), salt_buckets=None
-    )
+    plain = onepass.validate_onepass(spark, snap, man, str(tmp_path / "plain"))
     assert plain.salt_buckets_used is None
+    _test_scale_detection(monkeypatch)
+    auto = onepass.validate_onepass(spark, snap, man, str(tmp_path / "auto"))
+    assert auto.salt_buckets_used == skew.DEFAULT_SALT_BUCKETS
     cols = onepass.ROLLED_PUBLIC_COLS
     key = lambda df: sorted(map(tuple, df.select(*cols).collect()))  # noqa: E731
     assert key(auto.rolled) == key(plain.rolled)
 
 
-def test_onepass_auto_salting_stays_off_uniform(spark, tmp_path):
+def test_onepass_auto_salting_stays_off_uniform(spark, tmp_path, monkeypatch):
     snap, man = _hot_dataset(spark, hot_copies=0)
-    res = onepass.validate_onepass(
-        spark, snap, man, str(tmp_path / "uni"),
-        skew_ratio=4.0, skew_min_hot_rows=50,
-    )
+    _test_scale_detection(monkeypatch)
+    res = onepass.validate_onepass(spark, snap, man, str(tmp_path / "uni"))
     assert res.salt_buckets_used is None
-
-
-def test_choose_join_strategies(spark):
-    left = spark.createDataFrame([("a", 1)], "k string, v int")
-    right = spark.createDataFrame([("a", 2)], "k string, w int")
-    for strat, rows in (("broadcast", None), ("shuffle", None), ("auto", 1)):
-        out = skew.choose_join(left, right, ["k"], "inner", strategy=strat, right_rows=rows)
-        assert out.count() == 1
-    # explain shows broadcast for the broadcast strategy
-    plan = skew.choose_join(
-        left, right, ["k"], "inner", strategy="broadcast"
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" in plan
 
 
 def _mass_dup_manifest(spark, n_missed=300, hot_copies=500):
@@ -170,16 +162,14 @@ def test_probe_manifest_salting_matches_plain(spark, tmp_path):
     assert key(salted) == key(plain)
 
 
-def test_onepass_salting_engages_on_probe_fanout(spark, tmp_path):
+def test_onepass_salting_engages_on_probe_fanout(spark, tmp_path, monkeypatch):
     """ADVICE r3: a hot rollup key CREATED by probe fan-out (one missed
     identity content-matching many manifest rows) is invisible to stage-1
     detection; the chained detection over the written probe table must
     engage the salted rollup anyway."""
     snap, man = _mass_dup_manifest(spark)
-    res = onepass.validate_onepass(
-        spark, snap, man, str(tmp_path / "pf"),
-        skew_ratio=4.0, skew_min_hot_rows=50,
-    )
+    _test_scale_detection(monkeypatch)
+    res = onepass.validate_onepass(spark, snap, man, str(tmp_path / "pf"))
     assert res.salt_buckets_used == skew.DEFAULT_SALT_BUCKETS
     # the s1-only detector alone would NOT have engaged (uniform stage 1)
     s1 = spark.read.parquet(str(tmp_path / "pf" / "pairs_stage1"))

@@ -9,9 +9,9 @@ from np_data_validation_spark.operators import drift as D
 from np_data_validation_spark.operators import stats as S
 
 
-def test_partition_stats(seq_man):
-    seq, _, labels = seq_man
-    pdf = S.partition_stats(seq).toPandas()
+def test_partition_stats(seq_man, seq_onepass):
+    _, _, labels = seq_man
+    pdf = seq_onepass.stats.toPandas()
     glob = pdf[pdf["is_global"]]
     per = pdf[~pdf["is_global"]].set_index("source")
     assert len(glob) == 1
@@ -47,7 +47,7 @@ def test_histograms_merge_to_total(seq_man):
     per_src = S.n_tok_histogram(seq, group_col="source")
     total_from_parts = per_src.agg(F.sum("cnt")).collect()[0][0]
     # nulls are excluded from the histogram (no bucket; rate tracked in
-    # partition_stats)
+    # the one-pass stats)
     assert total_from_parts == seq.filter(F.col("n_tok").isNotNull()).count()
     glob = S.n_tok_histogram(seq, group_col=None)
     assert glob.agg(F.sum("cnt")).collect()[0][0] == total_from_parts

@@ -5,15 +5,17 @@
    pair (:558-573) — the correctness contract.
 2. An exhaustive property test: every (subject x counterpart) combination
    over small value domains, compared against a faithful Python oracle of
-   the reference's __eq__ decision tree (:547-628).
+   the reference's __eq__ decision tree (:547-628) — once for the Spark
+   CASE and once for its SQL form run in DuckDB.
 3. End-to-end: synth dataset with injected faults -> per-label expected
-   final verdicts and row statuses.
+   final verdicts and row statuses of the one-pass plan.
 """
 
+import duckdb
+import pyarrow as pa
 import pytest
-from pyspark.sql import functions as F
 
-from np_data_validation_spark.functions.hashing import with_tok_hash
+from np_data_validation_spark import queries as Q
 from np_data_validation_spark.operators import verdicts as V
 
 COLS = ["doc_id", "source", "n_tok", "tok_hash", "m_doc_id", "m_source", "m_n_tok", "m_tok_hash"]
@@ -37,8 +39,8 @@ def classify_rows(spark, rows):
 # ---------------------------------------------------------------------------
 
 
-def oracle(s_doc, s_src, s_nt, s_h, m_doc, m_src, m_nt, m_h, missing=True):
-    if missing and m_doc is None and m_nt is None and m_h is None:
+def oracle(s_doc, s_src, s_nt, s_h, m_doc, m_src, m_nt, m_h):
+    if m_doc is None and m_nt is None and m_h is None:
         return V.MISSING_COUNTERPART
     name_eq = s_doc == m_doc
     path_eq = name_eq and s_src == m_src
@@ -111,19 +113,37 @@ def test_missing_counterpart(spark):
     assert classify_rows(spark, rows) == [V.MISSING_COUNTERPART]
 
 
-def test_exhaustive_vs_oracle(spark):
-    """Every combination over small domains — pins branch ORDER, not just
-    individual branches (SURVEY.md §7.3 hard part 2)."""
+def _exhaustive_rows():
     docs, srcs, nts, hs = ["d1", "d2"], ["s1", "s2"], [10, 20], [H1, H2, None]
     sides = [
         (d, s, n, h) for d in docs for s in srcs for n in nts for h in hs
     ]
     rows = [s + m for s in sides for m in sides]
-    rows += [s + (None, None, None, None) for s in sides]
+    return rows + [s + (None, None, None, None) for s in sides]
+
+
+def test_exhaustive_vs_oracle(spark):
+    """Every combination over small domains — pins branch ORDER, not just
+    individual branches (SURVEY.md §7.3 hard part 2)."""
+    rows = _exhaustive_rows()
     got = classify_rows(spark, rows)
     for row, g in zip(rows, got):
         want = oracle(*row)
         assert g == want, f"{row}: got {V.VERDICT_NAMES.get(g)}, want {V.VERDICT_NAMES.get(want)}"
+
+
+def test_sql_case_exhaustive_vs_oracle():
+    """queries.VERDICT_CASE_SQL, which the DuckDB reference classifies
+    with, agrees with the same Python oracle on every combination."""
+    rows = _exhaustive_rows()
+    types = [pa.string(), pa.string(), pa.int32(), pa.int64()] * 2
+    cols = [pa.array([r[i] for r in rows], t) for i, t in enumerate(types)]
+    pairs = pa.table([*cols, pa.array(range(len(rows)))], names=[*COLS, "i"])
+    with duckdb.connect() as con:
+        con.register("pairs", pairs)
+        sql = f"SELECT {Q.VERDICT_CASE_SQL} FROM pairs ORDER BY i"
+        got = [c for (c,) in con.execute(sql).fetchall()]
+    assert got == [oracle(*row) for row in rows]
 
 
 EXPECTED_FINAL = {
@@ -151,11 +171,10 @@ EXPECTED_FINAL = {
 
 
 @pytest.fixture(scope="module")
-def classified(seq_man):
-    seq, man, labels = seq_man
-    pairs = V.classify_pairs(with_tok_hash(seq), man, join_strategy="auto")
-    rolled = V.rollup_verdicts(pairs).toPandas().set_index("doc_id")
-    return pairs, rolled, labels
+def classified(seq_man, seq_onepass):
+    _, _, labels = seq_man
+    rolled = seq_onepass.rolled.toPandas().set_index("doc_id")
+    return seq_onepass.violations, rolled, labels
 
 
 def test_end_to_end_final_verdicts(classified):
@@ -174,8 +193,8 @@ def test_end_to_end_final_verdicts(classified):
 
 
 def test_violation_extraction(classified):
-    pairs, _, labels = classified
-    vio = V.extract_violations(pairs).toPandas()
+    violations, _, labels = classified
+    vio = violations.toPandas()
     by_class = vio.groupby("violation")["doc_id"].apply(set).to_dict()
     cases = labels.groupby("case")["doc_id"].apply(set).to_dict()
     assert by_class["SIZE_MISMATCH"] == cases["unsynced_data"]
