@@ -1,15 +1,19 @@
-"""Benchmark driver: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the full-constraint
-validation pass on the synthetic input_hint table.
+"""Benchmark driver: headline operator queries at $SPARK_GRAFT_SF_DIR
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+
+The validation pass itself is benchmarked end to end by ``perfbench/``
+(see BENCHMARK.json); this script only times the operator queries.
 
 Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "total_headline_sec", "value": N, "unit": "sec",
+   "queries": {...}, "sf": ..., "cpus": ..., "plan_check": ...}
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -32,18 +36,19 @@ HEADLINE = [
     "udf_xxhash_tokens",
 ]
 
+#: reps per query; rep 0 is codegen-cold and never enters the statistic
+QUERY_REPS = 3
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.0
 
-    from np_data_validation_spark import benchlib
     from np_data_validation_spark import queries as Q
+    from np_data_validation_spark.plans.signature import check_plan_snapshots
     from np_data_validation_spark.session import get_spark
 
-    # the 48M-row big run needs more heap than the 8g default at local[32]
-    os.environ.setdefault("SPARK_DRIVER_MEM", "32g")
     # shuffle scratch on tmpfs so disk writeback can't pollute the timings
     # (the session keeps Spark's disk default unless asked)
     if os.path.isdir("/dev/shm"):
@@ -52,22 +57,21 @@ def main() -> None:
     # BENCH_ONLY: timed here but outside the 50-entry driver contract
     # (udf_xxhash_tokens — its twin carries the driver correctness row)
     qs = {**Q.queries(), **Q.BENCH_ONLY}
-    timings: dict[str, float] = {}
 
     # warm the JVM/codegen once with a trivial action
     spark.range(1000).count()
 
-    # Plan-snapshot gate (VERDICT r7 task #5): verify every headline
-    # query's physical-plan shape against the committed bench-config
-    # snapshot BEFORE timing — a bench number recorded against a silently
-    # changed plan is the failure mode the pytest snapshot suite closed
-    # for correctness and this closes for performance. On drift the run
-    # REFUSES (exit 2) unless NPDV_BENCH_ALLOW_PLAN_DRIFT=1, in which case
-    # the emitted JSON carries the loud label instead.
+    # Plan-snapshot gate: verify every headline query's physical-plan
+    # shape against the committed bench-config snapshot BEFORE timing — a
+    # bench number recorded against a silently changed plan is the failure
+    # mode the pytest snapshot suite closes for correctness and this closes
+    # for performance. On drift the run REFUSES (exit 2) unless
+    # NPDV_BENCH_ALLOW_PLAN_DRIFT=1, in which case the emitted JSON carries
+    # the loud label instead.
     snap_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH", "plan_snapshots_bench.json"
     )
-    plan_check = benchlib.check_plan_snapshots(
+    plan_check = check_plan_snapshots(
         spark,
         sf_dir,
         {n: qs[n] for n in HEADLINE},
@@ -97,227 +101,28 @@ def main() -> None:
         spark.stop()
         sys.exit(2)
 
-    # Per-operator timings are steal-qualified like the headline job
-    # (VERDICT r6 task #3): each query runs `query_reps` times (rep 0 is
-    # that query's codegen-cold rep and never enters the statistic) with a
-    # per-rep /proc/stat steal delta; the reported number is the
-    # warm_median-qualified median, and per-query stat/steal telemetry
-    # rides along in `query_stats` so a round-over-round comparison is
-    # self-attributing (r6's +30-60% single-shot noise is the motivating
-    # counterexample).
-    # clamp to >= 2: with a single rep the statistic would be exactly the
-    # codegen-cold rep 0, contradicting the warm-median doctrine (ADVICE
-    # r7 bench.py:59; warm_median also labels any 1-rep series cold_only_*)
-    query_reps = max(2, int(os.environ.get("NPDV_BENCH_QUERY_REPS", "3")))
-    query_stats: dict[str, dict] = {}
+    timings: dict[str, float] = {}
     for name in HEADLINE:
-        fn = qs[name]
-        reps_list = []
-        for _ in range(query_reps):
-            s0 = benchlib._steal_ms()
+        secs = []
+        for _ in range(QUERY_REPS):
             t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            s1 = benchlib._steal_ms()
-            reps_list.append(
-                {
-                    "sec": dt,
-                    "rows_per_sec": 1.0 / dt if dt > 0 else 0.0,
-                    "steal_ms": (s1 - s0)
-                    if (s0 is not None and s1 is not None)
-                    else None,
-                }
-            )
-        m = benchlib.warm_median(reps_list)
-        timings[name] = round(m["sec"], 3)
-        query_stats[name] = {
-            "stat": m["stat"],
-            "qualified_reps": m["qualified_reps"],
-            "all_sec": m["all_sec"],
-            "all_steal_ms": m["all_steal_ms"],
-        }
+            qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            secs.append(time.time() - t0)
+        timings[name] = round(statistics.median(secs[1:]), 3)
 
-    # the BASELINE.json headline: full constraint pass on the synthetic
-    # tokenized-sequence table (input_hint schema). Cold-run-proof (VERDICT
-    # r3 #2): >=1 cold + >=3 warm in-JVM reps with inter-rep GC hygiene;
-    # the REPORTED number is the median of the WARM reps that met the
-    # host-steal budget (steady state = the 10^12-row regime; a rep that
-    # ran during a steal wave measures the host, not the engine). The cold
-    # rep is kept as a printed diagnostic, and the `stat` field flags a
-    # fully degraded window (VERDICT r5 task #3).
-    # Job workdir on tmpfs so vda writeback from dataset generation or a
-    # previous rep can't pollute the measurement.
-    if os.path.isdir("/dev/shm"):
-        os.environ.setdefault("NPDV_BENCH_WORKDIR", "/dev/shm")
-    data_root = benchlib.ensure_bench_data()
-    reps = int(os.environ.get("NPDV_BENCH_REPS", "4"))
-    # retry-until-qualified (VERDICT r7 task #4): if no warm rep met both
-    # qualification budgets (host steal + bandwidth canary), extend the
-    # series — bounded — rather than reporting a polluted headline
-    steal_retries = int(os.environ.get("NPDV_BENCH_STEAL_RETRIES", "2"))
-    validate_reps, validate_retries = benchlib.run_validation_reps_until_qualified(
-        spark, data_root, reps=reps, retries=steal_retries
-    )
-    job = benchlib.warm_median(validate_reps)
-    # The headline follows the stamped gate doctrine (BENCH/BASELINE.md):
-    # one in-JVM series = one round, and a round's estimate is its BEST
-    # qualified warm rep — host noise is strictly additive, so a
-    # qualified-but-polluted rep can drag a median arbitrarily high
-    # (measured r8: qualified reps [24.3, 57.3] s -> "median" 40.8 that
-    # represents neither) while the best qualified rep is a certificate
-    # the engine achieved that cost under a clean window. The qualified
-    # median stays in the artifact (validate_median_sec) for comparison
-    # with pre-r8 rounds; a window with NO qualified rep falls back to
-    # the labeled median as before.
-    if job["best_qualified_sec"] is not None:
-        headline_sec = job["best_qualified_sec"]
-        headline_rps = job["best_qualified_rows_per_sec"]
-        job["stat"] = "round_best_" + job["stat"].removeprefix("median_")
-    else:
-        headline_sec = job["sec"]
-        headline_rps = job["rows_per_sec"]
-    timings["validate_full_pass"] = round(headline_sec, 3)
-
-    # Scale-growth evidence (VERDICT r2 #8): the SAME full pass at 6x the
-    # headline input, in the now-warm JVM. Reported as separate fields (not
-    # part of the headline total, which is compared round-over-round):
-    # seq/s at 48M vs 8M shows whether the derive phases stay flat as input
-    # grows. Same warm-median statistic (1 cold + 2 warm reps by default).
-    # Skippable for quick local iteration via NPDV_BENCH_SKIP_BIG=1.
-    big = None
-    if not os.environ.get("NPDV_BENCH_SKIP_BIG"):
-        big_rows = int(os.environ.get("NPDV_BENCH_BIG_ROWS", "48000000"))
-        big_reps = int(os.environ.get("NPDV_BENCH_BIG_REPS", "3"))
-        big_root = benchlib.ensure_bench_data(big_rows)
-        # same retry-until-qualified doctrine as the headline (r7's big
-        # run had 0 qualified reps; r8's first run 1/2 — at ~2 min/rep a
-        # bounded extension is cheaper than an unqualified artifact).
-        # Retries capped at 1 below the headline's: the big run is
-        # corroborating evidence, not the reported number.
-        big_series, big_retries = benchlib.run_validation_reps_until_qualified(
-            spark,
-            big_root,
-            reps=big_reps,
-            retries=max(0, steal_retries - 1),
-            retry_reps=1,
+    print(
+        json.dumps(
+            {
+                "metric": "total_headline_sec",
+                "value": round(sum(timings.values()), 3),
+                "unit": "sec",
+                "queries": timings,
+                "sf": sf,
+                "cpus": cpus,
+                "plan_check": plan_check["status"],
+            }
         )
-        big = benchlib.warm_median(big_series)
-        big["retries_used"] = big_retries
-        # same round-best doctrine as the headline (see below)
-        big["median_sec"] = round(big["sec"], 3)
-        if big["best_qualified_sec"] is not None:
-            big["sec"] = big["best_qualified_sec"]
-            big["rows_per_sec"] = big["best_qualified_rows_per_sec"]
-            big["stat"] = "round_best_" + big["stat"].removeprefix("median_")
-
-    total = round(sum(timings.values()), 3)
-    out = {
-        "metric": "total_headline_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "query_reps": query_reps,
-        "query_stats": query_stats,
-        "sf": sf,
-        "validated_rows": job["rows"],
-        "validated_seq_per_sec": round(headline_rps, 1),
-        "validate_median_sec": round(job["sec"], 3),
-        "validate_all_reps_sec": job["all_sec"],
-        "validate_cold_sec": job["cold_sec"],
-        # stat is median_steal_qualified when >=1 warm rep met the steal
-        # budget (the headline is computed from qualified reps ONLY);
-        # median_warm_no_qualified_rep flags a fully degraded window
-        # (VERDICT r5 task #3)
-        "validate_stat": job["stat"],
-        "validate_qualified_reps": job["qualified_reps"],
-        "validate_steal_retries_used": validate_retries,
-        "validate_steal_budget_frac": job["steal_budget_frac"],
-        "validate_canary_budget_sec": job["canary_budget_sec"],
-        "plan_check": plan_check,
-        "validate_all_gc_ms": job["all_gc_ms"],
-        "validate_all_steal_ms": job["all_steal_ms"],
-        # bandwidth canary (VERDICT r6 task #2): ~0.6 s calm on this host;
-        # inflated values attribute a qualified-but-slow rep to co-tenant
-        # memory-bandwidth pressure that steal telemetry cannot see
-        "validate_all_canary_sec": job["all_canary_sec"],
-        # rep i's after-probe = rep i+1's pre-canary (trailing probe for
-        # the last); bandwidth vetoes need BOTH sides blown (sandwich
-        # rule, benchlib.canary_qualified)
-        "validate_all_canary_after_sec": job["all_canary_after_sec"],
-        "validate_all_tmpfs_mb": job["all_tmpfs_mb"],
-        "validate_all_shuffle_mb": job["all_shuffle_mb"],
-        "cpus": cpus,
-    }
-    if big is not None:
-        out["big_run"] = {
-            "rows": big["rows"],
-            "sec": round(big["sec"], 3),
-            "median_sec": big["median_sec"],
-            "seq_per_sec": round(big["rows_per_sec"], 1),
-            "all_reps_sec": big["all_sec"],
-            "cold_sec": big["cold_sec"],
-            # per-rep diagnostics (VERDICT r4 #2): GC time inside each rep +
-            # tmpfs/shuffle residue after inter-rep hygiene, so a warm-slower-
-            # than-cold inversion is attributable; `stat` says whether the
-            # reported sec is median-of-warm or the inversion fallback
-            # (median over ALL reps).
-            "stat": big["stat"],
-            "qualified_reps": big["qualified_reps"],
-            "retries_used": big["retries_used"],
-            "all_gc_ms": big["all_gc_ms"],
-            "all_steal_ms": big["all_steal_ms"],
-            "all_canary_sec": big["all_canary_sec"],
-            "all_canary_after_sec": big["all_canary_after_sec"],
-            "all_tmpfs_mb": big["all_tmpfs_mb"],
-            "all_shuffle_mb": big["all_shuffle_mb"],
-            "phases": big["phases"],
-            "phases_rep_sec": big["phases_rep_sec"],
-            "seq_per_sec_vs_headline": round(
-                big["rows_per_sec"] / job["rows_per_sec"], 3
-            ),
-        }
-    # The driver records only a ~2 KB stdout TAIL and parses the last JSON
-    # line in it — BENCH_r07's line (with per-query steal telemetry) grew
-    # past the cap and was clipped mid-line ("parsed": null, headline lost).
-    # So: full detail goes to a file; stdout gets a compact line that is
-    # guaranteed to fit, carrying the headline + per-query seconds + the
-    # qualification stats and a pointer to the detail file.
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH", "bench_detail_latest.json"
     )
-    try:
-        with open(detail_path, "w") as f:
-            json.dump(out, f, indent=1, sort_keys=True)
-    except OSError:
-        detail_path = None
-    compact = {
-        "metric": out["metric"],
-        "value": out["value"],
-        "unit": out["unit"],
-        "sf": out["sf"],
-        "cpus": out["cpus"],
-        "queries": out["queries"],
-        "validated_seq_per_sec": out["validated_seq_per_sec"],
-        "validate_stat": out["validate_stat"],
-        "validate_qualified_reps": out["validate_qualified_reps"],
-        "plan_check": plan_check.get("status"),
-        "detail": detail_path,
-    }
-    if big is not None:
-        compact["big_run"] = {
-            "rows": out["big_run"]["rows"],
-            "seq_per_sec": out["big_run"]["seq_per_sec"],
-            "stat": out["big_run"]["stat"],
-            "qualified_reps": out["big_run"]["qualified_reps"],
-            "seq_per_sec_vs_headline": out["big_run"]["seq_per_sec_vs_headline"],
-        }
-    line = json.dumps(compact)
-    if len(line) > 1900 and detail_path:
-        # belt-and-braces: shed the per-query dict before the headline
-        compact["queries"] = f"see {detail_path}"
-        line = json.dumps(compact)
-    print(line)
     spark.stop()
 
 

@@ -67,9 +67,6 @@ class OnepassResult:
     ids: DataFrame | None = None  # written identity table (one row per snapshot
     #                               identity + s_mult) — checkpoint fingerprints
     #                               derive from it with no payload rescan
-    n_violations: int | None = None  # populated only with derive_counts=True
-    n_stats_rows: int | None = None  # (counts ran concurrently with the
-    #                                  rolled write — see validate_onepass)
 
 
 # ---------------------------------------------------------------------------
@@ -548,7 +545,6 @@ def validate_onepass(
     snapshot: DataFrame,
     manifest: DataFrame,
     work_dir: str,
-    derive_counts: bool = False,
 ) -> OnepassResult:
     """Full constraint pass: the payload is scanned once into the written
     slim pair table; probe, rollup, violations and stats all derive from
@@ -631,28 +627,7 @@ def validate_onepass(
     )
     violations_df = all_violations(merged, ids)
     stats_df = stats_from_identities(ids)
-    n_violations = n_stats_rows = None
-    if derive_counts:
-        # r9 (guide §2.6, overlap independent jobs): the violations and
-        # stats aggregations are independent of the rolled table given the
-        # written s1/probe/identities files, so a caller that needs their
-        # COUNTS anyway (the full constraint pass — benchlib's production
-        # job) can run them concurrently with the rolled write instead of
-        # serially after it (measured ~2 s of the 8M-row pass). Default
-        # off: API consumers that never count violations (e.g. a stream
-        # sink writing them) should not pay the two extra jobs.
-        dpool = ThreadPoolExecutor(max_workers=3)
-        try:
-            rolled_f = dpool.submit(write_read, rolled_obs, "rolled")
-            viol_f = dpool.submit(violations_df.count)
-            stats_f = dpool.submit(stats_df.count)
-            rolled = rolled_f.result()
-            n_violations = viol_f.result()
-            n_stats_rows = stats_f.result()
-        finally:
-            dpool.shutdown(wait=True)
-    else:
-        rolled = write_read(rolled_obs, "rolled")
+    rolled = write_read(rolled_obs, "rolled")
     return OnepassResult(
         rolled=rolled.select(*ROLLED_PUBLIC_COLS),
         violations=violations_df,
@@ -662,6 +637,4 @@ def validate_onepass(
         salt_buckets_used=salt_buckets,
         probe_salted=probe_salted,
         ids=ids,
-        n_violations=n_violations,
-        n_stats_rows=n_stats_rows,
     )

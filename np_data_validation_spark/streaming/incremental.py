@@ -44,12 +44,12 @@ def validate_stream(
     landing_dir: str,
     manifest: DataFrame,
     out_dir: str,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Start a streaming validation of parquet files arriving in
     ``landing_dir``; verdicts and violations land under ``out_dir``,
     partitioned by ``_batch_id`` (idempotent re-delivery, see module doc).
+    The availableNow trigger drains what has landed, then the query stops.
     Returns the StreamingQuery (caller awaits/stops)."""
     reader = spark.readStream.schema(SEQUENCES)
     if max_files_per_trigger:
@@ -74,11 +74,10 @@ def validate_stream(
         # idempotent); without it a long-running stream grows _work forever.
         _rm_dir(spark, work)
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", os.path.join(out_dir, "_stream_checkpoint"))
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

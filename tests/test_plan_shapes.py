@@ -111,7 +111,7 @@ def test_uniqueness_is_filter_not_aggregation(spark, seq_man, tmp_path):
 
 
 # the shared signature implementation lives in the package so bench.py can
-# gate its timings on the same shape key (VERDICT r7 task #5)
+# gate its timings on the same shape key
 from np_data_validation_spark.plans.signature import plan_signature as _plan_signature  # noqa: E402
 
 

@@ -1,10 +1,12 @@
 """Every package module is reached from an entrypoint.
 
 Walks the static ``import`` graph (``ast``, imports inside functions
-included) from the engine's entrypoints — the CLI, ``__spark_entry__.py``
-and the bench — and asserts that no module under ``np_data_validation_spark/``
-is left unreached. A module only its own tests import fails here: wire it
-into an entrypoint or delete it with its tests.
+included) from the engine's entrypoints — the CLI, ``__spark_entry__.py``,
+``bench.py`` and the ``perfbench/`` validation benchmark — and asserts
+that no module under ``np_data_validation_spark/`` is left unreached. A
+module only its own tests import fails here: wire it into an entrypoint
+or delete it with its tests. perfbench's sibling imports are not followed,
+so each of its files that imports the package is a root.
 """
 
 from __future__ import annotations
@@ -18,9 +20,11 @@ PKG = "np_data_validation_spark"
 ROOTS = [
     f"{PKG}/__main__.py",
     f"{PKG}/queries.py",
-    f"{PKG}/benchlib.py",
     "__spark_entry__.py",
     "bench.py",
+    "perfbench/run.py",
+    "perfbench/inputs.py",
+    "perfbench/spans.py",
 ]
 
 ALLOWED_UNREACHED = {
@@ -84,3 +88,18 @@ def test_every_package_module_is_reached_from_an_entrypoint():
         f"unreached: {sorted(unreached - ALLOWED_UNREACHED)}; "
         f"allowlisted but reached: {sorted(ALLOWED_UNREACHED - unreached)}"
     )
+
+
+def test_perfbench_trace_hooks_resolve(monkeypatch):
+    """perfbench's tracer wraps package functions by name; one that is
+    renamed or deleted makes every traced benchmark call fail, so each
+    hooked ``(module, attr)`` must still resolve to a callable."""
+    monkeypatch.syspath_prepend(os.path.join(REPO, "perfbench"))
+    import spans
+
+    missing = [
+        f"{mod.__name__}.{attr}"
+        for mod, attr in spans.WRAPPED
+        if not callable(getattr(mod, attr, None))
+    ]
+    assert not missing, f"perfbench/spans.py hooks missing functions: {missing}"

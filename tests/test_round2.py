@@ -223,7 +223,7 @@ def test_stream_replayed_batch_is_idempotent(spark, seq_man, tmp_path):
     landing = str(tmp_path / "landing")
     out = str(tmp_path / "out")
     seq.limit(200).write.mode("overwrite").parquet(landing)
-    q = INC.validate_stream(spark, landing, man, out, available_now=True)
+    q = INC.validate_stream(spark, landing, man, out)
     q.awaitTermination(120)
     verdicts = spark.read.parquet(os.path.join(out, "verdicts"))
     n1 = verdicts.count()
@@ -233,7 +233,7 @@ def test_stream_replayed_batch_is_idempotent(spark, seq_man, tmp_path):
     import shutil
 
     shutil.rmtree(os.path.join(out, "_stream_checkpoint"))
-    q2 = INC.validate_stream(spark, landing, man, out, available_now=True)
+    q2 = INC.validate_stream(spark, landing, man, out)
     q2.awaitTermination(120)
     n2 = spark.read.parquet(os.path.join(out, "verdicts")).count()
     assert n2 == n1  # overwrite-by-batch, not append-duplicates
