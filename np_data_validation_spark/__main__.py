@@ -21,8 +21,10 @@ to python workers even without --py-files when run locally.
 
 Batch mode is plans.engine.run_validation — checkpointed and resumable, so
 re-submitting the SAME command after a kill validates only pending
-partitions. --stream switches to streaming.incremental.validate_stream
-over a landing directory (availableNow trigger: drain what's there, exit).
+partitions. A batch run leaves only results and state under --out: each
+batch's scratch pair tables are deleted once its state commits. --stream
+switches to streaming.incremental.validate_stream over a landing directory
+(availableNow trigger: drain what's there, exit).
 Prints ONE JSON summary line on completion.
 """
 
@@ -38,7 +40,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--snapshot", required=True,
                     help="sequences table path (landing dir with --stream)")
     ap.add_argument("--manifest", required=True, help="manifest table path")
-    ap.add_argument("--out", required=True, help="output/state directory")
+    ap.add_argument("--out", required=True,
+                    help="output/state directory; a run leaves results and "
+                         "state there and deletes its <out>/_work scratch")
     ap.add_argument("--master", default=None,
                     help="'inherit' under spark-submit; e.g. local[8] for bare runs")
     ap.add_argument("--cpus", type=int, default=None,
@@ -50,9 +54,6 @@ def main(argv: list[str] | None = None) -> int:
                          "(re-validates silently mutated partitions)")
     ap.add_argument("--commit-batch", type=int, default=None,
                     help="partitions per state commit (default: all in one job)")
-    ap.add_argument("--keep-audit", type=int, default=None,
-                    help="retain at most N batch pair-table audit dirs under "
-                         "<out>/_work (default: keep all)")
     ap.add_argument("--stream", action="store_true",
                     help="treat --snapshot as a streaming landing directory")
     args = ap.parse_args(argv)
@@ -64,7 +65,6 @@ def main(argv: list[str] | None = None) -> int:
             "--no-resume": args.no_resume,
             "--content-aware": args.content_aware,
             "--commit-batch": args.commit_batch is not None,
-            "--keep-audit": args.keep_audit is not None,
         }
         bad = [f for f, v in batch_only.items() if v]
         if bad:
@@ -94,7 +94,6 @@ def main(argv: list[str] | None = None) -> int:
         resume=not args.no_resume,
         commit_batch=args.commit_batch,
         content_aware=args.content_aware,
-        keep_audit=args.keep_audit,
     )
     print(
         json.dumps(

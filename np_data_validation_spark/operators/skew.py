@@ -37,6 +37,7 @@ def detect_hot_keys(
     probes: int = SKEW_PROBE_BUCKETS,
     ratio: float = SKEW_RATIO,
     min_hot_rows: int = SKEW_MIN_HOT_ROWS,
+    n_rows: int | None = None,
 ) -> bool:
     """Scale-free hot-key probe: does some grouping key hold a pathological
     share of ``df``'s rows?
@@ -50,11 +51,18 @@ def detect_hot_keys(
     ``ratio`` x the average bucket) so it is scale-free, gated by an
     absolute floor (``min_hot_rows``) so small inputs never trip it.
 
+    ``n_rows``: ``df``'s row count when the caller already has it (e.g. from
+    an ``Observation`` on the write that produced ``df``). Below
+    ``min_hot_rows`` the answer is False without submitting a job — exact,
+    because the hottest bucket can never hold more than ``n_rows`` rows.
+
     This is the detector behind validate_onepass's salted rollup and
     salted probe join — the engine's explicit-skew-handling contract (north_rule; the
     reference's one-big-session pathology,
     /root/reference/data_validation.py:1449-1455).
     """
+    if n_rows is not None and n_rows < min_hot_rows:
+        return False
     bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(probes))
     row = (
         df.groupBy(bucket.alias("_bucket"))

@@ -56,8 +56,7 @@ public Iceberg-on-Spark usage):
 * Resume reads ``val.state``'s current snapshot (one keyed scan, no
   window); the superseded states the parquet path keeps as history are
   recovered via snapshot time-travel instead
-  (``VERSION AS OF``), which also gives the audit trail a retention knob
-  (``expire_snapshots``) in place of _prune_audit_dirs.
+  (``VERSION AS OF``), with ``expire_snapshots`` as their retention knob.
 """
 
 from __future__ import annotations
@@ -76,6 +75,17 @@ STATE_DIR = "_validation_state"
 
 def state_path(out_dir: str) -> str:
     return os.path.join(out_dir, STATE_DIR)
+
+
+def delete_dir(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path``, if it exists, through the Hadoop
+    FileSystem API, so it works when the output directory is object storage
+    (s3://, hdfs://, file:// URIs), not only the driver's local disk. The
+    path is taken literally, never as a glob."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    if fs.exists(p):
+        fs.delete(p, True)
 
 
 def read_state(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -13,14 +13,17 @@ Scale shape per batch (SURVEY.md §3.1 Spark restatement):
       -> Arrow UDF tok_hash (Arrow batches)
       -> doc_id join vs manifest (+ content probe for misses)
       -> CASE verdict -> violations + per-row rollup
-      -> per-partition metrics aggregation
-      -> write results (dynamic partition overwrite) -> append state rows
+      -> write verdicts and violations concurrently (dynamic partition
+         overwrite)
+      -> per-partition metrics counted from the committed results
+      -> append state rows (the commit point) -> delete the batch's scratch
 """
 
 from __future__ import annotations
 
 import os
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -165,25 +168,45 @@ class RunResult:
         return sum(m.get("rows", 0) for m in self.metrics.values())
 
 
-def _partition_metrics(rolled: DataFrame, violations: DataFrame) -> dict[str, dict]:
-    """Per-source metrics (small collect: one row per partition/class)."""
-    out: dict[str, dict] = {}
-    for r in (
-        rolled.groupBy("source")
-        .pivot("row_status", ["pass", "fail", "unknown"])
+def _partition_metrics(
+    spark: SparkSession, out_dir: str, batch: list[str]
+) -> dict[str, dict]:
+    """Per-source metrics counted from the batch's COMMITTED results (one
+    small collect: one row per partition and status/class). Reads only the
+    ``_part`` partitions of the batch and the counted column of each table,
+    with an explicit schema (no inference, no payload), so the count sees
+    exactly what was committed and never recomputes the violations plan."""
+
+    def committed(table: str, col: str) -> DataFrame:
+        return (
+            spark.read.schema(f"{col} string, _part string")
+            .parquet(os.path.join(out_dir, table))
+            .filter(F.col("_part").isin(batch))
+        )
+
+    # a verdict row has a null violation and a violation row a null status
+    null = F.lit(None).cast("string")
+    counts = (
+        committed("verdicts", "row_status")
+        .select("_part", "row_status", null.alias("violation"))
+        .unionByName(
+            committed("violations", "violation")
+            .select("_part", null.alias("row_status"), "violation")
+        )
+        .groupBy("_part", "row_status", "violation")
         .count()
         .collect()
-    ):
-        out.setdefault(r["source"], {})
-        m = out[r["source"]]
-        m["pass"] = r["pass"] or 0
-        m["fail"] = r["fail"] or 0
-        m["unknown"] = r["unknown"] or 0
+    )
+    out: dict[str, dict] = {}
+    for r in counts:
+        m = out.setdefault(r["_part"], {"pass": 0, "fail": 0, "unknown": 0})
+        if r["violation"] is None:
+            m[r["row_status"]] = r["count"]
+        else:
+            m.setdefault("violations", {})[r["violation"]] = r["count"]
+    for m in out.values():
         m["rows"] = m["pass"] + m["fail"] + m["unknown"]
-        m["partition_status"] = "pass" if (m["fail"] == 0) else "fail"
-    for r in violations.groupBy("source", "violation").count().collect():
-        m = out.setdefault(r["source"], {})
-        m.setdefault("violations", {})[r["violation"]] = r["count"]
+        m["partition_status"] = "pass" if m["fail"] == 0 else "fail"
     return out
 
 
@@ -204,85 +227,8 @@ def _clear_partitions(spark: SparkSession, base: str, partitions: list[str]) -> 
     state reports it clean. A crash after the delete and before the state
     commit just re-runs the partition (results-first, state-last ordering).
     """
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
     for p in partitions:
-        path = jvm.org.apache.hadoop.fs.Path(os.path.join(base, f"_part={p}"))
-        fs = path.getFileSystem(hconf)
-        if fs.exists(path):
-            fs.delete(path, True)
-
-
-def _prune_audit_dirs(spark: SparkSession, work_root: str, keep: int) -> None:
-    """Bounded pair-level audit trail: keep the ``keep`` most recent batch
-    work dirs (across runs), delete older ones AFTER the state commit —
-    mirrors streaming's post-commit scratch reclaim
-    (streaming/incremental.py). Legacy flat ``batch=*`` dirs from runs
-    before run-scoping count as candidates too.
-
-    Runs entirely through the Hadoop FileSystem API (same as
-    _clear_partitions) so ``--keep-audit`` works when ``out_dir`` is an
-    object store (s3://, hdfs://), not only the driver's local disk.
-    Recency ordering is (dir mtime, parent-run mtime, batch index): batch
-    dirs committed within one coarse-mtime tick (NFS and some object-store
-    emulations round mtimes) still prune oldest-first, because the batch
-    index is monotone within a run and the current run's dir mtime advances
-    with every batch it commits. Pruning is post-commit best-effort: a dir
-    vanishing mid-prune (two runs sharing an out_dir, external cleanup) is
-    skipped, never allowed to abort the remaining batches of the run."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(work_root)
-    try:
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(root):
-            return
-        entries = fs.listStatus(root)
-    except Exception:  # noqa: BLE001 - root vanished mid-call
-        return
-    cands: list[tuple[int, int, int, object]] = []
-    for st in entries:
-        if not st.isDirectory():
-            continue
-        name = st.getPath().getName()
-        if name.startswith("run="):
-            try:
-                subs = fs.listStatus(st.getPath())
-            except Exception:  # noqa: BLE001 - run dir deleted concurrently
-                continue
-            run_mtime = st.getModificationTime()
-            for sub in subs:
-                if not sub.isDirectory():
-                    continue
-                bname = sub.getPath().getName()
-                try:
-                    bidx = int(bname.split("=", 1)[1]) if bname.startswith("batch=") else -1
-                except ValueError:
-                    bidx = -1
-                cands.append(
-                    (sub.getModificationTime(), run_mtime, bidx, sub.getPath())
-                )
-        else:
-            mt = st.getModificationTime()
-            cands.append((mt, mt, -1, st.getPath()))
-    cands.sort(key=lambda t: (t[0], t[1], t[2]), reverse=True)
-    for _, _, _, stale in cands[max(keep, 0):]:
-        try:
-            fs.delete(stale, True)
-        except Exception:  # noqa: BLE001 - already gone / transient FS error
-            pass
-    # sweep run dirs emptied by the prune
-    try:
-        entries = fs.listStatus(root)
-    except Exception:  # noqa: BLE001
-        return
-    for st in entries:
-        if not (st.isDirectory() and st.getPath().getName().startswith("run=")):
-            continue
-        try:
-            if len(fs.listStatus(st.getPath())) == 0:
-                fs.delete(st.getPath(), False)
-        except Exception:  # noqa: BLE001 - concurrent create/delete: leave it
-            pass
+        CP.delete_dir(spark, os.path.join(base, f"_part={p}"))
 
 
 def run_validation(
@@ -293,7 +239,6 @@ def run_validation(
     resume: bool = True,
     commit_batch: int | None = None,
     content_aware: bool = False,
-    keep_audit: int | None = None,
 ) -> RunResult:
     """Validate all pending partitions of ``snapshot_path`` and commit
     results + state under ``out_dir``.
@@ -319,14 +264,14 @@ def run_validation(
     construction (different shapes), so switching modes re-validates
     everything once.
 
-    ``keep_audit``: retain at most this many batch-level pair-table audit
-    dirs under ``<out>/_work`` (most recent across runs — mtime with a
-    (run, batch-index) tie-break for coarse-mtime filesystems), pruning
-    older ones after each state commit through the Hadoop FS API (works on
-    object stores). None (default) keeps everything.
-    Work dirs are scoped ``_work/run=<run_id>/batch=<n>`` so re-validated
-    partitions never leave a stale pair table masquerading as current: the
-    latest run's dirs are the authoritative audit trail.
+    Scratch: each batch's pair tables live under
+    ``<out>/_work/run=<run_id>/batch=<n>`` only until that batch's state
+    commit, then are deleted through the Hadoop FS API (works on object
+    stores). A run leaves only results and state behind: after its last
+    commit — and on a run with nothing pending — it deletes ``<out>/_work``
+    as a whole, which also reclaims the scratch a crashed run left there.
+    Two runs sharing one ``out_dir`` are not supported: either may delete
+    the other's in-flight scratch.
     """
     from np_data_validation_spark.plans.onepass import validate_onepass
 
@@ -362,7 +307,9 @@ def run_validation(
     pending = [p for p in all_parts if p not in done]
 
     result = RunResult(run_id="", validated_partitions=[], skipped_partitions=sorted(done))
+    work_root = os.path.join(out_dir, "_work")
     if not pending:
+        CP.delete_dir(spark, work_root)  # a crashed run's leftovers
         return result
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -372,37 +319,41 @@ def run_validation(
         else [pending[i : i + commit_batch] for i in range(0, len(pending), commit_batch)]
     )
     run_id = uuid.uuid4().hex
+
+    def write_results(df: DataFrame, table: str) -> None:
+        df.withColumn("_part", F.col("source")).write.mode("overwrite").partitionBy(
+            "_part"
+        ).parquet(os.path.join(out_dir, table))
+
     for bi, batch in enumerate(batches):
         # partition pruning: only pending sources are scanned
         snap_b = snapshot.filter(F.col("source").isin(batch))
         # one-pass plan: payload scanned once into the batch's pair table;
         # rollup, violations and stats derive from it without payload
         # rescans. Work dirs are run+batch scoped (never partition-value
-        # named: values would flow unsanitized into paths, and a partition
-        # re-validated in a differently-composed later batch would leave a
-        # stale table under its old batch dir).
-        res = validate_onepass(
-            spark, snap_b, manifest,
-            os.path.join(out_dir, "_work", f"run={run_id}", f"batch={bi}"),
-        )
-        rolled, violations = res.rolled, res.violations
+        # named: values would flow unsanitized into paths).
+        work = os.path.join(work_root, f"run={run_id}", f"batch={bi}")
+        res = validate_onepass(spark, snap_b, manifest, work)
         # 1) results first (idempotent per-partition replacement: explicit
         #    clear + dynamic overwrite — overwrite alone leaves stale rows
-        #    when a re-run produces zero rows for a partition)
+        #    when a re-run produces zero rows for a partition). The two
+        #    tables are independent, so their writes run concurrently and
+        #    both finish before anything reads them.
         _clear_partitions(spark, os.path.join(out_dir, "violations"), batch)
-        rolled.withColumn("_part", F.col("source")).write.mode("overwrite").partitionBy(
-            "_part"
-        ).parquet(os.path.join(out_dir, "verdicts"))
-        violations.withColumn("_part", F.col("source")).write.mode(
-            "overwrite"
-        ).partitionBy("_part").parquet(os.path.join(out_dir, "violations"))
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            writes = [
+                pool.submit(write_results, res.rolled, "verdicts"),
+                pool.submit(write_results, res.violations, "violations"),
+            ]
+            for w in writes:
+                w.result()
         # 2) state rows LAST (the commit point). Content-aware fingerprints
         #    derive from the batch's written identity table — no payload
         #    rescan (plans.checkpoint.fingerprints_from_identities).
         batch_fps = (
             CP.fingerprints_from_identities(res.ids) if content_aware else fps
         )
-        metrics = _partition_metrics(rolled, violations)
+        metrics = _partition_metrics(spark, out_dir, batch)
         state_rows = [
             {
                 "partition": p,
@@ -421,12 +372,13 @@ def run_validation(
         result.run_id = run_id
         result.validated_partitions.extend(batch)
         result.metrics.update(metrics)
-        # 3) bounded audit trail (post-commit, like streaming's reclaim)
-        if keep_audit is not None:
-            _prune_audit_dirs(spark, os.path.join(out_dir, "_work"), keep_audit)
+        # 3) reclaim the batch's scratch, AFTER the commit point: a crash
+        #    before this line leaves it for the next run's sweep
+        CP.delete_dir(spark, work)
 
     # global manifest audit (once per run; overwrites prior audit)
     manifest_audit(snapshot, manifest).write.mode("overwrite").parquet(
         os.path.join(out_dir, "manifest_violations")
     )
+    CP.delete_dir(spark, work_root)
     return result

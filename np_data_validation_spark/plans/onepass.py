@@ -60,7 +60,6 @@ class OnepassResult:
     rolled: DataFrame      # verdict rollup (engine verdict schema)
     violations: DataFrame  # schema.VIOLATIONS shape
     stats: DataFrame       # per-source + global stats rows (stats_from_identities)
-    n_rows: int            # validated (doc_id, source) subjects
     n_missing: int         # subjects probed by content
     salt_buckets_used: int | None = None  # rollup salting engaged (hot key found)
     probe_salted: bool = False  # manifest-side salting engaged on the probe join
@@ -553,7 +552,9 @@ def validate_onepass(
     Rollup skew: the written pair table is probed for a hot (doc_id,
     source) key (operators.skew.detect_hot_keys — a bucket-count scan that
     runs CONCURRENTLY with the identity/probe jobs, so its latency hides
-    behind them), and the two-level salted rollup engages only when one is
+    behind them; a table with fewer rows than the detector's absolute floor
+    is answered from its observed row count without a job), and the
+    two-level salted rollup engages only when one is
     found — skew handled explicitly per the north_rule, zero plan change on
     well-distributed input."""
     from concurrent.futures import ThreadPoolExecutor
@@ -584,16 +585,20 @@ def validate_onepass(
         mhot_f = lambda: SK.detect_hot_keys(  # noqa: E731
             manifest.select("tok_hash"), ("tok_hash",)
         )
-        # the miss count rides the stage-1 write as an observation (no extra job)
+        # the miss and row counts ride the stage-1 write as an observation
+        # (no extra job); the row count lets hot-key detection skip inputs
+        # too small to ever be hot
         obs = Observation("onepass_stage1")
         s1_obs = pairs_stage1(snapshot, manifest).observe(
             obs,
             F.sum(
                 F.when(F.col("verdict_code") == V.MISSING_COUNTERPART, 1).otherwise(0)
             ).alias("n_missing"),
+            F.count(F.lit(1)).alias("n_rows"),
         )
         s1 = write_read(s1_obs, "pairs_stage1")
         n_miss = int(obs.get["n_missing"] or 0)
+        n_s1 = obs.get["n_rows"]
         probed, n_miss, probe_salted = probe_pairs_from(
             spark, s1, manifest, n_miss=n_miss, manifest_hot=mhot_f
         )
@@ -601,16 +606,22 @@ def validate_onepass(
         # independent given the written s1 — submit both writes concurrently
         # (Spark schedules concurrent jobs from separate threads), hiding one
         # job's latency behind the other's.
+        pobs = Observation("onepass_probe")
         ids_f = pool.submit(write_read, identity_rows(s1), "identities")
-        probe_f = pool.submit(write_read, probed, "pairs_probe")
-        skew_f = pool.submit(SK.detect_hot_keys, s1, ("doc_id", "source"))
+        probe_f = pool.submit(
+            write_read, probed.observe(pobs, F.count(F.lit(1)).alias("n_rows")),
+            "pairs_probe",
+        )
+        skew_f = pool.submit(SK.detect_hot_keys, s1, ("doc_id", "source"), n_rows=n_s1)
         # The rollup aggregates the MERGED table (stage-1 hits + probe
         # output), but stage-1 detection can't see a hot key CREATED by
         # probe fan-out (one missed identity content-matching many
         # manifest rows). Chain a second detection over the written
         # probe table — tiny relative to s1, so the extra job is cheap.
         probe_skew_f = pool.submit(
-            lambda: SK.detect_hot_keys(probe_f.result(), ("doc_id", "source"))
+            lambda: SK.detect_hot_keys(
+                probe_f.result(), ("doc_id", "source"), n_rows=pobs.get["n_rows"]
+            )
         )
         ids = ids_f.result()
         merged = merged_pairs(s1, probe_f.result())
@@ -618,21 +629,11 @@ def validate_onepass(
         salt_buckets = SK.DEFAULT_SALT_BUCKETS if hot else None
     finally:
         pool.shutdown(wait=True)
-    # subject count rides the rolled write as an observation — the extra
-    # count job it replaces is pure driver-serial fixed cost (scale-neutral
-    # work hurts high-parallelism efficiency twice as hard)
-    robs = Observation("onepass_rolled")
-    rolled_obs = rollup_pairs(merged, salt_buckets=salt_buckets).observe(
-        robs, F.count(F.lit(1)).alias("n_rows")
-    )
-    violations_df = all_violations(merged, ids)
-    stats_df = stats_from_identities(ids)
-    rolled = write_read(rolled_obs, "rolled")
+    rolled = write_read(rollup_pairs(merged, salt_buckets=salt_buckets), "rolled")
     return OnepassResult(
         rolled=rolled.select(*ROLLED_PUBLIC_COLS),
-        violations=violations_df,
-        stats=stats_df,
-        n_rows=int(robs.get["n_rows"] or 0),
+        violations=all_violations(merged, ids),
+        stats=stats_from_identities(ids),
         n_missing=n_miss,
         salt_buckets_used=salt_buckets,
         probe_salted=probe_salted,

@@ -26,17 +26,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from np_data_validation_spark.plans import checkpoint as CP
 from np_data_validation_spark.plans.onepass import validate_onepass
 from np_data_validation_spark.schema import SEQUENCES
-
-
-def _rm_dir(spark: SparkSession, path: str) -> None:
-    """Filesystem-agnostic recursive delete via the Hadoop FS API (the
-    out_dir may be object storage, not the driver's local disk)."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(p):
-        fs.delete(p, True)
 
 
 def validate_stream(
@@ -72,7 +64,7 @@ def validate_stream(
         # scratch reclaim AFTER both sink writes committed: a crash before
         # this point replays the batch (which recreates the dir, overwrite-
         # idempotent); without it a long-running stream grows _work forever.
-        _rm_dir(spark, work)
+        CP.delete_dir(spark, work)
 
     return (
         stream.writeStream.foreachBatch(process)

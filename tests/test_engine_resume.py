@@ -233,56 +233,86 @@ def test_mode_switch_revalidates(spark, synth_dataset, tmp_path):
     assert sorted(r3.validated_partitions) == sorted(r1.validated_partitions)
 
 
-def test_audit_retention_bounds_work_dirs(spark, synth_dataset, tmp_path):
-    """keep_audit bounds the pair-level audit trail: only the N most recent
-    batch work dirs survive, and the retained ones stay readable."""
-    import glob as _glob
+def _files_under(root) -> list[str]:
+    return [os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs]
 
+
+def test_audit_retention_bounds_work_dirs(spark, synth_dataset, tmp_path):
+    """A run leaves no scratch: each batch's pair tables under
+    ``<out>/_work`` are deleted once its state commits, and a second run
+    over the same out dir leaves none either."""
     root, _ = synth_dataset
     snap_p = os.path.join(root, "sequences")
     man_p = os.path.join(root, "manifest")
     out = str(tmp_path / "out")
-    r = E.run_validation(
-        spark, snap_p, man_p, out, commit_batch=1, keep_audit=2
-    )
+    r = E.run_validation(spark, snap_p, man_p, out, commit_batch=1)
     assert len(r.validated_partitions) == 4
     work = os.path.join(out, "_work")
-    batch_dirs = sorted(_glob.glob(os.path.join(work, "run=*", "batch=*")))
-    assert len(batch_dirs) == 2  # 4 batches ran, 2 retained
-    # retained audit tables are intact
-    for d in batch_dirs:
-        pairs = spark.read.parquet(os.path.join(d, "pairs_stage1"))
-        assert pairs.count() > 0
-    # unbounded mode keeps every batch dir
-    out2 = str(tmp_path / "out2")
-    E.run_validation(spark, snap_p, man_p, out2, commit_batch=1)
-    assert len(_glob.glob(os.path.join(out2, "_work", "run=*", "batch=*"))) == 4
+    assert _files_under(work) == []
+    E.run_validation(spark, snap_p, man_p, out, resume=False, commit_batch=1)
+    assert _files_under(work) == []
 
 
 def test_audit_retention_hadoop_fs_uri(spark, synth_dataset, tmp_path):
-    """VERDICT r4 #1: --keep-audit must bound _work through the Hadoop FS
-    API, not os.* — a file: scheme out_dir URI exercises exactly that code
-    path (os.path.isdir('file:/...') is False, so the old driver-local
-    pruner silently retained everything)."""
-    import glob as _glob
-
+    """Scratch is reclaimed through the Hadoop FS API, not os.*: a file:
+    scheme out_dir URI exercises exactly that path (os.path.isdir on the
+    URI is False, so a driver-local delete would silently keep everything)."""
     root, _ = synth_dataset
     snap_p = os.path.join(root, "sequences")
     man_p = os.path.join(root, "manifest")
     local_out = tmp_path / "out_uri"
     out = "file://" + str(local_out)
-    r = E.run_validation(spark, snap_p, man_p, out, commit_batch=1, keep_audit=2)
+    r = E.run_validation(spark, snap_p, man_p, out, commit_batch=1)
     assert len(r.validated_partitions) == 4
-    batch_dirs = sorted(_glob.glob(str(local_out / "_work" / "run=*" / "batch=*")))
-    assert len(batch_dirs) == 2  # 4 batches ran, 2 retained — via Hadoop FS
-    for d in batch_dirs:
-        assert spark.read.parquet(os.path.join(d, "pairs_stage1")).count() > 0
-    # a second multi-batch run over the same out_dir stays bounded too
-    # (resume skips all partitions; force re-run by dropping resume)
-    E.run_validation(
-        spark, snap_p, man_p, out, resume=False, commit_batch=1, keep_audit=2
-    )
-    assert len(_glob.glob(str(local_out / "_work" / "run=*" / "batch=*"))) == 2
+    assert (local_out / "verdicts").is_dir()  # the URI resolved to local_out
+    assert _files_under(local_out / "_work") == []
+    E.run_validation(spark, snap_p, man_p, out, resume=False, commit_batch=1)
+    assert _files_under(local_out / "_work") == []
+
+
+def _digest(spark, path: str) -> tuple[int, int]:
+    """Order-independent table digest: row count + sum of row hashes."""
+    df = spark.read.parquet(path)
+    row_hash = F.xxhash64(*[F.col(c) for c in sorted(df.columns)])
+    r = df.agg(
+        F.count(F.lit(1)).alias("n"), F.sum(row_hash.cast("decimal(38,0)")).alias("h")
+    ).first()
+    return r["n"], int(r["h"] or 0)
+
+
+def test_crash_before_state_commit_reruns_to_clean_outputs(
+    spark, synth_dataset, tmp_path, monkeypatch
+):
+    """A crash at the commit point (results written, state not) keeps the
+    batch's scratch; the rerun validates every partition, sweeps that
+    scratch and commits outputs identical to a clean run's."""
+    root, labels = synth_dataset
+    snap_p = os.path.join(root, "sequences")
+    man_p = os.path.join(root, "manifest")
+    clean, out = str(tmp_path / "clean"), str(tmp_path / "out")
+    E.run_validation(spark, snap_p, man_p, clean)
+
+    orig = CP.write_state_rows
+    crashed = []
+
+    def crash_once(*args, **kwargs):
+        if not crashed:
+            crashed.append(True)
+            raise RuntimeError("injected crash at the state commit")
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(CP, "write_state_rows", crash_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        E.run_validation(spark, snap_p, man_p, out)
+    assert _files_under(os.path.join(out, "_work")) != []  # scratch stays
+
+    r = E.run_validation(spark, snap_p, man_p, out)
+    assert sorted(r.validated_partitions) == sorted(labels["source"].unique())
+    assert _files_under(os.path.join(out, "_work")) == []
+    for table in ("verdicts", "violations", "manifest_violations"):
+        assert _digest(spark, os.path.join(out, table)) == _digest(
+            spark, os.path.join(clean, table)
+        ), table
 
 
 def test_code_version_derived_from_semantics():

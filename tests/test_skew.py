@@ -72,6 +72,20 @@ def test_detect_hot_keys(spark):
     )
 
 
+def test_detect_hot_keys_below_floor_submits_no_job(spark):
+    """A frame with fewer rows than the absolute floor can never be hot: the
+    answer comes from the given row count, without scanning the frame."""
+    import pytest
+
+    boom = spark.range(1).select(
+        F.raise_error(F.lit("scanned")).cast("string").alias("doc_id"),
+        F.lit("s").alias("source"),
+    )
+    with pytest.raises(Exception, match="scanned"):
+        skew.detect_hot_keys(boom)
+    assert skew.detect_hot_keys(boom, n_rows=10) is False
+
+
 def _test_scale_detection(monkeypatch):
     """Scale the hot-key detector's thresholds down to test inputs."""
     orig = skew.detect_hot_keys
