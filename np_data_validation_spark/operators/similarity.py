@@ -53,9 +53,6 @@ def cosine_expr(a: Column | str, b: Column | str) -> Column:
     return (dot_expr(a, b) / (norm_expr(a) * norm_expr(b))).cast("double")
 
 
-COSINE_SQL = "list_cosine_similarity({a}, {b})"
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,

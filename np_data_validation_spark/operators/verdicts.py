@@ -95,9 +95,9 @@ def classify_expr() -> Column:
     both_hash = s_h.isNotNull() & m_h.isNotNull()
     hash_eq = s_h == m_h
     size_eq = s_nt == m_nt
-    # reference compares case-insensitively (:554 etc.); ids are normalized
-    # at ingest (sources.normalize), so plain equality here keeps the join
-    # key bucketing-friendly.
+    # reference compares case-insensitively (:554 etc.); here ids are taken
+    # as given (normalize them before they reach the tables), so plain
+    # equality keeps the join key bucketing-friendly.
     name_eq = s_doc == m_doc
     path_eq = name_eq & (s_src == m_src)
 

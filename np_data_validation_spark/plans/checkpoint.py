@@ -5,8 +5,10 @@ SELF match (dedup-on-insert, /root/reference/data_validation.py:728-734) —
 idempotent but it still RESCANS everything. Here state is explicit: one row
 per (partition, run) appended to ``<out>/_validation_state``; at startup the
 pending set = all partitions minus those whose latest state is ``done`` with
-a matching input fingerprint. Pruned partitions are never scanned (the
-``source IN (pending)`` predicate hits the hive-partition layout).
+a matching input fingerprint. The state is read once, by
+``recorded_lineage``; ``done_partitions`` decides over its result. Pruned
+partitions are never scanned (the ``source IN (pending)`` predicate hits the
+hive-partition layout).
 
 Atomicity without Iceberg transactions (SURVEY.md §7.3 hard part 4): result
 parquet is written FIRST (dynamic partition overwrite, so a re-run of a
@@ -104,33 +106,22 @@ def read_state(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 def done_partitions(
-    spark: SparkSession,
-    out_dir: str,
-    fingerprints: dict[str, str] | None = None,
-    code_version: str | None = None,
+    lineages: dict[str, dict], fingerprints: dict[str, str], code_version: str
 ) -> set[str]:
-    """Partitions whose latest state is done — and, when fingerprints of the
-    current input are supplied, whose recorded input fingerprint still
-    matches (changed input invalidates the checkpoint, reference X4
-    memoization semantics). When ``code_version`` is supplied, the recorded
-    lineage must match it too: bumping engine.CODE_VERSION re-runs every
-    checkpoint written under older verdict/constraint semantics."""
-    rows = read_state(spark, out_dir).filter(F.col("status") == "done").collect()
-    done = set()
-    for r in rows:
-        if fingerprints is not None or code_version is not None:
-            try:
-                lineage = json.loads(r["lineage"] or "{}")
-            except json.JSONDecodeError:
-                continue
-            if fingerprints is not None and lineage.get(
-                "input_fingerprint"
-            ) != fingerprints.get(r["partition"]):
-                continue
-            if code_version is not None and lineage.get("code_version") != code_version:
-                continue
-        done.add(r["partition"])
-    return done
+    """Partitions whose recorded ``done`` lineage (``recorded_lineage``) still
+    holds: its input fingerprint matches the current one (changed input
+    invalidates the checkpoint, reference X4 memoization semantics) and so
+    does its code version (bumping engine.CODE_VERSION re-runs every
+    checkpoint written under older verdict/constraint semantics). A
+    partition absent from ``fingerprints`` is never done. Pure: the state
+    was read once, by ``recorded_lineage``."""
+    return {
+        p
+        for p, lin in lineages.items()
+        if p in fingerprints
+        and lin.get("input_fingerprint") == fingerprints[p]
+        and lin.get("code_version") == code_version
+    }
 
 
 def write_state_rows(
@@ -242,7 +233,9 @@ def fingerprints_from_identities(ids: DataFrame) -> dict[str, str]:
 
 
 def recorded_lineage(spark: SparkSession, out_dir: str) -> dict[str, dict]:
-    """Latest 'done' lineage dict per partition (empty on no/bad state)."""
+    """Latest 'done' lineage dict per partition (empty on no/bad state); a
+    partition whose lineage does not decode is left out. The resume gate's
+    one state read: ``done_partitions`` decides over this dict."""
     rows = read_state(spark, out_dir).filter(F.col("status") == "done").collect()
     out: dict[str, dict] = {}
     for r in rows:

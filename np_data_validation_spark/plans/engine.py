@@ -250,6 +250,7 @@ def run_validation(
 
     Resume gating: a partition is skipped only if its recorded input
     fingerprint AND code_version both match (see plans.checkpoint). The
+    gate reads ``_validation_state`` once, in either mode. The
     default fingerprint is metadata-cheap (count + n_tok sum + doc_id
     hash-sum) and does NOT see content-only token corruption in an
     already-validated partition; ``content_aware=True`` folds the engine's
@@ -283,13 +284,15 @@ def run_validation(
     all_parts = sorted(fps)
     done: set[str] = set()
     if resume:
+        # the gate's one state read; done_partitions decides over its result
+        lineages = CP.recorded_lineage(spark, out_dir)
+        current = fps
         if content_aware:
             # Only partitions with a PLAUSIBLE done checkpoint (matching
             # code_version, content-shaped recorded fingerprint whose cheap
             # prefix matches the current cheap fingerprint) pay the payload
             # re-hash; every other partition re-validates, and its content
             # fingerprint falls out of the validation pass itself.
-            lineages = CP.recorded_lineage(spark, out_dir)
             cand = [
                 p
                 for p, lin in lineages.items()
@@ -298,12 +301,8 @@ def run_validation(
                 and str(lin.get("input_fingerprint", "")).count(":") == 3
                 and str(lin["input_fingerprint"]).rsplit(":", 1)[0] == fps[p]
             ]
-            gate_fps = CP.content_fingerprints(snapshot, cand) if cand else {}
-            done = CP.done_partitions(
-                spark, out_dir, gate_fps, code_version=CODE_VERSION
-            )
-        else:
-            done = CP.done_partitions(spark, out_dir, fps, code_version=CODE_VERSION)
+            current = CP.content_fingerprints(snapshot, cand) if cand else {}
+        done = CP.done_partitions(lineages, current, CODE_VERSION)
     pending = [p for p in all_parts if p not in done]
 
     result = RunResult(run_id="", validated_partitions=[], skipped_partitions=sorted(done))

@@ -44,24 +44,6 @@ MANIFEST = T.StructType(
     ]
 )
 
-#: One row per (snapshot row x manifest hit) with the classified verdict —
-#: the reference's report() lines (/root/reference/data_validation.py:1403-1447)
-#: as a table.
-VERDICT_PAIRS = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("source", T.StringType(), False),
-        T.StructField("n_tok", T.IntegerType(), True),
-        T.StructField("tok_hash", T.LongType(), True),
-        T.StructField("m_doc_id", T.StringType(), True),
-        T.StructField("m_source", T.StringType(), True),
-        T.StructField("m_n_tok", T.IntegerType(), True),
-        T.StructField("m_tok_hash", T.LongType(), True),
-        T.StructField("verdict_code", T.IntegerType(), False),
-        T.StructField("verdict", T.StringType(), False),
-    ]
-)
-
 #: Violation rows (the actionable output; the reference reports + optionally
 #: deletes — we only ever append to a results table, never mutate input).
 VIOLATIONS = T.StructType(

@@ -22,6 +22,26 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 10_000
 
 
+def default_driver_memory(meminfo: str | None) -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEM`` is unset: a quarter
+    of ``MemTotal`` in ``meminfo`` (``/proc/meminfo`` text), clamped to
+    1-8 GiB, so no default asks for more than the host has. Without a
+    ``MemTotal`` line (no ``/proc``), 8g."""
+    for line in (meminfo or "").splitlines():
+        if line.startswith("MemTotal:"):
+            kb = int(line.split()[1])
+            return f"{max(1024, min(8192, kb // 4 // 1024))}m"
+    return "8g"
+
+
+def _read_meminfo() -> str | None:
+    try:
+        with open("/proc/meminfo") as f:
+            return f.read()
+    except OSError:
+        return None
+
+
 def get_spark(
     app_name: str = "np_data_validation_spark",
     cpus: int | None = None,
@@ -73,7 +93,11 @@ def get_spark(
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM")
+            or default_driver_memory(_read_meminfo()),
+        )
     )
     # Shuffle/spill scratch goes to RAM only when the caller opts in: a
     # tmpfs default spends host memory that the executors and other

@@ -45,8 +45,6 @@ FAULT_WEIGHTS = {
                                  # identity column through the probe anti-join)
 }
 
-CASES = ["clean"] + list(FAULT_WEIGHTS)
-
 
 def generate(
     n_rows: int = 4000,

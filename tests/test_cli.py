@@ -112,41 +112,117 @@ def test_spark_submit_py_files_end_to_end(synth_dataset, tmp_path):
     )
 
 
+class _Built(Exception):
+    pass
+
+
+class _FakeBuilder:
+    """Records the session builder's conf and stops at getOrCreate."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, _name):
+        return self
+
+    def master(self, _master):
+        return self
+
+    def config(self, k, v):
+        self.conf[k] = v
+        return self
+
+    def getOrCreate(self):
+        raise _Built(self.conf)
+
+
+def _built_conf(monkeypatch) -> dict:
+    """The conf ``get_spark`` hands the session builder."""
+    from np_data_validation_spark import session
+
+    monkeypatch.setattr(session.SparkSession, "builder", _FakeBuilder())
+    try:
+        session.get_spark(cpus=1)
+    except _Built as b:
+        return b.args[0]
+    raise AssertionError("getOrCreate was not reached")
+
+
 def test_spark_local_dir_is_opt_in(monkeypatch):
     """Shuffle scratch goes to RAM only on request: with NPDV_LOCAL_DIR
     unset the builder never points spark.local.dir at /dev/shm; set, it
     uses exactly that directory."""
+    monkeypatch.delenv("NPDV_LOCAL_DIR", raising=False)
+    assert "spark.local.dir" not in _built_conf(monkeypatch)
+    monkeypatch.setenv("NPDV_LOCAL_DIR", "/scratch/npdv")
+    assert _built_conf(monkeypatch)["spark.local.dir"] == "/scratch/npdv"
+
+
+def _meminfo(total_kb: int) -> str:
+    return (
+        f"MemTotal:       {total_kb} kB\n"
+        "MemFree:         1048576 kB\n"
+        "MemAvailable:    2097152 kB\n"
+    )
+
+
+def test_driver_memory_sized_to_host(monkeypatch):
+    """Unset SPARK_DRIVER_MEM, the driver asks for a quarter of MemTotal,
+    clamped to 1-8 GiB; set, it wins."""
     from np_data_validation_spark import session
 
-    class Built(Exception):
-        pass
+    gib = 1024 * 1024  # kB
+    assert session.default_driver_memory(_meminfo(16 * gib)) == "4096m"
+    assert session.default_driver_memory(_meminfo(15 * gib + 712 * 1024)) == "4018m"
+    assert session.default_driver_memory(_meminfo(2 * gib)) == "1024m"  # floor
+    assert session.default_driver_memory(_meminfo(256 * gib)) == "8192m"  # cap
+    assert session.default_driver_memory("MemFree: 1 kB\n") == "8g"  # no MemTotal
+    assert session.default_driver_memory(None) == "8g"  # no /proc
 
-    class FakeBuilder:
-        def __init__(self):
-            self.conf = {}
+    monkeypatch.setattr(session, "_read_meminfo", lambda: _meminfo(6 * gib))
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    assert _built_conf(monkeypatch)["spark.driver.memory"] == "1536m"
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "3g")
+    assert _built_conf(monkeypatch)["spark.driver.memory"] == "3g"
 
-        def appName(self, _name):
-            return self
 
-        def master(self, _master):
-            return self
+def test_cli_truncated_parquet_fails_without_commit(spark, tmp_path):
+    """A snapshot partition holding a file that is not parquet (a truncated
+    write) makes the CLI raise, not exit 0, and that partition gets no
+    ``done`` state row, so a later run validates it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
 
-        def config(self, k, v):
-            self.conf[k] = v
-            return self
+    from np_data_validation_spark.__main__ import main as cli_main
+    from np_data_validation_spark.plans import checkpoint as CP
 
-        def getOrCreate(self):
-            raise Built(self.conf)
+    snap = tmp_path / "sequences"
+    for src, ids in (("good", ["a", "b"]), ("bad", ["c"])):
+        d = snap / f"source={src}"
+        d.mkdir(parents=True)
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array(ids, pa.string()),
+                "tokens": pa.array([[1, 2, 3]] * len(ids), pa.list_(pa.int32())),
+                "n_tok": pa.array([3] * len(ids), pa.int32()),
+            }),
+            str(d / "part-00000.parquet"),
+        )
+    (snap / "source=bad" / "part-00001.parquet").write_bytes(b"PAR1 truncated")
+    man = str(tmp_path / "manifest")
+    spark.createDataFrame(
+        [("a", 3, 1, "good"), ("c", 3, 2, "bad")],
+        "doc_id string, n_tok int, tok_hash long, source string",
+    ).write.parquet(man)
+    out = str(tmp_path / "out")
 
-    def built_conf():
-        monkeypatch.setattr(session.SparkSession, "builder", FakeBuilder())
-        try:
-            session.get_spark(cpus=1)
-        except Built as b:
-            return b.args[0]
-        raise AssertionError("getOrCreate was not reached")
-
-    monkeypatch.delenv("NPDV_LOCAL_DIR", raising=False)
-    assert "spark.local.dir" not in built_conf()
-    monkeypatch.setenv("NPDV_LOCAL_DIR", "/scratch/npdv")
-    assert built_conf()["spark.local.dir"] == "/scratch/npdv"
+    with pytest.raises(Exception) as ei:
+        cli_main(["--snapshot", str(snap), "--manifest", man, "--out", out])
+    assert "part-00001.parquet" in str(ei.value)  # the read names the file
+    done = {
+        r["partition"]
+        for r in CP.read_state(spark, out).collect()
+        if r["status"] == "done"
+    }
+    assert "bad" not in done

@@ -219,6 +219,30 @@ def test_content_aware_first_run_has_no_fingerprint_prescan(
     assert sorted(r2.skipped_partitions) == sorted(r1.validated_partitions)
 
 
+def test_content_aware_resume_reads_state_once(
+    spark, synth_dataset, tmp_path, monkeypatch
+):
+    """The resume gate reads ``_validation_state`` once: the lineage it
+    decodes serves both the content re-hash candidates and the done set."""
+    root, _ = synth_dataset
+    snap_p = os.path.join(root, "sequences")
+    man_p = os.path.join(root, "manifest")
+    out = str(tmp_path / "out")
+    r1 = E.run_validation(spark, snap_p, man_p, out, content_aware=True)
+
+    reads = []
+    orig = CP.read_state
+
+    def counted(spark_, out_dir):
+        reads.append(out_dir)
+        return orig(spark_, out_dir)
+
+    monkeypatch.setattr(CP, "read_state", counted)
+    r2 = E.run_validation(spark, snap_p, man_p, out, content_aware=True)
+    assert reads == [out]
+    assert sorted(r2.skipped_partitions) == sorted(r1.validated_partitions)
+
+
 def test_mode_switch_revalidates(spark, synth_dataset, tmp_path):
     """Cheap-mode checkpoints must not satisfy a content-aware resume (and
     vice versa): the two fingerprint shapes are incompatible by design."""

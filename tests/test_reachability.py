@@ -3,10 +3,11 @@
 Walks the static ``import`` graph (``ast``, imports inside functions
 included) from the engine's entrypoints — the CLI, ``__spark_entry__.py``,
 ``bench.py`` and the ``perfbench/`` validation benchmark — and asserts
-that no module under ``np_data_validation_spark/`` is left unreached. A
-module only its own tests import fails here: wire it into an entrypoint
-or delete it with its tests. perfbench's sibling imports are not followed,
-so each of its files that imports the package is a root.
+that no module under ``np_data_validation_spark/`` is left unreached.
+There is no allowlist: a module only its own tests import fails here, so
+wire it into an entrypoint or delete it with its tests. perfbench's
+sibling imports are not followed, so each of its files that imports the
+package is a root.
 """
 
 from __future__ import annotations
@@ -26,12 +27,6 @@ ROOTS = [
     "perfbench/inputs.py",
     "perfbench/spans.py",
 ]
-
-ALLOWED_UNREACHED = {
-    # ingest readers, kept until the CLI's ingest surface is decided
-    f"{PKG}.sources",
-}
-
 
 def _package_modules() -> dict[str, str]:
     """dotted module name -> file path, for every module in the package."""
@@ -82,12 +77,8 @@ def _reached() -> set[str]:
 
 
 def test_every_package_module_is_reached_from_an_entrypoint():
-    mods = set(_package_modules())
-    unreached = mods - _reached()
-    assert unreached == ALLOWED_UNREACHED, (
-        f"unreached: {sorted(unreached - ALLOWED_UNREACHED)}; "
-        f"allowlisted but reached: {sorted(ALLOWED_UNREACHED - unreached)}"
-    )
+    unreached = set(_package_modules()) - _reached()
+    assert unreached == set(), f"unreached: {sorted(unreached)}"
 
 
 def test_perfbench_trace_hooks_resolve(monkeypatch):

@@ -1,13 +1,11 @@
 """Round-2 feature tests: action gate (J9 veto), salted rollup parity,
 code-version checkpoint invalidation, stale-violation clearing, NULL_DOC_ID
-schema check, narrowed scan fallback, JDBC reader wiring, distributed glob
-manifest, portable (SQL-twinnable) ANN buckets."""
+schema check, portable (SQL-twinnable) ANN buckets."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from np_data_validation_spark.operators import verdicts as V
@@ -163,49 +161,6 @@ def test_null_doc_id_violation(spark, tmp_path):
     schema_checks = {"N_TOK_MISMATCH", "NULL_N_TOK", "NULL_DOC_ID"}
     out = [r["violation"] for r in res.violations.collect()]
     assert [v for v in out if v in schema_checks] == ["NULL_DOC_ID"]
-
-
-# --- sources ----------------------------------------------------------------
-
-
-def test_read_sequences_corrupt_footer_raises(spark, tmp_path):
-    """A genuine scan failure must re-raise, not silently retry with
-    recursiveFileLookup (round-1 ADVICE: the old blanket except)."""
-    from np_data_validation_spark import sources
-
-    bad = tmp_path / "seq"
-    bad.mkdir()
-    (bad / "part-0.parquet").write_bytes(b"this is not parquet at all")
-    with pytest.raises(Exception) as ei:
-        sources.read_sequences(spark, str(bad)).collect()
-    assert "Conflicting directory structures" not in str(ei.value)
-
-
-def test_read_manifest_jdbc_wiring(spark):
-    from np_data_validation_spark import sources
-
-    with pytest.raises(ValueError):
-        sources.read_manifest_jdbc(
-            spark, "jdbc:postgresql://lims/db", partition_column="doc_seq"
-        )
-    # reader construction (no live DB in the sandbox: load() would need a
-    # driver; the contract here is the option wiring + derived-table wrap)
-    reader = spark.read.format("jdbc").option("url", "jdbc:postgresql://x/y")
-    assert reader is not None
-
-
-def test_glob_manifest_is_distributed(spark, tmp_path):
-    from np_data_validation_spark import sources
-
-    d = tmp_path / "tree" / "nested"
-    d.mkdir(parents=True)
-    (d / "a.parquet").write_bytes(b"xx")
-    (d / "b.txt").write_bytes(b"yyy")
-    out = sources.glob_manifest(spark, str(tmp_path / "tree"))
-    rows = out.collect()
-    assert [(r["name"], r["size"]) for r in rows] == [("a.parquet", 2)]
-    # the listing is a Spark relation (binaryFile source), not a local list
-    assert "FileScan binaryFile" in out._jdf.queryExecution().executedPlan().toString()
 
 
 # --- streaming idempotence ---------------------------------------------------
