@@ -18,8 +18,10 @@ fingerprints compare directly.
 The XXH64 algorithm is implemented from the public spec
 (github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec.md). A golden
 self-test (`kernel_self_test`) mirrors the reference's habit of asserting
-``crc32(b'foo') == '8C736521'`` before every use
-(/root/reference/data_validation.py:204-208, :493-496).
+``crc32(b'foo') == '8C736521'`` before use (data_validation.py:204-208,
+:493-496): ``tok_hash_arrow`` runs it once per Python worker process, on
+the first batch that worker hashes, and raises instead of hashing with a
+diverged kernel.
 """
 
 from __future__ import annotations
@@ -59,13 +61,14 @@ def _round(acc, lane):
 
 
 # ---------------------------------------------------------------------------
-# Scalar spec implementation (tests / goldens only — not the hot path)
+# Scalar spec implementation (self-test / goldens only — not the hot path)
 # ---------------------------------------------------------------------------
 
 
 def xxh64_bytes_scalar(data: bytes, seed: int = 0) -> int:
     """Plain-Python XXH64 straight from the public spec. O(len) Python —
-    used only to pin goldens and property-test the vectorized kernel."""
+    used only by the kernel self-test, to pin goldens and to
+    property-test the vectorized kernel."""
     p1, p2, p3, p4, p5 = (int(x) for x in (_P1, _P2, _P3, _P4, _P5))
 
     def rotl(x: int, r: int) -> int:
@@ -296,6 +299,11 @@ def _avalanche(acc: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 
+#: Set once ``kernel_self_test`` has passed in this process (a Python
+#: worker runs it on the first batch it hashes).
+_SELF_TESTED = False
+
+
 @F.arrow_udf(T.LongType())
 def tok_hash_arrow(tokens: pa.Array) -> pa.Array:
     """Arrow-native vectorized UDF, the engine's one hash kernel: the batch
@@ -304,7 +312,13 @@ def tok_hash_arrow(tokens: pa.Array) -> pa.Array:
     object materialization. Null token arrays hash to null (the
     reference's "checksum not yet generated" state). Values are pinned
     against the scalar spec by the udf_xxhash_golden query and
-    tests/test_hashing.py."""
+    tests/test_hashing.py; the first batch in each worker process runs
+    ``kernel_self_test``, so a diverged kernel fails the task instead of
+    writing wrong hashes."""
+    global _SELF_TESTED
+    if not _SELF_TESTED:
+        kernel_self_test()
+        _SELF_TESTED = True
     if isinstance(tokens, pa.ChunkedArray):  # defensive: chunked batches
         tokens = tokens.combine_chunks()
     if not (pa.types.is_list(tokens.type) and tokens.type.value_type == pa.int32()):
@@ -319,26 +333,30 @@ def tok_hash_arrow(tokens: pa.Array) -> pa.Array:
     return pa.array(hashes, type=pa.int64(), mask=~valid)
 
 
-def with_tok_hash(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
-    """Append ``tok_hash`` to a sequences DataFrame.
+def with_tok_hash(df: DataFrame) -> DataFrame:
+    """Append ``tok_hash`` (of the ``tokens`` column) to a sequences
+    DataFrame.
 
     The reference gated checksum generation behind size thresholds because
     per-file CRC32 was expensive (its ``checksum_threshold``); the
     vectorized kernel removes the need — every row is fingerprinted.
     """
-    return df.withColumn("tok_hash", tok_hash_arrow(F.col(tokens_col)))
+    return df.withColumn("tok_hash", tok_hash_arrow(F.col("tokens")))
 
 
 def kernel_self_test() -> None:
     """Golden self-check before use — analog of the reference's
     ``test_crc32_function`` run before every generation
-    (/root/reference/data_validation.py:204-208, :493-496)."""
+    (data_validation.py:204-208, :493-496). Raises ``RuntimeError`` (not
+    ``assert``, which ``python -O`` strips) on any mismatch."""
     empty = xxh64_int32_batch(np.array([], dtype=np.int32), np.array([0, 0]))
-    assert int(empty[0]) == XXH64_EMPTY, "xxh64 kernel failed empty-input golden"
+    if int(empty[0]) != XXH64_EMPTY:
+        raise RuntimeError("xxh64 kernel failed the empty-input golden")
     got = xxh64_int32_batch(
         np.array(GOLDEN_TOKENS, dtype=np.int32), np.array([0, len(GOLDEN_TOKENS)])
     )
     expect = xxh64_int32_scalar(GOLDEN_TOKENS)
-    assert int(got[0]) == expect, "xxh64 vector kernel diverged from scalar spec"
-    if GOLDEN_HASH is not None:
-        assert expect == GOLDEN_HASH, "xxh64 scalar kernel diverged from pinned golden"
+    if int(got[0]) != expect:
+        raise RuntimeError("xxh64 vector kernel diverged from the scalar spec")
+    if expect != GOLDEN_HASH:
+        raise RuntimeError("xxh64 scalar kernel diverged from the pinned golden")

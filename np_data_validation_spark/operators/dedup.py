@@ -2,10 +2,10 @@
 
 Five families, all shuffle-conscious:
 
-* exact          — content-hash groupBy (the reference's dedup-on-insert
-                   doctrine "hash + size identify data regardless of path",
-                   /root/reference/data_validation.py:5, :728-734, applied
-                   to documents)
+* exact          — content-fingerprint pre-pass in ``dedup_corpus`` (the
+                   reference's dedup-on-insert doctrine "hash + size
+                   identify data regardless of path", data_validation.py:5,
+                   :728-734, applied to documents)
 * MinHash + LSH  — shingle -> K minhashes -> banded signatures -> bucket
                    self-join -> candidate pairs (optionally Jaccard-verified)
 * SimHash        — 32-bit sign-sum fingerprint (row-local, no shuffle)
@@ -77,23 +77,6 @@ def ensure_cpu_splits(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df
-
-
-# ---------------------------------------------------------------------------
-# exact dedup
-# ---------------------------------------------------------------------------
-
-
-def exact_duplicates(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Groups of documents with identical normalized content. One
-    hash-groupBy (map-side combined); returns (fp, n_docs, doc_ids)."""
-    fp = portable_hash60(normalize_text(text_col))
-    return (
-        docs.select(F.col("doc_id"), fp.alias("fp"))
-        .groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 # ---------------------------------------------------------------------------

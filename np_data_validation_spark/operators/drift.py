@@ -1,152 +1,41 @@
-"""Distribution-drift detection: chi-square + KS, merged treewise.
+"""Distribution-drift statistics: chi-square + KS, merged treewise.
 
 Strategy (SURVEY.md §7.1 step 5, hard part 3): exact KS needs a global
-sort — a non-starter at 10^12 rows. Both tests therefore run on *merged
-fixed-width histograms*: partial per-partition counts (map-side combined)
-are summed into k-bucket tables (k is tiny), collected to the driver, and
-the final scalar statistic + p-value is numpy math on k numbers. The KS
+sort — a non-starter at 10^12 rows. Both statistics therefore run on
+*merged fixed-width histograms* (a ``bucket`` and a ``cnt`` column, e.g.
+stats.n_tok_histogram): partial per-partition counts (map-side
+combined) are summed into k-bucket tables (k is tiny), aligned by a join
+and reduced to one scalar, all in-plan — no driver collect. The KS
 statistic computed from a histogram ECDF under-estimates the true D by at
-most the largest single-bucket probability mass — documented approximation,
-tighten by shrinking bucket_width.
-
-The chi-square p-value uses the regularized upper incomplete gamma
-Q(k/2, x/2) computed with the standard series / continued-fraction split
-(Abramowitz & Stegun 6.5; same approach as Numerical Recipes' gammq) — no
-scipy dependency.
+most the largest single-bucket probability mass — documented
+approximation, tighten by shrinking bucket_width. The driver's
+``drift_chi2_statistic`` and ``drift_ks_statistic`` queries check both
+against DuckDB.
 """
 
 from __future__ import annotations
 
-import math
-from dataclasses import dataclass
-
-import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-@dataclass
-class DriftResult:
-    statistic: float
-    p_value: float
-    dof: int
-    test: str
-
-    @property
-    def drifted(self) -> bool:
-        return self.p_value < 0.01
-
-
-# --------------------------------------------------------------------------
-# p-value math (driver-side, k numbers)
-# --------------------------------------------------------------------------
-
-
-def _gammainc_upper_reg(a: float, x: float) -> float:
-    """Regularized upper incomplete gamma Q(a, x), a > 0, x >= 0."""
-    if x <= 0.0:
-        return 1.0
-    if x < a + 1.0:
-        # lower series: P(a,x), then Q = 1 - P
-        term = 1.0 / a
-        total = term
-        n = a
-        for _ in range(500):
-            n += 1.0
-            term *= x / n
-            total += term
-            if abs(term) < abs(total) * 1e-15:
-                break
-        logp = math.log(total) + a * math.log(x) - x - math.lgamma(a)
-        return max(0.0, min(1.0, 1.0 - math.exp(logp)))
-    # continued fraction for Q(a,x) (Lentz's method)
-    tiny = 1e-300
-    b = x + 1.0 - a
-    c = 1.0 / tiny
-    d = 1.0 / b
-    h = d
-    for i in range(1, 500):
-        an = -i * (i - a)
-        b += 2.0
-        d = an * d + b
-        d = tiny if abs(d) < tiny else d
-        c = b + an / c
-        c = tiny if abs(c) < tiny else c
-        d = 1.0 / d
-        delta = d * c
-        h *= delta
-        if abs(delta - 1.0) < 1e-15:
-            break
-    logq = math.log(h) + a * math.log(x) - x - math.lgamma(a)
-    return max(0.0, min(1.0, math.exp(logq)))
-
-
-def chi2_sf(x: float, dof: int) -> float:
-    """Survival function of the chi-square distribution."""
-    if dof <= 0:
-        return 1.0
-    return _gammainc_upper_reg(dof / 2.0, x / 2.0)
-
-
-def ks_two_sample_alpha(d: float, n: int, m: int) -> float:
-    """Asymptotic two-sample KS p-value (Kolmogorov distribution)."""
-    if n == 0 or m == 0:
-        return 1.0
-    en = math.sqrt(n * m / (n + m))
-    lam = (en + 0.12 + 0.11 / en) * d
-    if lam < 1e-3:  # series diverges numerically as d -> 0; limit is 1
-        return 1.0
-    s = 0.0
-    for j in range(1, 101):
-        term = 2.0 * (-1) ** (j - 1) * math.exp(-2.0 * j * j * lam * lam)
-        s += term
-        if abs(term) < 1e-12:
-            break
-    return max(0.0, min(1.0, s))
-
-
-# --------------------------------------------------------------------------
-# distributed histogram merge + driver-side finish
-# --------------------------------------------------------------------------
-
-
-def _merge_counts(hist: DataFrame, key: str) -> DataFrame:
+def _merge_counts(hist: DataFrame) -> DataFrame:
     """Sum partial counts per bucket — the final stage of the treewise
     merge (partials were map-side combined inside groupBy already)."""
-    return hist.groupBy(key).agg(F.sum("cnt").alias("cnt"))
-
-
-def _aligned_counts(
-    observed: DataFrame, expected: DataFrame, key: str
-) -> tuple[np.ndarray, np.ndarray]:
-    """Full-outer join of two k-bucket histograms -> aligned count vectors.
-    The collect is k rows (k ~ tens), not data rows."""
-    o = _merge_counts(observed, key).withColumnRenamed("cnt", "o_cnt")
-    e = _merge_counts(expected, key).withColumnRenamed("cnt", "e_cnt")
-    rows = (
-        o.join(e, key, "full_outer")
-        .select(
-            F.col(key),
-            F.coalesce("o_cnt", F.lit(0)).alias("o_cnt"),
-            F.coalesce("e_cnt", F.lit(0)).alias("e_cnt"),
-        )
-        .orderBy(key)
-        .collect()
-    )
-    obs = np.array([r["o_cnt"] for r in rows], dtype=np.float64)
-    exp = np.array([r["e_cnt"] for r in rows], dtype=np.float64)
-    return obs, exp
+    return hist.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 def chi_square_statistic_df(
-    observed: DataFrame, expected: DataFrame, key: str = "bucket"
+    observed: DataFrame, expected: DataFrame
 ) -> DataFrame:
-    """Fully-distributed chi-square statistic (no driver collect): merge
-    partial histograms, align buckets, one scalar agg. The DataFrame twin
-    of chi_square_drift for pipelines that keep everything in-plan."""
-    o = _merge_counts(observed, key).withColumnRenamed("cnt", "o_cnt")
-    e = _merge_counts(expected, key).withColumnRenamed("cnt", "e_cnt")
-    j = e.join(o, key, "left").select(
+    """Pearson chi-square of ``observed`` vs ``expected`` histograms, fully
+    distributed (no driver collect): merge partial histograms, align on the
+    expected side's buckets (counts scaled to the observed total), one
+    scalar agg. Observed mass in a bucket the expected side lacks is
+    dropped, keeping the statistic defined."""
+    o = _merge_counts(observed).withColumnRenamed("cnt", "o_cnt")
+    e = _merge_counts(expected).withColumnRenamed("cnt", "e_cnt")
+    j = e.join(o, "bucket", "left").select(
         F.coalesce("o_cnt", F.lit(0)).cast("double").alias("o_cnt"),
         F.col("e_cnt").cast("double").alias("e_cnt"),
     )
@@ -166,20 +55,18 @@ def chi_square_statistic_df(
 
 
 def ks_statistic_df(
-    observed: DataFrame, expected: DataFrame, key: str = "bucket"
+    observed: DataFrame, expected: DataFrame
 ) -> DataFrame:
     """Distributed KS statistic from histogram ECDFs (running-sum window
     over the tiny merged bucket table)."""
-    from pyspark.sql import Window
-
-    o = _merge_counts(observed, key).withColumnRenamed("cnt", "o_cnt")
-    e = _merge_counts(expected, key).withColumnRenamed("cnt", "e_cnt")
-    j = e.join(o, key, "full_outer").select(
-        F.col(key),
+    o = _merge_counts(observed).withColumnRenamed("cnt", "o_cnt")
+    e = _merge_counts(expected).withColumnRenamed("cnt", "e_cnt")
+    j = e.join(o, "bucket", "full_outer").select(
+        F.col("bucket"),
         F.coalesce("o_cnt", F.lit(0)).cast("double").alias("o_cnt"),
         F.coalesce("e_cnt", F.lit(0)).cast("double").alias("e_cnt"),
     )
-    w = Window.orderBy(key).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     totals = j.agg(F.sum("o_cnt").alias("o_tot"), F.sum("e_cnt").alias("e_tot"))
     return (
         j.withColumn("o_cum", F.sum("o_cnt").over(w))
@@ -190,124 +77,3 @@ def ks_statistic_df(
         )
         .agg(F.max("d").alias("ks"))
     )
-
-
-def chi_square_drift(
-    observed: DataFrame, expected: DataFrame, key: str = "bucket"
-) -> DriftResult:
-    """Pearson chi-square of observed vs expected histograms (counts scaled
-    to the observed total). Buckets with expected mass 0 are pooled into a
-    pseudo-bucket to keep the statistic defined."""
-    obs, exp = _aligned_counts(observed, expected, key)
-    n_obs, n_exp = obs.sum(), exp.sum()
-    if n_obs == 0 or n_exp == 0:
-        return DriftResult(0.0, 1.0, 0, "chi_square")
-    scaled = exp * (n_obs / n_exp)
-    ok = scaled > 0
-    stat = float(((obs[ok] - scaled[ok]) ** 2 / scaled[ok]).sum())
-    # observed mass landing where expected mass is zero is infinite-signal;
-    # add it as (o - 0)^2 / o_pooled to stay finite but loud.
-    novel = obs[~ok].sum()
-    if novel > 0:
-        stat += float(novel)
-    dof = max(int(ok.sum()) - 1, 1)
-    return DriftResult(stat, chi2_sf(stat, dof), dof, "chi_square")
-
-
-def ks_drift(
-    observed: DataFrame, expected: DataFrame, key: str = "bucket"
-) -> DriftResult:
-    """Two-sample KS from histogram ECDFs (approximation error bounded by
-    the largest bucket's probability mass)."""
-    obs, exp = _aligned_counts(observed, expected, key)
-    n_obs, n_exp = obs.sum(), exp.sum()
-    if n_obs == 0 or n_exp == 0:
-        return DriftResult(0.0, 1.0, 0, "ks")
-    d = float(np.abs(np.cumsum(obs) / n_obs - np.cumsum(exp) / n_exp).max())
-    return DriftResult(d, ks_two_sample_alpha(d, int(n_obs), int(n_exp)), 0, "ks")
-
-
-# --------------------------------------------------------------------------
-# population stability index
-# --------------------------------------------------------------------------
-
-#: proportion floor shared by the Spark plan, the numpy finish, and the
-#: DuckDB twin in tests — an empty bucket on either side would otherwise
-#: make ln(p_o/p_e) undefined. 1e-6 is the common industry convention; at
-#: the floor a fully novel bucket contributes ~p_o * ln(p_o/1e-6), loud
-#: but finite.
-PSI_FLOOR = 1e-6
-
-#: standard PSI decision bands (credit-scoring convention): < 0.1 stable,
-#: 0.1-0.25 moderate shift (investigate), >= 0.25 major shift (block).
-PSI_MODERATE = 0.10
-PSI_MAJOR = 0.25
-
-
-def psi_band(psi: float) -> str:
-    if psi >= PSI_MAJOR:
-        return "major"
-    if psi >= PSI_MODERATE:
-        return "moderate"
-    return "stable"
-
-
-def psi_statistic_df(
-    observed: DataFrame,
-    expected: DataFrame,
-    key: str = "bucket",
-    floor: float = PSI_FLOOR,
-) -> DataFrame:
-    """Distributed Population Stability Index over two k-bucket
-    histograms: PSI = sum over buckets of (p_o - p_e) * ln(p_o / p_e),
-    proportions floored at ``floor``. Complements chi-square (count-scale
-    sensitive) and KS (ordered ECDF) with the magnitude-of-shift measure
-    production scoring pipelines alert on; like the others it runs on
-    treewise-merged partial counts, so the full-outer bucket join and the
-    final scalar agg touch k rows, never data rows."""
-    o = _merge_counts(observed, key).withColumnRenamed("cnt", "o_cnt")
-    e = _merge_counts(expected, key).withColumnRenamed("cnt", "e_cnt")
-    j = o.join(e, key, "full_outer").select(
-        F.coalesce("o_cnt", F.lit(0)).cast("double").alias("o_cnt"),
-        F.coalesce("e_cnt", F.lit(0)).cast("double").alias("e_cnt"),
-    )
-    totals = j.agg(F.sum("o_cnt").alias("o_tot"), F.sum("e_cnt").alias("e_tot"))
-    p_o = F.greatest(F.col("o_cnt") / F.col("o_tot"), F.lit(float(floor)))
-    p_e = F.greatest(F.col("e_cnt") / F.col("e_tot"), F.lit(float(floor)))
-    # zero-count early-out (ADVICE r8 drift.py:278): psi_drift returns
-    # PSI 0.0 when either side has zero total, but the distributed form
-    # divided by the 0 (or NULL on a bucket-less join) total, yielding
-    # floor-driven or NULL psi on that edge — breaking the documented
-    # Spark/numpy parity. Emit 0.0 whenever a side is empty/NULL-total.
-    term = F.when(
-        (F.coalesce(F.col("o_tot"), F.lit(0.0)) == 0.0)
-        | (F.coalesce(F.col("e_tot"), F.lit(0.0)) == 0.0),
-        F.lit(0.0),
-    ).otherwise((p_o - p_e) * F.log(p_o / p_e))
-    return (
-        j.crossJoin(F.broadcast(totals))
-        .select(term.alias("term"))
-        .agg(F.coalesce(F.sum("term"), F.lit(0.0)).alias("psi"))
-    )
-
-
-def psi_drift(
-    observed: DataFrame,
-    expected: DataFrame,
-    key: str = "bucket",
-    floor: float = PSI_FLOOR,
-) -> DriftResult:
-    """Driver-side PSI finish on the aligned k-bucket vectors. PSI has no
-    sampling distribution / p-value; ``p_value`` carries the band decision
-    instead (0.0 for a major shift, 0.5 moderate, 1.0 stable) so
-    ``DriftResult.drifted`` fires exactly on the major band."""
-    obs, exp = _aligned_counts(observed, expected, key)
-    n_obs, n_exp = obs.sum(), exp.sum()
-    if n_obs == 0 or n_exp == 0:
-        return DriftResult(0.0, 1.0, 0, "psi")
-    p_o = np.maximum(obs / n_obs, floor)
-    p_e = np.maximum(exp / n_exp, floor)
-    psi = float(((p_o - p_e) * np.log(p_o / p_e)).sum())
-    band = psi_band(psi)
-    pseudo_p = {"major": 0.0, "moderate": 0.5, "stable": 1.0}[band]
-    return DriftResult(psi, pseudo_p, len(obs), "psi")

@@ -1,16 +1,19 @@
 """Skew handling: deterministic salting and hot-key detection.
 
 The reference has no skew handling and suffers for it: one big session is
-one long sequential loop (/root/reference/data_validation.py:1449-1455).
-Here skew is handled explicitly (BASELINE.json north_rule):
+one long sequential loop (data_validation.py:1449-1455). Here skew is
+handled explicitly (BASELINE.json north_rule):
 
 * AQE skew-join splitting is enabled session-wide (session.py).
-* ``with_salt`` adds a deterministic salt column so hot keys (a dominant
-  ``source``, a pathological duplicate ``doc_id``) spread over
-  ``buckets`` reducers.
 * ``salted_join`` implements the explode-replicate pattern for joining a
-  skewed fact side against a dimension side.
-* ``detect_hot_keys`` decides when the one-pass plan engages salting.
+  skewed fact side against a dimension side; ``with_salt`` adds its
+  deterministic salt column.
+* ``detect_hot_keys`` decides when the one-pass probe's shuffle tier
+  salts a hot manifest tok_hash (plans.onepass.probe_pairs_from).
+
+The verdict rollup needs none of this: its aggregates are algebraic, so a
+hot ``(doc_id, source)`` crosses the shuffle as one partial row per map
+task (plans.onepass.rollup_pairs).
 """
 
 from __future__ import annotations
@@ -33,37 +36,27 @@ SKEW_MIN_HOT_ROWS = 2_000_000
 
 def detect_hot_keys(
     df: DataFrame,
-    keys: tuple[str, ...] = ("doc_id", "source"),
-    probes: int = SKEW_PROBE_BUCKETS,
+    keys: tuple[str, ...],
     ratio: float = SKEW_RATIO,
     min_hot_rows: int = SKEW_MIN_HOT_ROWS,
-    n_rows: int | None = None,
 ) -> bool:
     """Scale-free hot-key probe: does some grouping key hold a pathological
     share of ``df``'s rows?
 
-    Counts rows per hash bucket (xxhash64(keys) mod ``probes``) — an upper
-    bound on the hottest key's row count with NO per-key state. An exact
-    per-key count would shuffle one partial row per distinct key per map
-    task (at 10^12 rows with ~10^12 keys, a full-size shuffle); the bucket
-    probe's shuffle is at most ``probes`` partial rows per task, and the
-    scan is narrow (key columns only). Detection is relative (hot bucket >=
-    ``ratio`` x the average bucket) so it is scale-free, gated by an
-    absolute floor (``min_hot_rows``) so small inputs never trip it.
+    Counts rows per hash bucket (xxhash64(keys) mod SKEW_PROBE_BUCKETS) —
+    an upper bound on the hottest key's row count with NO per-key state. An
+    exact per-key count would shuffle one partial row per distinct key per
+    map task (at 10^12 rows with ~10^12 keys, a full-size shuffle); the
+    bucket probe's shuffle is at most SKEW_PROBE_BUCKETS partial rows per
+    task, and the scan is narrow (key columns only). Detection is relative
+    (hot bucket >= ``ratio`` x the average bucket) so it is scale-free,
+    gated by an absolute floor (``min_hot_rows``) so small inputs never
+    trip it.
 
-    ``n_rows``: ``df``'s row count when the caller already has it (e.g. from
-    an ``Observation`` on the write that produced ``df``). Below
-    ``min_hot_rows`` the answer is False without submitting a job — exact,
-    because the hottest bucket can never hold more than ``n_rows`` rows.
-
-    This is the detector behind validate_onepass's salted rollup and
-    salted probe join — the engine's explicit-skew-handling contract (north_rule; the
-    reference's one-big-session pathology,
-    /root/reference/data_validation.py:1449-1455).
+    This is the detector behind validate_onepass's salted probe join — the
+    engine's explicit-skew-handling contract (north_rule).
     """
-    if n_rows is not None and n_rows < min_hot_rows:
-        return False
-    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(probes))
+    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(SKEW_PROBE_BUCKETS))
     row = (
         df.groupBy(bucket.alias("_bucket"))
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -90,12 +83,9 @@ def salt_expr(*cols: str | Column, buckets: int = DEFAULT_SALT_BUCKETS) -> Colum
 
 
 def with_salt(
-    df: DataFrame,
-    entropy_cols: list[str],
-    buckets: int = DEFAULT_SALT_BUCKETS,
-    col_name: str = "_salt",
+    df: DataFrame, entropy_cols: list[str], buckets: int = DEFAULT_SALT_BUCKETS
 ) -> DataFrame:
-    return df.withColumn(col_name, salt_expr(*entropy_cols, buckets=buckets))
+    return df.withColumn("_salt", salt_expr(*entropy_cols, buckets=buckets))
 
 
 def salted_join(

@@ -1,6 +1,6 @@
 """HLL sketches + histograms for per-partition statistics and drift.
 
-North-star surface: approx-distinct on doc_id (HyperLogLog) and source/n_tok
+North-star surface: approx-distinct on doc_id (HyperLogLog) and n_tok
 histograms for drift. The per-partition min/max/avg/null-rate row is
 computed by the one-pass plan from its written identities
 (plans.onepass.stats_from_identities). Reference anchor for the tally
@@ -65,8 +65,3 @@ def n_tok_histogram(
         .groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def source_histogram(snapshot: DataFrame) -> DataFrame:
-    """Row counts per source — the categorical histogram for drift."""
-    return snapshot.groupBy("source").agg(F.count(F.lit(1)).alias("cnt"))

@@ -61,10 +61,8 @@ VERDICT_NAMES = {
     VALID_COPY_RENAMED: "VALID_COPY_RENAMED",
 }
 
-#: Threshold bands, straight from the reference: >0 related, >=10
-#: "interesting hit" (:1242), [10,13] invalid-copy band
-#: (/root/reference/strategies.py:59-60), >=21 valid backup (:531-532).
-INTERESTING_MIN = CHECKSUM_COLLISION
+#: Threshold bands, straight from the reference: [10,13] invalid-copy
+#: band (strategies.py:59-60), >=21 valid backup (:531-532).
 INVALID_BAND = (CHECKSUM_COLLISION, UNSYNCED_OR_CORRUPT_DATA)
 VALID_MIN = VALID_COPY_SAME_NAME
 
@@ -124,11 +122,12 @@ def classify_expr() -> Column:
     return c.otherwise(F.lit(UNKNOWN))
 
 
-def verdict_name_expr(code_col: str = "verdict_code") -> Column:
-    """Readable verdict names via a chained CASE (stays in codegen)."""
+def verdict_name_expr() -> Column:
+    """Readable names for the ``verdict_code`` column via a chained CASE
+    (stays in codegen)."""
     c = None
     for code, name in VERDICT_NAMES.items():
-        c = (F.when if c is None else c.when)(F.col(code_col) == code, F.lit(name))
+        c = (F.when if c is None else c.when)(F.col("verdict_code") == code, F.lit(name))
     return c.otherwise(F.lit("INVALID"))
 
 

@@ -11,10 +11,10 @@ partitions are never scanned (the ``source IN (pending)`` predicate hits the
 hive-partition layout).
 
 Atomicity without Iceberg transactions (SURVEY.md §7.3 hard part 4): result
-parquet is written FIRST (dynamic partition overwrite, so a re-run of a
-failed partition replaces its output), the ``done`` state row is appended
-LAST. A crash between the two re-runs the partition; output overwrite makes
-that idempotent.
+parquet is written FIRST (dynamic partition overwrite, set per write, so
+a re-run of a failed partition replaces its output), the ``done`` state
+row is appended LAST. A crash between the two re-runs the partition;
+output overwrite makes that idempotent.
 
 Iceberg deployment shape (design note — the sandbox has no
 iceberg-spark-runtime jar and no network to fetch one, so this seam is
@@ -65,7 +65,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -124,14 +123,30 @@ def done_partitions(
     }
 
 
+def rehash_candidates(
+    lineages: dict[str, dict], fingerprints: dict[str, str], code_version: str
+) -> list[str]:
+    """Partitions a content-aware resume must re-hash: those whose recorded
+    ``done`` lineage could still hold — same code version, and a
+    content-aware recorded fingerprint (``n:s:h:c``) whose cheap prefix
+    equals the current cheap fingerprint (``n:s:h``, ``input_fingerprints``
+    default). Every other partition re-validates anyway and gets its
+    content fingerprint from the validation pass. Pure, like
+    ``done_partitions``."""
+    return [
+        p
+        for p, lin in lineages.items()
+        if p in fingerprints
+        and lin.get("code_version") == code_version
+        and str(lin.get("input_fingerprint", "")).count(":") == 3
+        and str(lin["input_fingerprint"]).rsplit(":", 1)[0] == fingerprints[p]
+    ]
+
+
 def write_state_rows(
-    spark: SparkSession,
-    out_dir: str,
-    rows: list[dict],
-    run_id: str | None = None,
-) -> str:
+    spark: SparkSession, out_dir: str, rows: list[dict], run_id: str
+) -> None:
     """Append state rows (one commit per call — the LAST step of a batch)."""
-    run_id = run_id or uuid.uuid4().hex
     df = spark.createDataFrame(
         [
             {
@@ -146,7 +161,6 @@ def write_state_rows(
         schema="partition string, status string, run_id string, metrics string, lineage string",
     ).withColumn("finished_at", F.current_timestamp())
     df.write.mode("append").parquet(state_path(out_dir))
-    return run_id
 
 
 def input_fingerprints(

@@ -288,19 +288,10 @@ def run_validation(
         lineages = CP.recorded_lineage(spark, out_dir)
         current = fps
         if content_aware:
-            # Only partitions with a PLAUSIBLE done checkpoint (matching
-            # code_version, content-shaped recorded fingerprint whose cheap
-            # prefix matches the current cheap fingerprint) pay the payload
-            # re-hash; every other partition re-validates, and its content
-            # fingerprint falls out of the validation pass itself.
-            cand = [
-                p
-                for p, lin in lineages.items()
-                if p in fps
-                and lin.get("code_version") == CODE_VERSION
-                and str(lin.get("input_fingerprint", "")).count(":") == 3
-                and str(lin["input_fingerprint"]).rsplit(":", 1)[0] == fps[p]
-            ]
+            # only partitions with a plausible done checkpoint pay the
+            # payload re-hash; the rest re-validate, and their content
+            # fingerprints fall out of the validation pass itself
+            cand = CP.rehash_candidates(lineages, fps, CODE_VERSION)
             current = CP.content_fingerprints(snapshot, cand) if cand else {}
         done = CP.done_partitions(lineages, current, CODE_VERSION)
     pending = [p for p in all_parts if p not in done]
@@ -311,7 +302,6 @@ def run_validation(
         CP.delete_dir(spark, work_root)  # a crashed run's leftovers
         return result
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     batches = (
         [pending]
         if commit_batch is None
@@ -320,9 +310,15 @@ def run_validation(
     run_id = uuid.uuid4().hex
 
     def write_results(df: DataFrame, table: str) -> None:
-        df.withColumn("_part", F.col("source")).write.mode("overwrite").partitionBy(
-            "_part"
-        ).parquet(os.path.join(out_dir, table))
+        # dynamic overwrite as a write option, not a session conf: the
+        # caller's later overwrites in this session keep their own mode
+        (
+            df.withColumn("_part", F.col("source"))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_part")
+            .parquet(os.path.join(out_dir, table))
+        )
 
     for bi, batch in enumerate(batches):
         # partition pruning: only pending sources are scanned

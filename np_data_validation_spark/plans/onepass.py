@@ -38,6 +38,7 @@ fallback :1256-1266, uniqueness dedup-on-insert :728-734.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -61,7 +62,6 @@ class OnepassResult:
     violations: DataFrame  # schema.VIOLATIONS shape
     stats: DataFrame       # per-source + global stats rows (stats_from_identities)
     n_missing: int         # subjects probed by content
-    salt_buckets_used: int | None = None  # rollup salting engaged (hot key found)
     probe_salted: bool = False  # manifest-side salting engaged on the probe join
     ids: DataFrame | None = None  # written identity table (one row per snapshot
     #                               identity + s_mult) — checkpoint fingerprints
@@ -128,42 +128,38 @@ def pairs_stage1(snapshot: DataFrame, manifest: DataFrame) -> DataFrame:
 
 
 def probe_pairs_from(
-    spark: SparkSession,
     s1: DataFrame,
     manifest: DataFrame,
-    n_miss: int | None = None,
-    manifest_hot=None,
-) -> tuple[DataFrame, int, bool]:
+    n_miss: int,
+    manifest_hot: bool | Callable[[], bool],
+) -> tuple[DataFrame, bool]:
     """Re-classify MISSING_COUNTERPART pairs by content (tok_hash equi-join
     against the manifest — the reference's scan-backups-then-checksum
-    fallback, /root/reference/data_validation.py:1256-1266). Returns
-    (probed pair rows in PAIR_COLS shape, miss count, probe_salted). ``s1``
-    should be backed by written files so the miss filter is a columnar scan.
-    ``n_miss``: pass the stage-1 observation when available (free); when
-    None the production path pays an explicit count.
+    fallback, data_validation.py:1256-1266). Returns (probed pair rows in
+    PAIR_COLS shape, probe_salted). ``s1`` should be backed by written
+    files so the miss filter is a columnar scan. ``n_miss``: the stage-1
+    miss count (validate_onepass observes it on the stage-1 write); it
+    picks the probe tier.
 
     Skew on the probe key: a mass-duplicated corpus (boilerplate content ->
     one tok_hash carried by millions of MANIFEST rows) funnels the shuffle
-    branch into one reducer. ``manifest_hot`` (bool, or a 0-arg callable for
-    a concurrently-computed detection — validate_onepass hides the narrow
-    manifest scan behind stage 1) engages a salted join with the manifest as
-    the salted fact side and the missed side replicated ``buckets``-fold:
-    the hot hash's manifest rows spread across buckets while the missed side
-    (already > PROBE_BROADCAST_MAX to be here, so bounded) replicates. When
-    None, the shuffle branch detects inline (operators.skew.detect_hot_keys
-    — scale-free bucket probe). Skew on the MISSED side's tok_hash is the
-    mirror case; salting it would explode the manifest buckets-fold
-    (manifest-wide blowup), so AQE skew-join splitting — enabled
-    session-wide (session.py) — is the designated handler there: the
-    un-hinted inner join lets AQE split the hot missed partition and
-    replicate the matching manifest rows."""
+    branch into one reducer. ``manifest_hot`` (bool, or a 0-arg callable
+    that is only called when the shuffle branch runs — validate_onepass
+    passes operators.skew.detect_hot_keys over the manifest's tok_hash)
+    engages a salted join with the manifest as the salted fact side and the
+    missed side replicated ``buckets``-fold: the hot hash's manifest rows
+    spread across buckets while the missed side (already >
+    PROBE_BROADCAST_MAX to be here, so bounded) replicates. Skew on the
+    MISSED side's tok_hash is the mirror case; salting it would explode the
+    manifest buckets-fold (manifest-wide blowup), so AQE skew-join
+    splitting — enabled session-wide (session.py) — is the designated
+    handler there: the un-hinted inner join lets AQE split the hot missed
+    partition and replicate the matching manifest rows."""
     from np_data_validation_spark.operators import skew as SK
 
     missed = s1.filter(F.col("verdict_code") == V.MISSING_COUNTERPART).drop(
         "m_doc_id", "m_source", "m_n_tok", "m_tok_hash", "verdict_code"
     )
-    if n_miss is None:
-        n_miss = missed.count()
     withhash = missed.filter(F.col("tok_hash").isNotNull())
     probe_salted = False
     if n_miss <= V.PROBE_BROADCAST_MAX:
@@ -222,13 +218,6 @@ def probe_pairs_from(
         m = _manifest_m(mm).filter(F.col("m_tok_hash").isNotNull())
         if callable(manifest_hot):
             manifest_hot = manifest_hot()
-        if manifest_hot is None:
-            # detect on the RAW manifest column (pre-dedup): hot-after-dedup
-            # implies hot-before; the overestimate can only engage salting
-            # spuriously (perf, never correctness)
-            manifest_hot = SK.detect_hot_keys(
-                manifest.select("tok_hash"), ("tok_hash",)
-            )
         if manifest_hot:
             m2 = m.withColumn("_pk", F.col("m_tok_hash"))
             w2 = withhash.withColumn("_pk", F.col("tok_hash"))
@@ -274,7 +263,6 @@ def probe_pairs_from(
     probed = found.select(*IDENTITY_COLS, "s_mult", "m_doc_id", "m_source", "m_n_tok", "m_tok_hash").unionByName(still)
     return (
         probed.withColumn("verdict_code", V.classify_expr()).select(*PAIR_COLS),
-        n_miss,
         probe_salted,
     )
 
@@ -289,7 +277,7 @@ def merged_pairs(s1: DataFrame, probed: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def rollup_pairs(pairs: DataFrame, salt_buckets: int | None = None) -> DataFrame:
+def rollup_pairs(pairs: DataFrame) -> DataFrame:
     """Per-subject rollup over its pair verdicts, weighted by the identity
     multiplicity (sum(s_mult) == raw pair-row count).
 
@@ -299,45 +287,22 @@ def rollup_pairs(pairs: DataFrame, salt_buckets: int | None = None) -> DataFrame
     action gate (:1329) and "any invalid copy vetoes" rule
     (reference strategies.py:135-138).
 
-    ``salt_buckets``: two-level skew-spread aggregation for a hot key (the
-    reference's one-big-session pathology, data_validation.py:1449-1455): partials on (key, salt) spread over
-    ``salt_buckets`` reducers, then an exact merge on the key (max-of-max /
-    sum-of-sum — all aggregates here are algebraic)."""
+    Every aggregate is algebraic, so a hot ``(doc_id, source)`` key (the
+    reference's one-big-session pathology, data_validation.py:1449-1455)
+    needs no salting: the partial aggregate runs below the one Exchange
+    (doc_id, source), and the key crosses the shuffle as at most one row
+    per map task."""
     code = F.col("verdict_code")
     valid = (code >= V.VALID_MIN) | (code == V.SELF)
     invalid = code.between(V.UNSYNCED_DATA, V.UNSYNCED_OR_CORRUPT_DATA)
     missing = code == V.MISSING_COUNTERPART
-    if salt_buckets:
-        from np_data_validation_spark.operators.skew import with_salt
-
-        entropy = [c for c in ("m_source", "m_n_tok", "m_tok_hash") if c in pairs.columns]
-        grouped = (
-            with_salt(pairs, entropy, salt_buckets)
-            .groupBy("doc_id", "source", "_salt")
-            .agg(
-                F.max("verdict_code").alias("_mx"),
-                F.max(valid).alias("_v"),
-                F.max(invalid).alias("_i"),
-                F.max(missing).alias("_m"),
-                F.sum("s_mult").alias("_n"),
-            )
-            .groupBy("doc_id", "source")
-            .agg(
-                F.max("_mx").alias("final_verdict_code"),
-                F.max("_v").alias("has_valid"),
-                F.max("_i").alias("has_invalid"),
-                F.max("_m").alias("is_missing"),
-                F.sum("_n").alias("n_pairs"),
-            )
-        )
-    else:
-        grouped = pairs.groupBy("doc_id", "source").agg(
-            F.max("verdict_code").alias("final_verdict_code"),
-            F.max(valid).alias("has_valid"),
-            F.max(invalid).alias("has_invalid"),
-            F.max(missing).alias("is_missing"),
-            F.sum("s_mult").alias("n_pairs"),
-        )
+    grouped = pairs.groupBy("doc_id", "source").agg(
+        F.max("verdict_code").alias("final_verdict_code"),
+        F.max(valid).alias("has_valid"),
+        F.max(invalid).alias("has_invalid"),
+        F.max(missing).alias("is_missing"),
+        F.sum("s_mult").alias("n_pairs"),
+    )
     return (
         grouped
         .withColumn(
@@ -504,7 +469,7 @@ def all_violations(merged: DataFrame, ids: DataFrame) -> DataFrame:
     )
 
 
-def stats_from_identities(ids: DataFrame, group_col: str = "source") -> DataFrame:
+def stats_from_identities(ids: DataFrame) -> DataFrame:
     """One stats row per partition PLUS a global row, in one pass via
     rollup() (grouping sets; the global row has source = NULL and
     is_global = true). Multiplicity-weighted so the numbers equal a
@@ -512,7 +477,7 @@ def stats_from_identities(ids: DataFrame, group_col: str = "source") -> DataFram
     duplicate-insensitive)."""
     mult = F.col("s_mult")
     ntok_notnull = F.when(F.col("n_tok").isNotNull(), mult).otherwise(F.lit(0))
-    return ids.rollup(group_col).agg(
+    return ids.rollup("source").agg(
         F.sum(mult).alias("n_rows"),
         F.min("n_tok").alias("n_tok_min"),
         F.max("n_tok").alias("n_tok_max"),
@@ -529,7 +494,7 @@ def stats_from_identities(ids: DataFrame, group_col: str = "source") -> DataFram
             / F.sum(mult)
         ).cast("double").alias("tokens_null_rate"),
         F.approx_count_distinct("doc_id", 0.02).alias("doc_id_approx_distinct"),
-        (F.grouping(group_col) == 1).alias("is_global"),
+        (F.grouping("source") == 1).alias("is_global"),
     )
 
 
@@ -549,14 +514,8 @@ def validate_onepass(
     slim pair table; probe, rollup, violations and stats all derive from
     written files. Returns live DataFrames backed by ``work_dir``.
 
-    Rollup skew: the written pair table is probed for a hot (doc_id,
-    source) key (operators.skew.detect_hot_keys — a bucket-count scan that
-    runs CONCURRENTLY with the identity/probe jobs, so its latency hides
-    behind them; a table with fewer rows than the detector's absolute floor
-    is answered from its observed row count without a job), and the
-    two-level salted rollup engages only when one is
-    found — skew handled explicitly per the north_rule, zero plan change on
-    well-distributed input."""
+    Skew: the probe's shuffle tier salts a hot manifest tok_hash
+    (probe_pairs_from); the rollup needs no skew branch (rollup_pairs)."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import Observation
@@ -571,71 +530,41 @@ def validate_onepass(
         df.write.mode("overwrite").parquet(path)
         return spark.read.schema(df.schema).parquet(path)
 
-    pool = ThreadPoolExecutor(max_workers=4)
-    try:
-        # Probe-key skew detection (manifest side of the tok_hash content
-        # probe), LAZY since r9: its result is consumed only if the probe
-        # takes the shuffle branch (miss set too big to broadcast). The r8
-        # form submitted it eagerly to hide its latency behind stage 1 —
-        # but on the common broadcast-probe path the result is never read,
-        # and the concurrent narrow manifest scan (~1-2 s of cluster CPU)
-        # competes with stage 1 for the same cores (guide §1.2: don't
-        # compute things you throw away). The rare shuffle-branch probe
-        # now pays the detection latency serially instead.
-        mhot_f = lambda: SK.detect_hot_keys(  # noqa: E731
-            manifest.select("tok_hash"), ("tok_hash",)
-        )
-        # the miss and row counts ride the stage-1 write as an observation
-        # (no extra job); the row count lets hot-key detection skip inputs
-        # too small to ever be hot
-        obs = Observation("onepass_stage1")
-        s1_obs = pairs_stage1(snapshot, manifest).observe(
-            obs,
-            F.sum(
-                F.when(F.col("verdict_code") == V.MISSING_COUNTERPART, 1).otherwise(0)
-            ).alias("n_missing"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        s1 = write_read(s1_obs, "pairs_stage1")
-        n_miss = int(obs.get["n_missing"] or 0)
-        n_s1 = obs.get["n_rows"]
-        probed, n_miss, probe_salted = probe_pairs_from(
-            spark, s1, manifest, n_miss=n_miss, manifest_hot=mhot_f
-        )
-        # identities (uniqueness/schema/stats input) and the probe table are
-        # independent given the written s1 — submit both writes concurrently
-        # (Spark schedules concurrent jobs from separate threads), hiding one
-        # job's latency behind the other's.
-        pobs = Observation("onepass_probe")
+    # Probe-key skew detection (manifest side of the tok_hash content
+    # probe) is LAZY: its result is consumed only if the probe takes the
+    # shuffle branch (miss set too big to broadcast), so the common
+    # broadcast-probe path never submits the narrow manifest scan.
+    mhot_f = lambda: SK.detect_hot_keys(  # noqa: E731
+        manifest.select("tok_hash"), ("tok_hash",)
+    )
+    # the miss count rides the stage-1 write as an observation (no extra job)
+    obs = Observation("onepass_stage1")
+    s1_obs = pairs_stage1(snapshot, manifest).observe(
+        obs,
+        F.sum(
+            F.when(F.col("verdict_code") == V.MISSING_COUNTERPART, 1).otherwise(0)
+        ).alias("n_missing"),
+    )
+    s1 = write_read(s1_obs, "pairs_stage1")
+    n_miss = int(obs.get["n_missing"] or 0)
+    probed, probe_salted = probe_pairs_from(
+        s1, manifest, n_miss=n_miss, manifest_hot=mhot_f
+    )
+    # identities (uniqueness/schema/stats input) and the probe table are
+    # independent given the written s1 — submit both writes concurrently
+    # (Spark schedules concurrent jobs from separate threads), hiding one
+    # job's latency behind the other's.
+    with ThreadPoolExecutor(max_workers=2) as pool:
         ids_f = pool.submit(write_read, identity_rows(s1), "identities")
-        probe_f = pool.submit(
-            write_read, probed.observe(pobs, F.count(F.lit(1)).alias("n_rows")),
-            "pairs_probe",
-        )
-        skew_f = pool.submit(SK.detect_hot_keys, s1, ("doc_id", "source"), n_rows=n_s1)
-        # The rollup aggregates the MERGED table (stage-1 hits + probe
-        # output), but stage-1 detection can't see a hot key CREATED by
-        # probe fan-out (one missed identity content-matching many
-        # manifest rows). Chain a second detection over the written
-        # probe table — tiny relative to s1, so the extra job is cheap.
-        probe_skew_f = pool.submit(
-            lambda: SK.detect_hot_keys(
-                probe_f.result(), ("doc_id", "source"), n_rows=pobs.get["n_rows"]
-            )
-        )
+        probe_f = pool.submit(write_read, probed, "pairs_probe")
         ids = ids_f.result()
         merged = merged_pairs(s1, probe_f.result())
-        hot = skew_f.result() or probe_skew_f.result()
-        salt_buckets = SK.DEFAULT_SALT_BUCKETS if hot else None
-    finally:
-        pool.shutdown(wait=True)
-    rolled = write_read(rollup_pairs(merged, salt_buckets=salt_buckets), "rolled")
+    rolled = write_read(rollup_pairs(merged), "rolled")
     return OnepassResult(
         rolled=rolled.select(*ROLLED_PUBLIC_COLS),
         violations=all_violations(merged, ids),
         stats=stats_from_identities(ids),
         n_missing=n_miss,
-        salt_buckets_used=salt_buckets,
         probe_salted=probe_salted,
         ids=ids,
     )

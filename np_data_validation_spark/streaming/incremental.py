@@ -51,13 +51,13 @@ def validate_stream(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         work = os.path.join(out_dir, "_work", f"batch={batch_id}")
         res = validate_onepass(spark, batch_df, manifest, work)
         for df, name in ((res.rolled, "verdicts"), (res.violations, "violations")):
             (
                 df.withColumn("_batch_id", F.lit(batch_id))
                 .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("_batch_id")
                 .parquet(os.path.join(out_dir, name))
             )

@@ -51,6 +51,7 @@ def test_partial_run_resumes_pending_only(spark, synth_dataset, out_dir):
                          "code_version": E.CODE_VERSION}}
             for p in all_parts[:2]
         ],
+        run_id="killed",
     )
     r = E.run_validation(spark, snap_p, man_p, out_dir)
     assert sorted(r.validated_partitions) == all_parts[2:]
@@ -65,6 +66,7 @@ def test_changed_input_invalidates_checkpoint(spark, synth_dataset, out_dir):
         out_dir,
         [{"partition": all_parts[0], "status": "done",
           "metrics": {}, "lineage": {"input_fingerprint": "stale:0:0"}}],
+        run_id="stale",
     )
     r = E.run_validation(spark, snap_p, man_p, out_dir)
     # stale fingerprint -> partition re-validated despite 'done' status
@@ -241,6 +243,37 @@ def test_content_aware_resume_reads_state_once(
     r2 = E.run_validation(spark, snap_p, man_p, out, content_aware=True)
     assert reads == [out]
     assert sorted(r2.skipped_partitions) == sorted(r1.validated_partitions)
+
+
+def test_rehash_candidates_need_plausible_done_checkpoint():
+    """Only a partition whose content-aware recorded fingerprint has the
+    current cheap fingerprint as its prefix, under the current code
+    version, is re-hashed; a cheap-shaped or stale record is not."""
+    cheap = {"a": "3:10:7", "b": "3:10:7", "c": "3:10:7", "d": "3:10:7"}
+    lineages = {
+        "a": {"input_fingerprint": "3:10:7:99", "code_version": "v"},
+        "b": {"input_fingerprint": "3:10:7", "code_version": "v"},
+        "c": {"input_fingerprint": "4:10:7:99", "code_version": "v"},
+        "d": {"input_fingerprint": "3:10:7:99", "code_version": "old"},
+        "gone": {"input_fingerprint": "3:10:7:99", "code_version": "v"},
+    }
+    assert CP.rehash_candidates(lineages, cheap, "v") == ["a"]
+    assert CP.rehash_candidates({}, cheap, "v") == []
+
+
+def test_run_leaves_session_overwrite_mode_alone(spark, synth_dataset, out_dir):
+    """The results commit asks for dynamic partition overwrite per write,
+    so a later static overwrite in the caller's session still replaces
+    every partition."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        snap_p, man_p, _ = paths(synth_dataset)
+        E.run_validation(spark, snap_p, man_p, out_dir)
+        assert spark.conf.get(key).upper() == "STATIC"
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_mode_switch_revalidates(spark, synth_dataset, tmp_path):

@@ -19,6 +19,24 @@ def test_pinned_golden():
     H.kernel_self_test()
 
 
+def test_udf_self_test_fails_a_diverged_kernel(monkeypatch):
+    """The UDF runs the golden self-test on a worker's first batch and
+    raises (no ``assert``, which ``python -O`` strips) when it fails."""
+    import pyarrow as pa
+
+    monkeypatch.setattr(H, "_SELF_TESTED", False)
+    monkeypatch.setattr(H, "GOLDEN_HASH", H.GOLDEN_HASH ^ 1)
+    batch = pa.array([[1, 2, 3]], type=pa.list_(pa.int32()))
+    with pytest.raises(RuntimeError, match="pinned golden"):
+        H.tok_hash_arrow.func(batch)
+    assert H._SELF_TESTED is False
+    monkeypatch.setattr(H, "GOLDEN_HASH", H.GOLDEN_HASH ^ 1)
+    assert H.tok_hash_arrow.func(batch).to_pylist() == [
+        H.xxh64_int32_scalar([1, 2, 3]) - (1 << 64)
+    ]
+    assert H._SELF_TESTED is True
+
+
 def test_vector_matches_scalar_across_lengths():
     rng = np.random.default_rng(7)
     lens = list(range(0, 20)) + [31, 32, 33, 63, 64, 100, 511, 512, 1000]

@@ -151,21 +151,22 @@ def test_probe_tiers_agree(spark, frames, tmp_path):
     s1 = spark.read.parquet(s1_path)
 
     cols = onepass.PAIR_COLS
+    n_true = s1.filter(F.col("verdict_code") == V.MISSING_COUNTERPART).count()
     outs = {}
     for tier, forced in (
-        ("broadcast", None),  # true n_miss, under PROBE_BROADCAST_MAX
+        ("broadcast", n_true),  # under PROBE_BROADCAST_MAX
         ("keyed", V.PROBE_BROADCAST_MAX + 1),
         ("shuffle", V.PROBE_KEYS_BROADCAST_MAX + 1),
     ):
-        probed, _, _ = onepass.probe_pairs_from(
-            spark, s1, manifest, n_miss=forced, manifest_hot=False
+        probed, _ = onepass.probe_pairs_from(
+            s1, manifest, n_miss=forced, manifest_hot=False
         )
         outs[tier] = _sorted_rows(probed, cols)
     assert outs["broadcast"] == outs["keyed"] == outs["shuffle"]
     assert len(outs["broadcast"]) > 0
 
-    probed_keyed, _, _ = onepass.probe_pairs_from(
-        spark, s1, manifest, n_miss=V.PROBE_BROADCAST_MAX + 1, manifest_hot=False
+    probed_keyed, _ = onepass.probe_pairs_from(
+        s1, manifest, n_miss=V.PROBE_BROADCAST_MAX + 1, manifest_hot=False
     )
     plan = probed_keyed._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan

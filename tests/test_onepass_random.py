@@ -98,29 +98,9 @@ def test_onepass_equivalence_random(spark, tmp_path, duckdb_outputs, seed):
     assert got_avg == pytest.approx(want_avg, rel=1e-12)
 
 
-@pytest.mark.parametrize("seed", [737, 848])
-def test_rollup_salted_equivalence_random(spark, tmp_path, monkeypatch, seed):
-    """Forced two-level salted rollup must be bit-identical to the plain
-    rollup on adversarially dense random tables (VERDICT r4 task #7 — the
-    sweep previously ran only with default skew settings, so the salted
-    rollup branch was guarded by the labeled fixture alone). The hot-key
-    detector is patched to force salting on, then off."""
-    snap, man = _rand_tables(spark, seed)
-    monkeypatch.setattr(SK, "detect_hot_keys", lambda *a, **kw: True)
-    salted = onepass.validate_onepass(spark, snap, man, str(tmp_path / f"ws{seed}"))
-    monkeypatch.setattr(SK, "detect_hot_keys", lambda *a, **kw: False)
-    plain = onepass.validate_onepass(spark, snap, man, str(tmp_path / f"wp{seed}"))
-    assert salted.salt_buckets_used == SK.DEFAULT_SALT_BUCKETS
-    assert plain.salt_buckets_used is None
-    cols = onepass.ROLLED_PUBLIC_COLS
-    assert _key(salted.rolled, cols) == _key(plain.rolled, cols)
-    vcols = ["doc_id", "source", "violation", "detail"]
-    assert _key(salted.violations, vcols) == _key(plain.violations, vcols)
-
-
 def _mass_dup_tables(spark):
-    """A corpus that trips BOTH auto-salting branches at test scale: one
-    subject ('hot','s1') carries 81 distinct identities (hot rollup key,
+    """A corpus that trips the probe's auto-salting at test scale: one
+    subject ('hot','s1') carries 81 distinct identities (a hot rollup key,
     one of them a 40-fold collapsed duplicate), none with a manifest
     doc_id match (big miss set); the manifest carries one content value on
     200 rows (hot probe key with fan-out through the content probe)."""
@@ -144,30 +124,28 @@ def _mass_dup_tables(spark):
 
 def test_auto_salting_full_plan_mass_dup(spark, tmp_path, monkeypatch):
     """End-to-end auto engagement (VERDICT r4 task #7): on a mass-duplicate
-    corpus with test-scaled thresholds, validate_onepass must engage BOTH
-    the salted rollup and the salted probe join — and produce exactly the
-    outputs of the plan with neither engaged (broadcast probe, plain
-    rollup)."""
+    corpus with test-scaled thresholds, validate_onepass must engage the
+    salted probe join — and produce exactly the outputs of the broadcast
+    probe. The hot rollup key goes through the one rollup aggregation."""
     from np_data_validation_spark.operators import verdicts as V
 
     snap, man = _mass_dup_tables(spark)
     # reference first, before any patches: default thresholds never trip at
     # this scale, so the probe broadcasts and the rollup stays plain
     ref = onepass.validate_onepass(spark, snap, man, str(tmp_path / "ref"))
-    assert ref.probe_salted is False and ref.salt_buckets_used is None
+    assert ref.probe_salted is False
 
     orig_detect = SK.detect_hot_keys
     monkeypatch.setattr(
         SK,
         "detect_hot_keys",
-        lambda df, keys=("doc_id", "source"), **kw: orig_detect(
+        lambda df, keys, **kw: orig_detect(
             df, keys, **{"ratio": 2.0, "min_hot_rows": 40, **kw}
         ),
     )
     monkeypatch.setattr(V, "PROBE_BROADCAST_MAX", 10)  # force the shuffle probe
     res = onepass.validate_onepass(spark, snap, man, str(tmp_path / "salted"))
     assert res.probe_salted is True
-    assert res.salt_buckets_used == SK.DEFAULT_SALT_BUCKETS
     assert res.n_missing == 81  # 80 singleton identities + 1 collapsed dup
 
     cols = onepass.ROLLED_PUBLIC_COLS
@@ -189,12 +167,8 @@ def test_probe_salted_equivalence_random(spark, tmp_path, seed):
     onepass.pairs_stage1(snap, man).write.parquet(s1_path)
     s1 = spark.read.parquet(s1_path)
     forced = V.PROBE_BROADCAST_MAX + 1  # force the shuffle branch
-    salted, _, sflag = onepass.probe_pairs_from(
-        spark, s1, man, n_miss=forced, manifest_hot=True
-    )
-    plain, _, pflag = onepass.probe_pairs_from(
-        spark, s1, man, n_miss=forced, manifest_hot=False
-    )
+    salted, sflag = onepass.probe_pairs_from(s1, man, n_miss=forced, manifest_hot=True)
+    plain, pflag = onepass.probe_pairs_from(s1, man, n_miss=forced, manifest_hot=False)
     assert sflag and not pflag
     cols = onepass.PAIR_COLS
     assert _key(salted, cols) == _key(plain, cols)

@@ -43,16 +43,54 @@ def test_onepass_join_is_shuffled_hash_with_codegen(spark, seq_man):
 
 
 def test_probe_broadcasts_missed_side(spark, seq_man, tmp_path):
+    """A miss set under the byte budget broadcasts, and the broadcast tier
+    never consults the manifest hot-key detection."""
+    from np_data_validation_spark.operators import verdicts as V
     from np_data_validation_spark.plans import onepass
 
     seq, man, _ = seq_man
     s1_path = str(tmp_path / "s1")
     onepass.pairs_stage1(seq, man).write.parquet(s1_path)
     s1 = spark.read.parquet(s1_path)
-    probed, n_miss, probe_salted = onepass.probe_pairs_from(spark, s1, man)
+    n_miss = s1.filter(F.col("verdict_code") == V.MISSING_COUNTERPART).count()
+    assert 0 < n_miss <= V.PROBE_BROADCAST_MAX
+
+    def detection_must_not_run():
+        raise AssertionError("broadcast tier ran hot-key detection")
+
+    probed, probe_salted = onepass.probe_pairs_from(
+        s1, man, n_miss=n_miss, manifest_hot=detection_must_not_run
+    )
     assert probe_salted is False
-    assert n_miss > 0
     assert "BroadcastHashJoin" in _plan(probed)
+
+
+def test_rollup_partial_aggregate_below_its_only_exchange(spark, seq_man, tmp_path):
+    """A hot (doc_id, source) needs no salting: the rollup's aggregates are
+    algebraic, so a partial HashAggregate runs map-side below the plan's
+    only Exchange, hashpartitioning(doc_id, source), and a hot key crosses
+    the shuffle as at most one row per map task."""
+    from np_data_validation_spark.plans import onepass
+
+    seq, man, _ = seq_man
+    s1_path = str(tmp_path / "s1r")
+    onepass.pairs_stage1(seq, man).write.parquet(s1_path)
+    s1 = spark.read.parquet(s1_path)
+    ops = [
+        line.strip().lstrip(":+- ")
+        for line in _plan(onepass.rollup_pairs(s1)).splitlines()
+    ]
+    exchanges = [i for i, op in enumerate(ops) if op.startswith("Exchange")]
+    assert len(exchanges) == 1, ops
+    x = exchanges[0]
+    assert "hashpartitioning(doc_id" in ops[x] and "source" in ops[x], ops[x]
+    # tree strings list a parent above its child: the final aggregate sits
+    # above the Exchange, the partial one directly below it
+    aggs = [i for i, op in enumerate(ops) if op.startswith("HashAggregate")]
+    assert len(aggs) == 2, ops
+    final, partial = aggs
+    assert final < x < partial == x + 1
+    assert "partial_max" in ops[partial] and "partial_sum" in ops[partial]
 
 
 def test_probe_threshold_is_byte_derived_and_large_miss_shuffles(spark, seq_man, tmp_path):
@@ -73,8 +111,8 @@ def test_probe_threshold_is_byte_derived_and_large_miss_shuffles(spark, seq_man,
     s1 = spark.read.parquet(s1_path)
 
     def probe_plan(n_miss):
-        probed, _, _ = onepass.probe_pairs_from(
-            spark, s1, man, n_miss=n_miss, manifest_hot=False
+        probed, _ = onepass.probe_pairs_from(
+            s1, man, n_miss=n_miss, manifest_hot=False
         )
         return _plan(probed)
 

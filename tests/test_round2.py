@@ -1,4 +1,4 @@
-"""Round-2 feature tests: action gate (J9 veto), salted rollup parity,
+"""Round-2 feature tests: action gate (J9 veto),
 code-version checkpoint invalidation, stale-violation clearing, NULL_DOC_ID
 schema check, portable (SQL-twinnable) ANN buckets."""
 
@@ -57,26 +57,6 @@ def test_reclaimable_subject_must_not_be_backup(spark):
         spark, [("d1", "backup", "backup", V.VALID_COPY_SAME_NAME)]
     )
     assert V.find_reclaimable(pairs, ("backup",)).count() == 0
-
-
-# --- salted rollup parity (north_rule explicit skew handling) ---------------
-
-
-def test_salted_rollup_matches_unsalted(spark, seq_man):
-    """End-to-end on the synth hot-source dataset (src_00 is 10x the rest):
-    two-level salted aggregation must produce the identical rollup."""
-    seq, man, _labels = seq_man
-    from np_data_validation_spark.plans.onepass import pairs_stage1, rollup_pairs
-
-    pairs = pairs_stage1(seq, man)
-    cols = ["doc_id", "source", "final_verdict_code", "has_valid",
-            "has_invalid", "is_missing", "n_pairs", "row_status"]
-    plain = sorted(tuple(r[c] for c in cols) for r in rollup_pairs(pairs).collect())
-    salted = sorted(
-        tuple(r[c] for c in cols)
-        for r in rollup_pairs(pairs, salt_buckets=8).collect()
-    )
-    assert plain == salted
 
 
 # --- checkpoint gating ------------------------------------------------------

@@ -1,13 +1,11 @@
-"""ANN / cosine similarity tests."""
+"""Cosine similarity tests."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from np_data_validation_spark.operators import similarity as SIM
 
 SF_DIR = "/root/testdata/sf0.001"
-DIM = 64
 
 
 @pytest.fixture(scope="module")
@@ -37,146 +35,14 @@ def test_brute_force_topk(emb):
         assert q not in set(sub["neighbor_id"])
 
 
-def test_lsh_topk_recovers_planted_neighbors(spark, emb):
-    """Hyperplane LSH only guarantees recall for genuinely close vectors
-    (the sf embeddings are near-random: true top-1 cosine ~0.35, so exact-
-    vs-approx agreement there is meaningless). Plant noisy copies at
-    cosine ~0.99 and require LSH to return them as top-1."""
-    import pandas as pd
-
-    base = emb.filter(F.col("vec_id") < 10).toPandas()
-    rng = np.random.default_rng(3)
-    noisy = []
-    for _, r in base.iterrows():
-        v = np.array(r["embedding"], dtype=np.float32)
-        v = v + rng.standard_normal(DIM).astype(np.float32) * 0.02 * np.abs(v).mean()
-        noisy.append((int(r["vec_id"]) + 50000, v.tolist(), 0))
-    aug = emb.unionByName(
-        spark.createDataFrame(
-            pd.DataFrame(noisy, columns=["vec_id", "embedding", "label"]),
-            "vec_id long, embedding array<float>, label int",
-        )
-    )
-    queries = emb.filter(F.col("vec_id") < 10)
-    approx = SIM.lsh_topk(aug, queries, dim=DIM, k=1, bits=8).toPandas()
-    top1 = dict(zip(approx["query_id"], approx["neighbor_id"]))
-    hits = sum(1 for q in range(10) if top1.get(q) == q + 50000)
-    assert hits >= 8, f"planted-neighbor recall {hits}/10"
-    # structural: every query answered, ranks valid
-    assert set(approx["query_id"]) == set(range(10))
-    assert (approx["rank"] == 1).all()
-
-
-def test_ivf_topk_recovers_planted_neighbors(spark, emb):
-    """Same planted-neighbor gate as the LSH variant, for the IVF path:
-    noisy copies at cosine ~0.99 must come back as top-1 when the query
-    probes its 4 nearest of 16 cells. A query and its noisy copy land in
-    the same (or an adjacent) cell because cells partition by cosine —
-    the property IVF is built on."""
-    import pandas as pd
-
-    base = emb.filter(F.col("vec_id") < 10).toPandas()
-    rng = np.random.default_rng(3)
-    noisy = []
-    for _, r in base.iterrows():
-        v = np.array(r["embedding"], dtype=np.float32)
-        v = v + rng.standard_normal(DIM).astype(np.float32) * 0.02 * np.abs(v).mean()
-        noisy.append((int(r["vec_id"]) + 50000, v.tolist(), 0))
-    aug = emb.unionByName(
-        spark.createDataFrame(
-            pd.DataFrame(noisy, columns=["vec_id", "embedding", "label"]),
-            "vec_id long, embedding array<float>, label int",
-        )
-    )
-    queries = emb.filter(F.col("vec_id") < 10)
-    approx = SIM.ivf_topk(aug, queries, dim=DIM, k=1).toPandas()
-    top1 = dict(zip(approx["query_id"], approx["neighbor_id"]))
-    hits = sum(1 for q in range(10) if top1.get(q) == q + 50000)
-    assert hits >= 8, f"IVF planted-neighbor recall {hits}/10"
-    assert set(approx["query_id"]) == set(range(10))
-    assert (approx["rank"] == 1).all()
-
-
-def test_ivf_codebook_deterministic_and_small_corpus(spark, emb):
-    """The hash-sampled codebook must be bit-identical across invocations
-    (no RNG, no ordering dependence), and n_cells > corpus size must
-    degrade gracefully to one cell per row."""
-    c1 = SIM.ivf_centroids(emb, n_cells=8, lloyd_rounds=1)
-    c2 = SIM.ivf_centroids(emb, n_cells=8, lloyd_rounds=1)
-    assert c1.shape == (8, DIM)
-    assert np.array_equal(c1, c2)
-    tiny = emb.filter(F.col("vec_id") < 5)
-    cs = SIM.ivf_centroids(tiny, n_cells=16, lloyd_rounds=0)
-    assert cs.shape == (5, DIM)
-    # search still works with a degenerate codebook
-    out = SIM.ivf_topk(tiny, tiny.limit(2), dim=DIM, k=2, n_cells=16).toPandas()
-    assert len(out) == 4  # 2 queries x k=2 (4 non-self candidates each)
-
-
-def test_ivf_topk_subset_of_brute(spark, emb):
-    """Structural gate: every IVF result row must be a genuine corpus
-    neighbor with the exact cosine brute force computes for that pair
-    (candidates-only search changes WHICH rows are returned, never their
-    scores), and per-query ranks must be dense from 1."""
-    queries = emb.filter(F.col("vec_id") < 5)
-    ivf = SIM.ivf_topk(emb, queries, dim=DIM, k=3).toPandas()
-    brute = SIM.brute_force_topk(emb, queries, k=500).toPandas()
-    truth = {
-        (r["query_id"], r["neighbor_id"]): r["cosine"]
-        for _, r in brute.iterrows()
-    }
-    assert len(ivf) == 15
-    for _, r in ivf.iterrows():
-        key = (r["query_id"], r["neighbor_id"])
-        assert key in truth
-        assert r["cosine"] == pytest.approx(truth[key], abs=1e-9)
-    for q in range(5):
-        assert sorted(ivf[ivf["query_id"] == q]["rank"]) == [1, 2, 3]
-
-
 def test_embedding_near_dups(spark, emb):
-    # plant two exact duplicates and one noisy copy
+    # plant two exact duplicates
     dup = emb.filter(F.col("vec_id").isin([0, 1])).withColumn(
         "vec_id", F.col("vec_id") + 10000
     )
     aug = emb.unionByName(dup)
-    brute = SIM.embedding_near_dups(aug, dim=DIM, threshold=0.999, method="brute").toPandas()
+    brute = SIM.embedding_near_dups(aug, threshold=0.999).toPandas()
     pairs = set(zip(brute["id_a"], brute["id_b"]))
     assert (0, 10000) in pairs and (1, 10001) in pairs
-    lsh = SIM.embedding_near_dups(aug, dim=DIM, threshold=0.999, method="lsh").toPandas()
-    lsh_pairs = set(zip(lsh["id_a"], lsh["id_b"]))
-    assert (0, 10000) in lsh_pairs and (1, 10001) in lsh_pairs
-    # lsh candidates are a subset of brute-force truth
-    assert lsh_pairs <= pairs
-
-
-def test_near_dups_lsh_recall_vs_brute(spark, emb):
-    """Recall gate for the multi-probe LSH near-dup path: plant NOISY copies
-    (cosine ~0.99, not exact — exact copies share a bucket by construction
-    and prove nothing about boundary straddling) of 40 corpus vectors and
-    require the LSH variant to recover >= 90% of the brute-force truth
-    pairs. Before the hamming-1 multi-probe, a pair split by one hyperplane
-    was silently missed (VERDICT r2 'what's wrong' #2)."""
-    import pandas as pd
-
-    base = emb.filter(F.col("vec_id") < 40).toPandas()
-    rng = np.random.default_rng(11)
-    noisy = []
-    for _, r in base.iterrows():
-        v = np.array(r["embedding"], dtype=np.float32)
-        v = v + rng.standard_normal(DIM).astype(np.float32) * 0.02 * np.abs(v).mean()
-        noisy.append((int(r["vec_id"]) + 50000, v.tolist(), 0))
-    aug = emb.unionByName(
-        spark.createDataFrame(
-            pd.DataFrame(noisy, columns=["vec_id", "embedding", "label"]),
-            "vec_id long, embedding array<float>, label int",
-        )
-    )
-    brute = SIM.embedding_near_dups(aug, dim=DIM, threshold=0.99, method="brute").toPandas()
-    truth = set(zip(brute["id_a"], brute["id_b"]))
-    assert len(truth) >= 40  # every planted pair crosses the threshold
-    lsh = SIM.embedding_near_dups(aug, dim=DIM, threshold=0.99, method="lsh").toPandas()
-    got = set(zip(lsh["id_a"], lsh["id_b"]))
-    assert got <= truth  # exact re-rank: no false positives
-    recall = len(got & truth) / len(truth)
-    assert recall >= 0.9, f"near-dup LSH recall {recall:.2f} ({len(got)}/{len(truth)})"
+    assert (brute["cosine"] >= 0.999).all()
+    assert (brute["id_a"] < brute["id_b"]).all()

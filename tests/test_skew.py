@@ -1,5 +1,5 @@
-"""Skew-handling helper tests: salting determinism + salted-join parity +
-auto-engagement of the salted rollup in the default one-pass plan."""
+"""Skew-handling tests: salting determinism, salted-join parity, hot-key
+detection, and the one-pass probe's salted join."""
 
 from pyspark.sql import functions as F
 
@@ -72,52 +72,6 @@ def test_detect_hot_keys(spark):
     )
 
 
-def test_detect_hot_keys_below_floor_submits_no_job(spark):
-    """A frame with fewer rows than the absolute floor can never be hot: the
-    answer comes from the given row count, without scanning the frame."""
-    import pytest
-
-    boom = spark.range(1).select(
-        F.raise_error(F.lit("scanned")).cast("string").alias("doc_id"),
-        F.lit("s").alias("source"),
-    )
-    with pytest.raises(Exception, match="scanned"):
-        skew.detect_hot_keys(boom)
-    assert skew.detect_hot_keys(boom, n_rows=10) is False
-
-
-def _test_scale_detection(monkeypatch):
-    """Scale the hot-key detector's thresholds down to test inputs."""
-    orig = skew.detect_hot_keys
-    monkeypatch.setattr(
-        skew,
-        "detect_hot_keys",
-        lambda df, keys, **kw: orig(df, keys, **{"ratio": 4.0, "min_hot_rows": 50, **kw}),
-    )
-
-
-def test_onepass_auto_salting_engages_and_matches(spark, tmp_path, monkeypatch):
-    """End-to-end: the plan detects the hot key, engages the salted rollup,
-    and produces output identical to the unsalted plan (default thresholds
-    never trip at this scale)."""
-    snap, man = _hot_dataset(spark)
-    plain = onepass.validate_onepass(spark, snap, man, str(tmp_path / "plain"))
-    assert plain.salt_buckets_used is None
-    _test_scale_detection(monkeypatch)
-    auto = onepass.validate_onepass(spark, snap, man, str(tmp_path / "auto"))
-    assert auto.salt_buckets_used == skew.DEFAULT_SALT_BUCKETS
-    cols = onepass.ROLLED_PUBLIC_COLS
-    key = lambda df: sorted(map(tuple, df.select(*cols).collect()))  # noqa: E731
-    assert key(auto.rolled) == key(plain.rolled)
-
-
-def test_onepass_auto_salting_stays_off_uniform(spark, tmp_path, monkeypatch):
-    snap, man = _hot_dataset(spark, hot_copies=0)
-    _test_scale_detection(monkeypatch)
-    res = onepass.validate_onepass(spark, snap, man, str(tmp_path / "uni"))
-    assert res.salt_buckets_used is None
-
-
 def _mass_dup_manifest(spark, n_missed=300, hot_copies=500):
     """VERDICT-r3 #3 fixture: every snapshot identity misses stage 1 (no
     doc_id counterparts), and the manifest's content-hash column is skewed —
@@ -165,26 +119,8 @@ def test_probe_manifest_salting_matches_plain(spark, tmp_path):
     onepass.pairs_stage1(snap, man).write.parquet(s1_path)
     s1 = spark.read.parquet(s1_path)
     forced = V.PROBE_BROADCAST_MAX + 1  # force the shuffle branch
-    salted, _, sflag = onepass.probe_pairs_from(
-        spark, s1, man, n_miss=forced, manifest_hot=True
-    )
-    plain, _, pflag = onepass.probe_pairs_from(
-        spark, s1, man, n_miss=forced, manifest_hot=False
-    )
+    salted, sflag = onepass.probe_pairs_from(s1, man, n_miss=forced, manifest_hot=True)
+    plain, pflag = onepass.probe_pairs_from(s1, man, n_miss=forced, manifest_hot=False)
     assert sflag and not pflag
     key = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
     assert key(salted) == key(plain)
-
-
-def test_onepass_salting_engages_on_probe_fanout(spark, tmp_path, monkeypatch):
-    """ADVICE r3: a hot rollup key CREATED by probe fan-out (one missed
-    identity content-matching many manifest rows) is invisible to stage-1
-    detection; the chained detection over the written probe table must
-    engage the salted rollup anyway."""
-    snap, man = _mass_dup_manifest(spark)
-    _test_scale_detection(monkeypatch)
-    res = onepass.validate_onepass(spark, snap, man, str(tmp_path / "pf"))
-    assert res.salt_buckets_used == skew.DEFAULT_SALT_BUCKETS
-    # the s1-only detector alone would NOT have engaged (uniform stage 1)
-    s1 = spark.read.parquet(str(tmp_path / "pf" / "pairs_stage1"))
-    assert not skew.detect_hot_keys(s1, ("doc_id", "source"), ratio=4.0, min_hot_rows=50)

@@ -61,14 +61,6 @@ def _with_dups(docs):
     return docs.unionByName(near).unionByName(exact)
 
 
-def test_exact_duplicates(docs):
-    aug = _with_dups(docs)
-    groups = DD.exact_duplicates(aug).toPandas()
-    n_exact = docs.filter(F.col("doc_id") % 50 == 0).count()
-    assert len(groups) == n_exact
-    assert (groups["n_docs"] == 2).all()
-
-
 def test_minhash_lsh_finds_near_dups(docs):
     aug = _with_dups(docs)
     cand = DD.minhash_lsh_candidates(aug).toPandas()

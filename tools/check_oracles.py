@@ -23,12 +23,12 @@ TABLES = "region nation customer supplier part orders lineitem events documents 
 #: fails if a twin goes red or a new rows-only query appears without one —
 #: so the by-design gaps can't silently widen (VERDICT r3 #7).
 NO_ORACLE_TWINS = {
-    # r8: EMPTY — every registered driver query now carries a DuckDB value
-    # oracle. The rows-only paths were unregistered in favor of their
-    # value-checked twins (the driver sweeps at most 50 entries):
-    # ann_lsh_topk -> ann_lsh_topk_portable, hll_distinct_sketch ->
-    # hll_distinct_check, udf_xxhash_tokens -> udf_xxhash_golden (the last
-    # is still bench-timed via queries.BENCH_ONLY). pytest covers all three.
+    # EMPTY — every registered driver query carries a DuckDB value oracle.
+    # The rows-only ANN and HLL variants are deleted (their registered
+    # twins are ann_lsh_topk_portable and hll_distinct_check);
+    # udf_xxhash_tokens stays unregistered, bench-timed via
+    # queries.BENCH_ONLY, and its kernel is value-checked by the
+    # registered udf_xxhash_golden.
 }
 
 
