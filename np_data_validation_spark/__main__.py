@@ -12,12 +12,13 @@ deployment is one spark-submit of this file against a cluster:
         --snapshot s3://lake/sequences --manifest s3://lake/manifest \\
         --out s3://lake/validation_out --content-aware
 
-``--master inherit`` keeps whatever master/deploy-mode spark-submit
-configured (the default builds a local[cpus] session so the same CLI works
-as a bare ``python -m np_data_validation_spark`` smoke run). All engine
-settings (AQE, Arrow batching, shuffle sizing) are applied by
-session.get_spark identically in both modes; the package auto-ships itself
-to python workers even without --py-files when run locally.
+``--master inherit`` keeps whatever master/deploy-mode and shuffle
+partition count spark-submit configured (the default builds a local[cpus]
+session with 2x cpus shuffle partitions, so the same CLI works as a bare
+``python -m np_data_validation_spark`` smoke run). The other engine
+settings (AQE, Arrow batching) are applied by session.get_spark
+identically in both modes; the package auto-ships itself to python
+workers even without --py-files when run locally.
 
 Batch mode is plans.engine.run_validation — checkpointed and resumable, so
 re-submitting the SAME command after a kill validates only pending
@@ -46,7 +47,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--master", default=None,
                     help="'inherit' under spark-submit; e.g. local[8] for bare runs")
     ap.add_argument("--cpus", type=int, default=None,
-                    help="local-mode cores (ignored with --master inherit)")
+                    help="local-mode cores; also sets the shuffle partitions "
+                         "(2x cores, at least 8). Ignored with --master inherit")
     ap.add_argument("--no-resume", action="store_true",
                     help="ignore checkpoints; re-validate every partition")
     ap.add_argument("--content-aware", action="store_true",

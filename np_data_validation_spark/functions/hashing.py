@@ -10,10 +10,10 @@ uniquely identify a token payload regardless of ``doc_id``/``source``.
 One kernel: XXH64 of the little-endian int32 byte buffer of each token
 array, computed batch-wise in numpy over Arrow batches by an Arrow-native
 UDF (``tok_hash_arrow``). The per-batch hot loop is fully vectorized across
-rows — a padded ``[rows, max_len]`` lane matrix processed stripe-by-stripe
-with row masks; there is **no per-row Python**. The manifest's
-``tok_hash`` lives in the same value space, so snapshot and manifest
-fingerprints compare directly.
+rows — rows sorted by length into blocks, each a padded ``[rows, max_len]``
+lane matrix processed stripe-by-stripe over column slices; there is **no
+per-row Python**. The manifest's ``tok_hash`` lives in the same value
+space, so snapshot and manifest fingerprints compare directly.
 
 The XXH64 algorithm is implemented from the public spec
 (github.com/Cyan4973/xxHash/blob/dev/doc/xxhash_spec.md). A golden
@@ -40,7 +40,8 @@ _P5 = np.uint64(2870177450012600261)
 _U64 = np.uint64
 _MASK64 = 0xFFFFFFFFFFFFFFFF
 
-#: Published XXH64 test vector: hash of empty input at seed 0.
+#: Published XXH64 test vector: hash of empty input at seed 0 (the engine
+#: always hashes at seed 0).
 XXH64_EMPTY = 0xEF46DB3751D8E999
 
 #: Golden values for the kernel self-test, pinned from the scalar spec
@@ -65,7 +66,7 @@ def _round(acc, lane):
 # ---------------------------------------------------------------------------
 
 
-def xxh64_bytes_scalar(data: bytes, seed: int = 0) -> int:
+def xxh64_bytes_scalar(data: bytes) -> int:
     """Plain-Python XXH64 straight from the public spec. O(len) Python —
     used only by the kernel self-test, to pin goldens and to
     property-test the vectorized kernel."""
@@ -80,10 +81,10 @@ def xxh64_bytes_scalar(data: bytes, seed: int = 0) -> int:
     n = len(data)
     i = 0
     if n >= 32:
-        a1 = (seed + p1 + p2) & _MASK64
-        a2 = (seed + p2) & _MASK64
-        a3 = seed & _MASK64
-        a4 = (seed - p1) & _MASK64
+        a1 = (p1 + p2) & _MASK64
+        a2 = p2
+        a3 = 0
+        a4 = -p1 & _MASK64
         while n - i >= 32:
             a1 = rnd(a1, int.from_bytes(data[i : i + 8], "little"))
             a2 = rnd(a2, int.from_bytes(data[i + 8 : i + 16], "little"))
@@ -94,7 +95,7 @@ def xxh64_bytes_scalar(data: bytes, seed: int = 0) -> int:
         for a in (a1, a2, a3, a4):
             acc = ((acc ^ rnd(0, a)) * p1 + p4) & _MASK64
     else:
-        acc = (seed + p5) & _MASK64
+        acc = p5
     acc = (acc + n) & _MASK64
     while n - i >= 8:
         acc = (rotl(acc ^ rnd(0, int.from_bytes(data[i : i + 8], "little")), 27) * p1 + p4) & _MASK64
@@ -113,10 +114,9 @@ def xxh64_bytes_scalar(data: bytes, seed: int = 0) -> int:
     return acc
 
 
-def xxh64_int32_scalar(tokens, seed: int = 0) -> int:
+def xxh64_int32_scalar(tokens) -> int:
     """XXH64 of a token array's little-endian int32 buffer (scalar ref)."""
-    buf = np.asarray(tokens, dtype=np.int32).tobytes()
-    return xxh64_bytes_scalar(buf, seed)
+    return xxh64_bytes_scalar(np.asarray(tokens, dtype=np.int32).tobytes())
 
 
 # ---------------------------------------------------------------------------
@@ -124,9 +124,7 @@ def xxh64_int32_scalar(tokens, seed: int = 0) -> int:
 # ---------------------------------------------------------------------------
 
 
-def xxh64_int32_batch(
-    flat: np.ndarray, offsets: np.ndarray, seed: int = 0
-) -> np.ndarray:
+def xxh64_int32_batch(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     """XXH64 of N variable-length int32 buffers, vectorized across rows.
 
     flat: concatenated int32 token values of all rows (Arrow list layout);
@@ -134,11 +132,11 @@ def xxh64_int32_batch(
     Returns uint64[N].
 
     Strategy: rows are padded into a ``[N, Lmax]`` uint64 lane matrix; the
-    32-byte-stripe loop runs ``Lmax // 8`` iterations of whole-column numpy
-    ops with per-row activity masks, so cost is O(N * Lmax / 8) vector ops —
-    no Python touches an individual row. Each token is one 4-byte XXH64
-    lane; buffer length is always a multiple of 4, so there is no 1-byte
-    tail phase.
+    32-byte-stripe loop runs ``Lmax // 8`` iterations of column numpy ops
+    over the rows still active at that stripe, so cost is O(N * Lmax / 8)
+    vector ops — no Python touches an individual row. Each token is one
+    4-byte XXH64 lane; buffer length is always a multiple of 4, so there is
+    no 1-byte tail phase.
     """
     offsets = np.asarray(offsets, dtype=np.int64)
     n = len(offsets) - 1
@@ -149,7 +147,7 @@ def xxh64_int32_batch(
     starts = offsets[:-1] - offsets[0]
     lens = np.diff(offsets)
     with np.errstate(over="ignore"):
-        return _xxh64_dispatch(flat_u, starts, lens, seed)
+        return _xxh64_dispatch(flat_u, starts, lens)
 
 
 #: Row-block size: keeps each column op's working set (~8B * block) inside
@@ -158,41 +156,35 @@ _BLOCK_ROWS = 16384
 
 
 def _xxh64_dispatch(
-    flat_u: np.ndarray, starts: np.ndarray, lens: np.ndarray, seed: int
+    flat_u: np.ndarray, starts: np.ndarray, lens: np.ndarray
 ) -> np.ndarray:
-    """Process rows in blocks of ``_BLOCK_ROWS``. When row lengths are
-    skewed (padded work would exceed ~2x the true token count), sort rows by
-    length first so each block is near-uniform, then scatter results back —
-    padded work then tracks the true token count, not ``rows x max_len``."""
+    """Process rows in blocks of ``_BLOCK_ROWS``. Whenever row lengths
+    differ, sort rows by length first and scatter results back, so every
+    block is either uniform or sorted by length and padded work tracks the
+    true token count, not ``rows x max_len``."""
     n = len(lens)
-    if n == 0:
-        return np.empty(0, dtype=np.uint64)
-    lmax = int(lens.max())
-    skewed = n > 1 and lmax > int(lens.min())
-    order = np.argsort(lens, kind="stable") if skewed else None
+    order = np.argsort(lens, kind="stable") if lens.max() > lens.min() else None
     out = np.empty(n, dtype=np.uint64)
     for lo in range(0, n, _BLOCK_ROWS):
         hi = min(lo + _BLOCK_ROWS, n)
         if order is None:
-            out[lo:hi] = _xxh64_block(flat_u, starts[lo:hi], lens[lo:hi], seed)
+            out[lo:hi] = _xxh64_block(flat_u, starts[lo:hi], lens[lo:hi])
         else:
             idx = order[lo:hi]
-            out[idx] = _xxh64_block(flat_u, starts[idx], lens[idx], seed)
+            out[idx] = _xxh64_block(flat_u, starts[idx], lens[idx])
     return out
 
 
 def _xxh64_block(
-    flat_u: np.ndarray, starts: np.ndarray, lens: np.ndarray, seed: int = 0
+    flat_u: np.ndarray, starts: np.ndarray, lens: np.ndarray
 ) -> np.ndarray:
+    """XXH64 at seed 0 of one non-empty block of rows whose lengths are
+    all equal or sorted ascending (``_xxh64_dispatch`` guarantees it)."""
     n = len(lens)
-    seed_u = _U64(seed)
-    if n == 0:
-        return np.empty(0, dtype=np.uint64)
     lmax = int(lens.max())
 
     if lmax == 0:
-        acc = np.full(n, seed_u + _P5, dtype=np.uint64)
-        return _avalanche(acc)
+        return _avalanche(np.full(n, _P5, dtype=np.uint64))
 
     uniform = bool((lens == lmax).all())
 
@@ -219,14 +211,11 @@ def _xxh64_block(
 
     nstripes = lens // 8  # 32-byte stripes = 8 tokens = 4 uint64 lanes
     max_ns = int(nstripes.max())
-    # When rows arrive sorted by length (the skew dispatch path), stripe-s
-    # activity is a suffix — use slices instead of per-row masks.
-    ns_sorted = bool((np.diff(nstripes) >= 0).all()) if n > 1 else True
 
-    a1 = np.full(n, seed_u + _P1 + _P2, dtype=np.uint64)
-    a2 = np.full(n, seed_u + _P2, dtype=np.uint64)
-    a3 = np.full(n, seed_u, dtype=np.uint64)
-    a4 = np.full(n, seed_u - _P1, dtype=np.uint64)
+    a1 = np.full(n, _P1 + _P2, dtype=np.uint64)
+    a2 = np.full(n, _P2, dtype=np.uint64)
+    a3 = np.zeros(n, dtype=np.uint64)
+    a4 = np.full(n, _U64(0) - _P1, dtype=np.uint64)
     for s in range(max_ns):
         b = 4 * s
         if uniform:
@@ -234,23 +223,19 @@ def _xxh64_block(
             a2 = _round(a2, m64[:, b + 1])
             a3 = _round(a3, m64[:, b + 2])
             a4 = _round(a4, m64[:, b + 3])
-        elif ns_sorted:
+        else:
+            # rows are sorted by length, so the rows with a stripe s are a
+            # suffix of the block
             k = int(np.searchsorted(nstripes, s, side="right"))
             a1[k:] = _round(a1[k:], m64[k:, b])
             a2[k:] = _round(a2[k:], m64[k:, b + 1])
             a3[k:] = _round(a3[k:], m64[k:, b + 2])
             a4[k:] = _round(a4[k:], m64[k:, b + 3])
-        else:
-            active = nstripes > s
-            a1 = np.where(active, _round(a1, m64[:, b]), a1)
-            a2 = np.where(active, _round(a2, m64[:, b + 1]), a2)
-            a3 = np.where(active, _round(a3, m64[:, b + 2]), a3)
-            a4 = np.where(active, _round(a4, m64[:, b + 3]), a4)
 
     merged = _rotl(a1, 1) + _rotl(a2, 7) + _rotl(a3, 12) + _rotl(a4, 18)
     for a in (a1, a2, a3, a4):
         merged = (merged ^ _round(np.uint64(0), a)) * _P1 + _P4
-    acc = np.where(nstripes > 0, merged, seed_u + _P5)
+    acc = np.where(nstripes > 0, merged, _P5)
 
     acc = acc + lens.astype(np.uint64) * _U64(4)  # total byte length
 

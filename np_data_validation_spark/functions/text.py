@@ -70,10 +70,9 @@ def ws_token_count(col: Column | str = "text") -> Column:
     return F.size(F.split(F.trim(c), "\\s+"))
 
 
-def regex_token_count(col: Column | str = "text") -> Column:
-    """BPE-ish token count via TOKEN_PATTERN."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_count(c, F.lit(TOKEN_PATTERN))
+def regex_token_count() -> Column:
+    """BPE-ish token count of the ``text`` column via TOKEN_PATTERN."""
+    return F.regexp_count(F.col("text"), F.lit(TOKEN_PATTERN))
 
 
 def punct_ratio(col: Column | str = "text") -> Column:
@@ -148,12 +147,12 @@ def word_ngrams(col: Column | str = "text", n: int = 3) -> Column:
     )
 
 
-def repetition_ratio(col: Column | str = "text", n: int = 3) -> Column:
-    """Fraction of word n-grams that repeat an earlier n-gram in the SAME
+def repetition_ratio(col: Column | str = "text") -> Column:
+    """Fraction of word trigrams that repeat an earlier trigram in the SAME
     document — the within-doc repetition signal quality filters use to
     drop degenerate or loop-generated text. Row-local expression (zero
-    shuffle); 0.0 for documents shorter than n words."""
-    grams = word_ngrams(col, n)
+    shuffle); 0.0 for documents shorter than 3 words."""
+    grams = word_ngrams(col)
     ratio = (F.size(grams) - F.size(F.array_distinct(grams))) / F.size(grams)
     return F.when(F.size(grams) > 0, ratio.cast("double")).otherwise(F.lit(0.0))
 
@@ -192,11 +191,11 @@ def pii_phone_count(col: Column | str = "text") -> Column:
     return F.regexp_count(c, F.lit(PII_PHONE_RE)).cast("long")
 
 
-def doc_fingerprint(col: Column | str = "text") -> Column:
-    """Content fingerprint of the normalized text (the reference's
-    path-independent identity doctrine, /root/reference/data_validation.py:5,
-    applied to documents)."""
-    return portable_hash60(normalize_text(col))
+def doc_fingerprint() -> Column:
+    """Content fingerprint of the normalized ``text`` column (the
+    reference's path-independent identity doctrine, its
+    data_validation.py:5, applied to documents)."""
+    return portable_hash60(normalize_text("text"))
 
 
 # ---------------------------------------------------------------------------
@@ -275,9 +274,9 @@ def word_ngrams_sql(expr: str, n: int = 3) -> str:
     )
 
 
-def repetition_ratio_sql(expr: str, n: int = 3) -> str:
+def repetition_ratio_sql(expr: str) -> str:
     """DuckDB twin of repetition_ratio."""
-    grams = word_ngrams_sql(expr, n)
+    grams = word_ngrams_sql(expr)
     return (
         f"CASE WHEN len({grams}) > 0 THEN "
         f"(len({grams}) - len(list_distinct({grams}))) * 1.0 / len({grams}) "
@@ -316,8 +315,9 @@ FUNNEL_MIN_QUALITY = 0.5
 FUNNEL_MAX_REPETITION = 0.3
 
 
-def filter_funnel(col: Column | str = "text") -> Column:
-    """First-rejection-reason label for the composed corpus filter:
+def filter_funnel() -> Column:
+    """First-rejection-reason label of the ``text`` column for the
+    composed corpus filter:
     ``'lang' | 'short' | 'long' | 'quality' | 'repetition' | 'pii' |
     'keep'``. The evaluation ORDER is part of the contract — each doc is
     charged to the first stage that rejects it, so per-stage attrition
@@ -326,7 +326,7 @@ def filter_funnel(col: Column | str = "text") -> Column:
     ones; everything is a single columnar CASE (one scan, zero shuffle —
     the downstream ``groupBy(reason)`` is the only exchange and has 7
     keys)."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col("text")
     return (
         F.when(~lang_id(c).isin(*FUNNEL_LANGS), F.lit("lang"))
         .when(ws_token_count(c) < FUNNEL_MIN_TOKENS, F.lit("short"))

@@ -84,26 +84,25 @@ def ensure_cpu_splits(df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def shingle_expr(text_col: str = "text", n: int = SHINGLE_N) -> Column:
-    """Distinct character n-gram shingles of the normalized text."""
-    t = normalize_text(text_col)
-    idx = F.sequence(F.lit(1), F.greatest(F.length(t) - (n - 1), F.lit(1)))
+def shingle_expr() -> Column:
+    """Distinct character ``SHINGLE_N``-gram shingles of the normalized
+    ``text`` column."""
+    t = normalize_text("text")
+    idx = F.sequence(F.lit(1), F.greatest(F.length(t) - (SHINGLE_N - 1), F.lit(1)))
     return F.array_distinct(
-        F.transform(idx, lambda i: F.substring(t, i, F.lit(n)))
+        F.transform(idx, lambda i: F.substring(t, i, F.lit(SHINGLE_N)))
     )
 
 
-def shingle_hashes(text_col: str = "text", n: int = SHINGLE_N) -> Column:
+def shingle_hashes() -> Column:
     """The shingle set as 60-bit hashes (primitive long array): the form
     every set operation downstream (Jaccard intersect/union) should take
     — string arrays measured ~70x slower per pair. Twin:
     shingle_hashes_sql."""
-    return F.transform(shingle_expr(text_col, n), lambda s: portable_hash60(s))
+    return F.transform(shingle_expr(), lambda s: portable_hash60(s))
 
 
-def shingle_hash_table(
-    docs: DataFrame, text_col: str = "text", n: int = SHINGLE_N
-) -> DataFrame:
+def shingle_hash_table(docs: DataFrame) -> DataFrame:
     """(doc_id, sh: array<long>, n_sh) — the hashed shingle set, computed
     ONCE. The shingle construction (normalize -> substring transform ->
     array_distinct -> per-shingle md5 hash) is the most expensive
@@ -114,19 +113,13 @@ def shingle_hash_table(
     construction per stage."""
     return (
         ensure_cpu_splits(docs)
-        .select(F.col("doc_id"), shingle_hashes(text_col, n).alias("sh"))
+        .select(F.col("doc_id"), shingle_hashes().alias("sh"))
         .withColumn("n_sh", F.size("sh"))
     )
 
 
-def minhash_signature(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = MINHASH_K,
-    n: int = SHINGLE_N,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, mh_0..mh_{k-1}) via the universal-hash family
+def minhash_signature(docs: DataFrame, shingles: DataFrame | None = None) -> DataFrame:
+    """(doc_id, mh_0..mh_{MINHASH_K-1}) via the universal-hash family
     mh_i = min over shingles of (A[i] * h(shingle) + B[i]) % P.
 
     Execution shape (r9 rewrite — guide §2.4, remove shuffles outright):
@@ -156,7 +149,7 @@ def minhash_signature(
         # per row (same device as jaccard_pairs' explode barrier).
         base = ensure_cpu_splits(docs).select(
             "doc_id",
-            F.explode(F.array(shingle_hashes(text_col, n))).alias("sh"),
+            F.explode(F.array(shingle_hashes())).alias("sh"),
         )
     mh = [
         F.array_min(
@@ -166,28 +159,20 @@ def minhash_signature(
                 % MINHASH_P,
             )
         ).alias(f"mh_{i}")
-        for i in range(k)
+        for i in range(MINHASH_K)
     ]
     return base.select("doc_id", *mh)
 
 
-def minhash_bands(
-    docs: DataFrame,
-    text_col: str = "text",
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
-    n: int = SHINGLE_N,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
+def minhash_bands(docs: DataFrame, shingles: DataFrame | None = None) -> DataFrame:
     """(doc_id, band, band_hash) — long form, one row per doc x band.
     The band-struct array is evaluated ONCE per row by the explode's
     Generate node, so each signature column's arithmetic runs exactly
     once even after projection collapse inlines it (the expensive shingle
     construction below it sits behind its own Generate barrier — see
     minhash_signature)."""
-    assert k % bands == 0
-    r = k // bands
-    sig = minhash_signature(docs, text_col, k, n, shingles=shingles)
+    r = MINHASH_K // MINHASH_BANDS
+    sig = minhash_signature(docs, shingles)
     band_structs = F.array(
         *[
             F.struct(
@@ -196,7 +181,7 @@ def minhash_bands(
                     F.concat_ws(",", *[F.col(f"mh_{b * r + j}").cast("string") for j in range(r)])
                 ).alias("band_hash"),
             )
-            for b in range(bands)
+            for b in range(MINHASH_BANDS)
         ]
     )
     return sig.select("doc_id", F.explode(band_structs).alias("bb")).select(
@@ -241,10 +226,6 @@ def _bucket_pairs(
 
 def minhash_lsh_candidates(
     docs: DataFrame,
-    text_col: str = "text",
-    k: int = MINHASH_K,
-    bands: int = MINHASH_BANDS,
-    n: int = SHINGLE_N,
     max_bucket: int | None = 1000,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -256,7 +237,7 @@ def minhash_lsh_candidates(
     checkpoint, so every band reference re-derives from ``shingles`` — an
     un-checkpointed plan there re-runs the whole shingling per reference."""
     return _bucket_pairs(
-        minhash_bands(docs, text_col, k, bands, n, shingles=shingles),
+        minhash_bands(docs, shingles),
         ["band", "band_hash"],
         max_bucket,
         # with a precomputed shingle table the band rows are row-local
@@ -269,8 +250,6 @@ def minhash_lsh_candidates(
 def jaccard_pairs(
     docs: DataFrame,
     pairs: DataFrame,
-    text_col: str = "text",
-    n: int = SHINGLE_N,
     threshold: float = 0.0,
     shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -300,7 +279,7 @@ def jaccard_pairs(
     sh = (
         shingles
         if shingles is not None
-        else shingle_hash_table(docs, text_col, n).localCheckpoint(eager=True)
+        else shingle_hash_table(docs).localCheckpoint(eager=True)
     )
     a = sh.select(
         F.col("doc_id").alias("doc_a"),
@@ -370,26 +349,21 @@ def jaccard_pairs(
 CONTAM_NGRAM_N = 4
 
 
-def word_ngram_hashes(text_col: str = "text", n: int = CONTAM_NGRAM_N) -> Column:
-    """Distinct portable hashes of word n-grams — a row-local expression
+def word_ngram_hashes() -> Column:
+    """Distinct portable hashes of the ``text`` column's word
+    ``CONTAM_NGRAM_N``-grams — a row-local expression
     (zero shuffle), built on the shared ``functions.text.word_ngrams``
     construction and the portable 60-bit hash so the DuckDB twin is
     bit-identical."""
     return F.array_distinct(
-        F.transform(word_ngrams(text_col, n), lambda g: portable_hash60(g))
+        F.transform(word_ngrams("text", CONTAM_NGRAM_N), lambda g: portable_hash60(g))
     )
 
 
-def contamination_overlap(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    n: int = CONTAM_NGRAM_N,
-    min_overlap: int = 1,
-) -> DataFrame:
+def contamination_overlap(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Training-corpus decontamination against a benchmark/eval suite: flag
-    corpus documents sharing >= ``min_overlap`` distinct word n-grams with
-    ANY benchmark document (the n-gram-overlap doctrine used to scrub eval
+    corpus documents sharing at least one distinct word n-gram with ANY
+    benchmark document (the n-gram-overlap doctrine used to scrub eval
     sets out of web-scale training corpora).
 
     Scale shape (the one that survives 100 TB): the benchmark side is an
@@ -407,7 +381,7 @@ def contamination_overlap(
     is already deduplicated row-locally).
     """
     corpus = ensure_cpu_splits(corpus)
-    shs = word_ngram_hashes(text_col, n)
+    shs = word_ngram_hashes()
     # the eval side is small, but its n-gram construction is the same
     # CPU-bound interpreted HOF as the corpus side — an undersplit eval
     # scan (a handful of input splits) serializes it (r9; measured 0.5 s
@@ -432,7 +406,9 @@ def contamination_overlap(
         cor.join(F.broadcast(bench_sh), "sh")
         .groupBy("doc_id", "n_shingles")
         .agg(F.count(F.lit(1)).alias("n_matched"))
-        .filter(F.col("n_matched") >= min_overlap)
+        # implied by the inner join; kept so the physical plan stays the
+        # one tests/plan_snapshots.json pins for dd_contamination
+        .filter(F.col("n_matched") >= 1)
     )
 
 
@@ -441,21 +417,22 @@ def contamination_overlap(
 # ---------------------------------------------------------------------------
 
 
-def simhash_expr(text_col: str = "text", bits: int = SIMHASH_BITS) -> Column:
-    """Sign-sum SimHash over word hashes — ONE pass over the word array,
-    zero shuffle (the fingerprint is a row-local expression).
+def simhash_expr() -> Column:
+    """Sign-sum SimHash over the ``text`` column's word hashes — ONE pass
+    over the word array, zero shuffle (the fingerprint is a row-local
+    expression).
 
-    All ``bits`` vote counters live in a single array<int> accumulator
+    All ``SIMHASH_BITS`` vote counters live in a single array<int> accumulator
     updated per word via zip_with against a constant bit-mask array, so the
     text is tokenized and hashed exactly once per row. (The naive
-    per-bit-loop formulation issues ``bits`` independent F.aggregate calls,
+    per-bit-loop formulation issues one F.aggregate call per bit,
     and Catalyst does not CSE across lambda boundaries — measured 32x the
     expression work / ~10s extra on the sf0.1 bench.)
     """
-    words = F.regexp_extract_all(normalize_text(text_col), F.lit("[a-z0-9]+"), 0)
+    words = F.regexp_extract_all(normalize_text("text"), F.lit("[a-z0-9]+"), 0)
     hashes = F.transform(words, lambda w: portable_hash60(w))
-    masks = F.array(*[F.lit(1 << b).cast("long") for b in range(bits)])
-    zero = F.array_repeat(F.lit(0), bits)
+    masks = F.array(*[F.lit(1 << b).cast("long") for b in range(SIMHASH_BITS)])
+    zero = F.array_repeat(F.lit(0), SIMHASH_BITS)
     votes = F.aggregate(
         hashes,
         zero,
@@ -588,14 +565,10 @@ def _cc_local_finish(edges: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_rounds: int = CC_MAX_ROUNDS,
-    local_edge_threshold: int = CC_LOCAL_EDGE_THRESHOLD,
+    pairs: DataFrame, local_edge_threshold: int = CC_LOCAL_EDGE_THRESHOLD
 ) -> DataFrame:
-    """Connected components over an undirected pair list via alternating
-    large-star / small-star rewrites (Kiveris et al., "Connected
+    """Connected components over an undirected ``(doc_a, doc_b)`` pair list
+    via alternating large-star / small-star rewrites (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC'14) — the distributed
     closure of the reference's keep-one-representative reduction
     (/root/reference/data_validation.py:1274-1284) from exact-equality
@@ -647,14 +620,14 @@ def connected_components(
     # via the symmetrization union) and the ``nodes`` projection below
     # would each recompute that whole pipeline from the scan.
     edges, sig = _ckpt_with_sig(
-        _cc_canonical(pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))),
+        _cc_canonical(pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))),
         "init",
     )
     nodes = (
         edges.select("u").unionByName(edges.select(F.col("v").alias("u"))).distinct()
     )
     prev_sig = None
-    for rnd in range(max_rounds):
+    for rnd in range(CC_MAX_ROUNDS):
         if sig[0] <= local_edge_threshold:
             edges = _cc_local_finish(edges)
             break
@@ -672,7 +645,7 @@ def connected_components(
         )
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_rounds} rounds"
+            f"connected_components did not converge in {CC_MAX_ROUNDS} rounds"
         )
     # at convergence the canonical (u < v) edge set is a star per
     # component with the minimum node at the center: u = root, v = member.
@@ -683,18 +656,13 @@ def connected_components(
 
 
 def cluster_keep_one(
-    pairs: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    local_edge_threshold: int = CC_LOCAL_EDGE_THRESHOLD,
+    pairs: DataFrame, local_edge_threshold: int = CC_LOCAL_EDGE_THRESHOLD
 ) -> DataFrame:
     """Keep-one policy over transitive near-dup clusters: every node in
     ``pairs`` labeled with its cluster representative (minimum reachable
     id) and ``keep = 1`` iff it IS the representative. The downstream
     dedup stage drops every keep = 0 doc."""
-    labels = connected_components(
-        pairs, src, dst, local_edge_threshold=local_edge_threshold
-    )
+    labels = connected_components(pairs, local_edge_threshold)
     return labels.select(
         F.col("id").alias("doc_id"),
         "cluster_rep",
@@ -702,18 +670,14 @@ def cluster_keep_one(
     )
 
 
-def dedup_corpus(
-    docs: DataFrame,
-    text_col: str = "text",
-    threshold: float = 0.8,
-    max_bucket: int | None = 1000,
-) -> DataFrame:
+def dedup_corpus(docs: DataFrame, max_bucket: int | None = 1000) -> DataFrame:
     """The full production dedup stage, end to end: exact pre-pass, then
     near-dup clustering over the exact survivors only — the composition a
     training-data pipeline actually runs (and the transitive extension of
     the reference's dedup-on-insert doctrine,
     /root/reference/data_validation.py:728-734, :1274-1284).
 
+    Near-dup means Jaccard >= 0.8 over the ``text`` column's shingles.
     Returns EVERY input doc labeled ``(doc_id, drop_stage)`` with
     ``drop_stage`` in ``('keep', 'exact', 'near')`` — the downstream
     corpus filter is ``drop_stage = 'keep'``, and the per-stage labels
@@ -728,26 +692,21 @@ def dedup_corpus(
     hot-bucket cap, Jaccard verify on candidates); clustering is the
     bounded-round alternating-star fixpoint; the final label join is on
     the unique doc_id key (unskewed)."""
-    fp = doc_fingerprint(text_col).alias("_fp")
+    fp = doc_fingerprint().alias("_fp")
     w = Window.partitionBy("_fp").orderBy("doc_id")
-    labeled = docs.select(
-        F.col("doc_id"), F.col(text_col).alias(text_col), fp
-    ).withColumn("_rn", F.row_number().over(w))
-    survivors = labeled.filter(F.col("_rn") == 1).select("doc_id", text_col)
+    labeled = docs.select("doc_id", "text", fp).withColumn("_rn", F.row_number().over(w))
+    survivors = labeled.filter(F.col("_rn") == 1).select("doc_id", "text")
     # ONE shingle construction for the whole near-dup stage: MinHash
     # derives its base hashes from the same hashed shingle set the
     # Jaccard verify intersects, so both consume this checkpointed table
     # (the construction — interpreted HOF over every surviving doc — was
     # previously paid once per stage; measured ~1.9s of the 6.6s
     # dedup_corpus wall at sf0.1)
-    sh = shingle_hash_table(survivors, text_col).localCheckpoint(eager=True)
+    sh = shingle_hash_table(survivors).localCheckpoint(eager=True)
     pairs = jaccard_pairs(
         survivors,
-        minhash_lsh_candidates(
-            survivors, text_col=text_col, max_bucket=max_bucket, shingles=sh
-        ),
-        text_col=text_col,
-        threshold=threshold,
+        minhash_lsh_candidates(survivors, max_bucket=max_bucket, shingles=sh),
+        threshold=0.8,
         shingles=sh,
     )
     keep = cluster_keep_one(pairs)
@@ -767,12 +726,8 @@ def dedup_corpus(
 def prepare_corpus(
     docs: DataFrame,
     eval_docs: DataFrame | None = None,
-    text_col: str = "text",
-    threshold: float = 0.8,
     max_bucket: int | None = 1000,
     sample_ppm: int | None = None,
-    sample_salt: str = "",
-    contam_min_overlap: int = 1,
 ) -> DataFrame:
     """The full corpus-preparation pipeline, end to end: quality funnel ->
     benchmark decontamination -> exact + near dedup -> deterministic
@@ -810,26 +765,24 @@ def prepare_corpus(
     survivors are a materialized intermediate table, not a re-derivable
     view. The contaminated id set (slim, two columns) is likewise
     materialized: it feeds both the anti-join and the label CASE."""
-    d0 = docs.select("doc_id", text_col)
+    d0 = docs.select("doc_id", "text")
     fn = (
         ensure_cpu_splits(d0)
-        .withColumn("_funnel", filter_funnel(text_col))
+        .withColumn("_funnel", filter_funnel())
         .localCheckpoint(eager=True)
     )
-    s1 = fn.filter(F.col("_funnel") == "keep").select("doc_id", text_col)
+    s1 = fn.filter(F.col("_funnel") == "keep").select("doc_id", "text")
     contam_ids = None
     s2 = s1
     if eval_docs is not None:
         contam_ids = (
-            contamination_overlap(
-                s1, eval_docs, text_col, min_overlap=contam_min_overlap
-            )
+            contamination_overlap(s1, eval_docs)
             .select("doc_id")
             .withColumn("_contam", F.lit(True))
             .localCheckpoint(eager=True)
         )
         s2 = s1.join(contam_ids.select("doc_id"), "doc_id", "left_anti")
-    dd = dedup_corpus(s2, text_col, threshold=threshold, max_bucket=max_bucket)
+    dd = dedup_corpus(s2, max_bucket=max_bucket)
     out = fn.select("doc_id", "_funnel")
     if contam_ids is not None:
         out = out.join(contam_ids, "doc_id", "left")
@@ -839,7 +792,7 @@ def prepare_corpus(
         dd.select("doc_id", F.col("drop_stage").alias("_dd")), "doc_id", "left"
     )
     sampled_out = (
-        ~hash_sample_predicate(F.col("doc_id"), sample_ppm, sample_salt)
+        ~hash_sample_predicate(F.col("doc_id"), sample_ppm)
         if sample_ppm is not None
         else F.lit(False)
     )
@@ -907,23 +860,17 @@ def dedup_corpus_sql(docs_body: str, verified_pairs_over_surv: str) -> str:
         FROM fpx f LEFT JOIN lab l ON f.doc_id = l.doc_id"""
 
 
-def contaminated_ids_sql(
-    corpus_body: str,
-    eval_body: str,
-    n: int = CONTAM_NGRAM_N,
-    min_overlap: int = 1,
-) -> str:
+def contaminated_ids_sql(corpus_body: str, eval_body: str) -> str:
     """DuckDB twin of contamination_overlap reduced to the contaminated
     doc_id set (what prepare_corpus consumes). Shares word_ngram_hashes_sql
     with the Spark side. CTE names are prefixed (bshq/cshq/exq) so the
     builder nests safely inside other WITH scopes."""
-    return f"""WITH bshq AS (SELECT DISTINCT unnest({word_ngram_hashes_sql('text', n)}) AS sh
+    return f"""WITH bshq AS (SELECT DISTINCT unnest({word_ngram_hashes_sql('text')}) AS sh
                       FROM ({eval_body}) eb),
-         cshq AS (SELECT doc_id, {word_ngram_hashes_sql('text', n)} AS shs
+         cshq AS (SELECT doc_id, {word_ngram_hashes_sql('text')} AS shs
                   FROM ({corpus_body}) cb),
          exq AS (SELECT doc_id, unnest(shs) AS sh FROM cshq)
-        SELECT doc_id FROM exq WHERE sh IN (SELECT sh FROM bshq)
-        GROUP BY doc_id HAVING count(*) >= {min_overlap}"""
+        SELECT DISTINCT doc_id FROM exq WHERE sh IN (SELECT sh FROM bshq)"""
 
 
 def prepare_corpus_sql(
@@ -931,9 +878,6 @@ def prepare_corpus_sql(
     verified_pairs_over_surv: str,
     eval_body: str | None = None,
     sample_ppm: int | None = None,
-    sample_salt: str = "",
-    contam_n: int = CONTAM_NGRAM_N,
-    contam_min_overlap: int = 1,
 ) -> str:
     """DuckDB twin of prepare_corpus: the same stage order over the same
     shared builders (funnel CASE, contamination shingles, fingerprint
@@ -942,15 +886,13 @@ def prepare_corpus_sql(
     size. ``verified_pairs_over_surv`` must be built over the table name
     ``surv`` exactly as for dedup_corpus_sql."""
     ct = (
-        contaminated_ids_sql(
-            "SELECT doc_id, text FROM ps1", eval_body, contam_n, contam_min_overlap
-        )
+        contaminated_ids_sql("SELECT doc_id, text FROM ps1", eval_body)
         if eval_body is not None
         else "SELECT CAST(NULL AS BIGINT) AS doc_id WHERE 1 = 0"
     )
     dd = dedup_corpus_sql("SELECT doc_id, text FROM ps2", verified_pairs_over_surv)
     sampled = (
-        f" WHEN NOT ({hash_sample_predicate_sql('f.doc_id', str(sample_ppm), sample_salt)})"
+        f" WHEN NOT ({hash_sample_predicate_sql('f.doc_id', str(sample_ppm))})"
         " THEN 'sampled_out'"
         if sample_ppm is not None
         else ""
@@ -971,51 +913,51 @@ def prepare_corpus_sql(
         FROM fnx f LEFT JOIN ddx d ON f.doc_id = d.doc_id"""
 
 
-def word_ngram_hashes_sql(expr: str, n: int = CONTAM_NGRAM_N) -> str:
+def word_ngram_hashes_sql(expr: str) -> str:
     """DuckDB-side twin of word_ngram_hashes, on the shared
     ``word_ngrams_sql`` construction."""
     return (
-        f"list_distinct(list_transform({word_ngrams_sql(expr, n)}, "
+        f"list_distinct(list_transform({word_ngrams_sql(expr, CONTAM_NGRAM_N)}, "
         f"g -> {portable_hash60_sql('g')}))"
     )
 
 
-def shingle_sql(expr: str, n: int = SHINGLE_N) -> str:
+def shingle_sql(expr: str) -> str:
     t = normalize_text_sql(expr)
     return (
-        f"list_distinct(list_transform(generate_series(1, greatest(length({t}) - {n - 1}, 1)), "
-        f"i -> substr({t}, i, {n})))"
+        f"list_distinct(list_transform(generate_series(1, greatest(length({t}) - {SHINGLE_N - 1}, 1)), "
+        f"i -> substr({t}, i, {SHINGLE_N})))"
     )
 
 
-def shingle_hashes_sql(expr: str, n: int = SHINGLE_N) -> str:
+def shingle_hashes_sql(expr: str) -> str:
     """DuckDB twin of shingle_hashes (same hash, so Jaccard over these is
     bit-identical across engines even under a 60-bit collision)."""
     return (
-        f"list_transform({shingle_sql(expr, n)}, s -> {portable_hash60_sql('s')})"
+        f"list_transform({shingle_sql(expr)}, s -> {portable_hash60_sql('s')})"
     )
 
 
-def minhash_sql(expr: str, i: int, n: int = SHINGLE_N) -> str:
+def minhash_sql(expr: str, i: int) -> str:
     """DuckDB twin of minhash_signature's i-th value: the SAME
     universal-hash family (A[i]*h + B[i]) % P over the SAME shared
     constants — list-expression form here, explode+min-aggregate form on
     the Spark side; the VALUES are identical by construction."""
     h = f"({portable_hash60_sql('s')} % {MINHASH_P})"
     return (
-        f"list_min(list_transform({shingle_sql(expr, n)}, "
+        f"list_min(list_transform({shingle_sql(expr)}, "
         f"s -> ({MINHASH_A[i]} * {h} + {MINHASH_B[i]}) % {MINHASH_P}))"
     )
 
 
-def simhash_sql(expr: str, bits: int = SIMHASH_BITS) -> str:
+def simhash_sql(expr: str) -> str:
     t = normalize_text_sql(expr)
     hashes = (
         f"list_transform(regexp_extract_all({t}, '[a-z0-9]+'), "
         f"w -> {portable_hash60_sql('w')})"
     )
     terms = []
-    for b in range(bits):
+    for b in range(SIMHASH_BITS):
         vote = (
             f"coalesce(list_sum(list_transform({hashes}, "
             f"h -> CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END)), 0)"

@@ -45,20 +45,19 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k neighbors per query. The query side is broadcast — the
+    """Exact top-k neighbors per query, over ``(vec_id, embedding)`` rows on
+    both sides. The query side is broadcast — the
     corpus is never shuffled, each task scores its own partition slice
     (at 10^12 rows this is one scan + a tiny per-query heap via the rank
     window on corpus_partitions x queries rows)."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec")
     )
     scored = corpus.crossJoin(F.broadcast(q)).select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        cosine_expr(vec_col, "_qvec").alias("cosine"),
+        F.col("vec_id").alias("neighbor_id"),
+        cosine_expr("embedding", "_qvec").alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
@@ -146,27 +145,26 @@ def lsh_topk_portable(
     queries: DataFrame,
     dim: int,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bits: int = PORTABLE_BITS,
 ) -> DataFrame:
-    """Approximate top-k: bucket both sides once with the portable
+    """Approximate top-k over ``(vec_id, embedding)`` rows: bucket both
+    sides once with the portable
     hyperplanes, probe the query bucket + its hamming-1 neighbors, exact
     cosine only on candidates (candidate count per query ~ corpus / 2^bits
     x (bits+1)); DuckDB-twinnable end to end."""
     bucket = lambda df: df.withColumn(  # noqa: E731
-        "bucket", bucket_portable_expr(vec_col, dim, bits)
+        "bucket", bucket_portable_expr("embedding", dim, bits)
     )
     c = bucket(corpus)
     q = bucket(queries).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qvec"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qvec"),
         F.explode(_hamming1_neighbors(F.col("bucket"), bits)).alias("bucket"),
     )
     cand = c.join(F.broadcast(q), "bucket").select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        cosine_expr(vec_col, "_qvec").alias("cosine"),
+        F.col("vec_id").alias("neighbor_id"),
+        cosine_expr("embedding", "_qvec").alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
@@ -178,16 +176,11 @@ def lsh_topk_portable(
     )
 
 
-def embedding_near_dups(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Pairs with cosine >= threshold over the full self cross-join —
-    O(n^2), for small corpora / oracles."""
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+def embedding_near_dups(df: DataFrame, threshold: float = 0.95) -> DataFrame:
+    """``(vec_id, embedding)`` pairs with cosine >= threshold over the full
+    self cross-join — O(n^2), for small corpora / oracles."""
+    a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    b = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
     return (
         pairs.withColumn("cosine", cosine_expr("va", "vb"))

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Default number of salt buckets for hot-key spreading.
+#: Number of salt buckets for hot-key spreading.
 DEFAULT_SALT_BUCKETS = 16
 
 #: Hot-key probe resolution (see detect_hot_keys).
@@ -73,19 +73,17 @@ def detect_hot_keys(
     return row["mx"] >= max(ratio * avg, float(min_hot_rows))
 
 
-def salt_expr(*cols: str | Column, buckets: int = DEFAULT_SALT_BUCKETS) -> Column:
-    """Deterministic uniform salt in [0, buckets) from row content.
+def salt_expr(*cols: str | Column) -> Column:
+    """Deterministic uniform salt in [0, DEFAULT_SALT_BUCKETS) from row content.
 
     Deterministic (no ``rand()``) so re-runs of a resumed job land rows in
     identical buckets — required for the checkpoint idempotence contract.
     """
-    return F.pmod(F.xxhash64(*[F.col(c) if isinstance(c, str) else c for c in cols]), F.lit(buckets)).cast("int")
+    return F.pmod(F.xxhash64(*[F.col(c) if isinstance(c, str) else c for c in cols]), F.lit(DEFAULT_SALT_BUCKETS)).cast("int")
 
 
-def with_salt(
-    df: DataFrame, entropy_cols: list[str], buckets: int = DEFAULT_SALT_BUCKETS
-) -> DataFrame:
-    return df.withColumn("_salt", salt_expr(*entropy_cols, buckets=buckets))
+def with_salt(df: DataFrame, entropy_cols: list[str]) -> DataFrame:
+    return df.withColumn("_salt", salt_expr(*entropy_cols))
 
 
 def salted_join(
@@ -93,24 +91,23 @@ def salted_join(
     dim: DataFrame,
     on: list[str],
     how: str = "left",
-    buckets: int = DEFAULT_SALT_BUCKETS,
     entropy_cols: list[str] | None = None,
 ) -> DataFrame:
     """Join a skewed fact side to a (replicable) dimension side.
 
     The fact side gets a content-derived salt; the dimension side is
-    exploded ``buckets``-fold so every (key, salt) partition finds its
-    match. Join keys become ``on + [_salt]`` so a hot key's rows spread
-    across ``buckets`` reducers instead of one.
+    exploded ``DEFAULT_SALT_BUCKETS``-fold so every (key, salt) partition
+    finds its match. Join keys become ``on + [_salt]`` so a hot key's rows
+    spread across ``DEFAULT_SALT_BUCKETS`` reducers instead of one.
 
     Only correct for joins where the dim side may be replicated (each dim
     row matching a fact row exactly once per salt value) — i.e. equi-joins
     where output multiplicity is per-pair, which is all the engine needs.
     """
     entropy = entropy_cols or on
-    fact = with_salt(skewed, entropy, buckets)
+    fact = with_salt(skewed, entropy)
     replicated = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(buckets - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(DEFAULT_SALT_BUCKETS - 1)))
     )
     out = fact.join(replicated, on + ["_salt"], how)
     return out.drop("_salt")

@@ -26,11 +26,11 @@ DEFAULT_BUCKET_WIDTH = 32
 HLL_LGK = 12
 
 
-def doc_id_sketches(snapshot: DataFrame, group_col: str = "source") -> DataFrame:
-    """Per-partition HLL sketch of doc_id (Apache DataSketches via Spark
+def doc_id_sketches(snapshot: DataFrame) -> DataFrame:
+    """Per-source HLL sketch of doc_id (Apache DataSketches via Spark
     3.5+ hll_sketch_agg). Persisted sketches let later runs union new
     partitions without rescanning old ones."""
-    return snapshot.groupBy(group_col).agg(
+    return snapshot.groupBy("source").agg(
         F.hll_sketch_agg("doc_id", F.lit(HLL_LGK)).alias("doc_id_hll")
     )
 

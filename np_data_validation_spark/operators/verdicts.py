@@ -160,19 +160,17 @@ PROBE_KEY_WIDTH_BYTES = 32
 PROBE_KEYS_BROADCAST_MAX = PROBE_BROADCAST_MAX_BYTES // PROBE_KEY_WIDTH_BYTES
 
 
-def find_reclaimable(
-    pairs: DataFrame, backup_sources: list[str] | tuple[str, ...] = ("backup",)
-) -> DataFrame:
+def find_reclaimable(pairs: DataFrame) -> DataFrame:
     """Action gate: subjects whose storage can be reclaimed — the engine's
     form of the reference's ``delete_if_valid_backup_in_db`` strategy
     (/root/reference/strategies.py:95-168), lookup -> veto -> act:
 
-    * ≥1 VALID copy (code >= 21) located in a backup-rooted source — the
+    * ≥1 VALID copy (code >= 21) located in the ``backup`` source — the
       source-membership restriction is J9's path-prefix rule
       (/root/reference/strategies.py:145-148, data_validation.py:1327-1329);
     * ZERO invalid-band copies anywhere — ANY invalid copy vetoes the
       action (/root/reference/strategies.py:135-138);
-    * the subject itself must not live in a backup source (the final
+    * the subject itself must not live in the ``backup`` source (the final
       subject-is-not-the-backup assertion, /root/reference/strategies.py:
       106-107).
 
@@ -180,8 +178,7 @@ def find_reclaimable(
     groupBy over the pair table — no extra joins at scale.
     """
     code = F.col("verdict_code")
-    backups = list(backup_sources)
-    valid_backup = (code >= VALID_MIN) & F.col("m_source").isin(backups)
+    valid_backup = (code >= VALID_MIN) & (F.col("m_source") == "backup")
     agg = pairs.groupBy("doc_id", "source").agg(
         F.max(valid_backup).alias("_has_valid_backup"),
         F.max(code.between(*INVALID_BAND)).alias("_veto"),
@@ -189,7 +186,7 @@ def find_reclaimable(
     )
     return (
         agg.filter(F.col("_has_valid_backup") & ~F.col("_veto"))
-        .filter(~F.col("source").isin(backups))
+        .filter(F.col("source") != "backup")
         .select("doc_id", "source", "n_valid_backups")
     )
 

@@ -265,6 +265,10 @@ def run_validation(
     construction (different shapes), so switching modes re-validates
     everything once.
 
+    Every snapshot row needs a non-empty ``source``: a null one (a
+    ``source=__HIVE_DEFAULT_PARTITION__`` directory) or an empty one
+    raises ``ValueError`` before anything is written.
+
     Scratch: each batch's pair tables live under
     ``<out>/_work/run=<run_id>/batch=<n>`` only until that batch's state
     commit, then are deleted through the Hadoop FS API (works on object
@@ -281,6 +285,16 @@ def run_validation(
 
     # cheap fingerprints for every partition: one light scan, no payload
     fps = CP.input_fingerprints(snapshot)
+    bad = [fps[k] for k in (None, "") if k in fps]
+    if bad:
+        # a null source is no partition: it cannot be selected, committed
+        # or resumed, and an empty one is written back as null, so refuse
+        # the input before anything is written
+        n_bad = sum(int(fp.split(":", 1)[0]) for fp in bad)  # fingerprints lead with row counts
+        raise ValueError(
+            f"{n_bad} snapshot rows have a null or empty source (e.g. a "
+            "source=__HIVE_DEFAULT_PARTITION__ directory); every row needs one"
+        )
     all_parts = sorted(fps)
     done: set[str] = set()
     if resume:
@@ -353,9 +367,9 @@ def run_validation(
             {
                 "partition": p,
                 "status": "done",
-                "metrics": metrics.get(p, {"rows": 0}),
+                "metrics": metrics[p],
                 "lineage": {
-                    "input_fingerprint": batch_fps.get(p, fps[p]),
+                    "input_fingerprint": batch_fps[p],
                     "code_version": CODE_VERSION,
                     "snapshot_path": snapshot_path,
                     "manifest_path": manifest_path,

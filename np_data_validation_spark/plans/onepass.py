@@ -147,11 +147,11 @@ def probe_pairs_from(
     that is only called when the shuffle branch runs — validate_onepass
     passes operators.skew.detect_hot_keys over the manifest's tok_hash)
     engages a salted join with the manifest as the salted fact side and the
-    missed side replicated ``buckets``-fold: the hot hash's manifest rows
-    spread across buckets while the missed side (already >
+    missed side replicated ``DEFAULT_SALT_BUCKETS``-fold: the hot hash's
+    manifest rows spread across the salts while the missed side (already >
     PROBE_BROADCAST_MAX to be here, so bounded) replicates. Skew on the
     MISSED side's tok_hash is the mirror case; salting it would explode the
-    manifest buckets-fold (manifest-wide blowup), so AQE skew-join
+    manifest that many times over (manifest-wide blowup), so AQE skew-join
     splitting — enabled session-wide (session.py) — is the designated
     handler there: the un-hinted inner join lets AQE split the hot missed
     partition and replicate the matching manifest rows."""

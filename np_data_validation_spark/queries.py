@@ -531,7 +531,7 @@ def w2_dedup_representatives(spark, sf_dir):
     """W2/T1: duplicate-group reduction to one representative."""
     aug = _augmented_docs(_t(spark, sf_dir, "documents"))
     return (
-        aug.select("doc_id", TX.doc_fingerprint("text").alias("fp"))
+        aug.select("doc_id", TX.doc_fingerprint().alias("fp"))
         .groupBy("fp")
         .agg(F.min("doc_id").alias("keeper"), F.count(F.lit(1)).alias("n_docs"))
         .filter(F.col("n_docs") > 1)
@@ -708,7 +708,7 @@ def tx_token_counts(spark, sf_dir):
     return _t(spark, sf_dir, "documents").select(
         "doc_id",
         TX.ws_token_count("text").alias("ws_tokens"),
-        TX.regex_token_count("text").alias("re_tokens"),
+        TX.regex_token_count().alias("re_tokens"),
     )
 
 
@@ -832,7 +832,7 @@ def tx_langid_confusion(spark, sf_dir):
 )
 def tx_fingerprints(spark, sf_dir):
     return _t(spark, sf_dir, "documents").select(
-        "doc_id", TX.doc_fingerprint("text").alias("fp")
+        "doc_id", TX.doc_fingerprint().alias("fp")
     )
 
 
@@ -849,27 +849,23 @@ def tx_fingerprints(spark, sf_dir):
 def dd_exact_dup_groups(spark, sf_dir):
     aug = _augmented_docs(_t(spark, sf_dir, "documents"))
     return (
-        aug.select("doc_id", TX.doc_fingerprint("text").alias("fp"))
+        aug.select("doc_id", TX.doc_fingerprint().alias("fp"))
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("first_doc"))
         .filter(F.col("n_docs") > 1)
     )
 
 
-def _minhash_bands_sql(
-    k: int = DD.MINHASH_K,
-    bands: int = DD.MINHASH_BANDS,
-    aug_sql: str = AUG_DOCS_SQL,
-) -> str:
-    r = k // bands
+def _minhash_bands_sql(aug_sql: str = AUG_DOCS_SQL) -> str:
+    r = DD.MINHASH_K // DD.MINHASH_BANDS
     mh_cols = ", ".join(
-        f"{DD.minhash_sql('text', i)} AS mh_{i}" for i in range(k)
+        f"{DD.minhash_sql('text', i)} AS mh_{i}" for i in range(DD.MINHASH_K)
     )
     band_rows = " UNION ALL ".join(
         f"""SELECT doc_id, {b} AS band,
             {TX.portable_hash60_sql(' || '.join([f"CAST(mh_{b * r + j} AS VARCHAR)" if j == 0 else f"',' || CAST(mh_{b * r + j} AS VARCHAR)" for j in range(r)]))} AS band_hash
             FROM sig"""
-        for b in range(bands)
+        for b in range(DD.MINHASH_BANDS)
     )
     return f"WITH aug AS ({aug_sql}), sig AS (SELECT doc_id, {mh_cols} FROM aug) {band_rows}"
 
@@ -893,7 +889,7 @@ def dd_minhash_lsh_pairs(spark, sf_dir):
 )
 def dd_simhash_values(spark, sf_dir):
     aug = DD.ensure_cpu_splits(_augmented_docs(_t(spark, sf_dir, "documents")))
-    return aug.select("doc_id", DD.simhash_expr("text").alias("simhash"))
+    return aug.select("doc_id", DD.simhash_expr().alias("simhash"))
 
 
 #: hot-bucket cap used by the PIPELINE queries (cluster / dedup corpus):
@@ -1036,7 +1032,7 @@ def dd_contamination(spark, sf_dir):
         .select("doc_id", "text")
     )
     corpus = docs.filter(F.col("doc_id") % 17 != 0).select("doc_id", "text").unionByName(leaked)
-    return DD.contamination_overlap(corpus, bench, n=DD.CONTAM_NGRAM_N, min_overlap=1)
+    return DD.contamination_overlap(corpus, bench)
 
 
 # --- similarity ---------------------------------------------------------------
@@ -1304,7 +1300,7 @@ def j9_reclaimable_gate(spark, sf_dir):
     subjects with >=1 valid copy in the backup-rooted source and zero
     invalid-band copies; source-membership restricts both the backup side
     and the subject side."""
-    return V.find_reclaimable(_pairs_df(spark, sf_dir), backup_sources=("backup",))
+    return V.find_reclaimable(_pairs_df(spark, sf_dir))
 
 
 @q(

@@ -1,11 +1,13 @@
 """SparkSession factory with scale-oriented defaults.
 
-Local-mode testing stands in for a multi-executor cluster: we size
-``spark.sql.shuffle.partitions`` to the core count (not the 200 default),
-enable AQE (runtime coalescing + skew-join splitting — the reference has no
-skew handling at all and suffers for it: one big session = one slow loop,
-see /root/reference/data_validation.py:1449-1455), and turn on Arrow so the
-Arrow-UDF fingerprint kernel moves columnar batches, not pickled rows.
+Local-mode testing stands in for a multi-executor cluster: a local session
+sizes ``spark.sql.shuffle.partitions`` to the core count (not the 200
+default; under spark-submit the submitted conf decides). Every session
+enables AQE (runtime coalescing + skew-join splitting — the reference has
+no skew handling at all and suffers for it: one big session = one slow
+loop, see the reference's data_validation.py:1449-1455) and turns on
+Arrow so the Arrow-UDF fingerprint kernel moves columnar batches, not
+pickled rows.
 """
 
 from __future__ import annotations
@@ -45,7 +47,6 @@ def _read_meminfo() -> str | None:
 def get_spark(
     app_name: str = "np_data_validation_spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
     master: str | None = None,
 ) -> SparkSession:
@@ -55,22 +56,23 @@ def get_spark(
     cluster these settings ship unchanged via ``spark-submit --py-files``;
     pass ``master="inherit"`` there so the master/deploy-mode chosen by
     spark-submit is NOT overridden (the default builds a local[cpus]
-    session for tests and notebooks).
+    session for tests and notebooks). Under ``inherit`` the shuffle
+    partition count is also left to spark-submit: the driver host's cores
+    say nothing about the cluster's.
     """
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    if shuffle_partitions is None:
-        # 2x cores: enough tasks for AQE to coalesce, no 200-partition default
-        # overhead at local scale. At cluster scale this is overridden by
-        # AQE's advisory partition sizing.
-        shuffle_partitions = max(2 * cpus, 8)
-
     builder = SparkSession.builder.appName(app_name)
     if master != "inherit":
-        builder = builder.master(master or f"local[{cpus}]")
+        if cpus is None:
+            cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+        # 2x cores: enough tasks for AQE to coalesce, no 200-partition
+        # default overhead at local scale. AQE only merges partitions; it
+        # never splits beyond this count.
+        builder = (
+            builder.master(master or f"local[{cpus}]")
+            .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 8)))
+        )
     builder = (
         builder
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE coalescing is BYTES-based; its 1m default floor collapses a

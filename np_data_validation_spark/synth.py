@@ -50,33 +50,31 @@ def generate(
     n_rows: int = 4000,
     seed: int = 42,
     n_sources: int = 4,
-    hot_source_factor: int = 10,
     min_len: int = 8,
     max_len: int = 512,
     fault_weights: dict[str, float] | None = None,
-    vocab: int = 50257,
-    id_offset: int = 0,
 ) -> tuple[pa.Table, pa.Table, pd.DataFrame]:
     """Return (sequences, manifest, labels).
 
     ``labels`` maps each snapshot doc_id to its injected case — used by the
     pytest suite to assert per-row verdicts; never written next to the data.
-    One source is hot (``hot_source_factor`` x the others) so skew handling
-    is exercised by default (FIXTURES.md sizing).
+    One source is hot (10x the others) so skew handling is exercised by
+    default (FIXTURES.md sizing). Token ids are drawn from GPT-2's
+    50257-entry vocabulary.
     """
     rng = np.random.default_rng(seed)
     weights = FAULT_WEIGHTS if fault_weights is None else fault_weights
 
     src_w = np.ones(n_sources)
-    src_w[0] = hot_source_factor
+    src_w[0] = 10
     src_w /= src_w.sum()
     src_idx = rng.choice(n_sources, size=n_rows, p=src_w)
     sources = np.array([f"src_{i:02d}" for i in range(n_sources)])[src_idx]
 
-    doc_ids = np.array([f"doc_{i:010d}" for i in range(id_offset, id_offset + n_rows)])
+    doc_ids = np.array([f"doc_{i:010d}" for i in range(n_rows)])
     lens = rng.integers(min_len, max_len + 1, size=n_rows).astype(np.int64)
     total = int(lens.sum())
-    flat = rng.integers(0, vocab, size=total).astype(np.int32)
+    flat = rng.integers(0, 50257, size=total).astype(np.int32)
     offsets = np.zeros(n_rows + 1, dtype=np.int64)
     np.cumsum(lens, out=offsets[1:])
 
@@ -232,15 +230,15 @@ def generate(
     return seq_tbl, man_tbl, labels
 
 
-def write_partitioned(tbl: pa.Table, out_dir: str, partition_col: str = "source") -> None:
+def write_partitioned(tbl: pa.Table, out_dir: str) -> None:
     """Hive-partitioned parquet layout (source=<val>/part-0.parquet)."""
     if os.path.exists(out_dir):
         shutil.rmtree(out_dir)
     os.makedirs(out_dir)
-    col = tbl.column(partition_col).to_numpy(zero_copy_only=False)
+    col = tbl.column("source").to_numpy(zero_copy_only=False)
     for val in np.unique(col):
-        sub = tbl.filter(pa.array(col == val)).drop_columns([partition_col])
-        pdir = os.path.join(out_dir, f"{partition_col}={val}")
+        sub = tbl.filter(pa.array(col == val)).drop_columns(["source"])
+        pdir = os.path.join(out_dir, f"source={val}")
         os.makedirs(pdir)
         pq.write_table(sub, os.path.join(pdir, "part-0.parquet"))
 

@@ -19,7 +19,6 @@ def spark():
     s = get_spark(
         app_name="npdv-tests",
         cpus=4,
-        shuffle_partitions=8,
         extra_conf={
             "spark.default.parallelism": "4",
             "spark.sql.leafNodeDefaultParallelism": "4",

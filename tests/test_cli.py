@@ -136,16 +136,24 @@ class _FakeBuilder:
         raise _Built(self.conf)
 
 
-def _built_conf(monkeypatch) -> dict:
-    """The conf ``get_spark`` hands the session builder."""
+def _built_conf(monkeypatch, **kw) -> dict:
+    """The conf ``get_spark(cpus=1, **kw)`` hands the session builder."""
     from np_data_validation_spark import session
 
     monkeypatch.setattr(session.SparkSession, "builder", _FakeBuilder())
     try:
-        session.get_spark(cpus=1)
+        session.get_spark(**{"cpus": 1, **kw})
     except _Built as b:
         return b.args[0]
     raise AssertionError("getOrCreate was not reached")
+
+
+def test_inherit_leaves_shuffle_partitions_to_spark_submit(monkeypatch):
+    """Under spark-submit the submitted conf sizes the shuffle, not the
+    driver host's cores; a local session still gets 2x cores, at least 8."""
+    conf = _built_conf(monkeypatch, master="inherit", cpus=4)
+    assert "spark.sql.shuffle.partitions" not in conf
+    assert _built_conf(monkeypatch, cpus=4)["spark.sql.shuffle.partitions"] == "8"
 
 
 def test_spark_local_dir_is_opt_in(monkeypatch):

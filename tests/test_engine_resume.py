@@ -73,6 +73,43 @@ def test_changed_input_invalidates_checkpoint(spark, synth_dataset, out_dir):
     assert all_parts[0] in r.validated_partitions
 
 
+def test_null_source_rows_are_a_clear_error(spark, tmp_path, out_dir):
+    """A ``source=__HIVE_DEFAULT_PARTITION__`` directory reads as null
+    sources, and an empty ``source`` data column would be written back as
+    one: the run refuses either up front, naming the row count, and
+    commits no state."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    snap = tmp_path / "sequences"
+    for part, ids in [("src_a", ["d0", "d1"]), ("__HIVE_DEFAULT_PARTITION__", ["d2"])]:
+        (snap / f"source={part}").mkdir(parents=True)
+        pq.write_table(
+            pa.table({
+                "doc_id": ids,
+                "tokens": pa.array([[1, 2]] * len(ids), pa.list_(pa.int32())),
+                "n_tok": pa.array([2] * len(ids), pa.int32()),
+            }),
+            str(snap / f"source={part}" / "part-0.parquet"),
+        )
+    man = tmp_path / "manifest"
+    spark.createDataFrame(
+        [("d0", 2, 0, "src_a")], "doc_id string, n_tok int, tok_hash long, source string"
+    ).write.parquet(str(man))
+    with pytest.raises(ValueError, match="1 snapshot rows have a null or empty source"):
+        E.run_validation(spark, str(snap), str(man), out_dir)
+    assert not os.path.exists(CP.state_path(out_dir))
+
+    flat = tmp_path / "flat"
+    spark.createDataFrame(
+        [("d0", [1, 2], 2, "src_a"), ("d1", [1, 2], 2, ""), ("d2", [1, 2], 2, "")],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    ).write.parquet(str(flat))
+    with pytest.raises(ValueError, match="2 snapshot rows have a null or empty source"):
+        E.run_validation(spark, str(flat), str(man), out_dir)
+    assert not os.path.exists(CP.state_path(out_dir))
+
+
 def test_resume_produces_identical_results(spark, synth_dataset, tmp_path):
     snap_p, man_p, _ = paths(synth_dataset)
     out_a, out_b = str(tmp_path / "a"), str(tmp_path / "b")

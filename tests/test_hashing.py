@@ -39,13 +39,20 @@ def test_udf_self_test_fails_a_diverged_kernel(monkeypatch):
 
 def test_vector_matches_scalar_across_lengths():
     rng = np.random.default_rng(7)
-    lens = list(range(0, 20)) + [31, 32, 33, 63, 64, 100, 511, 512, 1000]
-    rows = [rng.integers(-(2**31), 2**31, size=l).astype(np.int32) for l in lens]
-    flat = np.concatenate(rows)
-    offsets = np.concatenate([[0], np.cumsum([len(r) for r in rows])])
-    vec = H.xxh64_int32_batch(flat, offsets)
-    for i, r in enumerate(rows):
-        assert H.xxh64_int32_scalar(r) == int(vec[i]), f"len={len(r)}"
+    batches = [
+        list(range(0, 20)) + [31, 32, 33, 63, 64, 100, 511, 512, 1000],
+        # equal lengths take the uniform path: 16 tokens is the contiguous
+        # reshape, 13 the padded scatter
+        [16] * 100,
+        [13] * 100,
+    ]
+    for lens in batches:
+        rows = [rng.integers(-(2**31), 2**31, size=l).astype(np.int32) for l in lens]
+        flat = np.concatenate(rows)
+        offsets = np.concatenate([[0], np.cumsum([len(r) for r in rows])])
+        vec = H.xxh64_int32_batch(flat, offsets)
+        for i, r in enumerate(rows):
+            assert H.xxh64_int32_scalar(r) == int(vec[i]), f"len={len(r)}"
 
 
 def test_vector_matches_scalar_skewed_blocks():

@@ -1,5 +1,5 @@
-"""Every package module, and every top-level name in it, is reached from an
-entrypoint.
+"""Every package module, every top-level name in it and every defaulted
+parameter of its functions is reached from an entrypoint.
 
 Walks the static ``import`` graph (``ast``, imports inside functions
 included) from the engine's entrypoints — the CLI, ``__spark_entry__.py``,
@@ -21,6 +21,17 @@ it can miss a dead name, never invent one. ``schema.py`` declarations and
 dunder names (``__version__``) are exempt. ``ALLOWED_UNREACHED`` holds
 only names a test compares against or builds fixtures with, each with the
 test that needs it; a name that becomes reached must leave the list.
+
+Last, the walk runs per parameter: every defaulted parameter of a reached
+top-level package function must be passed, by position or keyword, a
+value whose source text differs from its default's, by a call in reached
+code. Calls resolve like uses (bare name, ``from`` import, ``alias.name``).
+A value that only forwards the caller's own defaulted parameter counts
+once that parameter is itself varied (iterated to a fixpoint); a ``*`` or
+``**`` splat counts as passing every parameter it may reach.
+``TEST_SEAMS`` holds only parameters a test varies to force a branch or to
+substitute a fake, each with that test; an entry fails when an entrypoint
+varies it, its default is gone, or its test no longer varies it.
 """
 
 from __future__ import annotations
@@ -186,12 +197,9 @@ def _is_registered_query(stmt: ast.stmt) -> bool:
     )
 
 
-def _name_graph() -> tuple[dict[tuple, set], set[tuple], dict[tuple, tuple]]:
-    """(defined name -> names it uses, root uses, re-export -> target)."""
-    mods = _package_modules()
-    graph: dict[tuple, set] = {}
-    roots: set[tuple] = set()
-    reexports: dict[tuple, tuple] = {}
+def _module_scopes(mods) -> dict[str, tuple]:
+    """module -> (tree, its top-level names, its top-level import bindings)."""
+    out = {}
     for mod, path in mods.items():
         tree = _parse(path)
         tops = {name for stmt in tree.body for name in _defined(stmt)}
@@ -199,6 +207,17 @@ def _name_graph() -> tuple[dict[tuple, set], set[tuple], dict[tuple, tuple]]:
         for stmt in tree.body:
             if isinstance(stmt, (ast.Import, ast.ImportFrom)):
                 outer.update(_bindings(stmt, mods))
+        out[mod] = (tree, tops, outer)
+    return out
+
+
+def _name_graph() -> tuple[dict[tuple, set], set[tuple], dict[tuple, tuple]]:
+    """(defined name -> names it uses, root uses, re-export -> target)."""
+    mods = _package_modules()
+    graph: dict[tuple, set] = {}
+    roots: set[tuple] = set()
+    reexports: dict[tuple, tuple] = {}
+    for mod, (tree, tops, outer) in _module_scopes(mods).items():
         for local, b in outer.items():
             if b[0] == "name":
                 reexports[(mod, local)] = (b[1], b[2])
@@ -218,7 +237,8 @@ def _name_graph() -> tuple[dict[tuple, set], set[tuple], dict[tuple, tuple]]:
     return graph, roots, reexports
 
 
-def _unreached_names() -> set[tuple]:
+def _reached_names() -> tuple[dict[tuple, set], set[tuple], dict[tuple, tuple]]:
+    """(name graph, reached names, re-export -> target)."""
     graph, roots, reexports = _name_graph()
     seen, todo = set(), list(roots)
     while todo:
@@ -228,6 +248,11 @@ def _unreached_names() -> set[tuple]:
             continue
         seen.add(key)
         todo.extend(graph.get(key, ()))
+    return graph, seen, reexports
+
+
+def _unreached_names() -> set[tuple]:
+    graph, seen, _reexports = _reached_names()
     return {
         key
         for key in graph
@@ -246,6 +271,199 @@ def test_every_package_name_is_reached_from_an_entrypoint():
     stale = set(ALLOWED_UNREACHED) - unreached
     assert not stale, "now reached or gone, drop from ALLOWED_UNREACHED: " + ", ".join(
         f"{m}.{n}" for m, n in sorted(stale)
+    )
+
+
+# ---------------------------------------------------------------------------
+# per-parameter reachability
+# ---------------------------------------------------------------------------
+
+#: (module, function, parameter) -> the test that varies it to force a
+#: branch or to substitute a fake; no entrypoint varies it.
+TEST_SEAMS = {
+    (f"{PKG}.plans.signature", "check_plan_snapshots", "signature_fn"):
+        "test_benchlib::test_check_plan_snapshots_update_ok_drift",
+    (f"{PKG}.operators.dedup", "cluster_keep_one", "local_edge_threshold"):
+        "test_text_dedup::test_cluster_keep_one_matches_duckdb_recursive_cte",
+    (f"{PKG}.operators.dedup", "connected_components", "local_edge_threshold"):
+        "test_text_dedup::test_connected_components_chain_and_islands",
+    (f"{PKG}.operators.skew", "detect_hot_keys", "ratio"):
+        "test_skew::test_detect_hot_keys",
+    (f"{PKG}.operators.skew", "detect_hot_keys", "min_hot_rows"):
+        "test_skew::test_detect_hot_keys",
+    (f"{PKG}.streaming.incremental", "validate_stream", "max_files_per_trigger"):
+        "test_sources_streaming::test_streaming_query_matches_batch_rollup",
+}
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+
+def _defaults(fd: ast.FunctionDef) -> dict[str, str]:
+    """parameter -> source text of its default, for each defaulted one."""
+    a = fd.args
+    pos = a.posonlyargs + a.args
+    out = {
+        p.arg: ast.unparse(d)
+        for p, d in zip(pos[len(pos) - len(a.defaults) :], a.defaults)
+    }
+    for p, d in zip(a.kwonlyargs, a.kw_defaults):
+        if d is not None:
+            out[p.arg] = ast.unparse(d)
+    return out
+
+
+def _params(fn: ast.AST) -> list[str]:
+    a = fn.args
+    named = a.posonlyargs + a.args + a.kwonlyargs + [a.vararg, a.kwarg]
+    return [p.arg for p in named if p]
+
+
+def _passed(call: ast.Call, fd: ast.FunctionDef) -> list[tuple[str, ast.expr | None]]:
+    """(parameter, value) for each parameter ``call`` passes; the value is
+    None where a ``*``/``**`` splat may pass it."""
+    pos = [p.arg for p in fd.args.posonlyargs + fd.args.args]
+    out = []
+    for i, v in enumerate(call.args):
+        if isinstance(v, ast.Starred):
+            out += [(p, None) for p in pos[i:]]
+            break
+        if i < len(pos):
+            out.append((pos[i], v))
+    for kw in call.keywords:
+        if kw.arg is None:
+            out += [(p, None) for p in _params(fd)]
+        else:
+            out.append((kw.arg, kw.value))
+    return out
+
+
+def _scoped_calls(node: ast.AST, scope: dict):
+    """(call, scope) for each call under ``node``. ``scope`` maps a name to
+    the ``(module, function, parameter)`` it would forward, or to None when
+    it is not a defaulted parameter of a top-level package function."""
+    for child in ast.iter_child_nodes(node):
+        inner = scope
+        if isinstance(child, (*_DEFS, ast.Lambda)):
+            inner = {**scope, **dict.fromkeys(_params(child))}
+        if isinstance(child, ast.Call):
+            yield child, scope
+        yield from _scoped_calls(child, inner)
+
+
+def _call_sites(node, mod, tops, outer, mods, reexports, origin=None) -> list:
+    """(called package function, call, scope, origin) for each call under
+    ``node`` that resolves like a name use: a bare top-level name of
+    ``mod``, a ``from``-import binding, or ``alias.name``."""
+    bind = {**outer, **_bindings(node, mods)}
+    scope = {}
+    if mod and isinstance(node, _DEFS):
+        defaulted = _defaults(node)
+        scope = {p: (mod, node.name, p) if p in defaulted else None for p in _params(node)}
+    out = []
+    for call, sc in _scoped_calls(node, scope):
+        f, target = call.func, None
+        if isinstance(f, ast.Name):
+            b = bind.get(f.id)
+            if b and b[0] == "name":
+                target = (b[1], b[2])
+            elif f.id in tops:
+                target = (mod, f.id)
+        elif isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name):
+            b = bind.get(f.value.id)
+            if b and b[0] == "mod":
+                target = (b[1], f.attr)
+        while target in reexports:
+            target = reexports[target]
+        if target:
+            out.append((target, call, sc, origin))
+    return out
+
+
+def _varied(sites, functions) -> dict[tuple, set]:
+    """(module, function, parameter) -> origins, for each defaulted
+    parameter the ``sites`` pass a value whose text differs from its
+    default's. Forwarding a caller's own defaulted parameter counts only
+    once that parameter is itself varied, and carries its origins; the
+    walk iterates to a fixpoint."""
+    varied: dict[tuple, set] = {}
+    changed = True
+    while changed:
+        changed = False
+        for target, call, scope, origin in sites:
+            fd = functions.get(target)
+            if fd is None:
+                continue
+            defaults = _defaults(fd)
+            for p, v in _passed(call, fd):
+                if p not in defaults or (v is not None and ast.unparse(v) == defaults[p]):
+                    continue
+                fwd = scope.get(v.id) if isinstance(v, ast.Name) else None
+                if fwd is not None and fwd not in varied:
+                    continue
+                origins = varied[fwd] if fwd is not None else {origin}
+                have = varied.setdefault((*target, p), set())
+                if not origins <= have:
+                    have |= origins
+                    changed = True
+    return varied
+
+
+def _parameter_walk() -> tuple[set, dict, dict]:
+    """(defaulted parameters of reached package functions, parameters
+    reached code varies, parameters tests vary -> the tests)."""
+    mods = _package_modules()
+    _graph, seen, reexports = _reached_names()
+    scopes = _module_scopes(mods)
+    functions = {
+        (mod, stmt.name): stmt
+        for mod, (tree, _tops, _outer) in scopes.items()
+        for stmt in tree.body
+        if isinstance(stmt, _DEFS)
+    }
+    reached_sites, pkg_sites = [], []
+    for mod, (tree, tops, outer) in scopes.items():
+        for stmt in tree.body:
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                continue
+            sites = _call_sites(stmt, mod, tops, outer, mods, reexports)
+            pkg_sites += sites
+            names = _defined(stmt)
+            if not names or any((mod, n) in seen for n in names):
+                reached_sites += sites
+    for path in ROOTS:
+        if not path.startswith(PKG + "/"):
+            tree = _parse(os.path.join(REPO, path))
+            reached_sites += _call_sites(tree, None, set(), {}, mods, reexports)
+    # a test's call varies a parameter with any value but the default's
+    # text; forwards inside the package carry the test along
+    test_sites = []
+    tests_dir = os.path.join(REPO, "tests")
+    for fn in sorted(os.listdir(tests_dir)):
+        if fn.endswith(".py"):
+            tree = _parse(os.path.join(tests_dir, fn))
+            bind = _bindings(tree, mods)
+            for stmt in tree.body:
+                origin = fn[: -len(".py")] + "::" + getattr(stmt, "name", "<module>")
+                test_sites += _call_sites(stmt, None, set(), bind, mods, reexports, origin)
+    defaulted = {(*key, p) for key, fd in functions.items() if key in seen for p in _defaults(fd)}
+    return defaulted, _varied(reached_sites, functions), _varied(test_sites + pkg_sites, functions)
+
+
+def test_every_package_parameter_is_varied_by_an_entrypoint():
+    defaulted, live, tested = _parameter_walk()
+    dead = defaulted - set(live) - set(TEST_SEAMS)
+    assert not dead, "defaulted parameters no entrypoint sets: " + ", ".join(
+        f"{m}.{f}.{p}" for m, f, p in sorted(dead)
+    )
+    stale = {
+        key: test
+        for key, test in TEST_SEAMS.items()
+        if key in live or key not in defaulted or test not in tested.get(key, ())
+    }
+    assert not stale, (
+        "stale TEST_SEAMS entries (an entrypoint varies them, they are gone, "
+        "or their test no longer varies them): "
+        + ", ".join(f"{m}.{f}.{p} ({t})" for (m, f, p), t in sorted(stale.items()))
     )
 
 

@@ -30,7 +30,7 @@ def test_reclaimable_requires_valid_backup(spark):
             ("d3", "primary", None, V.MISSING_COUNTERPART),        # no copy at all
         ],
     )
-    got = {r["doc_id"] for r in V.find_reclaimable(pairs, ("backup",)).collect()}
+    got = {r["doc_id"] for r in V.find_reclaimable(pairs).collect()}
     assert got == {"d1"}
 
 
@@ -45,7 +45,7 @@ def test_reclaimable_any_invalid_copy_vetoes(spark):
             ("d2", "primary", "backup", V.VALID_COPY_RENAMED),
         ],
     )
-    out = V.find_reclaimable(pairs, ("backup",)).collect()
+    out = V.find_reclaimable(pairs).collect()
     assert {r["doc_id"] for r in out} == {"d2"}
     assert out[0]["n_valid_backups"] == 1
 
@@ -56,7 +56,7 @@ def test_reclaimable_subject_must_not_be_backup(spark):
     pairs = _pairs(
         spark, [("d1", "backup", "backup", V.VALID_COPY_SAME_NAME)]
     )
-    assert V.find_reclaimable(pairs, ("backup",)).count() == 0
+    assert V.find_reclaimable(pairs).count() == 0
 
 
 # --- checkpoint gating ------------------------------------------------------

@@ -17,12 +17,12 @@ def docs(spark):
 def test_text_functions_shapes(spark, docs):
     out = docs.select(
         TX.ws_token_count("text").alias("wt"),
-        TX.regex_token_count("text").alias("rt"),
+        TX.regex_token_count().alias("rt"),
         TX.punct_ratio("text").alias("pr"),
         TX.stopword_ratio("text").alias("sr"),
         TX.quality_score("text").alias("q"),
         TX.lang_id("text").alias("lid"),
-        TX.doc_fingerprint("text").alias("fp"),
+        TX.doc_fingerprint().alias("fp"),
     ).toPandas()
     assert (out["wt"] > 0).all()
     assert (out["rt"] >= out["wt"]).all()  # regex splits punctuation out
@@ -92,16 +92,16 @@ def test_jaccard_verify(spark, docs):
 
 def test_simhash_value_stability(spark):
     df = spark.createDataFrame([("hello world foo bar",)], "text string")
-    a = df.select(DD.simhash_expr("text").alias("s")).collect()[0]["s"]
-    b = df.select(DD.simhash_expr("text").alias("s")).collect()[0]["s"]
+    a = df.select(DD.simhash_expr().alias("s")).collect()[0]["s"]
+    b = df.select(DD.simhash_expr().alias("s")).collect()[0]["s"]
     assert a == b
     assert 0 <= a < 2**32
 
 
 def test_contamination_overlap_planted(spark):
-    """contamination_overlap flags exactly the corpus docs sharing >=
-    min_overlap distinct word n-grams with the benchmark set; n_matched
-    counts DISTINCT shared n-grams (repeats inside one doc count once)."""
+    """contamination_overlap flags exactly the corpus docs sharing a word
+    4-gram with the benchmark set; n_matched counts DISTINCT shared n-grams
+    (repeats inside one doc count once)."""
     bench = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon")], "doc_id long, text string"
     )
@@ -121,21 +121,18 @@ def test_contamination_overlap_planted(spark):
     )
     out = {
         r["doc_id"]: (r["n_shingles"], r["n_matched"])
-        for r in DD.contamination_overlap(corpus, bench, n=4, min_overlap=1).collect()
+        for r in DD.contamination_overlap(corpus, bench).collect()
     }
     assert set(out) == {10, 11}
     assert out[10] == (4, 2)   # 4 windows in a 7-word doc, 2 leaked
     assert out[11][1] == 1     # repeated leak counts once
-    # min_overlap gates the flag
-    strict = DD.contamination_overlap(corpus, bench, n=4, min_overlap=2).collect()
-    assert {r["doc_id"] for r in strict} == {10}
 
 
 def test_word_ngram_hashes_short_and_null_docs(spark):
     df = spark.createDataFrame(
         [("a b c",), (None,), ("",), ("one two three four",)], "text string"
     )
-    got = df.select(DD.word_ngram_hashes("text", 4).alias("g")).collect()
+    got = df.select(DD.word_ngram_hashes().alias("g")).collect()
     assert [len(r["g"]) if r["g"] is not None else None for r in got] == [0, 0, 0, 1]
 
 
@@ -157,7 +154,7 @@ def test_repetition_ratio_planted(spark):
         [("a b c a b c a b c",), ("one two three four",), ("x y",), (None,)],
         "text string",
     )
-    got = [r[0] for r in df.select(TX.repetition_ratio("text", 3).alias("r")).collect()]
+    got = [r[0] for r in df.select(TX.repetition_ratio("text").alias("r")).collect()]
     assert got[0] == pytest.approx(4 / 7)
     assert got[1:] == [0.0, 0.0, 0.0]
 
@@ -308,7 +305,7 @@ def test_cluster_keep_one_transitive_3hop_docs(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     sh = {
         r["doc_id"]: set(r["sh"])
-        for r in docs.select("doc_id", DD.shingle_expr("text").alias("sh")).collect()
+        for r in docs.select("doc_id", DD.shingle_expr().alias("sh")).collect()
     }
     assert not (sh[1] & sh[3]), "A and C must share no shingles"
     cand = spark.createDataFrame(
@@ -635,7 +632,7 @@ def test_filter_funnel_matches_duckdb_twin(spark, docs):
     got = {
         r["doc_id"]: r["reason"]
         for r in aug.select(
-            "doc_id", TX.filter_funnel("text").alias("reason")
+            "doc_id", TX.filter_funnel().alias("reason")
         ).collect()
     }
     con = duckdb.connect()
@@ -687,7 +684,7 @@ def test_filter_funnel_cross_engine_tricky_strings(spark):
     ]
     df = spark.createDataFrame([(t,) for t in rows], "text string")
     got = [
-        r["x"] for r in df.select(TX.filter_funnel("text").alias("x")).collect()
+        r["x"] for r in df.select(TX.filter_funnel().alias("x")).collect()
     ]
     con = duckdb.connect()
     want = [
@@ -733,7 +730,7 @@ def test_filter_funnel_cross_engine_hypothesis(spark):
         df = spark.createDataFrame([(t,) for t in rows], "text string")
         got = [
             r["x"]
-            for r in df.select(TX.filter_funnel("text").alias("x")).collect()
+            for r in df.select(TX.filter_funnel().alias("x")).collect()
         ]
         want = [
             r[0]
@@ -777,9 +774,9 @@ def test_dedup_twins_cross_engine_hypothesis(spark):
         got = [
             (r["fp"], sorted(r["sh"]), r["sim"])
             for r in df.select(
-                TX.doc_fingerprint("text").alias("fp"),
-                DD.shingle_expr("text").alias("sh"),
-                DD.simhash_expr("text").alias("sim"),
+                TX.doc_fingerprint().alias("fp"),
+                DD.shingle_expr().alias("sh"),
+                DD.simhash_expr().alias("sim"),
             ).collect()
         ]
         want = [
