@@ -16,9 +16,13 @@ deployment is one spark-submit of this file against a cluster:
 partition count spark-submit configured (the default builds a local[cpus]
 session with 2x cpus shuffle partitions, so the same CLI works as a bare
 ``python -m np_data_validation_spark`` smoke run). The other engine
-settings (AQE, Arrow batching) are applied by session.get_spark
-identically in both modes; the package auto-ships itself to python
-workers even without --py-files when run locally.
+settings (AQE, Arrow batching, a generated-code cache that holds a whole
+run's classes) are applied by session.get_spark identically in both
+modes; the package auto-ships itself to python workers even without
+--py-files when run locally. The code cache lives as long as the JVM: a
+single-batch call in a fresh process compiles its ~150 generated classes
+once, while later --commit-batch batches, --stream micro-batches and
+repeated main() calls in one process reuse them.
 
 Batch mode is plans.engine.run_validation — checkpointed and resumable, so
 re-submitting the SAME command after a kill validates only pending
@@ -26,7 +30,8 @@ partitions. A batch run leaves only results and state under --out: each
 batch's scratch pair tables are deleted once its state commits. --stream
 switches to streaming.incremental.validate_stream over a landing directory
 (availableNow trigger: drain what's there, exit).
-Prints ONE JSON summary line on completion.
+Prints ONE JSON summary line on completion; in batch mode its ``empty``
+key lists the snapshot's ``source=`` directories that hold no rows.
 """
 
 from __future__ import annotations
@@ -104,6 +109,7 @@ def main(argv: list[str] | None = None) -> int:
                 "run_id": res.run_id,
                 "validated": sorted(res.validated_partitions),
                 "skipped": sorted(res.skipped_partitions),
+                "empty": res.empty_partitions,
                 "rows": res.total_rows,
                 "metrics": res.metrics,
             },

@@ -406,9 +406,6 @@ def contamination_overlap(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
         cor.join(F.broadcast(bench_sh), "sh")
         .groupBy("doc_id", "n_shingles")
         .agg(F.count(F.lit(1)).alias("n_matched"))
-        # implied by the inner join; kept so the physical plan stays the
-        # one tests/plan_snapshots.json pins for dd_contamination
-        .filter(F.col("n_matched") >= 1)
     )
 
 

@@ -89,6 +89,18 @@ def delete_dir(spark: SparkSession, path: str) -> None:
         fs.delete(p, True)
 
 
+def partition_dirs(spark: SparkSession, path: str) -> list[str]:
+    """Values of the ``source=<value>`` directories directly under ``path``,
+    listed once through the Hadoop FileSystem API and unescaped as Spark
+    escapes partition values in paths."""
+    from urllib.parse import unquote
+
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    names = [s.getPath().getName() for s in fs.listStatus(p) if s.isDirectory()]
+    return [unquote(n[len("source="):]) for n in names if n.startswith("source=")]
+
+
 def read_state(spark: SparkSession, out_dir: str) -> DataFrame:
     """Latest state row per partition (empty frame if no state yet)."""
     path = state_path(out_dir)

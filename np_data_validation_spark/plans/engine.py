@@ -17,6 +17,9 @@ Scale shape per batch (SURVEY.md §3.1 Spark restatement):
          overwrite)
       -> per-partition metrics counted from the committed results
       -> append state rows (the commit point) -> delete the batch's scratch
+
+The whole-table manifest audit is written once per run, before the first
+batch, so every committed state row implies its run's audit is on disk.
 """
 
 from __future__ import annotations
@@ -161,6 +164,9 @@ class RunResult:
     run_id: str
     validated_partitions: list[str]
     skipped_partitions: list[str]
+    #: ``source=<value>`` directories of the snapshot that hold no rows:
+    #: neither validated nor skipped, and given no state row
+    empty_partitions: list[str]
     metrics: dict[str, dict] = field(default_factory=dict)
 
     @property
@@ -267,7 +273,9 @@ def run_validation(
 
     Every snapshot row needs a non-empty ``source``: a null one (a
     ``source=__HIVE_DEFAULT_PARTITION__`` directory) or an empty one
-    raises ``ValueError`` before anything is written.
+    raises ``ValueError`` before anything is written. A ``source=<value>``
+    directory with no rows (no files, or only empty ones) is reported in
+    ``RunResult.empty_partitions`` and gets no state row.
 
     Scratch: each batch's pair tables live under
     ``<out>/_work/run=<run_id>/batch=<n>`` only until that batch's state
@@ -296,6 +304,9 @@ def run_validation(
             "source=__HIVE_DEFAULT_PARTITION__ directory); every row needs one"
         )
     all_parts = sorted(fps)
+    # partition discovery skips a directory without rows, so find those
+    # from the listing; a flat snapshot has no source= directories
+    empty = sorted(set(CP.partition_dirs(spark, snapshot_path)) - set(fps))
     done: set[str] = set()
     if resume:
         # the gate's one state read; done_partitions decides over its result
@@ -310,7 +321,12 @@ def run_validation(
         done = CP.done_partitions(lineages, current, CODE_VERSION)
     pending = [p for p in all_parts if p not in done]
 
-    result = RunResult(run_id="", validated_partitions=[], skipped_partitions=sorted(done))
+    result = RunResult(
+        run_id="",
+        validated_partitions=[],
+        skipped_partitions=sorted(done),
+        empty_partitions=empty,
+    )
     work_root = os.path.join(out_dir, "_work")
     if not pending:
         CP.delete_dir(spark, work_root)  # a crashed run's leftovers
@@ -333,6 +349,14 @@ def run_validation(
             .partitionBy("_part")
             .parquet(os.path.join(out_dir, table))
         )
+
+    # global manifest audit (once per run; overwrites prior audit). Written
+    # before the first state commit, like every result: a crash after any
+    # commit leaves this run's audit behind even when the rerun finds
+    # nothing pending and writes none.
+    manifest_audit(snapshot, manifest).write.mode("overwrite").parquet(
+        os.path.join(out_dir, "manifest_violations")
+    )
 
     for bi, batch in enumerate(batches):
         # partition pruning: only pending sources are scanned
@@ -385,9 +409,5 @@ def run_validation(
         #    before this line leaves it for the next run's sweep
         CP.delete_dir(spark, work)
 
-    # global manifest audit (once per run; overwrites prior audit)
-    manifest_audit(snapshot, manifest).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "manifest_violations")
-    )
     CP.delete_dir(spark, work_root)
     return result

@@ -156,6 +156,15 @@ def test_inherit_leaves_shuffle_partitions_to_spark_submit(monkeypatch):
     assert _built_conf(monkeypatch, cpus=4)["spark.sql.shuffle.partitions"] == "8"
 
 
+def test_codegen_cache_holds_the_engine_working_set(monkeypatch):
+    """The generated-code cache is sized to the engine's plans (about 150
+    classes per call, above Spark's 100-entry default), the same locally and
+    under spark-submit."""
+    for kw in ({}, {"master": "inherit"}):
+        conf = _built_conf(monkeypatch, **kw)
+        assert conf["spark.sql.codegen.cache.maxEntries"] == "1000"
+
+
 def test_spark_local_dir_is_opt_in(monkeypatch):
     """Shuffle scratch goes to RAM only on request: with NPDV_LOCAL_DIR
     unset the builder never points spark.local.dir at /dev/shm; set, it
@@ -234,3 +243,42 @@ def test_cli_truncated_parquet_fails_without_commit(spark, tmp_path):
         if r["status"] == "done"
     }
     assert "bad" not in done
+
+
+def test_cli_reports_empty_partitions(spark, tmp_path, capsys):
+    """A ``source=`` directory without rows (no files, or one empty file) is
+    reported under ``"empty"``, is neither validated nor skipped, and gets
+    no state row; the other partitions validate as usual."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from np_data_validation_spark.__main__ import main as cli_main
+    from np_data_validation_spark.plans import checkpoint as CP
+
+    snap = tmp_path / "sequences"
+    for src, ids in (("good", ["a", "b"]), ("zero rows", [])):
+        d = snap / f"source={src.replace(' ', '%20')}"
+        d.mkdir(parents=True)
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array(ids, pa.string()),
+                "tokens": pa.array([[1, 2, 3]] * len(ids), pa.list_(pa.int32())),
+                "n_tok": pa.array([3] * len(ids), pa.int32()),
+            }),
+            str(d / "part-00000.parquet"),
+        )
+    (snap / "source=no_files").mkdir()
+    man = str(tmp_path / "manifest")
+    spark.createDataFrame(
+        [("a", 3, 1, "good")], "doc_id string, n_tok int, tok_hash long, source string"
+    ).write.parquet(man)
+    out = str(tmp_path / "out")
+
+    argv = ["--snapshot", str(snap), "--manifest", man, "--out", out]
+    for _ in range(2):  # first run, then a resume with nothing pending
+        capsys.readouterr()
+        assert cli_main(argv) == 0
+        summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert summary["empty"] == ["no_files", "zero rows"]
+        assert summary["validated"] + summary["skipped"] == ["good"]
+    assert {r["partition"] for r in CP.read_state(spark, out).collect()} == {"good"}
