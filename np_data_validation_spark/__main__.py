@@ -13,9 +13,10 @@ deployment is one spark-submit of this file against a cluster:
         --out s3://lake/validation_out --content-aware
 
 ``--master inherit`` keeps whatever master/deploy-mode and shuffle
-partition count spark-submit configured (the default builds a local[cpus]
-session with 2x cpus shuffle partitions, so the same CLI works as a bare
-``python -m np_data_validation_spark`` smoke run). The other engine
+partition count spark-submit configured. Without it the CLI builds a local
+session, so the same CLI works as a bare ``python -m
+np_data_validation_spark`` smoke run: ``--master local[N]`` picks its
+cores, else ``$SPARK_GRAFT_CPUS`` or all of the host's. The other engine
 settings (AQE, Arrow batching, a generated-code cache that holds a whole
 run's classes) are applied by session.get_spark identically in both
 modes; the package auto-ships itself to python workers even without
@@ -51,9 +52,6 @@ def main(argv: list[str] | None = None) -> int:
                          "state there and deletes its <out>/_work scratch")
     ap.add_argument("--master", default=None,
                     help="'inherit' under spark-submit; e.g. local[8] for bare runs")
-    ap.add_argument("--cpus", type=int, default=None,
-                    help="local-mode cores; also sets the shuffle partitions "
-                         "(2x cores, at least 8). Ignored with --master inherit")
     ap.add_argument("--no-resume", action="store_true",
                     help="ignore checkpoints; re-validate every partition")
     ap.add_argument("--content-aware", action="store_true",
@@ -80,7 +78,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from np_data_validation_spark.session import get_spark
 
-    spark = get_spark(app_name="npdv-validate", cpus=args.cpus, master=args.master)
+    spark = get_spark(app_name="npdv-validate", master=args.master)
 
     if args.stream:
         from np_data_validation_spark.streaming.incremental import validate_stream

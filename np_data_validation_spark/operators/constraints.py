@@ -16,11 +16,14 @@ Reference anchors:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _as_violation(df: DataFrame, name: str, detail_cols: list[str]) -> DataFrame:
+def as_violation(df: DataFrame, name: str, detail_cols: list[str | Column]) -> DataFrame:
+    """Rows of ``df`` as ``schema.VIOLATIONS`` rows of class ``name``, with
+    ``detail_cols`` as the JSON ``detail`` object. Every violation class
+    with a fixed name is built here."""
     return df.select(
         "doc_id",
         "source",
@@ -32,7 +35,7 @@ def _as_violation(df: DataFrame, name: str, detail_cols: list[str]) -> DataFrame
 def orphan_violations(snapshot: DataFrame, manifest: DataFrame) -> DataFrame:
     """manifest ∖ snapshot on doc_id -> MISSING_IN_SNAPSHOT (an orphaned
     manifest entry)."""
-    return _as_violation(
+    return as_violation(
         manifest.join(snapshot.select("doc_id"), "doc_id", "left_anti"),
         "MISSING_IN_SNAPSHOT",
         ["n_tok", "tok_hash"],
@@ -55,4 +58,4 @@ def consistency_violations(manifest: DataFrame) -> DataFrame:
         )
         .filter(F.col("n_hashes") > 1)
     )
-    return _as_violation(bad, "INCONSISTENT_GROUP", ["n_hashes"])
+    return as_violation(bad, "INCONSISTENT_GROUP", ["n_hashes"])

@@ -11,10 +11,15 @@ partitions are never scanned (the ``source IN (pending)`` predicate hits the
 hive-partition layout).
 
 Atomicity without Iceberg transactions (SURVEY.md §7.3 hard part 4): result
-parquet is written FIRST (dynamic partition overwrite, set per write, so
-a re-run of a failed partition replaces its output), the ``done`` state
-row is appended LAST. A crash between the two re-runs the partition;
-output overwrite makes that idempotent.
+parquet is written FIRST, the ``done`` state row is appended LAST. Every
+result partition is replaced one way, by ``replace_partitions``: delete
+the partition's directory, then append the new rows. A crash between the
+two steps, or before the state commit, re-runs the partition, and the
+rerun's clear-then-append makes that idempotent. A re-validated partition
+that now yields no rows is left with none (an overwrite that writes no
+rows for it would keep its old files). Readers of the results see a
+verdicts or violations partition missing from the moment it is cleared
+until its append commits.
 
 Iceberg deployment shape (design note — the sandbox has no
 iceberg-spark-runtime jar and no network to fetch one, so this seam is
@@ -27,10 +32,10 @@ public Iceberg-on-Spark usage):
   snapshot's ``source``), ``val.state`` unpartitioned, ordered by
   ``partition``.
 * Results commit — one atomic, snapshot-isolated replacement per table,
-  which subsumes BOTH halves of the parquet path's
-  ``_clear_partitions`` + dynamic-overwrite dance (an Iceberg partition
-  overwrite that writes zero rows for a partition still drops that
-  partition's old files)::
+  which subsumes the parquet path's clear-then-append
+  (``replace_partitions``) and closes its window in which a cleared
+  partition is missing (an Iceberg partition overwrite that writes zero
+  rows for a partition still drops that partition's old files)::
 
       rolled.writeTo("val.verdicts").overwritePartitions()
       violations.writeTo("val.violations").overwritePartitions()
@@ -89,16 +94,38 @@ def delete_dir(spark: SparkSession, path: str) -> None:
         fs.delete(p, True)
 
 
+def _catalog_utils(spark: SparkSession):
+    """Spark's own partition-path escaping (``ExternalCatalogUtils``), so
+    the directories this module names and lists are the ones Spark's
+    writer and partition discovery name, with no second copy of the rule."""
+    return spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+
+
 def partition_dirs(spark: SparkSession, path: str) -> list[str]:
     """Values of the ``source=<value>`` directories directly under ``path``,
-    listed once through the Hadoop FileSystem API and unescaped as Spark
-    escapes partition values in paths."""
-    from urllib.parse import unquote
-
+    listed once through the Hadoop FileSystem API and unescaped by Spark's
+    rule."""
     p = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     names = [s.getPath().getName() for s in fs.listStatus(p) if s.isDirectory()]
-    return [unquote(n[len("source="):]) for n in names if n.startswith("source=")]
+    unescape = _catalog_utils(spark).unescapePathName
+    return [unescape(n[len("source="):]) for n in names if n.startswith("source=")]
+
+
+def replace_partitions(
+    spark: SparkSession, df: DataFrame, path: str, col: str, values: list
+) -> None:
+    """Replace partitions ``values`` of column ``col`` in the parquet table
+    at ``path`` with the rows of ``df``: delete each value's directory,
+    named by Spark's path escaping, then append ``df`` partitioned by
+    ``col``. A value for which ``df`` has no rows ends up with no
+    partition. Between the delete and the append the partitions are
+    missing; a crash there leaves them missing until the rerun replaces
+    them (their state row is written only after this returns)."""
+    utils = _catalog_utils(spark)
+    for v in values:
+        delete_dir(spark, os.path.join(path, utils.getPartitionPathString(col, str(v))))
+    df.write.mode("append").partitionBy(col).parquet(path)
 
 
 def read_state(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -13,8 +13,9 @@ Scale shape per batch (SURVEY.md §3.1 Spark restatement):
       -> Arrow UDF tok_hash (Arrow batches)
       -> doc_id join vs manifest (+ content probe for misses)
       -> CASE verdict -> violations + per-row rollup
-      -> write verdicts and violations concurrently (dynamic partition
-         overwrite)
+      -> replace the batch's verdicts and violations partitions
+         concurrently (plans.checkpoint.replace_partitions: clear, then
+         append)
       -> per-partition metrics counted from the committed results
       -> append state rows (the commit point) -> delete the batch's scratch
 
@@ -225,18 +226,6 @@ def manifest_audit(snapshot: DataFrame, manifest: DataFrame) -> DataFrame:
     )
 
 
-def _clear_partitions(spark: SparkSession, base: str, partitions: list[str]) -> None:
-    """Explicitly drop the output subdirectories of every partition in the
-    batch. Dynamic partition overwrite only replaces partitions PRESENT in
-    the written DataFrame — a re-validated partition that now yields ZERO
-    violation rows would otherwise keep its previous run's stale rows while
-    state reports it clean. A crash after the delete and before the state
-    commit just re-runs the partition (results-first, state-last ordering).
-    """
-    for p in partitions:
-        CP.delete_dir(spark, os.path.join(base, f"_part={p}"))
-
-
 def run_validation(
     spark: SparkSession,
     snapshot_path: str,
@@ -339,17 +328,6 @@ def run_validation(
     )
     run_id = uuid.uuid4().hex
 
-    def write_results(df: DataFrame, table: str) -> None:
-        # dynamic overwrite as a write option, not a session conf: the
-        # caller's later overwrites in this session keep their own mode
-        (
-            df.withColumn("_part", F.col("source"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_part")
-            .parquet(os.path.join(out_dir, table))
-        )
-
     # global manifest audit (once per run; overwrites prior audit). Written
     # before the first state commit, like every result: a crash after any
     # commit leaves this run's audit behind even when the rerun finds
@@ -367,16 +345,20 @@ def run_validation(
         # named: values would flow unsanitized into paths).
         work = os.path.join(work_root, f"run={run_id}", f"batch={bi}")
         res = validate_onepass(spark, snap_b, manifest, work)
-        # 1) results first (idempotent per-partition replacement: explicit
-        #    clear + dynamic overwrite — overwrite alone leaves stale rows
-        #    when a re-run produces zero rows for a partition). The two
-        #    tables are independent, so their writes run concurrently and
-        #    both finish before anything reads them.
-        _clear_partitions(spark, os.path.join(out_dir, "violations"), batch)
+        # 1) results first: each table's batch partitions are cleared, then
+        #    appended. The two tables are independent, so they are replaced
+        #    concurrently and both finish before anything reads them.
         with ThreadPoolExecutor(max_workers=2) as pool:
             writes = [
-                pool.submit(write_results, res.rolled, "verdicts"),
-                pool.submit(write_results, res.violations, "violations"),
+                pool.submit(
+                    CP.replace_partitions,
+                    spark,
+                    df.withColumn("_part", F.col("source")),
+                    os.path.join(out_dir, table),
+                    "_part",
+                    batch,
+                )
+                for df, table in ((res.rolled, "verdicts"), (res.violations, "violations"))
             ]
             for w in writes:
                 w.result()

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from np_data_validation_spark.functions.hashing import with_tok_hash
 from np_data_validation_spark.operators import verdicts as V
+from np_data_validation_spark.operators.constraints import as_violation
 
 IDENTITY_COLS = ["doc_id", "source", "n_tok", "tok_hash", "n_tok_actual"]
 
@@ -231,28 +232,13 @@ def probe_pairs_from(
             probe_salted = True
         else:
             found = withhash.join(m, F.col("tok_hash") == F.col("m_tok_hash"), "inner")
-    # NULL-SAFE anti-join on the full identity: each distinct identity stays
-    # MISSING unless ITS OWN content matched (per-identity probe semantics —
-    # a subject holding two identities where only one content-matches keeps
-    # a MISSING row for the other, exactly like a per-row left-join
-    # probe). Plain column-list equality would be null-unsafe: a missed row
-    # with a null identity column (e.g. null n_tok) that content-matched
-    # would reappear in `still` and double-report (found pair + spurious
-    # MISSING row).
-    # the _f_ aliases mint fresh attribute ids: with the keyed probe tier
-    # the missed-side attributes appear TWICE inside ``found``'s lineage
-    # (join left + the broadcast key subtree), which trips Spark's
-    # ambiguous-self-join check on a bare column-object condition
-    found_ids = (
-        found.select(*IDENTITY_COLS)
-        .dropDuplicates()
-        .select(*[F.col(c).alias(f"_f_{c}") for c in IDENTITY_COLS])
-    )
-    anti_cond = None
-    for c in IDENTITY_COLS:
-        e = missed[c].eqNullSafe(found_ids[f"_f_{c}"])
-        anti_cond = e if anti_cond is None else anti_cond & e
-    still = missed.join(found_ids, anti_cond, "left_anti").select(
+    # A missed identity is found exactly when its tok_hash is: every tier
+    # joins on tok_hash = m_tok_hash alone, and the keyed tier's semi-join
+    # keeps every manifest row whose hash a missed row carries. So the
+    # identities that stay MISSING are those whose hash no found pair
+    # carries; a null hash never equals one, so it stays too.
+    found_hashes = found.select("tok_hash").distinct()
+    still = missed.join(found_hashes, "tok_hash", "left_anti").select(
         *IDENTITY_COLS,
         "s_mult",
         F.lit(None).cast("string").alias("m_doc_id"),
@@ -384,7 +370,7 @@ def uniqueness_violations_from_identities(ids: DataFrame) -> DataFrame:
         F.sum("s_mult").over(w.rowsBetween(Window.unboundedPreceding, -1)),
         F.lit(0).cast("long"),
     )
-    return (
+    ranked = (
         bad.withColumn("_start", start)
         # drop empty rank ranges BEFORE exploding: the group's first-sorted
         # identity with s_mult=1 has range [greatest(1,2)=2, 1], and Spark's
@@ -401,13 +387,8 @@ def uniqueness_violations_from_identities(ids: DataFrame) -> DataFrame:
                 )
             ),
         )
-        .select(
-            "doc_id",
-            "source",
-            F.lit("DUPLICATE_DOC_ID").alias("violation"),
-            F.to_json(F.struct("dup_rank", "n_tok", "tok_hash")).alias("detail"),
-        )
     )
+    return as_violation(ranked, "DUPLICATE_DOC_ID", ["dup_rank", "n_tok", "tok_hash"])
 
 
 def schema_violations_from_identities(ids: DataFrame) -> DataFrame:
@@ -419,43 +400,23 @@ def schema_violations_from_identities(ids: DataFrame) -> DataFrame:
       path fields are required entries", :549-550)
     """
     rep = F.explode(F.sequence(F.lit(1).cast("long"), F.col("s_mult")))
-    mismatch = (
+    actual_len = F.col("n_tok_actual").alias("actual_len")
+    mismatch = as_violation(
         ids.filter(
             F.col("n_tok_actual").isNotNull() & (F.col("n_tok") != F.col("n_tok_actual"))
-        )
-        .withColumn("_r", rep)
-        .select(
-            "doc_id",
-            "source",
-            F.lit("N_TOK_MISMATCH").alias("violation"),
-            F.to_json(
-                F.struct(F.col("n_tok"), F.col("n_tok_actual").alias("actual_len"))
-            ).alias("detail"),
-        )
+        ).withColumn("_r", rep),
+        "N_TOK_MISMATCH",
+        ["n_tok", actual_len],
     )
-    null_ntok = (
-        ids.filter(F.col("n_tok").isNull())
-        .withColumn("_r", rep)
-        .select(
-            "doc_id",
-            "source",
-            F.lit("NULL_N_TOK").alias("violation"),
-            F.to_json(F.struct(F.col("n_tok_actual").alias("actual_len"))).alias(
-                "detail"
-            ),
-        )
+    null_ntok = as_violation(
+        ids.filter(F.col("n_tok").isNull()).withColumn("_r", rep),
+        "NULL_N_TOK",
+        [actual_len],
     )
-    null_docid = (
-        ids.filter(F.col("doc_id").isNull())
-        .withColumn("_r", rep)
-        .select(
-            "doc_id",
-            "source",
-            F.lit("NULL_DOC_ID").alias("violation"),
-            F.to_json(
-                F.struct(F.col("n_tok"), F.col("n_tok_actual").alias("actual_len"))
-            ).alias("detail"),
-        )
+    null_docid = as_violation(
+        ids.filter(F.col("doc_id").isNull()).withColumn("_r", rep),
+        "NULL_DOC_ID",
+        ["n_tok", actual_len],
     )
     return mismatch.unionByName(null_ntok).unionByName(null_docid)
 

@@ -24,7 +24,6 @@ classes once.
 from __future__ import annotations
 
 import os
-import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -147,15 +146,17 @@ def get_spark(
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to Python workers (the local-mode / notebook analog
     of ``spark-submit --py-files``), so Python UDFs defined here unpickle on
-    executors even when the driver script runs outside the repo."""
+    executors even when the driver script runs outside the repo. Only a
+    package imported from a directory is shipped: one imported from a zip
+    (``--py-files``) is already on the workers' path. The archive goes to
+    the SparkContext's own temp dir, which the JVM deletes when it exits."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
     marker = f"_npdv_shipped_{pkg_name}"
-    if getattr(spark.sparkContext, marker, False):
+    sc = spark.sparkContext
+    if getattr(sc, marker, False) or not os.path.isdir(pkg_dir):
         return
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"{pkg_name}-{os.getpid()}.zip"
-    )
+    zip_path = os.path.join(sc._temp_dir, f"{pkg_name}.zip")
     with zipfile.ZipFile(zip_path, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in files:
@@ -165,5 +166,5 @@ def _ship_package(spark: SparkSession) -> None:
                         pkg_name, os.path.relpath(full, pkg_dir)
                     )
                     zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
-    setattr(spark.sparkContext, marker, True)
+    sc.addPyFile(zip_path)
+    setattr(sc, marker, True)

@@ -10,9 +10,11 @@ Delivery semantics: Spark's streaming checkpoint gives foreachBatch
 AT-LEAST-ONCE invocation — a micro-batch whose sink write succeeded but
 whose offset commit crashed is re-invoked with the SAME batch_id. The sink
 below is therefore made idempotent by partitioning output on batch_id and
-using dynamic partition overwrite: a replayed batch overwrites its own
-partition instead of appending duplicates, yielding effective exactly-once
-per micro-batch file set. The one-pass plan writes its scratch pair table
+replacing the batch's partition the way a batch run replaces its sources
+(plans.checkpoint.replace_partitions: clear ``_batch_id=<id>``, then
+append): a replayed batch replaces its own partition instead of appending
+duplicates, and no other batch's, yielding effective exactly-once per
+micro-batch file set. The one-pass plan writes its scratch pair table
 under a batch_id-scoped dir that is DELETED once the batch's sink writes
 commit (a replayed batch simply recreates it — overwrite-idempotent), and
 holds no caches, so a long-running stream accumulates storage neither on
@@ -54,12 +56,12 @@ def validate_stream(
         work = os.path.join(out_dir, "_work", f"batch={batch_id}")
         res = validate_onepass(spark, batch_df, manifest, work)
         for df, name in ((res.rolled, "verdicts"), (res.violations, "violations")):
-            (
-                df.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(os.path.join(out_dir, name))
+            CP.replace_partitions(
+                spark,
+                df.withColumn("_batch_id", F.lit(batch_id)),
+                os.path.join(out_dir, name),
+                "_batch_id",
+                [batch_id],
             )
         # scratch reclaim AFTER both sink writes committed: a crash before
         # this point replays the batch (which recreates the dir, overwrite-

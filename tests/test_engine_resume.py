@@ -446,6 +446,48 @@ def test_crash_in_post_commit_scratch_delete_keeps_the_commit(
         ), table
 
 
+def test_revalidated_escaped_sources_keep_no_stale_violations(spark, tmp_path):
+    """Spark escapes ``:``, ``=`` and ``%`` in partition directory names
+    (``_part=a%3Ab``). A re-validated source whose orphan row is gone must
+    lose its old violation row, and its new state row must count none."""
+    import numpy as np
+
+    from np_data_validation_spark.functions.hashing import xxh64_int32_scalar
+    from np_data_validation_spark.schema import VIOLATIONS
+
+    sources = ["a:b", "x=y", "p%q"]
+    good = [(f"d{i}_{j}", [i, j, 7]) for i in range(len(sources)) for j in range(2)]
+    h = {d: np.int64(np.uint64(xxh64_int32_scalar(t))).item() for d, t in good}
+    src = {d: sources[int(d[1])] for d, _ in good}
+    snap_p, man_p = str(tmp_path / "snap"), str(tmp_path / "man")
+    out = str(tmp_path / "out")
+    spark.createDataFrame(
+        [(d, 3, h[d], src[d]) for d, _ in good],
+        "doc_id string, n_tok int, tok_hash long, source string",
+    ).write.parquet(man_p)
+    seq_schema = "doc_id string, tokens array<int>, n_tok int, source string"
+    rows = [(d, t, 3, src[d]) for d, t in good]
+    # one orphan per source: no manifest doc_id and no manifest content
+    orphans = [(f"orphan{i}", [9, 9, i], 3, s) for i, s in enumerate(sources)]
+    spark.createDataFrame(rows + orphans, seq_schema).write.partitionBy(
+        "source"
+    ).parquet(snap_p)
+    E.run_validation(spark, snap_p, man_p, out)
+    viol = spark.read.schema(VIOLATIONS).parquet(os.path.join(out, "violations"))
+    assert sorted(r["source"] for r in viol.collect()) == sorted(sources)
+
+    spark.createDataFrame(rows, seq_schema).write.mode("overwrite").partitionBy(
+        "source"
+    ).parquet(snap_p)
+    r = E.run_validation(spark, snap_p, man_p, out)
+    assert sorted(r.validated_partitions) == sorted(sources)
+    viol = spark.read.schema(VIOLATIONS).parquet(os.path.join(out, "violations"))
+    assert viol.filter(F.col("source").isin(sources)).count() == 0
+    state = {s["partition"]: json.loads(s["metrics"]) for s in CP.read_state(spark, out).collect()}
+    assert sorted(state) == sorted(sources)
+    assert all("violations" not in m and m["rows"] == 2 for m in state.values()), state
+
+
 def test_later_batches_reuse_generated_code(
     spark, synth_dataset, tmp_path, monkeypatch
 ):
