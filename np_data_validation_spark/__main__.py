@@ -16,11 +16,11 @@ deployment is one spark-submit of this file against a cluster:
 partition count spark-submit configured. Without it the CLI builds a local
 session, so the same CLI works as a bare ``python -m
 np_data_validation_spark`` smoke run: ``--master local[N]`` picks its
-cores, else ``$SPARK_GRAFT_CPUS`` or all of the host's. The other engine
-settings (AQE, Arrow batching, a generated-code cache that holds a whole
-run's classes) are applied by session.get_spark identically in both
-modes; the package auto-ships itself to python workers even without
---py-files when run locally. The code cache lives as long as the JVM: a
+cores and sizes the shuffle to them, else ``$SPARK_GRAFT_CPUS`` or all of
+the host's. The other engine settings (AQE, Arrow batching, a
+generated-code cache that holds a whole run's classes) are applied by
+session.get_spark identically in both modes; the package auto-ships
+itself to python workers even without --py-files when run locally. The code cache lives as long as the JVM: a
 single-batch call in a fresh process compiles its ~150 generated classes
 once, while later --commit-batch batches, --stream micro-batches and
 repeated main() calls in one process reuse them.

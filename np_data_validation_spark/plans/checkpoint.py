@@ -194,10 +194,11 @@ def write_state_rows(
                 "run_id": run_id,
                 "metrics": json.dumps(r.get("metrics", {}), sort_keys=True),
                 "lineage": json.dumps(r.get("lineage", {}), sort_keys=True),
+                "finished_at": None,
             }
             for r in rows
         ],
-        schema="partition string, status string, run_id string, metrics string, lineage string",
+        schema=VALIDATION_STATE,
     ).withColumn("finished_at", F.current_timestamp())
     df.write.mode("append").parquet(state_path(out_dir))
 

@@ -24,7 +24,8 @@ identical pair rows. Downstream — content probe of the missing set, verdict
 rollup, violations (verdict + uniqueness + schema), per-partition stats —
 reads the written files; nothing touches the payload again, and uniqueness
 violations (per-duplicate dup_rank rows) are reconstructed exactly from the
-identity multiplicities.
+identity multiplicities. The probe joins the RAW manifest on tok_hash and
+deduplicates the matched pairs, so only stage 1 shuffles the whole manifest.
 
 This is the engine's one implementation of the verdict semantics.
 tests/test_onepass.py and tests/test_onepass_random.py check its rolled
@@ -49,6 +50,8 @@ from np_data_validation_spark.operators import verdicts as V
 from np_data_validation_spark.operators.constraints import as_violation
 
 IDENTITY_COLS = ["doc_id", "source", "n_tok", "tok_hash", "n_tok_actual"]
+#: The manifest's identity under its join-side names (``_manifest_m``).
+M_COLS = ["m_doc_id", "m_source", "m_n_tok", "m_tok_hash"]
 
 #: Written pair-table schema: identity + multiplicity + counterpart + code.
 #: m_doc_id and the verdict NAME are derivable and deliberately not written
@@ -99,26 +102,17 @@ def hashed_identity(snapshot: DataFrame) -> DataFrame:
 
 
 def _manifest_m(manifest: DataFrame) -> DataFrame:
-    """m_*-aliased manifest, deduped on full identity. The explicit
-    Exchange(m_doc_id) serves both the dedup and the doc_id join."""
-    return (
-        manifest.select(
-            F.col("doc_id").alias("m_doc_id"),
-            F.col("source").alias("m_source"),
-            F.col("n_tok").alias("m_n_tok"),
-            F.col("tok_hash").alias("m_tok_hash"),
-        )
-        .repartition("m_doc_id")
-        .dropDuplicates(["m_doc_id", "m_source", "m_n_tok", "m_tok_hash"])
-    )
+    """The raw manifest under ``M_COLS`` names (no dedup)."""
+    return manifest.select(*[F.col(c[2:]).alias(c) for c in M_COLS])
 
 
 def pairs_stage1(snapshot: DataFrame, manifest: DataFrame) -> DataFrame:
     """The one wide plan: hash -> identity pre-agg -> manifest join ->
     verdict CASE. Exactly two Exchanges total (one per side); shuffled-hash
-    join (no sorts), manifest as build side."""
+    join (no sorts), manifest as build side. The manifest's explicit
+    Exchange(m_doc_id) serves both its identity dedup and the doc_id join."""
     pre = hashed_identity(snapshot)
-    m = _manifest_m(manifest)
+    m = _manifest_m(manifest).repartition("m_doc_id").dropDuplicates(M_COLS)
     pairs = pre.join(m.hint("shuffle_hash"), pre["doc_id"] == m["m_doc_id"], "left")
     return pairs.withColumn("verdict_code", V.classify_expr()).select(*PAIR_COLS)
 
@@ -139,99 +133,66 @@ def probe_pairs_from(
     fallback, data_validation.py:1256-1266). Returns (probed pair rows in
     PAIR_COLS shape, probe_salted). ``s1`` should be backed by written
     files so the miss filter is a columnar scan. ``n_miss``: the stage-1
-    miss count (validate_onepass observes it on the stage-1 write); it
-    picks the probe tier.
+    miss count (validate_onepass observes it on the stage-1 write).
 
-    Skew on the probe key: a mass-duplicated corpus (boilerplate content ->
-    one tok_hash carried by millions of MANIFEST rows) funnels the shuffle
-    branch into one reducer. ``manifest_hot`` (bool, or a 0-arg callable
-    that is only called when the shuffle branch runs — validate_onepass
-    passes operators.skew.detect_hot_keys over the manifest's tok_hash)
-    engages a salted join with the manifest as the salted fact side and the
-    missed side replicated ``DEFAULT_SALT_BUCKETS``-fold: the hot hash's
-    manifest rows spread across the salts while the missed side (already >
-    PROBE_BROADCAST_MAX to be here, so bounded) replicates. Skew on the
-    MISSED side's tok_hash is the mirror case; salting it would explode the
-    manifest that many times over (manifest-wide blowup), so AQE skew-join
-    splitting — enabled session-wide (session.py) — is the designated
-    handler there: the un-hinted inner join lets AQE split the hot missed
-    partition and replicate the matching manifest rows."""
+    Every tier has one shape: the RAW manifest's hashed rows join the missed
+    identities on tok_hash, then ``dropDuplicates(IDENTITY_COLS + M_COLS)``
+    runs over the matched pairs. The missed side is identity-unique (stage
+    1 pre-aggregates on full identity), so this gives the same (identity,
+    m_identity) set as deduplicating the manifest before the join, without
+    shuffling the whole manifest for that dedup (a uniqueness-licensed
+    rewrite: "Entity Integrity, Referential Integrity, and Query
+    Optimization with Embedded Uniqueness Constraints", ICDE 2019). Over raw
+    snapshot rows, where duplicates each keep a row, it would not hold.
+    ``n_miss`` picks only how the join runs:
+
+    * ``<= PROBE_BROADCAST_MAX``: broadcast the missed rows; the manifest
+      is only scanned and the dedup exchange carries matched pairs.
+    * ``<= PROBE_KEYS_BROADCAST_MAX``: broadcast the missed rows' distinct
+      tok_hash keys (8 bytes each) and left-semi the manifest on them
+      map-side, then shuffle the join.
+    * else shuffle the join on tok_hash; the dedup reuses its partitioning.
+
+    A mass-duplicated corpus (one tok_hash on millions of MANIFEST rows)
+    funnels a shuffled join into one reducer. ``manifest_hot`` (bool, or a
+    0-arg callable called only on a shuffled tier; validate_onepass passes
+    operators.skew.detect_hot_keys over the manifest's tok_hash) then salts
+    the join: the manifest is the salted fact side, the missed side (over
+    PROBE_BROADCAST_MAX, so bounded) is replicated, and the dedup adds one
+    exchange over the matched pairs. A hot tok_hash on the MISSED side is
+    not split: salting it would replicate the manifest, and AQE reverts a
+    skew-join split that would add a shuffle downstream
+    (``forceOptimizeSkewedJoin`` is off), which the dedup and
+    ``found_hashes`` above the unsalted join would need."""
     from np_data_validation_spark.operators import skew as SK
 
     missed = s1.filter(F.col("verdict_code") == V.MISSING_COUNTERPART).drop(
-        "m_doc_id", "m_source", "m_n_tok", "m_tok_hash", "verdict_code"
+        *M_COLS, "verdict_code"
     )
     withhash = missed.filter(F.col("tok_hash").isNotNull())
+    on_hash = F.col("tok_hash") == F.col("m_tok_hash")
+    m = _manifest_m(manifest).filter(F.col("m_tok_hash").isNotNull())
     probe_salted = False
     if n_miss <= V.PROBE_BROADCAST_MAX:
-        # broadcast the tiny missed side; the manifest is only scanned
-        # (map-side hash lookup — manifest-side skew is irrelevant here,
-        # no shuffle partitions exist to funnel).
-        # r9 (guide §2.4/§8 — decide with small rows, never shuffle the
-        # big side): join the RAW manifest map-side first, dedup the JOIN
-        # OUTPUT on (identity, m_identity). The old shape ran
-        # _manifest_m's Exchange(m_doc_id) + dropDuplicates over the FULL
-        # manifest before the broadcast join — a manifest-wide shuffle
-        # whose only consumer was this probe (measured ~6.8 s of the
-        # ~10 s probe phase at 8M rows). Equivalence: s1 identities are
-        # unique (stage-1 pre-aggregates on full identity, s_mult rides
-        # along functionally determined), so dedup-manifest-then-join and
-        # join-then-dedup-pairs yield the SAME (identity, m_identity) row
-        # set — the exchange now carries only hash-matched pairs (a miss
-        # fraction) instead of every manifest row. NOTE: this rewrite is
-        # only valid over an identity-unique missed side; over raw
-        # snapshot rows (duplicates must each keep a row) the manifest
-        # must be deduped before the join instead.
-        m_raw = manifest.select(
-            F.col("doc_id").alias("m_doc_id"),
-            F.col("source").alias("m_source"),
-            F.col("n_tok").alias("m_n_tok"),
-            F.col("tok_hash").alias("m_tok_hash"),
-        ).filter(F.col("m_tok_hash").isNotNull())
-        found = m_raw.join(
-            F.broadcast(withhash), F.col("tok_hash") == F.col("m_tok_hash"), "inner"
-        ).dropDuplicates(
-            IDENTITY_COLS + ["m_doc_id", "m_source", "m_n_tok", "m_tok_hash"]
-        )
+        found = m.join(F.broadcast(withhash), on_hash, "inner")
     else:
-        mm = manifest
         if n_miss <= V.PROBE_KEYS_BROADCAST_MAX:
-            # Keyed semi pre-filter (guide §3.2): the missed ROWS are too
-            # big to broadcast, but their distinct tok_hash KEYS (8 bytes
-            # each vs ~96-byte rows) still fit the byte budget. Broadcast
-            # the key set and left-semi the RAW manifest on it BEFORE the
-            # dedup exchange — rows without a missed hash cannot join, so
-            # dropping them map-side is lossless (the probe join is equi
-            # on tok_hash; filter commutes with the identity dedup because
-            # it only reads a dedup-key column). The downstream exchange
-            # then carries only hash-matched manifest rows (a miss-bound
-            # fraction) instead of the whole manifest — at the 48M bench
-            # this is the difference between shuffling 46M manifest rows
-            # and ~1M. Beyond the key budget (true 10^12-row regime) the
-            # full-shuffle branch below remains, detection + salting
-            # included.
-            keys = withhash.select(F.col("tok_hash").alias("_probe_h")).distinct()
-            mm = manifest.join(
-                F.broadcast(keys),
-                F.col("tok_hash") == F.col("_probe_h"),
-                "left_semi",
-            )
-        m = _manifest_m(mm).filter(F.col("m_tok_hash").isNotNull())
+            keys = withhash.select("tok_hash").distinct()
+            m = m.join(F.broadcast(keys), on_hash, "left_semi")
         if callable(manifest_hot):
             manifest_hot = manifest_hot()
         if manifest_hot:
-            m2 = m.withColumn("_pk", F.col("m_tok_hash"))
-            w2 = withhash.withColumn("_pk", F.col("tok_hash"))
             found = SK.salted_join(
-                m2,
-                w2,
+                m.withColumn("_pk", F.col("m_tok_hash")),
+                withhash.withColumn("_pk", F.col("tok_hash")),
                 on=["_pk"],
                 how="inner",
-                entropy_cols=["m_doc_id", "m_source", "m_n_tok", "m_tok_hash"],
+                entropy_cols=M_COLS,
             ).drop("_pk")
             probe_salted = True
         else:
-            found = withhash.join(m, F.col("tok_hash") == F.col("m_tok_hash"), "inner")
+            found = m.join(withhash, on_hash, "inner")
+    found = found.dropDuplicates(IDENTITY_COLS + M_COLS)
     # A missed identity is found exactly when its tok_hash is: every tier
     # joins on tok_hash = m_tok_hash alone, and the keyed tier's semi-join
     # keeps every manifest row whose hash a missed row carries. So the
@@ -246,7 +207,7 @@ def probe_pairs_from(
         F.lit(None).cast("int").alias("m_n_tok"),
         F.lit(None).cast("long").alias("m_tok_hash"),
     )
-    probed = found.select(*IDENTITY_COLS, "s_mult", "m_doc_id", "m_source", "m_n_tok", "m_tok_hash").unionByName(still)
+    probed = found.select(*IDENTITY_COLS, "s_mult", *M_COLS).unionByName(still)
     return (
         probed.withColumn("verdict_code", V.classify_expr()).select(*PAIR_COLS),
         probe_salted,

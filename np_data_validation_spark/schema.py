@@ -57,12 +57,14 @@ VIOLATIONS = T.StructType(
 
 #: Per-partition checkpoint state — replaces the reference's resume-by-rerun
 #: idempotence (dedup-on-insert, /root/reference/data_validation.py:728-734)
-#: with explicit per-partition lineage + metrics.
+#: with explicit per-partition lineage + metrics. Written and read with this
+#: schema. Its fields are nullable because Spark writes a non-nullable field
+#: as a REQUIRED parquet column; earlier state files hold them OPTIONAL.
 VALIDATION_STATE = T.StructType(
     [
-        T.StructField("partition", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("run_id", T.StringType(), False),
+        T.StructField("partition", T.StringType(), True),
+        T.StructField("status", T.StringType(), True),
+        T.StructField("run_id", T.StringType(), True),
         T.StructField("metrics", T.StringType(), True),
         T.StructField("lineage", T.StringType(), True),
         T.StructField("finished_at", T.TimestampType(), True),

@@ -24,6 +24,7 @@ classes once.
 from __future__ import annotations
 
 import os
+import re
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -75,7 +76,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for the validation workload.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all local cores. On a real
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all local cores; a
+    ``local[N]`` master overrides it with N (``local[*]``: all local cores),
+    so one setting sizes both the cores and the shuffle. On a real
     cluster these settings ship unchanged via ``spark-submit --py-files``;
     pass ``master="inherit"`` there so the master/deploy-mode chosen by
     spark-submit is NOT overridden (the default builds a local[cpus]
@@ -85,7 +88,10 @@ def get_spark(
     """
     builder = SparkSession.builder.appName(app_name)
     if master != "inherit":
-        if cpus is None:
+        local_n = re.match(r"local\[(\d+|\*)", master or "")
+        if local_n:
+            cpus = int(local_n[1]) if local_n[1] != "*" else os.cpu_count() or 4
+        elif cpus is None:
             cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
         # 2x cores: enough tasks for AQE to coalesce, no 200-partition
         # default overhead at local scale. AQE only merges partitions; it

@@ -150,10 +150,15 @@ def _built_conf(monkeypatch, **kw) -> dict:
 
 def test_inherit_leaves_shuffle_partitions_to_spark_submit(monkeypatch):
     """Under spark-submit the submitted conf sizes the shuffle, not the
-    driver host's cores; a local session still gets 2x cores, at least 8."""
+    driver host's cores; a local session still gets 2x cores, at least 8,
+    and a ``local[N]`` master decides the cores over ``cpus``."""
     conf = _built_conf(monkeypatch, master="inherit", cpus=4)
     assert "spark.sql.shuffle.partitions" not in conf
     assert _built_conf(monkeypatch, cpus=4)["spark.sql.shuffle.partitions"] == "8"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "16")
+    for master, parts in (("local[6]", "12"), ("local[2]", "8")):
+        conf = _built_conf(monkeypatch, master=master, cpus=None)
+        assert conf["spark.sql.shuffle.partitions"] == parts, master
 
 
 def test_codegen_cache_holds_the_engine_working_set(monkeypatch):

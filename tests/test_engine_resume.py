@@ -299,9 +299,8 @@ def test_rehash_candidates_need_plausible_done_checkpoint():
 
 
 def test_run_leaves_session_overwrite_mode_alone(spark, synth_dataset, out_dir):
-    """The results commit asks for dynamic partition overwrite per write,
-    so a later static overwrite in the caller's session still replaces
-    every partition."""
+    """The results commit replaces partitions by clear-then-append, so it
+    leaves the session's static overwrite mode as it found it."""
     key = "spark.sql.sources.partitionOverwriteMode"
     old = spark.conf.get(key)
     spark.conf.set(key, "STATIC")
@@ -331,7 +330,7 @@ def _files_under(root) -> list[str]:
     return [os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs]
 
 
-def test_audit_retention_bounds_work_dirs(spark, synth_dataset, tmp_path):
+def test_scratch_reclaimed_after_each_commit(spark, synth_dataset, tmp_path):
     """A run leaves no scratch: each batch's pair tables under
     ``<out>/_work`` are deleted once its state commits, and a second run
     over the same out dir leaves none either."""
@@ -347,7 +346,7 @@ def test_audit_retention_bounds_work_dirs(spark, synth_dataset, tmp_path):
     assert _files_under(work) == []
 
 
-def test_audit_retention_hadoop_fs_uri(spark, synth_dataset, tmp_path):
+def test_scratch_reclaimed_through_hadoop_fs_uri(spark, synth_dataset, tmp_path):
     """Scratch is reclaimed through the Hadoop FS API, not os.*: a file:
     scheme out_dir URI exercises exactly that path (os.path.isdir on the
     URI is False, so a driver-local delete would silently keep everything)."""

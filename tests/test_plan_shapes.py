@@ -98,7 +98,9 @@ def test_probe_threshold_is_byte_derived_and_large_miss_shuffles(spark, seq_man,
     scales silently with driver heap), and a miss set above it must not
     broadcast its rows — only the keyed tier's tok_hash key set, and
     nothing at all beyond the key budget. The tier is picked from
-    ``n_miss``, which this test forces."""
+    ``n_miss``, which this test forces. No tier shuffles the manifest for
+    a dedup: every manifest-side exchange of the shuffle tier is a join's,
+    on m_tok_hash."""
     from np_data_validation_spark.operators import verdicts as V
     from np_data_validation_spark.plans import onepass
 
@@ -121,12 +123,19 @@ def test_probe_threshold_is_byte_derived_and_large_miss_shuffles(spark, seq_man,
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        assert "BroadcastHashJoin" not in probe_plan(V.PROBE_KEYS_BROADCAST_MAX + 1)
-        keyed = [
-            line for line in probe_plan(V.PROBE_BROADCAST_MAX + 1).splitlines()
-            if "BroadcastHashJoin" in line
-        ]
+        shuffled = probe_plan(V.PROBE_KEYS_BROADCAST_MAX + 1)
+        assert "BroadcastHashJoin" not in shuffled
+        keyed_plan = probe_plan(V.PROBE_BROADCAST_MAX + 1)
+        keyed = [line for line in keyed_plan.splitlines() if "BroadcastHashJoin" in line]
         assert keyed and all("LeftSemi" in line for line in keyed)
+        for plan in (keyed_plan, shuffled):
+            assert "hashpartitioning(m_doc_id" not in plan
+        m_keys = {
+            line.split("hashpartitioning(")[1].split("#")[0]
+            for line in shuffled.splitlines()
+            if "Exchange hashpartitioning(m_" in line
+        }
+        assert m_keys == {"m_tok_hash"}, m_keys
         assert "BroadcastHashJoin" in probe_plan(10)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

@@ -149,7 +149,8 @@ def test_null_doc_id_violation(spark, tmp_path):
 def test_stream_replayed_batch_is_idempotent(spark, seq_man, tmp_path):
     """foreachBatch is at-least-once: re-invoking process() with the same
     batch_id (sink-write succeeded, offset commit crashed) must not
-    duplicate verdict rows — the _batch_id dynamic-overwrite contract."""
+    duplicate verdict rows — the stream replaces its _batch_id partition
+    by clearing it and then appending (checkpoint.replace_partitions)."""
     import os
 
     from np_data_validation_spark.streaming import incremental as INC
@@ -171,7 +172,7 @@ def test_stream_replayed_batch_is_idempotent(spark, seq_man, tmp_path):
     q2 = INC.validate_stream(spark, landing, man, out)
     q2.awaitTermination(120)
     n2 = spark.read.parquet(os.path.join(out, "verdicts")).count()
-    assert n2 == n1  # overwrite-by-batch, not append-duplicates
+    assert n2 == n1  # replace-by-batch, not append-duplicates
 
 
 # --- portable ANN -----------------------------------------------------------
